@@ -1,6 +1,6 @@
 package graft.linalg
 
-import breeze.linalg.{DenseMatrix, DenseVector}
+import breeze.linalg.DenseMatrix
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
@@ -12,25 +12,26 @@ import org.apache.spark.sql.SparkSession
   * tiny, and still tiny for any plausible hint space), so B is BROADCAST
   * and only the row side distributes:
   *
-  *  - the STATIC row data (X, mask, cutoffs — ~1.2 KB/row at m=49) is
-  *    cached ONCE and never re-cached; only the row FACTORS (rank doubles
+  *  - the STATIC row data (each row's [[FixedCells]]: the observed,
+  *    valued or censored cells only) is cached ONCE and never re-cached; only the row FACTORS (rank doubles
   *    per row) churn between iterations, co-partitioned with the statics
   *    via `zipPartitions`. Re-caching the statics every iteration was the
   *    1M-row soak's dominant cost (GB-scale cache churn per round for a
   *    40 B/row state change);
   *  - each partition solves its rows' ridge systems locally against the
-  *    broadcast B, with the per-partition invariants (BᵀB+λI, Bᵀ) hoisted
-  *    out of the row loop — embarrassingly parallel, no shuffle;
+  *    broadcast B, with BᵀB+λI factored once per partition —
+  *    embarrassingly parallel, no shuffle;
   *  - the B update needs Σ_i targetᵢᵀ·Aᵢ (m×r) and AᵀA (r×r): ONE partial
   *    per partition (m·r + r² doubles — KBs), reduced on the driver, so
   *    per-iteration network cost is independent of row count;
-  *  - per-row censor clamp and nonneg clamp happen partition-locally with
-  *    identical ordering to [[CensoredALS]] (censor before solve, nonneg
-  *    after).
+  *  - the per-row work (impute, censor clamp, solve, nonneg clamp, and the
+  *    B-step accumulation) is [[CensoredALS]]'s own row routines, run
+  *    sequentially inside each partition: one implementation, two
+  *    schedulers.
   *
-  * Semantics match [[CensoredALS]] given the same initial factors
-  * (row-wise vs batched solves of the same normal equations): verified in
-  * DistributedALSSpec by seeding both with identical A₀/B₀.
+  * Semantics match [[CensoredALS]] given the same initial factors (only
+  * the B-step summation order differs): verified in DistributedALSSpec by
+  * seeding both with identical A₀/B₀.
   */
 final class DistributedCensoredALS(
     spark: SparkSession, rank: Int, iters: Int, lambda: Double, seed: Long,
@@ -82,7 +83,7 @@ final class DistributedCensoredALS(
       while (j < m) {
         if (mask(i, j) == 0.0) {
           var dot = 0.0; var k = 0
-          while (k < rk) { dot += aFinal(i, k) * b(j, k); k += 1 }
+          while (k < rk) { dot += aFinal(i, k) * b(j * rk + k); k += 1 }
           out(i, j) = x(i, j) + dot
         }
         j += 1
@@ -123,80 +124,57 @@ final class DistributedCensoredALS(
     out.count()
     factors.unpersist(false)
     static.unpersist(false)
-    (out, b)
+    (out, DenseMatrix.tabulate(m, rk)((j, k) => b(j * rk + k)))
   }
 
   /** The shared ALS loop: statics cached once, factors re-derived (and
     * re-cached — rank doubles per row, not the row data) each iteration.
-    * Returns the final cached factors RDD (caller unpersists) and B. */
+    * Each partition runs [[CensoredALS]]'s row routines sequentially.
+    * Returns the final cached factors RDD (caller unpersists) and B as a
+    * flat m×r row-major array. */
   private def runIters(static: RDD[StaticRow], factors0: RDD[Array[Double]],
-                       m: Int, b0: DenseMatrix[Double]): (RDD[Array[Double]], DenseMatrix[Double]) = {
+                       m: Int, b0: DenseMatrix[Double]): (RDD[Array[Double]], Array[Double]) = {
     // local copies so Spark closures don't capture `this` (which holds the
     // non-serializable SparkSession)
     val rk = rank; val lam = lambda
     val sc = spark.sparkContext
     var factors = factors0
-    var b = b0.copy
-
-    def clampedTarget(st: StaticRow, ar: Array[Double],
-                      bLocal: DenseMatrix[Double]): DenseVector[Double] = {
-      val t = new Array[Double](m)
-      var j = 0
-      while (j < m) {
-        var dot = 0.0; var k = 0
-        while (k < rk) { dot += ar(k) * bLocal(j, k); k += 1 }
-        var v = st.xr(j) + (1.0 - st.mr(j)) * dot
-        if (st.cr(j) > 0 && v < st.cr(j)) v = st.cr(j)
-        t(j) = v
-        j += 1
-      }
-      DenseVector(t)
-    }
+    var b = CensoredALS.rowMajor(b0)
 
     var it = 0
     while (it < iters) {
       val bBc = sc.broadcast(b)
-      val lambdaEye = DenseMatrix.eye[Double](rk) * lam
 
-      // --- A update: per-row ridge solve against broadcast B, with the
-      // per-partition invariants (BᵀB+λI, Bᵀ) hoisted out of the row loop
+      // --- A update: per-row ridge solve against broadcast B, with BᵀB
+      // and its factor hoisted out of the row loop
       val newFactors = static.zipPartitions(factors, preservesPartitioning = true) {
         (sit, fit) =>
           val bL = bBc.value
-          val btb = bL.t * bL + lambdaEye
-          val bT = bL.t
+          val g = new Array[Double](rk * rk); val chol = new Array[Double](rk * rk)
+          CensoredALS.gramCholesky(bL, m, rk, lam, g, chol)
+          val y = new Array[Double](rk)
           sit.zip(fit).map { case (st, ar) =>
-            val t = clampedTarget(st, ar, bL)
-            val rhs = bT * t
-            val sol = btb \ rhs
-            Array.tabulate(rk)(k => math.max(0.0, sol(k)))
+            val next = ar.clone() // the cached parent's rows stay untouched
+            CensoredALS.solveRow(st.cells, 0, bL, g, chol, rk, next, 0, y)
+            next
           }
       }.cache()
       newFactors.count() // materialize before unpersisting parent
       factors.unpersist(false)
       factors = newFactors
 
-      // --- B update: one (AᵀA, TᵀA) partial per partition, reduced ---
-      val (ata, tta) = static.zipPartitions(factors, preservesPartitioning = true) {
+      // --- B update: one partial per partition, reduced ---
+      val acc = static.zipPartitions(factors, preservesPartitioning = true) {
         (sit, fit) =>
           val bL = bBc.value
-          val ataAcc = DenseMatrix.zeros[Double](rk, rk)
-          val ttaAcc = DenseMatrix.zeros[Double](m, rk)
+          val p = new Array[Double](CensoredALS.partialSize(m, rk))
           sit.zip(fit).foreach { case (st, ar) =>
-            val t = clampedTarget(st, ar, bL)
-            var k = 0
-            while (k < rk) {
-              var k2 = 0
-              while (k2 < rk) { ataAcc(k, k2) += ar(k) * ar(k2); k2 += 1 }
-              var j = 0
-              while (j < m) { ttaAcc(j, k) += t(j) * ar(k); j += 1 }
-              k += 1
-            }
+            CensoredALS.accumulateRow(st.cells, 0, ar, 0, bL, rk, p)
           }
-          Iterator((ataAcc, ttaAcc))
-      }.reduce { case ((a1, t1), (a2, t2)) => (a1 + a2, t1 + t2) }
-      val solB = ((ata + lambdaEye) \ tta.t).t // m×r
-      b = solB.map(v => math.max(0.0, v))
+          Iterator(p)
+      }.reduce((p1, p2) => Array.tabulate(p1.length)(q => p1(q) + p2(q)))
+      b = b.clone() // bBc may share the old array; recomputed lineage must still see it
+      CensoredALS.solveColumns(acc, m, rk, lam, b)
       it += 1
     }
     (factors, b)
@@ -204,8 +182,14 @@ final class DistributedCensoredALS(
 }
 
 object DistributedCensoredALS {
-  /** Row-partitioned immutable static data: (rowIdx, xRow, maskRow, cutRow).
+  /** Row-partitioned immutable static data: the row index and the row's
+    * [[FixedCells]] (the only cells the row solves visit).
     * Top-level so Spark closures don't drag an `$outer` reference along. */
-  private[graft] final case class StaticRow(
-      i: Int, xr: Array[Double], mr: Array[Double], cr: Array[Double])
+  private[linalg] final case class StaticRow(i: Int, cells: FixedCells)
+
+  private[linalg] object StaticRow {
+    def apply(i: Int, xRow: Array[Double], maskRow: Array[Double],
+              cutRow: Array[Double]): StaticRow =
+      StaticRow(i, FixedCells(xRow, maskRow, cutRow, 1, xRow.length))
+  }
 }

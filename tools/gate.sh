@@ -26,8 +26,12 @@ echo "== 3/4 DuckDB oracle compare (exact mode) =="
 GRAFT_EXACT=1 python3 tools/check_correctness.py /root/testdata/sf0.01 "$OUT"
 
 if [[ "${1:-}" != "--fast" ]]; then
-  echo "== 4/4 bench (sf0.1, local[32]) =="
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-    java $ADDOPENS -Dspark.ui.enabled=false -Xmx16g -cp "$CP" graft.Bench 2>/dev/null | tail -1
+  # sized to the host: every core, and half the memory clamped to 2-8 GB
+  CPUS="$(env -u OMP_NUM_THREADS nproc)"
+  HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
+    /proc/meminfo 2>/dev/null || echo 2g)"
+  echo "== 4/4 bench (sf0.1 at Bench's default dir, local[$CPUS], -Xmx$HEAP) =="
+  SPARK_GRAFT_CPUS="$CPUS" \
+    java $ADDOPENS -Dspark.ui.enabled=false -Xmx"$HEAP" -cp "$CP" graft.Bench 2>/dev/null | tail -1
 fi
 echo "== gate green =="
