@@ -1,6 +1,6 @@
 package graft.catalyst
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -114,6 +114,23 @@ object GraftExtensions {
   */
 object HintSteeringRule extends Rule[LogicalPlan] {
   val ConfKey = "spark.graft.steering.strategy"
+
+  /** Run `body` under one steering config: the session's steering
+    * `strategy` plus the config's extra session `confs`. Every touched key
+    * is restored afterwards, also when a set or `body` throws: a key that
+    * was set gets its old value back, a key that was absent is unset. */
+  def withSteering[T](spark: SparkSession, strategy: String, confs: Map[String, String])
+                     (body: => T): T = {
+    val prev = (ConfKey +: confs.keys.toSeq).map(k => k -> spark.conf.getOption(k)).toMap
+    try {
+      spark.conf.set(ConfKey, strategy)
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   private[catalyst] def hintFor(strategy: String): Option[JoinHint] = {
     def both(h: JoinStrategyHint) =

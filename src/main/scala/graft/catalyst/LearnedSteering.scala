@@ -32,17 +32,9 @@ object LearnedSteering {
     * config's confs, extract the physical plan tree, restore. The
     * planning pass launches no Spark job. Requires [[GraftExtensions]]. */
   def planFor(spark: SparkSession, fn: SparkSession => DataFrame,
-              config: SteeringConfig): PlanNode = {
-    val keys = HintSteeringRule.ConfKey +: config.confs.keys.toSeq
-    val prev = keys.map(k => k -> spark.conf.getOption(k)).toMap
-    spark.conf.set(HintSteeringRule.ConfKey, config.strategy)
-    config.confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try SparkPlanTrees.ofQuery(fn(spark))
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+              config: SteeringConfig): PlanNode =
+    HintSteeringRule.withSteering(spark, config.strategy, config.confs)(
+      SparkPlanTrees.ofQuery(fn(spark)))
 
   /** The whole (query × config) plan space, planned without executing —
     * the model's feature source. */
@@ -137,14 +129,27 @@ object LearnedSteering {
                  maxEpochs: Int = 120, seed: Long = 42,
                  alpha: Double = 1.0, beta: Double = 15.0,
                  warmStart: Vector[Observation] = Vector.empty): SteeringResult =
-    runWith(queryNames, configNames, exec,
-      new TcnnCompletion(plans, rank = rank, maxEpochs = maxEpochs, seed = seed),
+    runTcnn(queryNames, configNames, plans, exec, batch, rounds, rank, maxEpochs, seed,
+      alpha, beta, warmStart)._1
+
+  /** [[runLearned]], also returning the model (its per-round timings feed
+    * the reference-layout trace). */
+  private def runTcnn(queryNames: Seq[String], configNames: Seq[String],
+                      plans: IndexedSeq[IndexedSeq[PlanNode]],
+                      exec: (Int, Int, Double) => Outcome,
+                      batch: Int, rounds: Int, rank: Int, maxEpochs: Int, seed: Long,
+                      alpha: Double, beta: Double,
+                      warmStart: Vector[Observation]): (SteeringResult, TcnnCompletion) = {
+    val model = new TcnnCompletion(plans, rank = rank, maxEpochs = maxEpochs, seed = seed)
+    val res = runWith(queryNames, configNames, exec, model,
       batch = batch, rounds = rounds, alpha = alpha, beta = beta,
       warmStart = warmStart,
       // the reference LimeQO+'s random top-up (limeqo_plus.py:127-148):
       // a fresh model predicting ≈ the observed mean everywhere would
       // otherwise never probe anything under a finite α
       topUpSeed = Some(seed ^ 0x5eed))
+    (res, model)
+  }
 
   /** End-to-end live form: plan the whole space (no execution), steer with
     * tolerance-bounded real measurement, optionally record the learned
@@ -160,20 +165,11 @@ object LearnedSteering {
                    alpha: Double = 1.0, beta: Double = 15.0,
                    tracePath: Option[java.nio.file.Path] = None,
                    referenceTracePath: Option[java.nio.file.Path] = None): SteeringResult = {
-    val plans = planSpace(spark, queries, configs)
-    val model = new TcnnCompletion(plans)
-    val res = runWith(queries.map(_._1), configs.map(_.name),
+    val (res, model) = runTcnn(queries.map(_._1), configs.map(_.name),
+      planSpace(spark, queries, configs),
       (q, c, tol) => measureBounded(spark, queries(q)._2, configs(c), tol),
-      model, batch = batch, rounds = rounds, alpha = alpha, beta = beta,
-      topUpSeed = Some(42L ^ 0x5eed))
-    if (learn) {
-      val byName = queries.toMap
-      res.recommendations.foreach { r =>
-        val cfg = configs.find(_.name == r.configName)
-          .getOrElse(SteeringConfig(r.configName, ""))
-        Steered.learn(byName(r.queryName)(spark), cfg.strategy, cfg.confs)
-      }
-    }
+      batch, rounds, rank = 5, maxEpochs = 120, seed = 42, alpha, beta, Vector.empty)
+    if (learn) learnRecommendations(spark, queries, configs, res)
     tracePath.foreach(p => saveTrace(res, queries.map(_._1), configs.map(_.name), p))
     referenceTracePath.foreach(p => saveReferenceTrace(res, queries.length, p,
       model.roundTimes.toSeq))

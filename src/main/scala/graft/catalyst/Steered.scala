@@ -199,20 +199,13 @@ object Steered {
     hintFor(df) match {
       case None => action(df)
       case Some(hint) =>
-        val keys = HintSteeringRule.ConfKey +: hint.confs.keys.toSeq
-        val prev = keys.map(k => k -> spark.conf.getOption(k)).toMap
-        spark.conf.set(HintSteeringRule.ConfKey, hint.strategy)
-        hint.confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        // re-plan under the hint: a Dataset memoizes its QueryExecution on
-        // first use, so a df whose plan was already forced (count/explain)
-        // would silently keep the unhinted plan; the no-op projection
-        // wraps the same logical plan in a fresh Dataset that plans now,
-        // with the steering conf in effect
-        val fresh = df.select(org.apache.spark.sql.functions.col("*"))
-        try action(fresh)
-        finally prev.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
+        HintSteeringRule.withSteering(spark, hint.strategy, hint.confs) {
+          // re-plan under the hint: a Dataset memoizes its QueryExecution
+          // on first use, so a df whose plan was already forced
+          // (count/explain) would silently keep the unhinted plan; the
+          // no-op projection wraps the same logical plan in a fresh Dataset
+          // that plans now, with the steering conf in effect
+          action(df.select(org.apache.spark.sql.functions.col("*")))
         }
     }
   }

@@ -2,7 +2,7 @@ package graft.catalyst
 
 import breeze.linalg.DenseMatrix
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.linalg.CensoredALS
+import graft.linalg.{CensoredALS, MatrixCompletion}
 
 /** The online LimeQO loop over Spark itself: queries × join-strategy hints
   * form the workload matrix, Catalyst (steered by [[HintSteeringRule]]) is
@@ -134,22 +134,12 @@ object SteeringLoop {
     * materialization (noop sink), restore every touched conf.
     * Requires the session to carry [[GraftExtensions]]. */
   def measure(spark: SparkSession, fn: SparkSession => DataFrame,
-              config: SteeringConfig): Double = {
-    val keys = HintSteeringRule.ConfKey +: config.confs.keys.toSeq
-    val prev = keys.map(k => k -> spark.conf.getOption(k)).toMap
-    spark.conf.set(HintSteeringRule.ConfKey, config.strategy)
-    config.confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+              config: SteeringConfig): Double =
+    HintSteeringRule.withSteering(spark, config.strategy, config.confs) {
       val t0 = System.nanoTime()
       fn(spark).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
-    } finally {
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
     }
-  }
 
   /** Uncensored loop (tests' synthetic cost functions; no tolerance, every
     * execution completes): [[runCensored]] with infinite α/β. */
@@ -180,18 +170,30 @@ object SteeringLoop {
   final class AlsCompletion(rank: Int, lambda: Double, alsIters: Int,
                             rng: scala.util.Random) extends CompletionModel {
     def predictedSeconds(values: Array[Array[Double]], mask: Array[Array[Boolean]],
-                         cutoffs: Array[Array[Double]]): Array[Array[Double]] = {
+                         cutoffs: Array[Array[Double]]): Array[Array[Double]] =
+      AlsCompletion.complete(new CensoredALS(rank, alsIters, lambda, rng.nextLong()),
+        values, mask, cutoffs)
+  }
+
+  object AlsCompletion {
+    /** The one log1p → censored ALS → expm1 step, shared by the online loop
+      * and [[graft.strategy.LimeQOStrategy]]: `als` completes the log1p of
+      * the observed `values` (unobserved entries are ignored) with each
+      * positive cutoff clamped in the same log1p space (0 = uncensored),
+      * and every cell comes back as predicted seconds. */
+    def complete(als: MatrixCompletion, values: Array[Array[Double]],
+                 mask: Array[Array[Boolean]], cutoffs: Array[Array[Double]]): Array[Array[Double]] = {
       val nQ = values.length
       val nC = if (nQ == 0) 0 else values(0).length
       val logM = DenseMatrix.tabulate(nQ, nC)((r, c) =>
         if (mask(r)(c)) math.log1p(values(r)(c)) else 0.0)
       val maskM = DenseMatrix.tabulate(nQ, nC)((r, c) => if (mask(r)(c)) 1.0 else 0.0)
-      // cutoffs live in the same log1p space the ALS solves in
       val cutM = DenseMatrix.tabulate(nQ, nC)((r, c) =>
         if (cutoffs(r)(c) > 0.0) math.log1p(cutoffs(r)(c)) else 0.0)
-      val als = new CensoredALS(rank, alsIters, lambda, rng.nextLong())
       val completed = als.complete(logM, maskM, cutM)
-      Array.tabulate(nQ, nC)((r, c) => math.expm1(completed(r, c)))
+      val out = Array.ofDim[Double](nQ, nC)
+      for (r <- 0 until nQ; c <- 0 until nC) out(r)(c) = math.expm1(completed(r, c))
+      out
     }
   }
 
@@ -271,25 +273,22 @@ object SteeringLoop {
       }
     }
 
+    // execute one cell under a tolerance and record the outcome: completed
+    // cells enter the matrix, censored ones the cutoff ledger (only a
+    // finite cutoff is recordable — see recordCutoff)
+    def probe(r: Int, c: Int, tol: Double, round: Int): Unit = exec(r, c, tol) match {
+      case Completed(s) =>
+        values(r)(c) = s; mask(r)(c) = true
+        obs += Observation(r, c, s, round)
+      case Censored(cut) =>
+        if (recordCutoff(r, c, cut)) obs += Observation(r, c, cut, round, censored = true)
+    }
+
     // round 0: default plan for every query, unbounded (column 0 always
     // observed — the reference's init-mask invariant); warm-started
-    // default cells are already covered
-    var q = 0
-    while (q < nQ) {
-      if (!explored(q, 0)) {
-        exec(q, 0, Double.PositiveInfinity) match {
-          case Completed(s) =>
-            values(q)(0) = s; mask(q)(0) = true
-            obs += Observation(q, 0, s, 0)
-          case Censored(cut) => // unreachable with an infinite tolerance, but
-            // keep the ledger honest if an executor censors anyway (only a
-            // finite cutoff is recordable — see recordCutoff)
-            if (recordCutoff(q, 0, cut))
-              obs += Observation(q, 0, cut, 0, censored = true)
-        }
-      }
-      q += 1
-    }
+    // default cells are already covered. An executor that censors anyway
+    // is still ledgered honestly.
+    (0 until nQ).foreach(q => if (!explored(q, 0)) probe(q, 0, Double.PositiveInfinity, 0))
 
     val topUpRng = topUpSeed.map(new scala.util.Random(_))
     var round = 1
@@ -321,16 +320,7 @@ object SteeringLoop {
       } yield (r, c, (minObs(r) - pred) / pred, tol)
       val picks = candidates.sortBy { case (r, c, imp, _) => (-imp, r, c) }.take(batch)
 
-      picks.foreach { case (r, c, _, tol) =>
-        exec(r, c, tol) match {
-          case Completed(s) =>
-            values(r)(c) = s; mask(r)(c) = true
-            obs += Observation(r, c, s, round)
-          case Censored(cut) =>
-            if (recordCutoff(r, c, cut))
-              obs += Observation(r, c, cut, round, censored = true)
-        }
-      }
+      picks.foreach { case (r, c, _, tol) => probe(r, c, tol, round) }
 
       // LimeQO+ random top-up: fill the round's remaining batch slots with
       // random unexplored cells under the α·minObserved tolerance
@@ -345,14 +335,7 @@ object SteeringLoop {
             val mo = (0 until nC).filter(mask(r)).map(values(r))
               .minOption.getOrElse(Double.PositiveInfinity)
             val tol = if (alpha.isPosInfinity) Double.PositiveInfinity else alpha * mo
-            exec(r, c, tol) match {
-              case Completed(s) =>
-                values(r)(c) = s; mask(r)(c) = true
-                obs += Observation(r, c, s, round)
-              case Censored(cut) =>
-                if (recordCutoff(r, c, cut))
-                  obs += Observation(r, c, cut, round, censored = true)
-            }
+            probe(r, c, tol, round)
             filled += 1
             topped += 1
           }
@@ -439,40 +422,34 @@ object SteeringLoop {
   def measureBounded(spark: SparkSession, fn: SparkSession => DataFrame,
                      config: SteeringConfig, timeoutSeconds: Double): Outcome = {
     if (timeoutSeconds.isInfinite) return Completed(measure(spark, fn, config))
-    val keys = HintSteeringRule.ConfKey +: config.confs.keys.toSeq
-    val prev = keys.map(k => k -> spark.conf.getOption(k)).toMap
-    spark.conf.set(HintSteeringRule.ConfKey, config.strategy)
-    config.confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    val sc = spark.sparkContext
-    val group = s"graft-steer-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, s"steering probe ${config.name}", interruptOnCancel = true)
-    val timer = new java.util.Timer("graft-steer-watchdog", true)
-    @volatile var fired = false
-    // cancel REPEATEDLY once the tolerance passes (100 ms period, stopped
-    // by timer.cancel() in finally): a single cancelJobGroup only reaches
-    // jobs active at that instant, so a timeout landing between jobs (or
-    // during planning / an AQE stage boundary) would otherwise be lost and
-    // the probe would run unbounded — the exact hang censoring exists to
-    // prevent
-    timer.scheduleAtFixedRate(new java.util.TimerTask {
-      override def run(): Unit = { fired = true; sc.cancelJobGroup(group) }
-    }, math.max(1L, (timeoutSeconds * 1000).toLong), 100L)
-    try {
-      val t0 = System.nanoTime()
-      fn(spark).write.format("noop").mode("overwrite").save()
-      Completed((System.nanoTime() - t0) / 1e9)
-    } catch {
-      // NonFatal: OutOfMemoryError and friends must propagate, not be
-      // ledgered as a clean censoring. A genuine (non-cancellation) query
-      // error arriving after the watchdog fired is still recorded as
-      // censored-at-tolerance — indistinguishable here, and bounded.
-      case scala.util.control.NonFatal(_) if fired => Censored(timeoutSeconds)
-    } finally {
-      timer.cancel()
-      sc.clearJobGroup()
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
+    HintSteeringRule.withSteering(spark, config.strategy, config.confs) {
+      val sc = spark.sparkContext
+      val group = s"graft-steer-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(group, s"steering probe ${config.name}", interruptOnCancel = true)
+      val timer = new java.util.Timer("graft-steer-watchdog", true)
+      @volatile var fired = false
+      // cancel REPEATEDLY once the tolerance passes (100 ms period, stopped
+      // by timer.cancel() in finally): a single cancelJobGroup only reaches
+      // jobs active at that instant, so a timeout landing between jobs (or
+      // during planning / an AQE stage boundary) would otherwise be lost and
+      // the probe would run unbounded — the exact hang censoring exists to
+      // prevent
+      timer.scheduleAtFixedRate(new java.util.TimerTask {
+        override def run(): Unit = { fired = true; sc.cancelJobGroup(group) }
+      }, math.max(1L, (timeoutSeconds * 1000).toLong), 100L)
+      try {
+        val t0 = System.nanoTime()
+        fn(spark).write.format("noop").mode("overwrite").save()
+        Completed((System.nanoTime() - t0) / 1e9)
+      } catch {
+        // NonFatal: OutOfMemoryError and friends must propagate, not be
+        // ledgered as a clean censoring. A genuine (non-cancellation) query
+        // error arriving after the watchdog fired is still recorded as
+        // censored-at-tolerance — indistinguishable here, and bounded.
+        case scala.util.control.NonFatal(_) if fired => Censored(timeoutSeconds)
+      } finally {
+        timer.cancel()
+        sc.clearJobGroup()
       }
     }
   }
@@ -492,15 +469,20 @@ object SteeringLoop {
     val res = runCensored(queries.map(_._1), configs.map(_.name),
       (q, c, tol) => measureBounded(spark, queries(q)._2, configs(c), tol),
       batch = batch, rounds = rounds, alpha = alpha, beta = beta)
-    if (learn) {
-      val byName = queries.toMap
-      res.recommendations.foreach { r =>
-        val cfg = configs.find(_.name == r.configName)
-          .getOrElse(SteeringConfig(r.configName, ""))
-        // the FULL config is learned — second-dimension confs included
-        Steered.learn(byName(r.queryName)(spark), cfg.strategy, cfg.confs)
-      }
-    }
+    if (learn) learnRecommendations(spark, queries, configs, res)
     res
+  }
+
+  /** Record each recommendation in the [[Steered]] registry under its
+    * query's template fingerprint. The FULL config is learned — its
+    * second-dimension confs included. */
+  private[catalyst] def learnRecommendations(spark: SparkSession,
+      queries: Seq[(String, SparkSession => DataFrame)], configs: Seq[SteeringConfig],
+      res: SteeringResult): Unit = {
+    val byName = queries.toMap
+    res.recommendations.foreach { r =>
+      val cfg = configs.find(_.name == r.configName).getOrElse(SteeringConfig(r.configName, ""))
+      Steered.learn(byName(r.queryName)(spark), cfg.strategy, cfg.confs)
+    }
   }
 }

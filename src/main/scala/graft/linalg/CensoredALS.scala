@@ -131,19 +131,6 @@ final class CensoredALS(rank: Int, iters: Int, lambda: Double, seed: Long)
 }
 
 object CensoredALS {
-  /** Reference defaults: rank 5, 50 iterations, λ 0.2
-    * (`src/strategies/limeqo.py:11,44`). */
-  def default(seed: Long): CensoredALS = new CensoredALS(5, 50, 0.2, seed)
-
-  /** Plain (uncensored) ALS = censored ALS with all-zero cutoffs. */
-  def uncensored(rank: Int, iters: Int, lambda: Double, seed: Long): MatrixCompletion =
-    new MatrixCompletion {
-      private val inner = new CensoredALS(rank, iters, lambda, seed)
-      def complete(x: DenseMatrix[Double], mask: DenseMatrix[Double],
-                   cutoffs: DenseMatrix[Double]): DenseMatrix[Double] =
-        inner.complete(x, mask, DenseMatrix.zeros[Double](x.rows, x.cols))
-    }
-
   /** Rows per block: the unit of parallel work and of the B-step reduction.
     * Fixed, so results never depend on the thread count. */
   final val Block = 128

@@ -1,8 +1,7 @@
 package graft.strategy
 
 import java.nio.file.Path
-import scala.util.Random
-import graft.core.{RoundMetrics, RoundState, WorkloadMatrix}
+import graft.core.{RoundMetrics, WorkloadMatrix}
 import graft.model.{PlanSample, TCNN}
 import graft.plans.{PlanFeaturizer, PlanRecord}
 
@@ -41,21 +40,10 @@ final class LimeQOPlusStrategy(
     * bit-identically (LimeQOPlusSpec kill/resume test). */
   def run(w: WorkloadMatrix, init: Option[Array[Array[Boolean]]],
           tracePath: Option[Path], snapshotPath: Option[Path]): Vector[RoundMetrics] = {
-    val resumed = Loop.resumable(snapshotPath, name, seed)
-    val rng = resumed.flatMap(_.rng).map(RunSnapshot.rngFrom)
-      .getOrElse(new Random(seed))
-    val st = new RoundState(w)
-    resumed match {
-      case Some(s) => s.restore(st)
-      case None =>
-        val initMask = init.getOrElse(Array.tabulate(w.nRows, w.nCols)((_, j) => j == 0))
-        var i = 0
-        while (i < w.nRows) {
-          var j = 0
-          while (j < w.nCols) { if (initMask(i)(j)) st.mask(i)(j) = true; j += 1 }
-          i += 1
-        }
-    }
+    // the init mask marks cells observed but not explored (`limeqo_plus.py`)
+    val ex = new Exploration(name, Some(seed), w, tracePath, snapshotPath)(
+      Exploration.applyMask(init, explore = false))
+    val st = ex.st
 
     // featurize the corpus once (driver-resident; the Spark path for a
     // corpus that outgrows the driver is PlanFeaturizer.featuresDF +
@@ -77,22 +65,14 @@ final class LimeQOPlusStrategy(
     // past that draw
     // tolerant read: a snapshot missing the model blob (older format)
     // falls back to a fresh model rather than crashing the resume
-    val tcnn = resumed.flatMap(_.extra.get("tcnn")).map(RunSnapshot.unblob[TCNN])
-      .getOrElse(new TCNN(featurizer.numFeatures, rank, w.nRows, w.nCols, rng.nextLong()))
-    val results = scala.collection.mutable.ArrayBuffer.empty[RoundMetrics]
-    resumed.foreach(results ++= _.results)
+    val tcnn = ex.restored("tcnn").map(RunSnapshot.unblob[TCNN])
+      .getOrElse(new TCNN(featurizer.numFeatures, rank, w.nRows, w.nCols, ex.rng.nextLong()))
+    val perfect = ex.restored("perfect").map(_.toDouble).getOrElse(ex.minObs.sum - w.optTime)
 
-    var minObs = resumed.map(_.minObs).getOrElse(st.minObserved)
-    val perfect = resumed.flatMap(_.extra.get("perfect")).map(_.toDouble)
-      .getOrElse(minObs.sum - w.optTime)
-    var round = resumed.map(_.round).getOrElse(0)
-    def snap(done: Boolean): Unit = Loop.snap(snapshotPath,
-      RunSnapshot.capture(name, seed, st, round, minObs, results.toSeq,
-        rng = Some(rng),
-        extra = Map("tcnn" -> RunSnapshot.blob(tcnn), "perfect" -> perfect.toString),
-        done = done))
-    while (minObs.sum - w.optTime > perfect * 0.05 && round < maxRounds) {
-      minObs = st.minObserved
+    ex.loop(maxRounds, ex.minObs.sum - w.optTime > perfect * 0.05,
+      Map("tcnn" -> RunSnapshot.blob(tcnn), "perfect" -> perfect.toString)) {
+      ex.minObs = st.minObserved
+      ex.endIfExhausted()
 
       val (trainS, testS) = corpus.partition(s => st.mask(s.row)(s.cols(0)))
       // censoring threshold in label space (see class doc)
@@ -103,12 +83,13 @@ final class LimeQOPlusStrategy(
 
       val t0 = System.nanoTime()
       tcnn.train(trainS, censors, batchSize = 32, maxEpochs = maxEpochs,
-        shuffleSeed = rng.nextLong())
+        shuffleSeed = ex.rng.nextLong())
       val trainingTime = (System.nanoTime() - t0) / 1e9
 
       val t1 = System.nanoTime()
       // predict test cells, inverse latency transform, scatter over the
-      // plan's whole hint group (`limeqo_plus.py:236-261`)
+      // plan's whole hint group (`limeqo_plus.py:236-261`); unpredicted
+      // cells stay 0, which the round reads as +∞
       val predM = Array.fill(w.nRows, w.nCols)(0.0)
       testS.foreach { s =>
         val p = featurizer.inverseLabel(tcnn.predict(s))
@@ -116,74 +97,11 @@ final class LimeQOPlusStrategy(
       }
       val inferenceTime = (System.nanoTime() - t1) / 1e9
 
-      Loop.emit(results, st.metrics(trainingTime, inferenceTime), tracePath)
-
-      // keep only unobserved predictions; 0 ⇒ ∞ sentinel (`:92-93`)
-      val pred = Array.tabulate(w.nRows, w.nCols) { (r, c) =>
-        val v = if (st.mask(r)(c)) 0.0 else predM(r)(c)
-        if (v == 0.0) Double.PositiveInfinity else v
-      }
-      val select = Array.tabulate(w.nRows) { r =>
-        var best = 0; var c = 1
-        while (c < w.nCols) { if (pred(r)(c) < pred(r)(best)) best = c; c += 1 }
-        best
-      }
-      val improve = Array.tabulate(w.nRows) { r =>
-        val m = pred(r)(select(r))
-        (minObs(r) - m) / m
-      }
-      val order = (0 until w.nRows).sortBy(r => (-improve(r), r))
-
-      var cnt = 0
-      val it = order.iterator
-      while (it.hasNext && cnt < newObserveSize) {
-        val row = it.next()
-        val hint = select(row)
-        val p = pred(row)(hint)
-        val tolerance = math.min(alpha * minObs(row), beta * p)
-        val skip = p.isInfinite || st.explored(row)(hint) || p >= tolerance
-        if (!skip) {
-          if (w.values(row)(hint) >= minObs(row)) st.markExplored(row, hint)
-          if (w.values(row)(hint) >= tolerance) {
-            st.markTimeout(row, hint, tolerance)
-            st.timeout += tolerance
-          } else {
-            st.observe(row, hint)
-            st.markExplored(row, hint)
-            cnt += 1
-            st.exploreQueries += row
-          }
-        }
-      }
-
-      // random top-up (`limeqo_plus.py:127-148`)
-      var done = false
-      while (cnt < newObserveSize && !done) {
-        val mo = st.minObserved
-        if (mo.sum <= w.optTime + 50) done = true
-        else {
-          val row = rng.nextInt(w.nRows)
-          val col = rng.nextInt(w.nCols)
-          if (!st.mask(row)(col) && !st.explored(row)(col)) {
-            if (w.values(row)(col) >= mo(row)) {
-              st.timeout += mo(row)
-              st.markExplored(row, col)
-              st.markTimeout(row, col, mo(row))
-            } else {
-              st.markExplored(row, col)
-              st.observe(row, col)
-              cnt += 1
-              st.exploreQueries += row
-            }
-          }
-        }
-      }
-
-      minObs = st.minObserved
-      round += 1
-      snap(done = false)
+      ex.emit(st.metrics(trainingTime, inferenceTime))
+      LimeQORound.explore(st, LimeQORound.rank(st, predM), ex.minObs, alpha, beta,
+        newObserveSize, ex.rng)
+      // unlike LimeQO, the stop rule tests the state after the round
+      ex.minObs = st.minObserved
     }
-    if (minObs.sum - w.optTime <= perfect * 0.05) snap(done = true)
-    results.toVector
   }
 }

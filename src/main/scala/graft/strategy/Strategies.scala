@@ -1,8 +1,7 @@
 package graft.strategy
 
-import java.nio.file.{Files, Paths, Path}
-import scala.util.Random
-import breeze.linalg.DenseMatrix
+import java.nio.file.{Files, Path}
+import graft.catalyst.SteeringLoop.AlsCompletion
 import graft.core.{RoundMetrics, RoundState, WorkloadMatrix}
 import graft.linalg.CensoredALS
 
@@ -40,26 +39,6 @@ object Trace {
   }
 }
 
-private object Loop {
-  def emit(results: scala.collection.mutable.ArrayBuffer[RoundMetrics],
-           m: RoundMetrics, tracePath: Option[Path]): Unit = {
-    results += m
-    tracePath.foreach(p => Trace.write(p, results.toSeq))
-  }
-
-  /** The snapshot to resume from, if one exists and belongs to an
-    * UNFINISHED run of the same strategy (a done snapshot means the trace
-    * is complete — callers that want skip-if-done check at their level;
-    * run() itself restarts fresh and overwrites). */
-  def resumable(snapshotPath: Option[Path], strategy: String,
-                seed: Long = 0L): Option[RunSnapshot] =
-    snapshotPath.flatMap(RunSnapshot.load)
-      .filter(s => s.strategy == strategy && s.seed == seed && !s.done)
-
-  def snap(snapshotPath: Option[Path], s: => RunSnapshot): Unit =
-    snapshotPath.foreach(p => s.save(p))
-}
-
 /** Oracle: knows the true matrix; explores each query's true argmin in
   * descending-true-gain order, stopping at the first zero-gain row
   * (`oracle.py:9-59`). Deterministic — the primary e2e golden (SURVEY §5.3).
@@ -68,14 +47,10 @@ final class OracleStrategy(maxRounds: Int = Int.MaxValue) extends Strategy {
   val name = "oracle"
   def run(w: WorkloadMatrix, init: Option[Array[Array[Boolean]]],
           tracePath: Option[Path], snapshotPath: Option[Path]): Vector[RoundMetrics] = {
-    val resumed = Loop.resumable(snapshotPath, name)
-    val st = new RoundState(w)
-    resumed match {
-      case Some(s) => s.restore(st)
-      case None =>
-        var i = 0
-        while (i < w.nRows) { st.observe(i, 0); i += 1 }
-    }
+    val ex = new Exploration(name, None, w, tracePath, snapshotPath)(Exploration.observeDefaults)
+    val st = ex.st
+    // Oracle's stop rule reads no min-observed; its snapshots carry none
+    ex.minObs = Array.empty
 
     // gain/order are pure functions of w (min-observed over the col-0-only
     // mask), so a resumed run re-derives them identically to the original
@@ -83,8 +58,7 @@ final class OracleStrategy(maxRounds: Int = Int.MaxValue) extends Strategy {
     val rowMin = w.rowMin
     val mo0 = {
       val init0 = new RoundState(w)
-      var i = 0
-      while (i < w.nRows) { init0.observe(i, 0); i += 1 }
+      Exploration.observeDefaults(init0)
       init0.minObserved
     }
     val gain = Array.tabulate(w.nRows)(r => mo0(r) - rowMin(r))
@@ -92,33 +66,20 @@ final class OracleStrategy(maxRounds: Int = Int.MaxValue) extends Strategy {
     // tie only at 0 where the loop breaks anyway
     val order = (0 until w.nRows).sortBy(r => (-gain(r), r))
 
-    val results = scala.collection.mutable.ArrayBuffer.empty[RoundMetrics]
-    resumed.foreach(results ++= _.results)
-    // iterator position = rounds emitted so far (one pick per emit)
-    // tolerant read (mirrors Loop.resumable): a snapshot from an older
-    // format missing the key restarts the loop-local flag fresh instead
-    // of crashing the run with NoSuchElementException
-    var pos = resumed.flatMap(_.extra.get("pos")).map(_.toInt).getOrElse(0)
-    var stop = false
-    while (pos < order.length && !stop && results.length < maxRounds) {
-      val row = order(pos)
-      if (gain(row) == 0.0) stop = true
-      else {
-        Loop.emit(results, st.metrics(), tracePath)
-        val col = argmin(row)
-        if (!st.mask(row)(col)) {
-          st.observe(row, col)
-          st.exploreQueries += row
-        }
-        pos += 1
-        Loop.snap(snapshotPath, RunSnapshot.capture(name, 0L, st, pos,
-          Array.empty, results.toSeq, extra = Map("pos" -> pos.toString)))
+    // one pick per round, so the round is the iterator position (also
+    // persisted as "pos"). The zero-gain break is only seen by a round the
+    // cap lets start, so a run capped just before it stays resumable.
+    ex.loop(maxRounds,
+      ex.round < order.length && (ex.round >= maxRounds || gain(order(ex.round)) != 0.0),
+      Map("pos" -> ex.round.toString)) {
+      val row = order(ex.round)
+      ex.emit(st.metrics())
+      val col = argmin(row)
+      if (!st.mask(row)(col)) {
+        st.observe(row, col)
+        st.exploreQueries += row
       }
     }
-    if (stop || pos >= order.length)
-      Loop.snap(snapshotPath, RunSnapshot.capture(name, 0L, st, pos,
-        Array.empty, results.toSeq, extra = Map("pos" -> pos.toString), done = true))
-    results.toVector
   }
 }
 
@@ -130,27 +91,17 @@ final class QOAdvisorStrategy(newObserveSize: Int = 8,
   val name = "qo_advisor"
   def run(w: WorkloadMatrix, init: Option[Array[Array[Boolean]]],
           tracePath: Option[Path], snapshotPath: Option[Path]): Vector[RoundMetrics] = {
-    val resumed = Loop.resumable(snapshotPath, name)
-    val st = new RoundState(w)
-    resumed match {
-      case Some(s) => s.restore(st)
-      case None =>
-        var i = 0
-        while (i < w.nRows) { st.observe(i, 0); i += 1 }
-    }
-    val results = scala.collection.mutable.ArrayBuffer.empty[RoundMetrics]
-    resumed.foreach(results ++= _.results)
-
+    val ex = new Exploration(name, None, w, tracePath, snapshotPath)(Exploration.observeDefaults)
+    val st = ex.st
     // reference loop shape (`qo_advisor.py`): the while condition tests the
     // min-observed computed at the TOP of the previous body — i.e. the
     // PRE-pick value — so after the picks cross the threshold one more
-    // round still runs, emitting the converged record. A resumed run
-    // restores that stale vector from the snapshot for the same reason.
-    var minObs = resumed.map(_.minObs).getOrElse(st.minObserved)
-    var round = resumed.map(_.round).getOrElse(0)
-    while (minObs.sum > w.optTime + 20 && round < maxRounds) {
-      minObs = st.minObserved
-      Loop.emit(results, st.metrics(), tracePath)
+    // round still runs, emitting the converged record
+    ex.loop(maxRounds, ex.underBudget(None)) {
+      val minObs = st.minObserved
+      ex.minObs = minObs
+      ex.endIfExhausted()
+      ex.emit(st.metrics())
       val order = (0 until w.nRows).sortBy(r => (-minObs(r), r))
       var cnt = 0
       val it = order.iterator
@@ -176,14 +127,7 @@ final class QOAdvisorStrategy(newObserveSize: Int = 8,
           hint += 1
         }
       }
-      round += 1
-      Loop.snap(snapshotPath,
-        RunSnapshot.capture(name, 0L, st, round, minObs, results.toSeq))
     }
-    if (minObs.sum <= w.optTime + 20)
-      Loop.snap(snapshotPath,
-        RunSnapshot.capture(name, 0L, st, round, minObs, results.toSeq, done = true))
-    results.toVector
   }
 }
 
@@ -200,18 +144,9 @@ final class RandomStrategy(newObserveSize: Int = 8, seed: Long = 42,
   val name = "random"
   def run(w: WorkloadMatrix, init: Option[Array[Array[Boolean]]],
           tracePath: Option[Path], snapshotPath: Option[Path]): Vector[RoundMetrics] = {
-    val resumed = Loop.resumable(snapshotPath, name, seed)
-    val rng = resumed.flatMap(_.rng).map(RunSnapshot.rngFrom)
-      .getOrElse(new Random(seed))
-    val st = new RoundState(w)
-    resumed match {
-      case Some(s) => s.restore(st)
-      case None =>
-        var i = 0
-        while (i < w.nRows) { st.observe(i, 0); i += 1 }
-    }
-    val results = scala.collection.mutable.ArrayBuffer.empty[RoundMetrics]
-    resumed.foreach(results ++= _.results)
+    val ex = new Exploration(name, Some(seed), w, tracePath, snapshotPath)(Exploration.observeDefaults)
+    val st = ex.st
+    val rng = ex.rng
 
     def anyAvailable: Boolean = {
       var r = 0
@@ -226,20 +161,14 @@ final class RandomStrategy(newObserveSize: Int = 8, seed: Long = 42,
       false
     }
 
-    // while condition tests the PRE-pick value from the previous body top
-    // (`random.py:32-35`) — one extra converged round, as the reference;
-    // a resumed run restores the stale vector (and loop flags) verbatim
-    var minObs = resumed.map(_.minObs).getOrElse(st.minObserved)
-    var round = resumed.map(_.round).getOrElse(0)
-    def keepGoing: Boolean = budgetSeconds match {
-      case Some(b) => st.execTime + st.timeout - w.defaultTime < b
-      case None => minObs.sum > w.optTime + 20
-    }
-    // tolerant read: missing key (older snapshot format) = fresh default
-    var exhausted = resumed.flatMap(_.extra.get("exhausted")).exists(_.toBoolean)
-    while (keepGoing && round < maxRounds && !exhausted) {
-      minObs = st.minObserved
-      Loop.emit(results, st.metrics(), tracePath)
+    // the stop rule tests the PRE-pick value from the previous body top
+    // (`random.py:32-35`) — one extra converged round, as the reference.
+    // `ended` is the persisted "exhausted" flag.
+    ex.ended = ex.restored("exhausted").exists(_.toBoolean)
+    ex.loop(maxRounds, ex.underBudget(budgetSeconds), Map("exhausted" -> ex.ended.toString)) {
+      val minObs = st.minObserved
+      ex.minObs = minObs
+      ex.emit(st.metrics())
       var cnt = 0
       // reference quirk: `while cnt <= size` observes size+1 per round
       // (`random.py:55`) — preserved for envelope parity. The availability
@@ -267,16 +196,8 @@ final class RandomStrategy(newObserveSize: Int = 8, seed: Long = 42,
           }
         } else misses += 1
       }
-      exhausted = cnt <= newObserveSize // only anyAvailable can break early
-      round += 1
-      Loop.snap(snapshotPath, RunSnapshot.capture(name, seed, st, round, minObs,
-        results.toSeq, rng = Some(rng), extra = Map("exhausted" -> exhausted.toString)))
+      ex.ended = cnt <= newObserveSize // only anyAvailable can break early
     }
-    if (!keepGoing || exhausted)
-      Loop.snap(snapshotPath, RunSnapshot.capture(name, seed, st, round, minObs,
-        results.toSeq, rng = Some(rng),
-        extra = Map("exhausted" -> exhausted.toString), done = true))
-    results.toVector
   }
 }
 
@@ -291,36 +212,22 @@ final class GreedyStrategy(newObserveSize: Int = 8, seed: Long = 42,
   val name = "greedy"
   def run(w: WorkloadMatrix, init: Option[Array[Array[Boolean]]],
           tracePath: Option[Path], snapshotPath: Option[Path]): Vector[RoundMetrics] = {
-    val resumed = Loop.resumable(snapshotPath, name, seed)
-    val rng = resumed.flatMap(_.rng).map(RunSnapshot.rngFrom)
-      .getOrElse(new Random(seed))
-    val st = new RoundState(w)
-    resumed match {
-      case Some(s) => s.restore(st)
-      case None =>
-        var i = 0
-        while (i < w.nRows) { st.observe(i, 0); i += 1 }
-    }
-    val results = scala.collection.mutable.ArrayBuffer.empty[RoundMetrics]
-    resumed.foreach(results ++= _.results)
+    val ex = new Exploration(name, Some(seed), w, tracePath, snapshotPath)(Exploration.observeDefaults)
+    val st = ex.st
+    val rng = ex.rng
 
     def maskCount(r: Int): Int = st.mask(r).count(identity)
     def timeoutCount(r: Int): Int = st.timeoutM(r).count(_ != 0.0)
 
-    // while condition tests the PRE-pick value from the previous body top
-    // (`greedy.py`) — one extra converged round, as the reference
-    var minObs = resumed.map(_.minObs).getOrElse(st.minObserved)
-    var round = resumed.map(_.round).getOrElse(0)
-    def keepGoing: Boolean = budgetSeconds match {
-      case Some(b) => st.execTime + st.timeout - w.defaultTime < b
-      case None => minObs.sum > w.optTime + 20
-    }
-    // false once a full pass picks nothing: exhausted
-    // tolerant read: missing key (older snapshot format) = fresh default
-    var progressed = resumed.flatMap(_.extra.get("progressed")).forall(_.toBoolean)
-    while (keepGoing && round < maxRounds && progressed) {
-      minObs = st.minObserved
-      Loop.emit(results, st.metrics(), tracePath)
+    // the stop rule tests the PRE-pick value from the previous body top
+    // (`greedy.py`) — one extra converged round, as the reference.
+    // `ended` is the negation of the persisted "progressed" flag: a full
+    // pass that picks nothing has exhausted the matrix.
+    ex.ended = !ex.restored("progressed").forall(_.toBoolean)
+    ex.loop(maxRounds, ex.underBudget(budgetSeconds), Map("progressed" -> (!ex.ended).toString)) {
+      val minObs = st.minObserved
+      ex.minObs = minObs
+      ex.emit(st.metrics())
       val timeoutBefore = st.timeout
       var cnt = 0
       val order = (0 until w.nRows).sortBy(r => (-minObs(r), r))
@@ -347,16 +254,8 @@ final class GreedyStrategy(newObserveSize: Int = 8, seed: Long = 42,
           }
         }
       }
-      progressed = cnt > 0 || st.timeout != timeoutBefore
-      round += 1
-      Loop.snap(snapshotPath, RunSnapshot.capture(name, seed, st, round, minObs,
-        results.toSeq, rng = Some(rng), extra = Map("progressed" -> progressed.toString)))
+      ex.ended = !(cnt > 0 || st.timeout != timeoutBefore)
     }
-    if (!keepGoing || !progressed)
-      Loop.snap(snapshotPath, RunSnapshot.capture(name, seed, st, round, minObs,
-        results.toSeq, rng = Some(rng),
-        extra = Map("progressed" -> progressed.toString), done = true))
-    results.toVector
   }
 }
 
@@ -376,144 +275,38 @@ final class LimeQOStrategy(
     // false = the reference's `wocensored_*` ablation: plain ALS ignores
     // the timeout cutoffs (all-zero cutoff matrix fed to the kernel)
     censored: Boolean = true,
-    // pluggable completion kernel: default driver-local Breeze; pass
-    // (r, i, l, s) => new DistributedCensoredALS(spark, r, i, l, s) for
-    // workload matrices that outgrow the driver
+    // pluggable completion kernel: default the driver-local fused
+    // CensoredALS; pass (r, i, l, s) => new DistributedCensoredALS(spark,
+    // r, i, l, s) for workload matrices that outgrow the driver
     alsFactory: (Int, Int, Double, Long) => graft.linalg.MatrixCompletion =
       new CensoredALS(_, _, _, _)) extends Strategy {
   val name = "limeqo"
 
   def run(w: WorkloadMatrix, init: Option[Array[Array[Boolean]]],
           tracePath: Option[Path], snapshotPath: Option[Path]): Vector[RoundMetrics] = {
-    val resumed = Loop.resumable(snapshotPath, name, seed)
-    val rng = resumed.flatMap(_.rng).map(RunSnapshot.rngFrom)
-      .getOrElse(new Random(seed))
-    val st = new RoundState(w)
-    resumed match {
-      case Some(s) => s.restore(st)
-      case None =>
-        val initMask = init.getOrElse(
-          Array.tabulate(w.nRows, w.nCols)((_, j) => j == 0))
-        var i = 0
-        while (i < w.nRows) {
-          var j = 0
-          while (j < w.nCols) {
-            if (initMask(i)(j)) { st.mask(i)(j) = true; st.explored(i)(j) = true }
-            j += 1
-          }
-          i += 1
-        }
-    }
-    val results = scala.collection.mutable.ArrayBuffer.empty[RoundMetrics]
-    resumed.foreach(results ++= _.results)
-
-    var minObs = resumed.map(_.minObs).getOrElse(st.minObserved)
-    var round = resumed.map(_.round).getOrElse(0)
-    def keepGoing: Boolean = budgetSeconds match {
-      case Some(b) => st.execTime + st.timeout - w.defaultTime < b
-      case None => minObs.sum > w.optTime + 20
-    }
-    while (keepGoing && round < maxRounds) {
-      minObs = st.minObserved
-
-      // ALS in log space over the masked matrix
-      val logM = DenseMatrix.tabulate(w.nRows, w.nCols)((r, c) =>
-        if (st.mask(r)(c)) math.log1p(w.values(r)(c)) else 0.0)
-      val maskM = DenseMatrix.tabulate(w.nRows, w.nCols)((r, c) =>
-        if (st.mask(r)(c)) 1.0 else 0.0)
-      val logCut =
-        if (censored)
-          DenseMatrix.tabulate(w.nRows, w.nCols)((r, c) => math.log1p(st.timeoutM(r)(c)))
-        else DenseMatrix.zeros[Double](w.nRows, w.nCols)
+    val ex = new Exploration(name, Some(seed), w, tracePath, snapshotPath)(
+      Exploration.applyMask(init, explore = true))
+    val st = ex.st
+    // the uncensored ablation feeds an all-zero cutoff matrix
+    val cutoffs = if (censored) st.timeoutM else Array.ofDim[Double](w.nRows, w.nCols)
+    ex.loop(maxRounds, ex.underBudget(budgetSeconds)) {
+      ex.minObs = st.minObserved
+      ex.endIfExhausted()
 
       val t0 = System.nanoTime()
-      val als = alsFactory(rank, alsIters, lambda, rng.nextLong())
-      val completedLog = als.complete(logM, maskM, logCut)
+      val predicted = AlsCompletion.complete(alsFactory(rank, alsIters, lambda, ex.rng.nextLong()),
+        w.values, st.mask, cutoffs)
       val trainingTime = (System.nanoTime() - t0) / 1e9
-
       val t1 = System.nanoTime()
-      // expm1 back; keep only unobserved predictions (0 ⇒ ∞ sentinel)
-      val pred = Array.tabulate(w.nRows, w.nCols) { (r, c) =>
-        if (st.mask(r)(c)) Double.PositiveInfinity
-        else {
-          val v = math.expm1(completedLog(r, c))
-          if (v == 0.0) Double.PositiveInfinity else v
-        }
-      }
-      val mcSelect = Array.tabulate(w.nRows) { r =>
-        var best = 0; var c = 1
-        while (c < w.nCols) { if (pred(r)(c) < pred(r)(best)) best = c; c += 1 }
-        best
-      }
+      val ranked = LimeQORound.rank(st, predicted)
       val inferenceTime = (System.nanoTime() - t1) / 1e9
 
-      Loop.emit(results, st.metrics(trainingTime, inferenceTime), tracePath)
-
-      val improve = Array.tabulate(w.nRows) { r =>
-        val mcMin = pred(r)(mcSelect(r))
-        (minObs(r) - mcMin) / mcMin
-      }
-      val order = (0 until w.nRows).sortBy(r => (-improve(r), r))
-
-      var cnt = 0
-      val it = order.iterator
-      while (it.hasNext && cnt < newObserveSize) {
-        val row = it.next()
-        val hint = mcSelect(row)
-        val p = pred(row)(hint)
-        val tolerance = math.min(alpha * minObs(row), beta * p)
-        val skip = p.isInfinite || st.explored(row)(hint) || p >= tolerance
-        if (!skip) {
-          if (w.values(row)(hint) >= minObs(row)) st.markExplored(row, hint)
-          if (w.values(row)(hint) >= tolerance) {
-            st.markTimeout(row, hint, tolerance)
-            st.timeout += tolerance
-          } else {
-            st.observe(row, hint)
-            st.markExplored(row, hint)
-            cnt += 1
-            st.exploreQueries += row
-          }
-        }
-      }
-
-      // random top-up to the budget (`limeqo.py:102-123`); NOTE the
-      // reference REBINDS min_observed here (`limeqo.py:104`), so when the
-      // top-up runs, the outer stop condition tests the refreshed value —
-      // mirrored by assigning the outer minObs each top-up iteration
-      var topUpDone = false
-      while (cnt < newObserveSize && !topUpDone) {
-        val mo = st.minObserved
-        minObs = mo
-        if (mo.sum <= w.optTime + 50) topUpDone = true
-        else {
-          val row = rng.nextInt(w.nRows)
-          val col = rng.nextInt(w.nCols)
-          if (!st.mask(row)(col) && !st.explored(row)(col)) {
-            if (w.values(row)(col) >= mo(row)) {
-              st.timeout += mo(row)
-              st.markExplored(row, col)
-              st.markTimeout(row, col, mo(row))
-            } else {
-              st.markExplored(row, col)
-              st.observe(row, col)
-              cnt += 1
-              st.exploreQueries += row
-            }
-          }
-        }
-      }
-
-      // no trailing recompute: keepGoing's +20 branch tests the body-top
-      // value (per `limeqo.py:35-40`) unless the top-up above refreshed it
-      // (`limeqo.py:104`) — matching the reference in both paths
-      round += 1
-      Loop.snap(snapshotPath, RunSnapshot.capture(name, seed, st, round, minObs,
-        results.toSeq, rng = Some(rng)))
+      ex.emit(st.metrics(trainingTime, inferenceTime))
+      // the reference REBINDS min_observed in its top-up (`limeqo.py:104`),
+      // so when the top-up runs the stop rule tests the refreshed value;
+      // otherwise the body-top value (`limeqo.py:35-40`)
+      LimeQORound.explore(st, ranked, ex.minObs, alpha, beta, newObserveSize, ex.rng)
+        .foreach(ex.minObs = _)
     }
-    if (!keepGoing)
-      Loop.snap(snapshotPath, RunSnapshot.capture(name, seed, st, round, minObs,
-        results.toSeq, rng = Some(rng), done = true))
-    results.toVector
   }
 }
