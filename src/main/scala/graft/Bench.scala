@@ -1,5 +1,6 @@
 package graft
 
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
@@ -20,12 +21,15 @@ object Bench {
   private def fmt(v: Double, dp: Int): String =
     String.format(java.util.Locale.ROOT, "%." + dp + "f", Double.box(v))
 
+  /** Run `df` into the `noop` sink (see the measurement notes above). */
+  private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
   /** The queries the steered bench explores by default. Round 13 started
     * with 45 relational/events/text queries; round 15 extends coverage to
     * the graph/dedup/similarity/learned families — the shuffle-heavy
     * shapes where tools/ConfigProbe measured 20–50 % wins for the
     * shuffle_hash/partition-tier dimensions — per the round-14 verdict
-    * (≥80 done-bar). SPARK_GRAFT_QUERIES overrides. */
+    * (≥80 done-bar). [[Cli.queries]] overrides. */
   private val steeredDefault: Seq[String] = Seq(
     // relational / events / text scoring (the round-13 set)
     "q01_pricing_summary", "q02_top_revenue", "q03_broadcast_join",
@@ -94,6 +98,17 @@ object Bench {
     "q135_sketch_calibration", "q138_edit_verify", "q146_cluster_split",
     "q149_graph_arrival_diff", "q150_pagerank_residual")
 
+  /** The steered modes' queries ([[Cli.queries]] over [[steeredDefault]])
+    * as session functions, each run once into the noop sink so the JVM and
+    * codegen are warm before anything is measured. */
+  private def steeredQueries(spark: SparkSession,
+                             sfDir: String): Seq[(String, SparkSession => DataFrame)] = {
+    val qs = Cli.queries(steeredDefault).map(n =>
+      n -> ((sp: SparkSession) => SparkEntry.queries(n)(sp, sfDir)))
+    qs.foreach { case (_, fn) => try noop(fn(spark)) catch { case _: Throwable => () } }
+    qs
+  }
+
   /** `graft.Bench --steered` (round-13 verdict task 4): realize the
     * learned-steering win on the engine's own bench instead of only as a
     * trace. Phase 1 explores the (query × config) space with the online
@@ -106,18 +121,9 @@ object Bench {
     * `experiment/steering/`. */
   private def steeredMain(spark: SparkSession, sfDir: String): Unit = {
     import graft.catalyst.{Steered, SteeringLoop}
-    val names = sys.env.get("SPARK_GRAFT_QUERIES") match {
-      case Some(qs) => qs.split(",").toSeq.filter(SparkEntry.queries.contains)
-      case None => steeredDefault.filter(SparkEntry.queries.contains)
-    }
+    val qs = steeredQueries(spark, sfDir)
+    val names = qs.map(_._1)
     require(names.size >= 32, s"steered bench wants ≥32 queries, got ${names.size}")
-    val qs: Seq[(String, SparkSession => DataFrame)] =
-      names.map(n => n -> ((sp: SparkSession) => SparkEntry.queries(n)(sp, sfDir)))
-    // JVM/codegen warm before anything is measured
-    qs.foreach { case (_, fn) =>
-      try fn(spark).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
     val configs = SteeringLoop.crossed(SteeringLoop.defaultConfigs,
       SteeringLoop.partitionTiers(8))
     val batch = sys.env.getOrElse("SPARK_GRAFT_STEER_BATCH", "32").toInt
@@ -224,8 +230,7 @@ object Bench {
       val t0 = System.nanoTime()
       try {
         val df = fn(spark)
-        if (steered) Steered.run(df)(_.write.format("noop").mode("overwrite").save())
-        else df.write.format("noop").mode("overwrite").save()
+        if (steered) Steered.run(df)(noop) else noop(df)
       } catch { case _: Throwable => return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
@@ -258,16 +263,8 @@ object Bench {
     require(loaded > 0, s"no stored hints under ${outDir.resolve("hints")} — " +
       "run --steered first")
     val version = Steered.latestVersion(outDir.resolve("hints")).getOrElse(0L)
-    val names = sys.env.get("SPARK_GRAFT_QUERIES") match {
-      case Some(qr) => qr.split(",").toSeq.filter(SparkEntry.queries.contains)
-      case None => steeredDefault.filter(SparkEntry.queries.contains)
-    }
-    val qs: Seq[(String, SparkSession => DataFrame)] =
-      names.map(n => n -> ((sp: SparkSession) => SparkEntry.queries(n)(sp, sfDir)))
-    qs.foreach { case (_, fn) =>
-      try fn(spark).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    val qs = steeredQueries(spark, sfDir)
+    val names = qs.map(_._1)
     val hintedSet = qs.flatMap { case (n, fn) =>
       try if (Steered.hintFor(fn(spark)).isDefined) Some(n) else None
       catch { case _: Throwable => None }
@@ -315,18 +312,7 @@ object Bench {
     val loaded = Steered.loadLatestVersion(outDir.resolve("hints"))
     require(loaded > 0, s"no stored hints under ${outDir.resolve("hints")} — " +
       "run --steered first")
-    val names = sys.env.get("SPARK_GRAFT_QUERIES") match {
-      case Some(qs) => qs.split(",").toSeq.filter(SparkEntry.queries.contains)
-      case None => steeredDefault.filter(SparkEntry.queries.contains)
-    }
-    val qs: Seq[(String, SparkSession => DataFrame)] =
-      names.map(n => n -> ((sp: SparkSession) => SparkEntry.queries(n)(sp, sfDir)))
-    // JVM/codegen warm before anything is measured
-    qs.foreach { case (_, fn) =>
-      try fn(spark).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    val noop: DataFrame => Unit = _.write.format("noop").mode("overwrite").save()
+    val qs = steeredQueries(spark, sfDir)
     val results = qs.flatMap { case (name, fn) =>
       try Steered.revalidateOne(fn(spark))(noop).map {
         case (d, t, kept) => (name, d, t, kept)
@@ -398,7 +384,7 @@ object Bench {
           tol = 1e-6, maxIters = 20)))
     def runPass(edges: () => DataFrame): Seq[Double] =
       consumers.map { case (_, fn) =>
-        timed(fn(edges()).write.format("noop").mode("overwrite").save())
+        timed(noop(fn(edges())))
       }
     // warm both forms once, then alternate whole passes, min per query
     runPass(() => KnnGraph.knnEdgesWithCents(emb, cents, k, nProbe))
@@ -443,17 +429,26 @@ object Bench {
       s""""excluded":$nExcluded,"sf":"$sfDir"}""")
   }
 
+  /** Wall seconds of one run of query `name` into the noop sink, or -1.0
+    * when it throws; the failure is logged to stderr and kept in `failed`
+    * (name → last message) for the durable artifact. */
+  private[graft] def timeQuery(spark: SparkSession, name: String, fn: SparkSession => DataFrame,
+                               failed: mutable.Map[String, String]): Double = {
+    val t0 = System.nanoTime()
+    try noop(fn(spark))
+    catch { case e: Throwable =>
+      val msg = s"${e.getClass.getName}: ${e.getMessage}"
+      System.err.println(s"[bench] $name failed: $msg")
+      failed(name) = msg
+      return -1.0
+    }
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.catalyst.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Cli.cpus
+    val spark = Cli.session()
 
     if (args.contains("--steered") && args.contains("--revalidate")) {
       revalidateMain(spark, sfDir); return
@@ -464,24 +459,14 @@ object Bench {
     if (args.contains("--steered")) { steeredMain(spark, sfDir); return }
     if (args.contains("--graph")) { graphMain(spark, sfDir); return }
 
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
+    val failed = mutable.LinkedHashMap.empty[String, String]
+    def runOnce(name: String): Double =
+      timeQuery(spark, name, SparkEntry.queries(name)(_, sfDir), failed)
 
-    // SPARK_GRAFT_QUERIES=q01_...,q02_... restricts the set (debug aid);
-    // SPARK_GRAFT_WARMUP=0 skips the warmup pass
-    val names = sys.env.get("SPARK_GRAFT_QUERIES") match {
-      case Some(qs) => qs.split(",").toSeq.filter(SparkEntry.queries.contains)
-      case None => SparkEntry.queries.keys.toSeq.sorted
-    }
-    if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0")
-      names.foreach { n =>
-        ()
-        runOnce(n, SparkEntry.queries(n))
-      }
+    // Cli.queries restricts the set (debug aid); SPARK_GRAFT_WARMUP=0
+    // skips the warmup pass
+    val names = Cli.queries(SparkEntry.queries.keys.toSeq.sorted)
+    if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") names.foreach(runOnce)
     // best of 5 measured passes: this host shows sporadic multi-second
     // whole-JVM stalls (futex storms, system-time waves) unrelated to the
     // query; min-of-k reports steady-state per standard bench practice.
@@ -498,7 +483,7 @@ object Bench {
     // number lands within the committed artifact's noise floor, so both
     // methodologies report the same engine.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
-    val passes = (1 to reps).map(_ => names.map(n => runOnce(n, SparkEntry.queries(n))))
+    val passes = (1 to reps).map(_ => names.map(runOnce))
     val results = names.zipWithIndex.map { case (n, i) =>
       val ts = passes.map(_(i))
       val ok = ts.filter(_ >= 0)
@@ -528,7 +513,7 @@ object Bench {
         "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v, dp) }
         .mkString("{", ",", "}")
       // "cpus" makes the effective parallelism self-evident (round-16
-      // verdict task 2a: the scaling harness honors $SPARK_GRAFT_CPUS, but
+      // verdict task 2a: the scaling harness honors Cli.cpus, but
       // a heuristic reading only this line had to guess)
       s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","cpus":$cpus,"queries":$qs,"sf":"$sfDir"}"""
     }
@@ -550,9 +535,9 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench"))
     try {
       java.nio.file.Files.createDirectories(benchDir)
-      // A SPARK_GRAFT_QUERIES-filtered debug run must not clobber the
-      // committed full-suite artifact with a 2-query map.
-      val suffix = if (sys.env.contains("SPARK_GRAFT_QUERIES")) "_partial" else ""
+      // A filtered debug run must not clobber the committed full-suite
+      // artifact with a 2-query map.
+      val suffix = if (names.size < SparkEntry.queries.size) "_partial" else ""
       val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString + suffix
       val pretty = new StringBuilder()
       pretty.append("{\n  \"metric\": \"total\",\n")
@@ -564,7 +549,12 @@ object Bench {
       pretty.append(results.map { case (k, v) =>
         s"""    "$k": ${fmt(v, 3)}"""
       }.mkString(",\n"))
-      pretty.append("\n  }\n}\n")
+      // every query that threw on some run, with its last message
+      pretty.append("\n  },\n  \"failed\": {")
+      pretty.append(failed.map { case (k, v) =>
+        s"""\n    ${Verify.quote(k)}: ${Verify.quote(v.take(500))}"""
+      }.mkString(","))
+      pretty.append(if (failed.isEmpty) "}\n}\n" else "\n  }\n}\n")
       java.nio.file.Files.writeString(
         benchDir.resolve(s"bench_$sfName.json"), pretty.toString)
     } catch {

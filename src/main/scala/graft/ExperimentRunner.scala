@@ -53,25 +53,19 @@ import graft.strategy._
   */
 object ExperimentRunner {
 
+  private val Usage =
+    "ExperimentRunner <matrix.csv> <outDir> [--mask m.npy] [--seeds 20] " +
+    "[--plus-seeds 5] [--plans glob] [--batch 8] [--plus-batch 32] [--rank 5] " +
+    "[--alpha 1.0] [--beta 15.0] [--budget 720] [--limeqo-budget 1200] [--limeqo-max-rounds 200] " +
+    "[--distributed-als true] [--resume true] [--checkpoints 45,90,180,360,720] " +
+    "[--hours true] [--checkpoint-band 0.6,1.4] [--skip s1,s2]"
+
   def main(args: Array[String]): Unit = {
-    if (args.length < 2) {
-      System.err.println(
-        "usage: ExperimentRunner <matrix.csv> <outDir> [--mask m.npy] [--seeds 20] " +
-        "[--plus-seeds 5] [--plans glob] [--batch 8] [--plus-batch 32] [--rank 5] " +
-        "[--alpha 1.0] [--beta 15.0] [--budget 720] [--limeqo-budget 1200] [--limeqo-max-rounds 200] " +
-        "[--checkpoints 45,90,180,360,720] [--skip s1,s2]")
-      sys.exit(2)
+    val opts = Cli.orUsage(Usage) {
+      require(args.length >= 2, "missing <matrix.csv> <outDir>")
+      Cli.flags(args.toSeq.drop(2))
     }
     val Array(matrixPath, outDir) = args.take(2)
-    // strict flag parsing: every --flag takes exactly one value; a valueless
-    // or unknown-shaped token would silently shift all later options with a
-    // pairwise sliding parse, so fail loudly instead
-    val opts = args.drop(2).grouped(2).map {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-      case other =>
-        System.err.println(s"bad option pair: ${other.mkString(" ")} (every --flag needs a value)")
-        sys.exit(2)
-    }.toMap
 
     val seeds = opts.getOrElse("seeds", "20").toInt
     val plusSeeds = opts.getOrElse("plus-seeds", "5").toInt
@@ -174,23 +168,11 @@ object ExperimentRunner {
     // report regeneration; the strategy loops are deliberately driver-local
     // (SURVEY §1.3: the dense workload matrix is ≤2.4 MB, under the collect
     // boundary). When an embedding caller (a spec) already owns a session,
-    // getOrCreate reuses it and we must NOT stop it on their behalf.
-    val preExisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    // Cli.session returns it untouched and we must NOT stop it on their
+    // behalf.
+    val embedded = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).isDefined
     var sparkStarted = false
-    lazy val spark = preExisting match {
-      // reuse the embedder's session UNTOUCHED — getOrCreate would apply
-      // this builder's runtime confs (shuffle.partitions!) to it, mutating
-      // the caller's session for everything that runs after us
-      case Some(s) => s
-      case None =>
-        sparkStarted = true
-        SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .appName("graft-experiment")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-    }
+    lazy val spark = { sparkStarted = !embedded; Cli.session() }
 
     stage("oracle") {
       runResumable(new OracleStrategy(), 0L, None, Paths.get(s"$outDir/oracle.json"))

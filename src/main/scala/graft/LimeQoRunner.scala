@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Paths
+import graft.core.WorkloadMatrix
 import graft.sources.Workloads
 import graft.strategy._
 
@@ -16,24 +17,20 @@ import graft.strategy._
   * strategies: oracle | qo_advisor | random | greedy | limeqo | limeqo_plus
   * (limeqo_plus needs --plans, a glob of plan-file JSONs — the unzipped
   * `dataset/<ds>.zip` layout; batch defaults to 32 there,
-  * `run_experiment.py:61-63`.)
+  * `run_experiment.py:61-63`.) `--max-rounds` caps every strategy.
   * Writes the per-round JSON trace (reference artifact format, S4) to
   * <out.json> after every round.
   */
 object LimeQoRunner {
-  def main(args: Array[String]): Unit = {
-    if (args.length < 3) {
-      System.err.println(
-        "usage: LimeQoRunner <oracle|qo_advisor|random|greedy|limeqo> <matrix.csv> <out.json> " +
-        "[--mask m.npy] [--batch 8] [--seed 42] [--rank 5] [--alpha 1.0] [--beta 15.0] " +
-        "[--lambda 0.2] [--max-rounds N]")
-      sys.exit(2)
-    }
-    val Array(stratName, matrixPath, outPath) = args.take(3)
-    val opts = args.drop(3).sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+  private val Usage =
+    "LimeQoRunner <oracle|qo_advisor|random|greedy|limeqo|limeqo_plus> <matrix.csv> <out.json> " +
+    "[--mask m.npy] [--batch 8] [--seed 42] [--rank 5] [--alpha 1.0] [--beta 15.0] " +
+    "[--lambda 0.2] [--max-rounds N] [--plans glob]"
 
+  /** The strategy `name` configured from `opts`; throws
+    * [[IllegalArgumentException]] on an unknown name, a bad number or a
+    * limeqo_plus run without `--plans`. */
+  def strategy(name: String, opts: Map[String, String], w: WorkloadMatrix): Strategy = {
     val batch = opts.getOrElse("batch", "8").toInt
     val seed = opts.getOrElse("seed", "42").toLong
     val rank = opts.getOrElse("rank", "5").toInt
@@ -41,39 +38,41 @@ object LimeQoRunner {
     val beta = opts.getOrElse("beta", "15.0").toDouble
     val lambda = opts.getOrElse("lambda", "0.2").toDouble
     val maxRounds = opts.get("max-rounds").map(_.toInt).getOrElse(Int.MaxValue)
-
-    val w = Workloads.matrixFromCsv(matrixPath)
-    val mask = opts.get("mask").map(Workloads.initMask(_, w))
-
-    val strategy: Strategy = stratName match {
-      case "oracle" => new OracleStrategy
-      case "qo_advisor" => new QOAdvisorStrategy(batch)
-      case "random" => new RandomStrategy(batch, seed)
-      case "greedy" => new GreedyStrategy(batch, seed)
+    name match {
+      case "oracle" => new OracleStrategy(maxRounds)
+      case "qo_advisor" => new QOAdvisorStrategy(batch, maxRounds)
+      case "random" => new RandomStrategy(batch, seed, maxRounds)
+      case "greedy" => new GreedyStrategy(batch, seed, maxRounds)
       case "limeqo" => new LimeQOStrategy(rank, lambda, alpha, beta, batch,
         seed = seed, maxRounds = maxRounds)
       case "limeqo_plus" =>
         val glob = opts.getOrElse("plans",
-          { System.err.println("limeqo_plus requires --plans <glob>"); sys.exit(2); "" })
-        val spark = org.apache.spark.sql.SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .getOrCreate()
-        val plans = graft.plans.PlanFeaturizer.loadPlans(spark, glob)
+          throw new IllegalArgumentException("limeqo_plus requires --plans <glob>"))
+        val plans = graft.plans.PlanFeaturizer.loadPlans(Cli.session(), glob)
         val fz = graft.plans.PlanFeaturizer.fit(plans)
         val rowOf = w.queryIds.zipWithIndex.toMap
         new LimeQOPlusStrategy(plans, fz, rowOf, rank, alpha, beta,
           newObserveSize = opts.getOrElse("batch", "32").toInt,
           seed = seed, maxRounds = maxRounds)
-      case other =>
-        System.err.println(s"unknown strategy: $other"); sys.exit(2); null
+      case other => throw new IllegalArgumentException(s"unknown strategy: $other")
     }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val opts = Cli.orUsage(Usage) {
+      require(args.length >= 3, "missing <strategy> <matrix.csv> <out.json>")
+      Cli.flags(args.toSeq.drop(3))
+    }
+    val Array(stratName, matrixPath, outPath) = args.take(3)
+    val w = Workloads.matrixFromCsv(matrixPath)
+    val mask = opts.get("mask").map(Workloads.initMask(_, w))
+    val s = Cli.orUsage(Usage)(strategy(stratName, opts, w))
 
     val t0 = System.nanoTime()
-    val results = strategy.run(w, mask, Some(Paths.get(outPath)))
+    val results = s.run(w, mask, Some(Paths.get(outPath)))
     val secs = (System.nanoTime() - t0) / 1e9
     val last = results.lastOption
-    println(f"${strategy.name}: ${results.length} rounds in $secs%.2f s; " +
+    println(f"${s.name}: ${results.length} rounds in $secs%.2f s; " +
       f"final total_latency ${last.map(_.totalLatency).getOrElse(Double.NaN)}%.3f " +
       f"(default ${w.defaultTime}%.3f, optimal ${w.optTime}%.3f)")
   }

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.report.Report
 import graft.sources.Workloads
 
@@ -31,13 +30,7 @@ object ReportRunner {
     val labels = checkpoints.map(c =>
       if (c == c.floor) s"${c.toLong}s" else s"${c}s")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Cli.session()
 
     val w = Workloads.matrixFromCsv(matrixPath)
     val csv = Report.checkpointCsv(spark, strategies, w.defaultTime, checkpoints, labels)

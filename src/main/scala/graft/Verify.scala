@@ -1,41 +1,33 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. [[Cli.queries]]
+  * restricts the set (debug aid). */
 object Verify {
+  /** `s` as a JSON string literal. Escapes backslash, quote and ALL
+    * control chars (<0x20) — a tab or CR in builder-authored SQL would
+    * otherwise make the driver's json.load fail and silently zero the
+    * round's correctness. */
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.catalyst.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // in SparkEntry's order, whatever the order of a restricting list
+    val all = SparkEntry.queries.keys.toSeq
+    val selected = all.filter(Cli.queries(all).toSet)
+    val spark = Cli.session()
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_QUERIES=q28_...,q30_... restricts the set (debug aid)
-    val selected = sys.env.get("SPARK_GRAFT_QUERIES") match {
-      case Some(qs) => SparkEntry.queries.filter(kv => qs.split(",").contains(kv._1))
-      case None => SparkEntry.queries
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    selected.foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
@@ -58,14 +50,14 @@ object Verify {
     // from earlier runs (or since-removed queries) can't inflate the pass
     // total.
     Files.writeString(Paths.get(s"$outDir/manifest.json"),
-      selected.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      selected.sorted.map(quote).mkString("[", ",", "]"))
     // Machine-readable failure manifest for the local gate
     // (tools/check_correctness.py reports these with the real message).
     val errJson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v.take(500))}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}: ${quote(v.take(500))}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     val json = SparkEntry.oracleSql.filter(kv => selected.contains(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -116,21 +116,12 @@ object HintSteeringRule extends Rule[LogicalPlan] {
   val ConfKey = "spark.graft.steering.strategy"
 
   /** Run `body` under one steering config: the session's steering
-    * `strategy` plus the config's extra session `confs`. Every touched key
-    * is restored afterwards, also when a set or `body` throws: a key that
-    * was set gets its old value back, a key that was absent is unset. */
+    * `strategy` plus the config's extra session `confs`, in the one conf
+    * scope ([[graft.Cli.withConfs]]): every touched key is restored
+    * afterwards, also when a set or `body` throws. */
   def withSteering[T](spark: SparkSession, strategy: String, confs: Map[String, String])
-                     (body: => T): T = {
-    val prev = (ConfKey +: confs.keys.toSeq).map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set(ConfKey, strategy)
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+                     (body: => T): T =
+    graft.Cli.withConfs(spark, (ConfKey -> strategy) +: confs.toSeq)(body)
 
   private[catalyst] def hintFor(strategy: String): Option[JoinHint] = {
     def both(h: JoinStrategyHint) =

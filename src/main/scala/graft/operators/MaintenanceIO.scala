@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Shared plumbing for the partition-surgical maintenance operators
   * ([[CorpusMaintenance]] over the doc shards, [[EmbeddingMaintenance]]
   * over the IVF cells). */
-private[operators] object MaintenanceIO {
+private[graft] object MaintenanceIO {
 
   /** Spark refuses to overwrite a path its own input plan still reads
     * (rightly — a mid-write failure would destroy the input). The rewrite
@@ -77,14 +77,6 @@ private[operators] object MaintenanceIO {
 
   /** Run `body` with dynamic partition-overwrite mode, restoring the
     * previous setting afterwards. */
-  def withDynamicOverwrite[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def withDynamicOverwrite[A](spark: SparkSession)(body: => A): A =
+    graft.Cli.withConfs(spark, Seq("spark.sql.sources.partitionOverwriteMode" -> "dynamic"))(body)
 }

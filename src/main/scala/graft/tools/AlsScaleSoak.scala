@@ -1,7 +1,6 @@
 package graft.tools
 
 import breeze.linalg.DenseMatrix
-import org.apache.spark.sql.SparkSession
 import graft.linalg.{CensoredALS, DistributedCensoredALS}
 
 /** Scale soak for [[graft.linalg.DistributedCensoredALS]] — the 100 TB
@@ -69,13 +68,7 @@ object AlsScaleSoak {
   def main(args: Array[String]): Unit = {
     val sizes = args.headOption.getOrElse("250000,500000,1000000")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Cli.session()
     val sc = spark.sparkContext
 
     // ---- parity: same generator, first 3133 rows (CEB shape), both kernels

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.catalyst.SteeringLoop
 import graft.catalyst.SteeringLoop.SteeringConfig
 
@@ -12,32 +11,22 @@ import graft.catalyst.SteeringLoop.SteeringConfig
   * steered bench's adoption threshold (a learned config is only worth
   * shipping when its margin clears the host's noise floor).
   *
-  *   SPARK_GRAFT_QUERIES=q09_...,q63_... graft.tools.ConfigProbe [reps]
+  *   graft.tools.ConfigProbe [reps]
+  *
+  * The queries are required, named through [[graft.Cli.queries]].
   */
 object ConfigProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = args.headOption.map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.catalyst.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val names = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").toSeq.filter(graft.SparkEntry.queries.contains))
-      .getOrElse(sys.error("set SPARK_GRAFT_QUERIES"))
+    val names = graft.Cli.queries(Nil)
+    require(names.nonEmpty, "ConfigProbe needs the queries to probe (see graft.Cli.queries)")
+    val spark = graft.Cli.session()
+    // the steered bench's space plus the AQE-off and bloom-filter cells
+    val axes = (SteeringLoop.aqeAxis ++ SteeringLoop.scalePlumbingAxis).toMap
     val configs: Seq[SteeringConfig] =
-      SteeringLoop.crossed(SteeringLoop.defaultConfigs,
-        SteeringLoop.partitionTiers(8)) ++ Seq(
-        SteeringConfig("noaqe", "", Map("spark.sql.adaptive.enabled" -> "false")),
-        SteeringConfig("bloom", "", Map(
-          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-          "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")))
+      SteeringLoop.crossed(SteeringLoop.defaultConfigs, SteeringLoop.partitionTiers(8)) ++
+        Seq("noaqe", "bloom").map(n => SteeringConfig(n, "", axes(n)))
     // warm
     names.foreach(n => try graft.SparkEntry.queries(n)(spark, sfDir)
       .write.format("noop").mode("overwrite").save() catch { case _: Throwable => () })

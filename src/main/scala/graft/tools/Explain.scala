@@ -1,29 +1,22 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{Cli, SparkEntry}
 
 /** Plan-audit main: prints `explain("formatted")` for the named queries
   * (or all) — the "is this the plan you'd want at 100 TB" review loop.
   *
-  * Usage: graft.Explain [sfDir] [q01_...,q02_...]
+  * Usage: graft.tools.Explain [sfDir] [q01_...,q02_...]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.catalyst.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val names = args.lift(1) match {
-      case Some(qs) => qs.split(",").toSeq.filter(graft.SparkEntry.queries.contains)
-      case None => graft.SparkEntry.queries.keys.toSeq.sorted
-    }
+    // the list argument, else Cli.queries' own selection, else all
+    val names = Cli.orUsage("Explain [sfDir] [q01_...,q02_...]")(Cli.queries(
+      Cli.queries(SparkEntry.queries.keys.toSeq.sorted), list = args.lift(1)))
+    val spark = Cli.session()
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.ProductQuantization
 
@@ -22,13 +21,7 @@ object HierBench {
     val nSuper = args.lift(2).map(_.toInt).getOrElse(20)
     val nSuperProbe = args.lift(3).map(_.toInt).getOrElse(4)
     val reps = args.lift(4).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Cli.session()
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet").cache()
     val n = emb.count()

@@ -44,13 +44,7 @@ object IvfChurnSoak {
     val nVecs = if (streamMode) 100000L else args.lift(0).map(_.toLong).getOrElse(100000L)
     val batches = if (streamMode) 5 else args.lift(1).map(_.toInt).getOrElse(5)
     val batchSize = if (streamMode) 10000L else args.lift(2).map(_.toLong).getOrElse(10000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Cli.session()
     import spark.implicits._
 
     val path = java.nio.file.Files.createTempDirectory("ivf_churn").toString + "/index"

@@ -205,29 +205,20 @@ object Soak {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("run")
     val dir = args.lift(1).getOrElse("target/soak")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // shuffle partitions default to the core count but are
-      // independently overridable: the 8× chain showed the gram-keyed
-      // families going superlinear at 800k docs under 32 fixed
-      // partitions (per-partition hash state outgrows memory and
-      // spills) — the cluster answer is partitions ∝ data, which
-      // SPARK_GRAFT_SHUFFLE simulates
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      // input-split sizing: a soak corpus is SMALL ON DISK but explodes
-      // 60-80× in the gram stage — at the default 128 MB split the 800k
-      // corpus (~320 MB) becomes 3 map tasks each sorting ~17M exploded
-      // shuffle rows (spill → superlinear). A real cluster sizes splits
-      // for the post-explode width; SPARK_GRAFT_MAXPART simulates it
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPART", "134217728"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.catalyst.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Cli.session()
+    // shuffle partitions default to the core count but are
+    // independently overridable: the 8× chain showed the gram-keyed
+    // families going superlinear at 800k docs under 32 fixed
+    // partitions (per-partition hash state outgrows memory and
+    // spills) — the cluster answer is partitions ∝ data, which
+    // SPARK_GRAFT_SHUFFLE simulates
+    sys.env.get("SPARK_GRAFT_SHUFFLE").foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
+    // input-split sizing: a soak corpus is SMALL ON DISK but explodes
+    // 60-80× in the gram stage — at the default 128 MB split the 800k
+    // corpus (~320 MB) becomes 3 map tasks each sorting ~17M exploded
+    // shuffle rows (spill → superlinear). A real cluster sizes splits
+    // for the post-explode width; SPARK_GRAFT_MAXPART simulates it
+    sys.env.get("SPARK_GRAFT_MAXPART").foreach(spark.conf.set("spark.sql.files.maxPartitionBytes", _))
 
     mode match {
       case "gen" =>
@@ -342,9 +333,8 @@ object Soak {
             .minhashSignatures(graft.Tables.documents(s, d), useFastKernel = true)),
           "q98_substr_hashed" -> ((s, d) => graft.operators.SubstrDedup
             .substrSpanCoverage(graft.Tables.documents(s, d), hashedKeys = true)))
-        val only = sys.env.get("SPARK_GRAFT_QUERIES")
-          .map(_.split(",").toSet).getOrElse(families.toSet)
-        val rows = families.filter(only).map { name =>
+        val rows = graft.Cli.queries(families,
+            graft.SparkEntry.queries.keySet ++ soakOnly.keySet).map { name =>
           // resolve via Option: an entry missing from BOTH maps (renamed
           // query, stale families list) records as that one query's
           // failure instead of aborting the whole soak mid-run

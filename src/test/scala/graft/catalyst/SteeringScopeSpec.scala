@@ -74,4 +74,23 @@ class SteeringScopeSpec extends AnyFunSuite with SharedSpark {
       restores(Steered.run(df)(d => boom(d.sparkSession)))
     } finally Steered.clear()
   }
+
+  test("withDynamicOverwrite restores the overwrite mode when its write throws") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    def failingWrite(): Unit = graft.operators.MaintenanceIO.withDynamicOverwrite(spark) {
+      assert(spark.conf.get(key) == "dynamic")
+      throw new IllegalStateException("injected write failure")
+    }
+    val before = spark.conf.getAll.get(key)
+    try {
+      spark.conf.set(key, "STATIC")
+      intercept[IllegalStateException](failingWrite())
+      assert(spark.conf.get(key) == "STATIC", "a set mode must get its value back")
+      spark.conf.unset(key)
+      intercept[IllegalStateException](failingWrite())
+      // getOption would read the conf's registered default; getAll holds
+      // only the keys that are set
+      assert(!spark.conf.getAll.contains(key), "an absent mode must be unset")
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
