@@ -112,8 +112,8 @@ object LearnedSteering {
       tcnn.train(ts.map(_._1), ts.map(_._2), batchSize = batchSize,
         maxEpochs = maxEpochs, shuffleSeed = rng.nextLong())
       val t1 = System.nanoTime()
-      val out = Array.tabulate(nQ, nC)((q, c) =>
-        fz.inverseLabel(tcnn.predict(samples(q)(c))))
+      val preds = tcnn.predictAll(samples.flatten.toIndexedSeq)
+      val out = Array.tabulate(nQ, nC)((q, c) => fz.inverseLabel(preds(q * nC + c)))
       roundTimes += (((t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9))
       out
     }

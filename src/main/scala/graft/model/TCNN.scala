@@ -1,6 +1,8 @@
 package graft.model
 
-import breeze.linalg.{DenseMatrix, DenseVector, argmax, max => bmax}
+import java.util.stream.IntStream
+import breeze.linalg.{DenseMatrix, DenseVector}
+import scala.collection.mutable.ArrayBuffer
 import scala.util.Random
 
 /** One training/inference sample: a featurized plan tree plus its matrix
@@ -35,12 +37,28 @@ final case class PlanSample(
   * replicate (documented deviation; LimeQO+ parity is statistical —
   * SURVEY §5.4).
   *
-  * Scale path: training state is ~(256·3F + 128·768 + embeddings) ≈ a few
-  * hundred KB — driver-resident; scoring broadcasts the weights and maps
-  * partitions of featurized plans (see `LimeQOPlusStrategy`).
+  * Parallelism: training state is ~(256·3F + 128·768 + embeddings) ≈ a few
+  * hundred KB and stays on the driver. A minibatch's samples run their
+  * forward and backward passes in parallel, and [[predictAll]] scores its
+  * samples in parallel, on the caller's ForkJoin pool (the common pool
+  * outside one). The result is bit-identical for any pool size:
+  *  - a sample's dropout masks are drawn from `rng` before the parallel
+  *    work, in the order a sequential pass draws them;
+  *  - a backward pass writes no gradient; it returns its gradient terms,
+  *    and [[accumulate]] adds them over disjoint column bands of each
+  *    `Param.g` so that every element takes its adds in (sample, node, op)
+  *    order;
+  *  - a rank-1 term `g(i, j) += a(i) * b(j)` is a plain loop, which rounds
+  *    exactly like building the outer product and adding it.
+  *
+  * The serialized form (fields and serialVersionUID) is pinned: LimeQO+
+  * snapshots carry the model, so per-call scratch state never becomes a
+  * field.
   */
+@SerialVersionUID(3533514260118072882L)
 final class TCNN(val numFeatures: Int, val rank: Int, val nRows: Int, val nCols: Int,
                  seed: Long, dropP: Double = 0.3) extends Serializable {
+  import TCNN._
   // Serializable: the model IS cross-round state (weights + Adam moments +
   // the dropout RNG mid-stream), and LimeQO+'s per-round RunSnapshot
   // persists the whole instance so an interrupted run resumes
@@ -49,6 +67,7 @@ final class TCNN(val numFeatures: Int, val rank: Int, val nRows: Int, val nCols:
   private val rng = new Random(seed)
 
   /** A parameter tensor with its gradient and Adam state. */
+  @SerialVersionUID(-7522081537482646179L)
   final class Param(val w: DenseMatrix[Double]) extends Serializable {
     val g: DenseMatrix[Double] = DenseMatrix.zeros[Double](w.rows, w.cols)
     val m: DenseMatrix[Double] = DenseMatrix.zeros[Double](w.rows, w.cols)
@@ -105,24 +124,40 @@ final class TCNN(val numFeatures: Int, val rank: Int, val nRows: Int, val nCols:
     ((xhat *:* g.w(::, 0)) + b.w(::, 0), LnState(xhat, invStd))
   }
 
-  /** LayerNorm backward: standard closed form. Accumulates dγ/dβ. */
-  private def layerNormB(dy: DenseVector[Double], st: LnState, g: Param, b: Param): DenseVector[Double] = {
+  /** LayerNorm backward: standard closed form. Records dγ/dβ in `grads`. */
+  private def layerNormB(dy: DenseVector[Double], st: LnState, g: Param, b: Param,
+                         grads: ArrayBuffer[Grad]): DenseVector[Double] = {
     val n = st.xhat.length.toDouble
-    g.g(::, 0) :+= dy *:* st.xhat
-    b.g(::, 0) :+= dy
+    grads += new Scaled(g, dy, st.xhat)
+    grads += new Column(b, dy)
     val dxhat = dy *:* g.w(::, 0)
     val s1 = breeze.linalg.sum(dxhat)
     val s2 = breeze.linalg.sum(dxhat *:* st.xhat)
     ((dxhat * n) - s1 - (st.xhat * s2)) * (st.invStd / n)
   }
 
-  private def dropoutMask(n: Int, train: Boolean): DenseVector[Double] =
-    if (!train) DenseVector.ones[Double](n)
-    else DenseVector.tabulate(n)(_ => if (rng.nextDouble() < dropP) 0.0 else 1.0 / (1.0 - dropP))
+  private def dropoutMask(n: Int): DenseVector[Double] =
+    DenseVector.tabulate(n)(_ => if (rng.nextDouble() < dropP) 0.0 else 1.0 / (1.0 - dropP))
+
+  /** A training sample's dropout masks, drawn in the order a sequential
+    * pass draws them: d1 for each triple, then d2 for each triple, then dA
+    * and dB. */
+  private def drawDropout(s: PlanSample): Dropout = {
+    val nTriples = s.idxes.length / 3
+    val d1 = Array.fill(nTriples)(dropoutMask(256))
+    val d2 = Array.fill(nTriples)(dropoutMask(128))
+    val dA = dropoutMask(32)
+    val dB = dropoutMask(16)
+    new Dropout(d1, d2, dA, dB)
+  }
 
   // ---- forward/backward over one sample ----
 
-  private final class Trace(val s: PlanSample, train: Boolean) {
+  /** One sample's forward pass, keeping what its backward pass reads.
+    * `drop` is null at inference, where dropout is the identity (a mask of
+    * ones would change no bit). Reads the weights only, so samples run in
+    * parallel. */
+  private final class Trace(val s: PlanSample, drop: Dropout) {
     val nTriples: Int = s.idxes.length / 3
     // gather input triples from node features
     private def gather(rows: Int => DenseVector[Double], dim: Int, t: Int): DenseVector[Double] = {
@@ -135,14 +170,15 @@ final class TCNN(val numFeatures: Int, val rank: Int, val nRows: Int, val nCols:
       out
     }
     private val featRow: Int => DenseVector[Double] = i => DenseVector(s.feats(i))
+    private def dropout(x: DenseVector[Double], mask: Dropout => DenseVector[Double]): DenseVector[Double] =
+      if (drop == null) x else x *:* mask(drop)
 
     // block 1
     val x1 = Array.tabulate(nTriples)(t => gather(featRow, numFeatures, t))
     val h1 = x1.map(x => (c1w.w * x) + c1b.w(::, 0))
     val ln1 = h1.map(h => layerNormF(h, ln1g, ln1b))
     val r1mask = ln1.map(_._1.map(v => if (v > 0) 1.0 else 0.0))
-    val d1mask = Array.fill(nTriples)(dropoutMask(256, train))
-    val o1 = Array.tabulate(nTriples)(t => ln1(t)._1 *:* r1mask(t) *:* d1mask(t))
+    val o1 = Array.tabulate(nTriples)(t => dropout(ln1(t)._1 *:* r1mask(t), _.d1(t)))
 
     // block 2 (gather over block-1 node outputs; same index triples)
     val o1Row: Int => DenseVector[Double] = i => o1(i)
@@ -150,8 +186,7 @@ final class TCNN(val numFeatures: Int, val rank: Int, val nRows: Int, val nCols:
     val h2 = x2.map(x => (c2w.w * x) + c2b.w(::, 0))
     val ln2 = h2.map(h => layerNormF(h, ln2g, ln2b))
     val r2mask = ln2.map(_._1.map(v => if (v > 0) 1.0 else 0.0))
-    val d2mask = Array.fill(nTriples)(dropoutMask(128, train))
-    val o2 = Array.tabulate(nTriples)(t => ln2(t)._1 *:* r2mask(t) *:* d2mask(t))
+    val o2 = Array.tabulate(nTriples)(t => dropout(ln2(t)._1 *:* r2mask(t), _.d2(t)))
 
     // dynamic max-pool over nodes; remember argmax for backward
     val poolIdx = new Array[Int](128)
@@ -168,48 +203,50 @@ final class TCNN(val numFeatures: Int, val rank: Int, val nRows: Int, val nCols:
     val a1 = (f1w.w * z) + f1b.w(::, 0)
     val lnA = layerNormF(a1, lf1g, lf1b)
     val rA = lnA._1.map(v => if (v > 0) 1.0 else 0.0)
-    val dA = dropoutMask(32, train)
-    val oA = lnA._1 *:* rA *:* dA
+    val oA = dropout(lnA._1 *:* rA, _.dA)
     val a2 = (f2w.w * oA) + f2b.w(::, 0)
     val lnB = layerNormF(a2, lf2g, lf2b)
     val rB = lnB._1.map(v => if (v > 0) 1.0 else 0.0)
-    val dB = dropoutMask(16, train)
-    val oB = lnB._1 *:* rB *:* dB
+    val oB = dropout(lnB._1 *:* rB, _.dB)
     val pred: Double = (ow.w(0, ::).t dot oB) + ob.w(0, 0)
 
-    /** dLoss/dPred → accumulate all parameter grads. */
-    def backward(dPred: Double): Unit = {
-      ow.g(0, ::).t :+= oB * dPred
-      ob.g(0, 0) += dPred
+    /** dLoss/dPred → every parameter's gradient terms, in op order. Writes
+      * no gradient, so samples run in parallel. */
+    def backward(dPred: Double): ArrayBuffer[Grad] = {
+      val grads = ArrayBuffer.empty[Grad]
+      val dOut = DenseVector(dPred)
+      grads += new Outer(ow, dOut, oB)
+      grads += new Column(ob, dOut)
       var d: DenseVector[Double] = ow.w(0, ::).t * dPred
-      d = layerNormB(d *:* dB *:* rB, lnB._2, lf2g, lf2b)
-      f2w.g :+= d * oA.t
-      f2b.g(::, 0) :+= d
+      d = layerNormB(d *:* drop.dB *:* rB, lnB._2, lf2g, lf2b, grads)
+      grads += new Outer(f2w, d, oA)
+      grads += new Column(f2b, d)
       d = f2w.w.t * d
-      d = layerNormB(d *:* dA *:* rA, lnA._2, lf1g, lf1b)
-      f1w.g :+= d * z.t
-      f1b.g(::, 0) :+= d
+      d = layerNormB(d *:* drop.dA *:* rA, lnA._2, lf1g, lf1b, grads)
+      grads += new Outer(f1w, d, z)
+      grads += new Column(f1b, d)
       d = f1w.w.t * d
-      val dPool = d(0 until 128)
-      userEmb.g(s.row, ::).t :+= d(128 until 128 + rank)
-      itemEmb.g(s.cols(0), ::).t :+= d(128 + rank until 128 + 2 * rank)
+      grads += new Row(userEmb, s.row, d(128 until 128 + rank))
+      grads += new Row(itemEmb, s.cols(0), d(128 + rank until 128 + 2 * rank))
 
       // un-pool: route each dim's grad to its argmax node
-      val dO2 = Array.fill(nTriples)(DenseVector.zeros[Double](128))
+      val dO2 = new Array[Double](nTriples * 128)
       var dim = 0
-      while (dim < 128) { dO2(poolIdx(dim))(dim) += dPool(dim); dim += 1 }
+      while (dim < 128) { dO2(poolIdx(dim) * 128 + dim) += d(dim); dim += 1 }
 
       // block-2 backward → grads w.r.t. block-1 outputs (scatter-add)
-      val dO1 = Array.fill(nTriples)(DenseVector.zeros[Double](256))
+      val dO1 = new Array[Double](nTriples * 256)
       var t = 0
       while (t < nTriples) {
-        val dh = layerNormB(dO2(t) *:* d2mask(t) *:* r2mask(t), ln2(t)._2, ln2g, ln2b)
-        c2w.g :+= dh * x2(t).t
-        c2b.g(::, 0) :+= dh
+        val dh = layerNormB(masked(dO2, t, drop.d2(t), r2mask(t)), ln2(t)._2, ln2g, ln2b, grads)
+        grads += new Outer(c2w, dh, x2(t))
+        grads += new Column(c2b, dh)
         val dx = c2w.w.t * dh
         var k = 0
         while (k < 3) {
-          dO1(s.idxes(t * 3 + k)) :+= dx(k * 256 until (k + 1) * 256)
+          val to = s.idxes(t * 3 + k) * 256
+          var i = 0
+          while (i < 256) { dO1(to + i) += dx(k * 256 + i); i += 1 }
           k += 1
         }
         t += 1
@@ -218,27 +255,48 @@ final class TCNN(val numFeatures: Int, val rank: Int, val nRows: Int, val nCols:
       // block-1 backward (input features are data — no further grads)
       t = 0
       while (t < nTriples) {
-        val dh = layerNormB(dO1(t) *:* d1mask(t) *:* r1mask(t), ln1(t)._2, ln1g, ln1b)
-        c1w.g :+= dh * x1(t).t
-        c1b.g(::, 0) :+= dh
+        val dh = layerNormB(masked(dO1, t, drop.d1(t), r1mask(t)), ln1(t)._2, ln1g, ln1b, grads)
+        grads += new Outer(c1w, dh, x1(t))
+        grads += new Column(c1b, dh)
         t += 1
       }
+      grads
     }
   }
 
-  def predict(s: PlanSample): Double = new Trace(s, train = false).pred
+  def predict(s: PlanSample): Double = new Trace(s, null).pred
+
+  /** Scores every sample, in parallel on the caller's ForkJoin pool (the
+    * common pool outside one); slot i holds sample i's prediction. */
+  def predictAll(samples: IndexedSeq[PlanSample]): Array[Double] = {
+    val out = new Array[Double](samples.length)
+    IntStream.range(0, samples.length).parallel().forEach(i => out(i) = predict(samples(i)))
+    out
+  }
 
   /** Test hook: zero grads, forward+backward one sample under plain MSE,
     * return the loss. With dropP = 0 this is deterministic, enabling
     * numerical gradient checks. */
   private[graft] def forwardBackwardMse(s: PlanSample): Double = {
-    zeroGrad()
-    val tr = new Trace(s, train = true)
+    val tr = new Trace(s, drawDropout(s))
     val e = tr.pred - s.label
-    tr.backward(2.0 * e)
+    zeroGrad()
+    accumulate(Seq(tr.backward(2.0 * e)))
     e * e
   }
   private[graft] def parameterTensors: Seq[Param] = params.toSeq
+
+  /** Adds the samples' gradient terms into each tensor's `g`, in parallel
+    * over disjoint bands of [[Band]] columns; every element takes its adds
+    * in (sample, node, op) order, as a sequential pass would. */
+  private def accumulate(grads: Seq[ArrayBuffer[Grad]]): Unit = {
+    val bands = for (p <- params; c0 <- 0 until p.g.cols by Band) yield (p, c0)
+    IntStream.range(0, bands.length).parallel().forEach { k =>
+      val (p, c0) = bands(k)
+      val c1 = math.min(c0 + Band, p.g.cols)
+      grads.foreach(_.foreach(t => if (t.p eq p) t.addTo(p.g, c0, c1)))
+    }
+  }
 
   // ---- Adam ----
   private var adamT = 0
@@ -251,16 +309,20 @@ final class TCNN(val numFeatures: Int, val rank: Int, val nRows: Int, val nCols:
     params.foreach { p => p.m := 0.0; p.v := 0.0 }
   }
 
+  /** One Adam update, in place, element by element. */
   private def adamStep(): Unit = {
     adamT += 1
     val bc1 = 1.0 - math.pow(b1, adamT)
     val bc2 = 1.0 - math.pow(b2, adamT)
     params.foreach { p =>
-      p.m := (p.m * b1) + (p.g * (1.0 - b1))
-      p.v := (p.v * b2) + (p.g *:* p.g * (1.0 - b2))
-      val mhat = p.m / bc1
-      val vhat = p.v / bc2
-      p.w :-= (mhat /:/ (breeze.numerics.sqrt(vhat) + adamEps)) * lr
+      val (w, g, m, v) = (p.w.data, p.g.data, p.m.data, p.v.data)
+      var i = 0
+      while (i < w.length) {
+        m(i) = m(i) * b1 + g(i) * (1.0 - b1)
+        v(i) = v(i) * b2 + g(i) * g(i) * (1.0 - b2)
+        w(i) -= m(i) / bc1 / (math.sqrt(v(i) / bc2) + adamEps) * lr
+        i += 1
+      }
     }
   }
 
@@ -273,21 +335,30 @@ final class TCNN(val numFeatures: Int, val rank: Int, val nRows: Int, val nCols:
     else { val e = pred - label; (e * e, 2.0 * e) }
 
   /** One epoch over shuffled minibatches; returns mean batch loss
-    * (`limeqo_plus.py:193-234` shape). `censors` aligns with `samples`. */
+    * (`limeqo_plus.py:193-234` shape). `censors` aligns with `samples`.
+    * A minibatch's samples run in parallel; the loss sum, the skip of a
+    * zero-gradient sample and the gradient order stay those of a
+    * sequential pass. */
   def trainEpoch(samples: IndexedSeq[PlanSample], censors: IndexedSeq[Double],
                  batchSize: Int, shuffleRng: Random): Double = {
     val order = shuffleRng.shuffle(samples.indices.toVector)
     var totalLoss = 0.0
     var nBatches = 0
     order.grouped(batchSize).foreach { batch =>
-      zeroGrad()
-      var bLoss = 0.0
-      batch.foreach { i =>
-        val tr = new Trace(samples(i), train = true)
+      val drops = batch.map(i => drawDropout(samples(i)))
+      val losses = new Array[Double](batch.size)
+      val grads = new Array[ArrayBuffer[Grad]](batch.size)
+      IntStream.range(0, batch.size).parallel().forEach { k =>
+        val i = batch(k)
+        val tr = new Trace(samples(i), drops(k))
         val (l, dl) = censoredMse(tr.pred, samples(i).label, censors(i))
-        bLoss += l
-        if (dl != 0.0) tr.backward(dl / batch.size)
+        losses(k) = l
+        grads(k) = if (dl != 0.0) tr.backward(dl / batch.size) else ArrayBuffer.empty
       }
+      var bLoss = 0.0
+      losses.foreach(bLoss += _)
+      zeroGrad()
+      accumulate(grads.toSeq)
       adamStep()
       totalLoss += bLoss / batch.size
       nBatches += 1
@@ -319,5 +390,70 @@ final class TCNN(val numFeatures: Int, val rank: Int, val nRows: Int, val nCols:
       epoch += 1
     }
     epoch
+  }
+}
+
+private object TCNN {
+
+  /** Gradient columns per reduction task. */
+  val Band = 16
+
+  /** A training sample's dropout masks (see `TCNN.drawDropout`). */
+  final class Dropout(val d1: Array[DenseVector[Double]], val d2: Array[DenseVector[Double]],
+                      val dA: DenseVector[Double], val dB: DenseVector[Double])
+
+  /** `(dO(t) *:* dropout) *:* relu` for node t's slice of a flat per-node
+    * gradient, rounded as the vector expression would be. */
+  def masked(dO: Array[Double], t: Int, drop: DenseVector[Double], relu: DenseVector[Double]): DenseVector[Double] = {
+    val n = drop.length
+    val out = new Array[Double](n)
+    var i = 0
+    while (i < n) { out(i) = dO(t * n + i) * drop(i) * relu(i); i += 1 }
+    DenseVector(out)
+  }
+
+  /** One term of a sample's gradient for tensor `p`, added into the columns
+    * [c0, c1) of its gradient. */
+  sealed abstract class Grad(val p: TCNN#Param) {
+    def addTo(g: DenseMatrix[Double], c0: Int, c1: Int): Unit
+  }
+
+  /** `g(i, j) += a(i) * b(j)`: a rank-1 update as a plain loop, which
+    * rounds like adding the built outer product. */
+  final class Outer(p: TCNN#Param, a: DenseVector[Double], b: DenseVector[Double]) extends Grad(p) {
+    def addTo(g: DenseMatrix[Double], c0: Int, c1: Int): Unit = {
+      val (gd, rows, ad, ao, as) = (g.data, g.rows, a.data, a.offset, a.stride)
+      var j = c0
+      while (j < c1) {
+        val bj = b(j)
+        var i = 0
+        while (i < rows) { gd(j * rows + i) += ad(ao + i * as) * bj; i += 1 }
+        j += 1
+      }
+    }
+  }
+
+  /** `g(i, 0) += a(i)`: a bias or LayerNorm-shift gradient. */
+  final class Column(p: TCNN#Param, a: DenseVector[Double]) extends Grad(p) {
+    def addTo(g: DenseMatrix[Double], c0: Int, c1: Int): Unit = {
+      var i = 0
+      while (i < g.rows) { g.data(i) += a(i); i += 1 }
+    }
+  }
+
+  /** `g(i, 0) += a(i) * b(i)`: a LayerNorm-scale gradient. */
+  final class Scaled(p: TCNN#Param, a: DenseVector[Double], b: DenseVector[Double]) extends Grad(p) {
+    def addTo(g: DenseMatrix[Double], c0: Int, c1: Int): Unit = {
+      var i = 0
+      while (i < g.rows) { g.data(i) += a(i) * b(i); i += 1 }
+    }
+  }
+
+  /** `g(row, j) += a(j)`: an embedding-row gradient. */
+  final class Row(p: TCNN#Param, row: Int, a: DenseVector[Double]) extends Grad(p) {
+    def addTo(g: DenseMatrix[Double], c0: Int, c1: Int): Unit = {
+      var j = c0
+      while (j < c1) { g(row, j) += a(j); j += 1 }
+    }
   }
 }

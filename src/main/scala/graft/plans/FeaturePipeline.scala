@@ -1,7 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /** The reference's feature/label transforms for plan trees
   * (`dataset.py:90-139`): log1p → min-max scaling, fit over all node
@@ -20,8 +19,7 @@ final case class MinMax(lo: Array[Double], hi: Array[Double]) {
 }
 
 /** Fitted featurization state: operator vocabulary + feature/label scalers.
-  * `fit` is a driver pass over vocab + bounds; `transform*` are pure and
-  * broadcast-friendly (used from executors in the scoring path). */
+  * `fit` is a driver pass over vocab + bounds; `transform*` are pure. */
 final case class PlanFeaturizer(
     vocab: Map[String, Int],
     featScaler: MinMax,
@@ -90,18 +88,5 @@ object PlanFeaturizer {
     import spark.implicits._
     spark.read.option("wholetext", "true").text(pathGlob)
       .as[String].collect().toSeq.map(PlanTrees.parseRecord)
-  }
-
-  /** Long-format features DataFrame for relational consumers:
-    * (filename, node_pos, features array) — the UDTF-shaped mapping of
-    * SURVEY §2.11, one plan → many node rows. */
-  def featuresDF(spark: SparkSession, plans: Seq[PlanRecord],
-                 fz: PlanFeaturizer): DataFrame = {
-    import spark.implicits._
-    plans.flatMap { p =>
-      fz.transformFeatures(p.tree).zipWithIndex.map { case (row, pos) =>
-        (p.filename, pos, row.toSeq)
-      }
-    }.toDF("filename", "node_pos", "features")
   }
 }

@@ -45,9 +45,8 @@ final class LimeQOPlusStrategy(
       Exploration.applyMask(init, explore = false))
     val st = ex.st
 
-    // featurize the corpus once (driver-resident; the Spark path for a
-    // corpus that outgrows the driver is PlanFeaturizer.featuresDF +
-    // broadcast-weight scoring via mapPartitions)
+    // featurize the corpus once; training and scoring stay on the driver
+    // and use all its cores (TCNN.trainEpoch, TCNN.predictAll)
     val corpus: IndexedSeq[PlanSample] = plans.flatMap { p =>
       filenameToRow.get(p.filename).map { row =>
         PlanSample(
@@ -91,8 +90,8 @@ final class LimeQOPlusStrategy(
       // plan's whole hint group (`limeqo_plus.py:236-261`); unpredicted
       // cells stay 0, which the round reads as +∞
       val predM = Array.fill(w.nRows, w.nCols)(0.0)
-      testS.foreach { s =>
-        val p = featurizer.inverseLabel(tcnn.predict(s))
+      testS.zip(tcnn.predictAll(testS)).foreach { case (s, y) =>
+        val p = featurizer.inverseLabel(y)
         s.cols.foreach(c => predM(s.row)(c) = p)
       }
       val inferenceTime = (System.nanoTime() - t1) / 1e9

@@ -13,7 +13,7 @@ import graft.strategy.RunSnapshot
   * wrote (`src/test/resources/tcnn/parity.txt`). A run's pin is the
   * SHA-256 of its serialized model (weights, gradients, Adam moments and
   * the dropout RNG's position) and the exact bits of its losses and
-  * predictions.
+  * predictions ([[TCNN.predictAll]]; the pins hold `predict`'s values).
   *
   * Together the runs cover a censored sample whose loss and gradient are
   * zero (sample 0's censor lies below any prediction), a censor that is
@@ -85,7 +85,7 @@ object TCNNParity {
 
   private def net(seed: Long) = new TCNN(fz.numFeatures, rank = 3, nRows = nSamples, nCols = 7, seed)
 
-  private def predictions(net: TCNN): Array[Double] = samples.map(net.predict).toArray
+  private def predictions(net: TCNN): Array[Double] = net.predictAll(samples)
 
   /** Each run returns its model and the values it pins. */
   val runs: Seq[(String, () => (TCNN, Array[Double]))] = Seq(
