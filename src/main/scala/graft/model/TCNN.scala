@@ -128,8 +128,8 @@ final class TCNN(val numFeatures: Int, val rank: Int, val nRows: Int, val nCols:
   private def layerNormB(dy: DenseVector[Double], st: LnState, g: Param, b: Param,
                          grads: ArrayBuffer[Grad]): DenseVector[Double] = {
     val n = st.xhat.length.toDouble
-    grads += new Scaled(g, dy, st.xhat)
-    grads += new Column(b, dy)
+    grads += new Outer(g, dy *:* st.xhat, One)
+    grads += new Outer(b, dy, One)
     val dxhat = dy *:* g.w(::, 0)
     val s1 = breeze.linalg.sum(dxhat)
     val s2 = breeze.linalg.sum(dxhat *:* st.xhat)
@@ -216,15 +216,15 @@ final class TCNN(val numFeatures: Int, val rank: Int, val nRows: Int, val nCols:
       val grads = ArrayBuffer.empty[Grad]
       val dOut = DenseVector(dPred)
       grads += new Outer(ow, dOut, oB)
-      grads += new Column(ob, dOut)
+      grads += new Outer(ob, dOut, One)
       var d: DenseVector[Double] = ow.w(0, ::).t * dPred
       d = layerNormB(d *:* drop.dB *:* rB, lnB._2, lf2g, lf2b, grads)
       grads += new Outer(f2w, d, oA)
-      grads += new Column(f2b, d)
+      grads += new Outer(f2b, d, One)
       d = f2w.w.t * d
       d = layerNormB(d *:* drop.dA *:* rA, lnA._2, lf1g, lf1b, grads)
       grads += new Outer(f1w, d, z)
-      grads += new Column(f1b, d)
+      grads += new Outer(f1b, d, One)
       d = f1w.w.t * d
       grads += new Row(userEmb, s.row, d(128 until 128 + rank))
       grads += new Row(itemEmb, s.cols(0), d(128 + rank until 128 + 2 * rank))
@@ -240,7 +240,7 @@ final class TCNN(val numFeatures: Int, val rank: Int, val nRows: Int, val nCols:
       while (t < nTriples) {
         val dh = layerNormB(masked(dO2, t, drop.d2(t), r2mask(t)), ln2(t)._2, ln2g, ln2b, grads)
         grads += new Outer(c2w, dh, x2(t))
-        grads += new Column(c2b, dh)
+        grads += new Outer(c2b, dh, One)
         val dx = c2w.w.t * dh
         var k = 0
         while (k < 3) {
@@ -257,7 +257,7 @@ final class TCNN(val numFeatures: Int, val rank: Int, val nRows: Int, val nCols:
       while (t < nTriples) {
         val dh = layerNormB(masked(dO1, t, drop.d1(t), r1mask(t)), ln1(t)._2, ln1g, ln1b, grads)
         grads += new Outer(c1w, dh, x1(t))
-        grads += new Column(c1b, dh)
+        grads += new Outer(c1b, dh, One)
         t += 1
       }
       grads
@@ -398,6 +398,9 @@ private object TCNN {
   /** Gradient columns per reduction task. */
   val Band = 16
 
+  /** The constant input a bias multiplies. */
+  val One: DenseVector[Double] = DenseVector(1.0)
+
   /** A training sample's dropout masks (see `TCNN.drawDropout`). */
   final class Dropout(val d1: Array[DenseVector[Double]], val d2: Array[DenseVector[Double]],
                       val dA: DenseVector[Double], val dB: DenseVector[Double])
@@ -419,7 +422,8 @@ private object TCNN {
   }
 
   /** `g(i, j) += a(i) * b(j)`: a rank-1 update as a plain loop, which
-    * rounds like adding the built outer product. */
+    * rounds like adding the built outer product. A bias or LayerNorm
+    * gradient is one against [[One]], since `x * 1.0 == x`. */
   final class Outer(p: TCNN#Param, a: DenseVector[Double], b: DenseVector[Double]) extends Grad(p) {
     def addTo(g: DenseMatrix[Double], c0: Int, c1: Int): Unit = {
       val (gd, rows, ad, ao, as) = (g.data, g.rows, a.data, a.offset, a.stride)
@@ -430,22 +434,6 @@ private object TCNN {
         while (i < rows) { gd(j * rows + i) += ad(ao + i * as) * bj; i += 1 }
         j += 1
       }
-    }
-  }
-
-  /** `g(i, 0) += a(i)`: a bias or LayerNorm-shift gradient. */
-  final class Column(p: TCNN#Param, a: DenseVector[Double]) extends Grad(p) {
-    def addTo(g: DenseMatrix[Double], c0: Int, c1: Int): Unit = {
-      var i = 0
-      while (i < g.rows) { g.data(i) += a(i); i += 1 }
-    }
-  }
-
-  /** `g(i, 0) += a(i) * b(i)`: a LayerNorm-scale gradient. */
-  final class Scaled(p: TCNN#Param, a: DenseVector[Double], b: DenseVector[Double]) extends Grad(p) {
-    def addTo(g: DenseMatrix[Double], c0: Int, c1: Int): Unit = {
-      var i = 0
-      while (i < g.rows) { g.data(i) += a(i) * b(i); i += 1 }
     }
   }
 
