@@ -244,9 +244,9 @@ object SteeringLoop {
               topUpSeed: Option[Long] = None): SteeringResult = {
     val nQ = queryNames.length
     val nC = configNames.length
-    val values = Array.fill(nQ, nC)(0.0)
-    val mask = Array.fill(nQ, nC)(false)
-    val cutoffs = Array.fill(nQ, nC)(0.0) // >0 = censored at that many seconds
+    val values = Array.ofDim[Double](nQ, nC)
+    val mask = Array.ofDim[Boolean](nQ, nC)
+    val cutoffs = Array.ofDim[Double](nQ, nC) // >0 = censored at that many seconds
     // explored = observed OR censored: a censored cell must never be
     // re-picked (its cutoff already informs the model)
     def explored(r: Int, c: Int): Boolean = mask(r)(c) || cutoffs(r)(c) > 0.0

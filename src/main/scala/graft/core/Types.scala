@@ -29,6 +29,19 @@ final case class RoundMetrics(
        |}""".stripMargin
 }
 
+object RoundMetrics {
+  import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+
+  /** The Spark schema of one [[toJson]] record. Declared rather than
+    * inferred: inference costs a job per read, and it types a field by its
+    * values (a baseline's `training_time` of `0`, or a trace whose
+    * `exec_time`s are all integral, would read as bigint). */
+  val schema: StructType = StructType(
+    Seq("training_time", "inference_time", "exec_time", "total_latency",
+      "p50", "p90", "p95", "p99").map(StructField(_, DoubleType)) :+
+      StructField("explore_queries_cnt", LongType))
+}
+
 object Num {
   /** JSON number rendering: integers without trailing .0 where the value is
     * integral (matches Python json.dump of ints like training_time=0). */

@@ -71,9 +71,9 @@ final class WorkloadMatrix(
   * (mask / explored / timeout matrices, SURVEY §1.1).
   */
 final class RoundState(val w: WorkloadMatrix) {
-  val mask: Array[Array[Boolean]] = Array.fill(w.nRows, w.nCols)(false)
-  val explored: Array[Array[Boolean]] = Array.fill(w.nRows, w.nCols)(false)
-  val timeoutM: Array[Array[Double]] = Array.fill(w.nRows, w.nCols)(0.0)
+  val mask: Array[Array[Boolean]] = Array.ofDim[Boolean](w.nRows, w.nCols)
+  val explored: Array[Array[Boolean]] = Array.ofDim[Boolean](w.nRows, w.nCols)
+  val timeoutM: Array[Array[Double]] = Array.ofDim[Double](w.nRows, w.nCols)
   var timeout: Double = 0.0
   val exploreQueries: mutable.Set[Int] = mutable.Set.empty
 

@@ -143,10 +143,9 @@ object Figures {
                        pgTotal: Double, optimalTotal: Double,
                        nGrid: Int = 5000, hours: Boolean = false,
                        title: String = "Workload latency vs exploration time"): String = {
-    val series = strategies.map { case (label, glob) =>
-      gridSeries(label, Report.trajectories(Report.loadTraces(spark, glob), pgTotal),
-        nGrid, hours)
-    }
+    val series = gridSeries(strategies.map { case (label, glob) =>
+      label -> Report.trajectories(Report.scanTraces(spark, glob), pgTotal)
+    }, nGrid, hours)
     val unit = if (hours) "hours" else "seconds"
     val scale = if (hours) 3600.0 else 1.0
     lineChart(series,
@@ -155,17 +154,19 @@ object Figures {
       xLabel = s"exploration time ($unit)", yLabel = s"workload latency ($unit)")
   }
 
-  /** Interpolate one strategy's per-run trajectories to the shared grid
-    * and collect the ≤nGrid rows as a mean±std [[Series]]. */
-  private def gridSeries(label: String, traj0: DataFrame,
-                         nGrid: Int, hours: Boolean): Series = {
-    val traj = if (hours) Report.inHours(traj0) else traj0
-    val grid = Report.interpolated(traj, nGrid)
-      .select("g", "y_mean", "y_std").orderBy("gi").collect()
-      .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2)))
-    Series(label,
-      points = grid.map { case (g, m, _) => (g, m) }.toSeq,
-      band = grid.map { case (g, m, sd) => (g, m - sd, m + sd) }.toSeq)
+  /** Interpolate each labelled strategy's per-run trajectories to its
+    * grid in one [[Report.interpolatedSeries]] pass and collect the
+    * ≤nGrid rows per strategy as a mean±std [[Series]], in input order. */
+  private def gridSeries(trajs: Seq[(String, DataFrame)],
+                         nGrid: Int, hours: Boolean): Seq[Series] = {
+    val grids = Report.gridPoints(
+      trajs.map { case (label, t) => label -> (if (hours) Report.inHours(t) else t) }, nGrid)
+    trajs.map { case (label, _) =>
+      val grid = grids.getOrElse(label, Array.empty[(Double, Double, Double)])
+      Series(label,
+        points = grid.map { case (g, m, _) => (g, m) }.toSeq,
+        band = grid.map { case (g, m, sd) => (g, m - sd, m + sd) }.toSeq)
+    }
   }
 
   /** The censor-ablation figure (`draw/draw_censor.ipynb · cell 8`):
@@ -198,14 +199,13 @@ object Figures {
                      pgTotal: Double, pgTotalBefore: Double,
                      nGrid: Int = 5000,
                      title: String = "New-query arrival"): String = {
-    val series =
+    val series = gridSeries(
       shifted.map { case (label, glob) =>
-        gridSeries(label, Report.trajectoriesWithNewQueries(
-          Report.loadTraces(spark, glob), pgTotalBefore, pgTotal), nGrid, hours = true)
+        label -> Report.trajectoriesWithNewQueries(
+          Report.loadTraces(spark, glob), pgTotalBefore, pgTotal)
       } ++ baselines.map { case (label, glob) =>
-        gridSeries(label, Report.trajectories(Report.loadTraces(spark, glob), pgTotal),
-          nGrid, hours = true)
-      }
+        label -> Report.trajectories(Report.scanTraces(spark, glob), pgTotal)
+      }, nGrid, hours = true)
     lineChart(series, title = title,
       xLabel = "exploration time (hours)", yLabel = "workload latency (hours)")
   }

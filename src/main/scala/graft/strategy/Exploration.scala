@@ -99,8 +99,16 @@ private[strategy] object Exploration {
     }
   }
 
-  def anyUnexplored(st: RoundState): Boolean =
-    st.mask.indices.exists(r => st.mask(r).indices.exists(c => !st.mask(r)(c) && !st.explored(r)(c)))
+  def anyUnexplored(st: RoundState): Boolean = {
+    var r = 0
+    while (r < st.mask.length) {
+      val (m, e) = (st.mask(r), st.explored(r))
+      var c = 0
+      while (c < m.length) { if (!m(c) && !e(c)) return true; c += 1 }
+      r += 1
+    }
+    false
+  }
 }
 
 /** The per-row-best round that LimeQO and LimeQO+ share
@@ -167,16 +175,24 @@ private[strategy] object LimeQORound {
       }
     }
 
+    // the stop test's inputs change only when a draw observes or censors
+    // a cell; a rejected draw reuses them
     var refreshed: Option[Array[Double]] = None
+    var mo: Array[Double] = null
+    var stale = true
     var done = false
     while (cnt < newObserveSize && !done) {
-      val mo = st.minObserved
-      refreshed = Some(mo)
-      if (mo.sum <= w.optTime + 50 || !Exploration.anyUnexplored(st)) done = true
-      else {
+      if (stale) {
+        mo = st.minObserved
+        refreshed = Some(mo)
+        done = mo.sum <= w.optTime + 50 || !Exploration.anyUnexplored(st)
+        stale = false
+      }
+      if (!done) {
         val row = rng.nextInt(w.nRows)
         val col = rng.nextInt(w.nCols)
         if (!st.mask(row)(col) && !st.explored(row)(col)) {
+          stale = true
           if (w.values(row)(col) >= mo(row)) {
             st.timeout += mo(row)
             st.markExplored(row, col)

@@ -89,7 +89,7 @@ final class LimeQOPlusStrategy(
       // predict test cells, inverse latency transform, scatter over the
       // plan's whole hint group (`limeqo_plus.py:236-261`); unpredicted
       // cells stay 0, which the round reads as +∞
-      val predM = Array.fill(w.nRows, w.nCols)(0.0)
+      val predM = Array.ofDim[Double](w.nRows, w.nCols)
       testS.zip(tcnn.predictAll(testS)).foreach { case (s, y) =>
         val p = featurizer.inverseLabel(y)
         s.cols.foreach(c => predM(s.row)(c) = p)

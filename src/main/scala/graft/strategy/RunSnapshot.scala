@@ -63,28 +63,53 @@ final case class RunSnapshot(
   }
 
   def save(path: Path): Unit = {
-    def d(v: Double): String =
-      if (v.isPosInfinity) "\"inf\"" else graft.core.Num.js(v)
-    val sb = new StringBuilder
-    sb ++= s"""{"strategy":${RunSnapshot.q(strategy)},"seed":$seed,"round":$round,"""
-    sb ++= s""""done":$done,"timeout":${d(timeout)},"""
-    sb ++= mask.map(r => RunSnapshot.q(r.map(b => if (b) '1' else '0').mkString))
-      .mkString("\"mask\":[", ",", "],")
-    sb ++= explored.map(r => RunSnapshot.q(r.map(b => if (b) '1' else '0').mkString))
-      .mkString("\"explored\":[", ",", "],")
-    sb ++= timeoutCells.map { case (r, c, v) => s"[$r,$c,${d(v)}]" }
-      .mkString("\"timeoutCells\":[", ",", "],")
-    sb ++= exploreQueries.toSeq.sorted.mkString("\"exploreQueries\":[", ",", "],")
-    sb ++= minObs.map(d).mkString("\"minObs\":[", ",", "],")
-    sb ++= extra.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${RunSnapshot.q(k)}:${RunSnapshot.q(v)}" }
-      .mkString("\"extra\":{", ",", "},")
-    sb ++= rng.map(s => s""""rng":${RunSnapshot.q(s)},""").getOrElse("")
-    sb ++= results.map(m => Seq(
-        d(m.trainingTime), d(m.inferenceTime), d(m.execTime), d(m.totalLatency),
-        d(m.p50), d(m.p90), d(m.p95), d(m.p99), m.exploreQueriesCnt.toString)
-        .mkString("[", ",", "]"))
-      .mkString("\"results\":[", ",", "]}")
+    val sb = new java.lang.StringBuilder
+    def d(v: Double): Unit =
+      if (v.isPosInfinity) sb.append("\"inf\"") else sb.append(graft.core.Num.js(v))
+    def q(s: String): Unit = RunSnapshot.quote(sb, s)
+    def list[T](name: String, xs: Iterable[T])(item: T => Unit): Unit = {
+      sb.append('"').append(name).append("\":[")
+      var first = true
+      xs.foreach { x => if (!first) sb.append(','); first = false; item(x) }
+      sb.append("],")
+    }
+    // a 0/1 row is its bits between two quotes, nothing to escape: filled
+    // into one reused buffer and appended at once
+    var buf = new Array[Char](0)
+    def bits(row: Array[Boolean]): Unit = {
+      if (buf.length < row.length + 2) buf = new Array[Char](row.length + 2)
+      buf(0) = '"'
+      var j = 0
+      while (j < row.length) { buf(j + 1) = if (row(j)) '1' else '0'; j += 1 }
+      buf(row.length + 1) = '"'
+      sb.append(buf, 0, row.length + 2)
+    }
+    sb.append("{\"strategy\":"); q(strategy)
+    sb.append(",\"seed\":").append(seed).append(",\"round\":").append(round)
+    sb.append(",\"done\":").append(done).append(",\"timeout\":"); d(timeout); sb.append(',')
+    list("mask", mask)(bits)
+    list("explored", explored)(bits)
+    list("timeoutCells", timeoutCells) { case (r, c, v) =>
+      sb.append('[').append(r).append(',').append(c).append(','); d(v); sb.append(']')
+    }
+    list("exploreQueries", exploreQueries.sorted)(i => sb.append(i))
+    list("minObs", minObs)(d)
+    sb.append("\"extra\":{")
+    var first = true
+    extra.toSeq.sortBy(_._1).foreach { case (k, v) =>
+      if (!first) sb.append(','); first = false
+      q(k); sb.append(':'); q(v)
+    }
+    sb.append("},")
+    rng.foreach { s => sb.append("\"rng\":"); q(s); sb.append(',') }
+    list("results", results) { m =>
+      sb.append('['); d(m.trainingTime); sb.append(','); d(m.inferenceTime); sb.append(',')
+      d(m.execTime); sb.append(','); d(m.totalLatency); sb.append(','); d(m.p50); sb.append(',')
+      d(m.p90); sb.append(','); d(m.p95); sb.append(','); d(m.p99); sb.append(',')
+      sb.append(m.exploreQueriesCnt).append(']')
+    }
+    sb.setLength(sb.length - 1) // the last list's comma closes the object
+    sb.append('}')
     val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
     Option(path.getParent).foreach(Files.createDirectories(_))
     Files.write(tmp, sb.toString.getBytes(StandardCharsets.UTF_8))
@@ -94,13 +119,28 @@ final case class RunSnapshot(
 }
 
 object RunSnapshot {
-  private def q(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** Append `s` as a JSON string: `"` and `\` backslash-escaped, control
+    * characters as `\u00xx`. A string with nothing to escape (a base64
+    * blob, most names) is appended as it is. */
+  private def quote(sb: java.lang.StringBuilder, s: String): Unit = {
+    var i = 0
+    while (i < s.length && { val c = s.charAt(i); c >= ' ' && c != '"' && c != '\\' }) i += 1
+    sb.append('"')
+    if (i == s.length) sb.append(s)
+    else {
+      sb.append(s, 0, i)
+      while (i < s.length) {
+        s.charAt(i) match {
+          case '"' => sb.append("\\\"")
+          case '\\' => sb.append("\\\\")
+          case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+          case c => sb.append(c)
+        }
+        i += 1
+      }
+    }
+    sb.append('"')
+  }
 
   /** Serialize the current RNG stream position (java.util.Random is
     * Serializable; its whole state is the 48-bit seed word). */
@@ -142,13 +182,16 @@ object RunSnapshot {
               rng: Option[Random] = None,
               extra: Map[String, String] = Map.empty,
               done: Boolean = false): RunSnapshot = {
-    val cells = for {
-      r <- 0 until st.w.nRows
-      c <- 0 until st.w.nCols
-      if st.timeoutM(r)(c) != 0.0
-    } yield (r, c, st.timeoutM(r)(c))
+    val cells = Vector.newBuilder[(Int, Int, Double)]
+    var r = 0
+    while (r < st.w.nRows) {
+      val row = st.timeoutM(r)
+      var c = 0
+      while (c < row.length) { if (row(c) != 0.0) cells += ((r, c, row(c))); c += 1 }
+      r += 1
+    }
     RunSnapshot(strategy, seed, round, done, st.timeout,
-      st.mask.map(_.clone()), st.explored.map(_.clone()), cells,
+      st.mask.map(_.clone()), st.explored.map(_.clone()), cells.result(),
       st.exploreQueries.toSeq.sorted, minObs.clone(),
       extra, rng.map(rngState), results.toVector)
   }
@@ -178,7 +221,13 @@ object RunSnapshot {
       case other => sys.error(s"bad array in snapshot: $other")
     }
     val m = j.asInstanceOf[JObject].obj.toMap
-    val bits = (v: JValue) => arr(v).map(x => str(x).map(_ == '1').toArray).toArray
+    def bits(v: JValue): Array[Array[Boolean]] = arr(v).map { x =>
+      val s = str(x)
+      val row = new Array[Boolean](s.length)
+      var j = 0
+      while (j < row.length) { row(j) = s.charAt(j) == '1'; j += 1 }
+      row
+    }.toArray
     Some(RunSnapshot(
       strategy = str(m("strategy")),
       seed = dbl(m("seed")).toLong,

@@ -37,4 +37,15 @@ class ReportParitySpec extends AnyFunSuite with graft.SharedSpark {
       }
     }
   }
+
+  test("a zero-width grid (step = 0) puts every grid index on its one point") {
+    val sp = spark
+    import sp.implicits._
+    // run a spans [0, 5] and run b [5, 10]: the common range is x = 5 alone
+    val traj = Seq(("a", 0, 0.0, 10.0), ("a", 1, 5.0, 6.0),
+                   ("b", 0, 5.0, 8.0), ("b", 1, 10.0, 2.0)).toDF("run", "round", "x", "y")
+    val grid = Report.interpolated(traj, nGrid = 7).select("gi", "g", "y_mean").collect()
+      .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
+    assert(grid.toSeq == (0 until 7).map(gi => (gi, 5.0, 7.0)))
+  }
 }
