@@ -115,8 +115,8 @@ object Report {
       .filter(col("x1").isNotNull && col("x1") > col("x0"))
 
     // grid position of x, widened by a slack far above the rounding of
-    // g = start + gi·step and clipped to the grid; step = 0 puts every
-    // grid point on `start`
+    // g = start + gi·step and clipped to the grid, so lo <= hi; step = 0
+    // puts every grid point on `start`
     val last = (nGrid - 1).toDouble
     def clip(v: Column): Column = greatest(lit(0.0), least(lit(last), v))
     def pos(x: Column): Column = (x - col("start")) / col("step")
@@ -124,13 +124,10 @@ object Report {
     val flat = col("step") === 0.0
     val lo = when(flat, lit(0)).otherwise(ceil(clip(least(pos(col("x0")), pos(col("x1"))) - slack)).cast("int"))
     val hi = when(flat, lit(nGrid - 1)).otherwise(floor(clip(greatest(pos(col("x0")), pos(col("x1"))) + slack)).cast("int"))
-    val g = col("start") + col("gi").cast("double") * col("step")
 
-    val perRun = seg.select(col("*"), lo.as("gi_lo"), hi.as("gi_hi"))
-      .filter(col("gi_lo") <= col("gi_hi"))
-      .select(col("series"), col("run"), col("x0"), col("y0"), col("x1"), col("y1"),
-        explode(sequence(col("gi_lo"), col("gi_hi"))).as("gi"), col("start"), col("step"))
-      .withColumn("g", g)
+    val perRun = seg
+      .withColumn("gi", explode(sequence(lo, hi)))
+      .withColumn("g", col("start") + col("gi").cast("double") * col("step"))
       .filter(col("g") >= col("x0") && col("g") <= col("x1"))
       .select(col("series"), col("gi"), col("g"), col("run"),
         (col("y0") + (col("y1") - col("y0")) * (col("g") - col("x0")) / (col("x1") - col("x0"))).as("yi"))

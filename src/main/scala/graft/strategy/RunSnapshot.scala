@@ -103,9 +103,9 @@ final case class RunSnapshot(
     sb.append("},")
     rng.foreach { s => sb.append("\"rng\":"); q(s); sb.append(',') }
     list("results", results) { m =>
-      sb.append('['); d(m.trainingTime); sb.append(','); d(m.inferenceTime); sb.append(',')
-      d(m.execTime); sb.append(','); d(m.totalLatency); sb.append(','); d(m.p50); sb.append(',')
-      d(m.p90); sb.append(','); d(m.p95); sb.append(','); d(m.p99); sb.append(',')
+      sb.append('[')
+      Seq(m.trainingTime, m.inferenceTime, m.execTime, m.totalLatency, m.p50, m.p90, m.p95, m.p99)
+        .foreach { v => d(v); sb.append(',') }
       sb.append(m.exploreQueriesCnt).append(']')
     }
     sb.setLength(sb.length - 1) // the last list's comma closes the object
