@@ -161,8 +161,8 @@ object Report {
 
   /** Every series' grid statistics from one [[interpolatedSeries]] pass,
     * collected per series in grid order as (g, y_mean, y_std) points. */
-  def gridPoints(series: Seq[(String, DataFrame)],
-                 nGrid: Int = 5000): Map[String, Array[(Double, Double, Double)]] =
+  private[report] def gridPoints(series: Seq[(String, DataFrame)],
+                                 nGrid: Int = 5000): Map[String, Array[(Double, Double, Double)]] =
     if (series.isEmpty) Map.empty
     else interpolatedSeries(series, nGrid).select("series", "gi", "g", "y_mean", "y_std").collect()
       .groupBy(_.getString(0))

@@ -38,6 +38,37 @@ class ReportParitySpec extends AnyFunSuite with graft.SharedSpark {
     }
   }
 
+  test("every grid point of every series matches a direct walk over its segments") {
+    val (globs, _) = ReportParity.traces(Files.createTempDirectory("report_grid"))
+    val trajs = globs.map { case (label, glob) =>
+      label -> Report.trajectories(Report.loadTraces(spark, glob), graft.strategy.ExplorationFixture.w.defaultTime)
+    }
+    val nGrid = 5000
+    val got = Report.gridPoints(trajs, nGrid)
+    trajs.foreach { case (label, t) =>
+      val runs = t.select("run", "round", "x", "y").collect().groupBy(_.getString(0)).values
+        .map(_.sortBy(_.getInt(1)).map(r => (r.getDouble(2), r.getDouble(3)))).toSeq
+      val start = runs.map(_.map(_._1).min).max
+      val step = (runs.map(_.map(_._1).max).min - start) / (nGrid - 1)
+      // per grid point: each run's mean over the segments [x0, x1] holding g
+      val want = (0 until nGrid).flatMap { gi =>
+        val g = start + gi.toDouble * step
+        val perRun = runs.flatMap { pts =>
+          val ys = pts.zip(pts.tail).collect { case ((x0, y0), (x1, y1)) if x1 > x0 && g >= x0 && g <= x1 =>
+            y0 + (y1 - y0) * (g - x0) / (x1 - x0)
+          }
+          if (ys.isEmpty) None else Some(ys.sum / ys.size)
+        }
+        if (perRun.isEmpty) None else Some((g, perRun.sum / perRun.size))
+      }
+      val pts = got(label)
+      assert(pts.length == want.length, s"$label: grid points")
+      pts.zip(want).foreach { case ((g, y, _), (wg, wy)) =>
+        assert(g == wg && math.abs(y - wy) <= 1e-12 * math.abs(wy), s"$label @ $g: $y vs $wy")
+      }
+    }
+  }
+
   test("a zero-width grid (step = 0) puts every grid index on its one point") {
     val sp = spark
     import sp.implicits._
