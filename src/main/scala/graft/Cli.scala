@@ -49,13 +49,16 @@ object Cli {
     }
   }
 
-  /** Strict `--key value` pairs. Every flag takes exactly one value; a
-    * lenient pairwise parse would read `--mask --seed 7` as mask = `--seed`
-    * and shift every later option, so a malformed pair throws
-    * [[IllegalArgumentException]] instead (see [[orUsage]]). */
-  def flags(args: Seq[String]): Map[String, String] =
+  /** Strict `--key value` pairs over the caller's `known` keys. Every flag
+    * takes exactly one value; a lenient pairwise parse would read
+    * `--mask --seed 7` as mask = `--seed` and shift every later option, so
+    * a malformed pair throws [[IllegalArgumentException]] instead (see
+    * [[orUsage]]). So does a key outside `known`: a typo such as `--seed`
+    * for `--seeds` must not silently run with the default. */
+  def flags(args: Seq[String], known: Set[String]): Map[String, String] =
     args.grouped(2).map {
       case Seq(k, v) if k.startsWith("--") && k.length > 2 && !v.startsWith("--") =>
+        if (!known(k.drop(2))) throw new IllegalArgumentException(s"unknown flag: $k")
         k.drop(2) -> v
       case other => throw new IllegalArgumentException(
         s"bad option pair: ${other.mkString(" ")} (every --flag needs a value)")

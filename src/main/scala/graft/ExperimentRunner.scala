@@ -40,7 +40,7 @@ import graft.strategy._
   *     [--mask m.npy] [--seeds 20] [--plus-seeds 5] [--plans "glob"]
   *     [--batch 8] [--plus-batch 32] [--rank 5] [--alpha 1.0] [--beta 15.0]
   *     [--budget 720] [--limeqo-budget 1200] [--limeqo-max-rounds 200]
-  *     [--distributed-als true] [--resume true]
+  *     [--resume true]
   *     [--checkpoints 45,90,180,360,720] [--hours true]
   *     [--checkpoint-band 0.6,1.4] [--skip random,greedy,...]
   *
@@ -57,16 +57,16 @@ object ExperimentRunner {
     "ExperimentRunner <matrix.csv> <outDir> [--mask m.npy] [--seeds 20] " +
     "[--plus-seeds 5] [--plans glob] [--batch 8] [--plus-batch 32] [--rank 5] " +
     "[--alpha 1.0] [--beta 15.0] [--budget 720] [--limeqo-budget 1200] [--limeqo-max-rounds 200] " +
-    "[--distributed-als true] [--resume true] [--checkpoints 45,90,180,360,720] " +
+    "[--resume true] [--checkpoints 45,90,180,360,720] " +
     "[--hours true] [--checkpoint-band 0.6,1.4] [--skip s1,s2]"
 
-  def main(args: Array[String]): Unit = {
-    val opts = Cli.orUsage(Usage) {
-      require(args.length >= 2, "missing <matrix.csv> <outDir>")
-      Cli.flags(args.toSeq.drop(2))
-    }
-    val Array(matrixPath, outDir) = args.take(2)
+  private[graft] val Flags = Set("mask", "seeds", "plus-seeds", "plans", "batch", "plus-batch",
+    "rank", "alpha", "beta", "budget", "limeqo-budget", "limeqo-max-rounds", "resume",
+    "checkpoints", "hours", "checkpoint-band", "skip")
 
+  /** The flags of one grid, parsed eagerly: a bad number throws here, inside
+    * [[Cli.orUsage]], and prints the usage instead of a stack trace. */
+  private[graft] final class Options(val opts: Map[String, String]) {
     val seeds = opts.getOrElse("seeds", "20").toInt
     val plusSeeds = opts.getOrElse("plus-seeds", "5").toInt
     val batch = opts.getOrElse("batch", "8").toInt
@@ -83,8 +83,10 @@ object ExperimentRunner {
     // JOB notebook defaults; the ceb/dsb/stack notebooks use
     // --hours true --checkpoint-band 0.99,1.01 with hour checkpoints
     val hours = opts.get("hours").contains("true")
-    val Array(bandLo, bandHi) = opts.getOrElse("checkpoint-band", "0.6,1.4")
-      .split(",").map(_.trim.toDouble)
+    private val band = opts.getOrElse("checkpoint-band", "0.6,1.4").split(",").map(_.trim.toDouble)
+    require(band.length == 2, s"--checkpoint-band takes lo,hi, not ${band.mkString(",")}")
+    val bandLo = band(0)
+    val bandHi = band(1)
     val skip = opts.get("skip").map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
     // --resume true: every strategy run persists a RunSnapshot per round
     // next to its trace; a rerun skips runs whose snapshot is marked done
@@ -92,6 +94,15 @@ object ExperimentRunner {
     // (bit-identical to an uninterrupted run — ResumeSpec). Without the
     // flag, stale snapshots are deleted so a rerun starts fresh.
     val resume = opts.get("resume").contains("true")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val options = Cli.orUsage(Usage) {
+      require(args.length >= 2, "missing <matrix.csv> <outDir>")
+      new Options(Cli.flags(args.toSeq.drop(2), Flags))
+    }
+    import options._
+    val Array(matrixPath, outDir) = args.take(2)
 
     val w = Workloads.matrixFromCsv(matrixPath)
     val mask = opts.get("mask").map(Workloads.initMask(_, w))
@@ -164,12 +175,11 @@ object ExperimentRunner {
         println(f"-- $name: done in ${(System.nanoTime() - t0) / 1e9}%.1f s")
       }
 
-    // Spark is only needed for distributed ALS, plan loading, and the
-    // report regeneration; the strategy loops are deliberately driver-local
-    // (SURVEY §1.3: the dense workload matrix is ≤2.4 MB, under the collect
-    // boundary). When an embedding caller (a spec) already owns a session,
-    // Cli.session returns it untouched and we must NOT stop it on their
-    // behalf.
+    // Spark is only needed for plan loading and the report regeneration;
+    // the strategy loops are deliberately driver-local (SURVEY §1.3: the
+    // dense workload matrix is ≤2.4 MB, under the collect boundary). When
+    // an embedding caller (a spec) already owns a session, Cli.session
+    // returns it untouched and we must NOT stop it on their behalf.
     val embedded = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).isDefined
     var sparkStarted = false
     lazy val spark = { sparkStarted = !embedded; Cli.session() }
@@ -194,19 +204,11 @@ object ExperimentRunner {
           i, None, Paths.get(s"$outDir/greedy/$i.json"))
     }
     stage("limeqo") {
-      // --distributed-als: run each round's matrix completion as Spark jobs
-      // (broadcast column factors, tree-aggregated updates) — the path for
-      // workload matrices that outgrow the driver; semantics identical to
-      // the Breeze kernel (DistributedALSSpec)
-      val alsFactory: (Int, Int, Double, Long) => graft.linalg.MatrixCompletion =
-        if (opts.get("distributed-als").contains("true"))
-          new graft.linalg.DistributedCensoredALS(spark, _, _, _, _)
-        else new graft.linalg.CensoredALS(_, _, _, _)
       for (i <- 1 to seeds)
         runResumable(
           new LimeQOStrategy(rank = rank, alpha = alpha, beta = beta,
             newObserveSize = batch, seed = i, maxRounds = maxRounds,
-            budgetSeconds = limeqoBudget, alsFactory = alsFactory),
+            budgetSeconds = limeqoBudget),
           i, mask, Paths.get(s"$outDir/limeqo/$i.json"))
     }
 

@@ -26,6 +26,8 @@ object LimeQoRunner {
     "LimeQoRunner <oracle|qo_advisor|random|greedy|limeqo|limeqo_plus> <matrix.csv> <out.json> " +
     "[--mask m.npy] [--batch 8] [--seed 42] [--rank 5] [--alpha 1.0] [--beta 15.0] " +
     "[--lambda 0.2] [--max-rounds N] [--plans glob]"
+  private[graft] val Flags =
+    Set("mask", "batch", "seed", "rank", "alpha", "beta", "lambda", "max-rounds", "plans")
 
   /** The strategy `name` configured from `opts`; throws
     * [[IllegalArgumentException]] on an unknown name, a bad number or a
@@ -61,7 +63,7 @@ object LimeQoRunner {
   def main(args: Array[String]): Unit = {
     val opts = Cli.orUsage(Usage) {
       require(args.length >= 3, "missing <strategy> <matrix.csv> <out.json>")
-      Cli.flags(args.toSeq.drop(3))
+      Cli.flags(args.toSeq.drop(3), Flags)
     }
     val Array(stratName, matrixPath, outPath) = args.take(3)
     val w = Workloads.matrixFromCsv(matrixPath)

@@ -57,9 +57,15 @@ object Num {
   */
 object Percentile {
   def apply(values: Array[Double], q: Double): Double = {
-    require(values.nonEmpty, "percentile of empty array")
     val a = values.clone()
     java.util.Arrays.sort(a)
+    ofSorted(a, q)
+  }
+
+  /** [[apply]] on values already in ascending order: several quantiles of
+    * one vector share one sort. */
+  def ofSorted(a: Array[Double], q: Double): Double = {
+    require(a.nonEmpty, "percentile of empty array")
     val pos = q / 100.0 * (a.length - 1)
     val lo = pos.toInt
     if (lo >= a.length - 1) a(a.length - 1)

@@ -105,16 +105,22 @@ final class RoundState(val w: WorkloadMatrix) {
 
   /** `get_exec_time` (`dataset.py:205-219`): Σ of one runtime per observed
     * hint-group per row (equivalent plans counted once). With value-equality
-    * groups this is the sum of distinct observed values per row. */
+    * groups this is the sum of distinct observed values per row, added in
+    * column order; "distinct" is `Double.equals` (equal bit patterns), and
+    * each row is checked cell by cell, since an init mask can observe part
+    * of a group. */
   def execTime: Double = {
+    val seen = new Array[Long](w.nCols)
     var s = 0.0; var i = 0
     while (i < w.nRows) {
-      val seen = new java.util.HashSet[java.lang.Double]()
-      var j = 0
+      var nSeen = 0; var j = 0
       while (j < w.nCols) {
         if (mask(i)(j)) {
           val v = w.values(i)(j)
-          if (seen.add(v)) s += v
+          val bits = java.lang.Double.doubleToLongBits(v)
+          var k = 0
+          while (k < nSeen && seen(k) != bits) k += 1
+          if (k == nSeen) { seen(nSeen) = bits; nSeen += 1; s += v }
         }
         j += 1
       }
@@ -127,10 +133,12 @@ final class RoundState(val w: WorkloadMatrix) {
     val mo = minObserved
     var total = 0.0; var i = 0
     while (i < mo.length) { total += mo(i); i += 1 }
+    java.util.Arrays.sort(mo) // after the sum: it adds in row order
     RoundMetrics(
       trainingTime, inferenceTime,
       execTime + timeout, total,
-      Percentile(mo, 50), Percentile(mo, 90), Percentile(mo, 95), Percentile(mo, 99),
+      Percentile.ofSorted(mo, 50), Percentile.ofSorted(mo, 90),
+      Percentile.ofSorted(mo, 95), Percentile.ofSorted(mo, 99),
       exploreQueries.size)
   }
 }

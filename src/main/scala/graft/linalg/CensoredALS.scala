@@ -57,8 +57,6 @@ trait MatrixCompletion {
   * `graft.tools.AlsBench`, and 29 ms as `linalg.als.ms.p50` on the
   * benchmark's `limeqo-ceb`, where the single-threaded Breeze formulation
   * it replaced took 208 ms.
-  * [[DistributedCensoredALS]] runs the same row routines inside each
-  * partition for matrices that outgrow the driver.
   */
 final class CensoredALS(rank: Int, iters: Int, lambda: Double, seed: Long)
     extends MatrixCompletion {
@@ -75,8 +73,8 @@ final class CensoredALS(rank: Int, iters: Int, lambda: Double, seed: Long)
     completeFrom(x, mask, cutoffs, a0, b0)
   }
 
-  /** Completion from explicit initial factors (shared with the distributed
-    * variant for equivalence testing). */
+  /** Completion from explicit initial factors (for equivalence testing
+    * against the reference kernel). */
   def completeFrom(x: DenseMatrix[Double], mask: DenseMatrix[Double],
                    cutoffs: DenseMatrix[Double],
                    a0: DenseMatrix[Double], b0: DenseMatrix[Double]): DenseMatrix[Double] = {
@@ -147,7 +145,7 @@ object CensoredALS {
   }
 
   /** A factor matrix as a flat row-major array. */
-  private[linalg] def rowMajor(f: DenseMatrix[Double]): Array[Double] =
+  private def rowMajor(f: DenseMatrix[Double]): Array[Double] =
     Array.tabulate(f.rows * f.cols)(q => f(q / f.cols, q % f.cols))
 
   /** Σₖ u(uOff+k)·v(vOff+k), summed over k in order. */
@@ -172,9 +170,9 @@ object CensoredALS {
     * BᵀB·aᵢ + Σ over the row's fixed columns of (tᵢⱼ − aᵢ·bⱼ)·bⱼ, with
     * `g` = BᵀB and `chol` its factor from [[gramCholesky]], and writes
     * max(0, ·) of the solution back over aᵢ. `y` (length r) is scratch. */
-  private[linalg] def solveRow(f: FixedCells, i: Int, b: Array[Double], g: Array[Double],
-                               chol: Array[Double], r: Int, a: Array[Double], aOff: Int,
-                               y: Array[Double]): Unit = {
+  private def solveRow(f: FixedCells, i: Int, b: Array[Double], g: Array[Double],
+                       chol: Array[Double], r: Int, a: Array[Double], aOff: Int,
+                       y: Array[Double]): Unit = {
     var k = 0
     while (k < r) { y(k) = dot(g, k * r, a, aOff, r); k += 1 }
     var q = f.start(i)
@@ -192,12 +190,12 @@ object CensoredALS {
 
   /** B-step partial layout: Σᵢ aᵢᵀaᵢ as r×r row-major, then
     * Σᵢ (tᵢⱼ − aᵢ·bⱼ)·aᵢ over fixed cells as m×r row-major. */
-  private[linalg] def partialSize(m: Int, r: Int): Int = r * r + m * r
+  private def partialSize(m: Int, r: Int): Int = r * r + m * r
 
   /** B half-step for one row: adds aᵢᵀaᵢ and, for each fixed column j,
     * (tᵢⱼ − aᵢ·bⱼ)·aᵢ into the partial `p` ([[partialSize]] layout). */
-  private[linalg] def accumulateRow(f: FixedCells, i: Int, a: Array[Double], aOff: Int,
-                                    b: Array[Double], r: Int, p: Array[Double]): Unit = {
+  private def accumulateRow(f: FixedCells, i: Int, a: Array[Double], aOff: Int,
+                            b: Array[Double], r: Int, p: Array[Double]): Unit = {
     var q = f.start(i)
     while (q < f.start(i + 1)) {
       val d = residual(f, q, a, aOff, b, r)
@@ -216,8 +214,8 @@ object CensoredALS {
   }
 
   /** BᵀB into `g` (r×r, full) and the Cholesky factor of BᵀB+λI into `chol`. */
-  private[linalg] def gramCholesky(b: Array[Double], m: Int, r: Int, lambda: Double,
-                                   g: Array[Double], chol: Array[Double]): Unit = {
+  private def gramCholesky(b: Array[Double], m: Int, r: Int, lambda: Double,
+                           g: Array[Double], chol: Array[Double]): Unit = {
     var k = 0
     while (k < r) {
       var l = 0
@@ -235,8 +233,8 @@ object CensoredALS {
   /** Solves every column of B from a reduced partial: (AᵀA+λI)·bⱼ =
     * Σᵢ tᵢⱼ·aᵢ = AᵀA·bⱼ + (fixed-cell residual sum)ⱼ, clamped to max(0, ·),
     * written over `b` (m×r row-major). */
-  private[linalg] def solveColumns(p: Array[Double], m: Int, r: Int, lambda: Double,
-                                   b: Array[Double]): Unit = {
+  private def solveColumns(p: Array[Double], m: Int, r: Int, lambda: Double,
+                           b: Array[Double]): Unit = {
     val chol = new Array[Double](r * r)
     cholesky(p, r, lambda, chol) // AᵀA leads the partial
     val y = new Array[Double](r)
@@ -301,31 +299,40 @@ object CensoredALS {
   * order. */
 private[linalg] final class FixedCells(val start: Array[Int], val col: Array[Int],
                                        val x: Array[Double], val w: Array[Double],
-                                       val c: Array[Double]) extends Serializable
+                                       val c: Array[Double])
 
 private[linalg] object FixedCells {
-  /** From column-major n×m values, mask and cutoffs (a single row is the
-    * n = 1 case). */
+  /** From column-major n×m values, mask and cutoffs: one pass counts each
+    * row's cells, a second fills arrays of the exact size. */
   def apply(x: Array[Double], mask: Array[Double], cut: Array[Double],
             n: Int, m: Int): FixedCells = {
+    def fixed(q: Int): Boolean = mask(q) != 0.0 || x(q) != 0.0 || cut(q) > 0.0
     val start = new Array[Int](n + 1)
-    val col = Array.newBuilder[Int]
-    val xv, wv, cv = Array.newBuilder[Double]
     var i = 0
     while (i < n) {
       var nnz = start(i)
       var j = 0
-      while (j < m) {
-        val q = j * n + i
-        if (mask(q) != 0.0 || x(q) != 0.0 || cut(q) > 0.0) {
-          col += j; xv += x(q); wv += 1.0 - mask(q); cv += cut(q)
-          nnz += 1
-        }
-        j += 1
-      }
+      while (j < m) { if (fixed(j * n + i)) nnz += 1; j += 1 }
       start(i + 1) = nnz
       i += 1
     }
-    new FixedCells(start, col.result(), xv.result(), wv.result(), cv.result())
+    val size = start(n)
+    val col = new Array[Int](size)
+    val xv, wv, cv = new Array[Double](size)
+    i = 0
+    while (i < n) {
+      var p = start(i)
+      var j = 0
+      while (j < m) {
+        val q = j * n + i
+        if (fixed(q)) {
+          col(p) = j; xv(p) = x(q); wv(p) = 1.0 - mask(q); cv(p) = cut(q)
+          p += 1
+        }
+        j += 1
+      }
+      i += 1
+    }
+    new FixedCells(start, col, xv, wv, cv)
   }
 }

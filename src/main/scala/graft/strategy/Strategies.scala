@@ -216,9 +216,6 @@ final class GreedyStrategy(newObserveSize: Int = 8, seed: Long = 42,
     val st = ex.st
     val rng = ex.rng
 
-    def maskCount(r: Int): Int = st.mask(r).count(identity)
-    def timeoutCount(r: Int): Int = st.timeoutM(r).count(_ != 0.0)
-
     // the stop rule tests the PRE-pick value from the previous body top
     // (`greedy.py`) — one extra converged round, as the reference.
     // `ended` is the negation of the persisted "progressed" flag: a full
@@ -234,11 +231,21 @@ final class GreedyStrategy(newObserveSize: Int = 8, seed: Long = 42,
       val it = order.iterator
       while (it.hasNext && cnt < newObserveSize) {
         val row = it.next()
-        if (maskCount(row) != w.nCols) {
+        var masked = 0; var timedOut = 0; var j = 0
+        while (j < w.nCols) {
+          if (st.mask(row)(j)) masked += 1
+          if (st.timeoutM(row)(j) != 0.0) timedOut += 1
+          j += 1
+        }
+        if (masked != w.nCols) {
+          // every state change below ends the draws, so the row's counts
+          // hold for all of them; an exhausted row still takes one draw,
+          // which the seeded RNG stream depends on
+          val exhausted = masked + timedOut == w.nCols
           var break = false
           while (!break) {
             val col = rng.nextInt(w.nCols)
-            if (maskCount(row) + timeoutCount(row) == w.nCols) break = true
+            if (exhausted) break = true
             else if (!st.mask(row)(col) && st.timeoutM(row)(col) == 0.0) {
               if (w.values(row)(col) >= minObs(row)) {
                 st.markTimeout(row, col, 1.0)
@@ -275,9 +282,8 @@ final class LimeQOStrategy(
     // false = the reference's `wocensored_*` ablation: plain ALS ignores
     // the timeout cutoffs (all-zero cutoff matrix fed to the kernel)
     censored: Boolean = true,
-    // pluggable completion kernel: default the driver-local fused
-    // CensoredALS; pass (r, i, l, s) => new DistributedCensoredALS(spark,
-    // r, i, l, s) for workload matrices that outgrow the driver
+    // the completion kernel, CensoredALS by default; the benchmark wraps
+    // it to time each call, and specs pass the Breeze reference kernel
     alsFactory: (Int, Int, Double, Long) => graft.linalg.MatrixCompletion =
       new CensoredALS(_, _, _, _)) extends Strategy {
   val name = "limeqo"

@@ -94,24 +94,6 @@ class ResumeSpec extends AnyFunSuite with graft.SharedSpark {
     assert(Files.readString(trace) == Files.readString(fullTrace))
   }
 
-  test("limeqo + distributed ALS kernel: kill/resume stays bit-identical") {
-    // the resumed RNG stream seeds the completion kernel each round, so
-    // the distributed path must replay it exactly like the Breeze path
-    val sp = spark
-    val alsF: (Int, Int, Double, Long) => graft.linalg.MatrixCompletion =
-      (r, i, l, s) => new graft.linalg.DistributedCensoredALS(sp, r, i, l, s)
-    def strat(mr: Int) = new LimeQOStrategy(seed = 5, maxRounds = mr,
-      budgetSeconds = Some(600), alsFactory = alsF)
-    val (fullTrace, fullSnap) = tmp("resume_dlimeqo_full")
-    val full = strat(10).run(w, Some(mask), Some(fullTrace), Some(fullSnap))
-    assert(full.length > 3)
-    val (trace, snap) = tmp("resume_dlimeqo_kill")
-    strat(3).run(w, Some(mask), Some(trace), Some(snap))
-    val resumed = strat(10).run(w, Some(mask), Some(trace), Some(snap))
-    assert(resumed.map(noTimes) == full.map(noTimes),
-      "distributed-kernel resume diverged from the uninterrupted run")
-  }
-
   test("a done snapshot does not resume: run() restarts fresh and overwrites") {
     val (trace, snap) = tmp("resume_done")
     val first = new OracleStrategy().run(w, None, Some(trace), Some(snap))
