@@ -64,9 +64,17 @@ object ExperimentRunner {
     "rank", "alpha", "beta", "budget", "limeqo-budget", "limeqo-max-rounds", "resume",
     "checkpoints", "hours", "checkpoint-band", "skip")
 
+  /** The grid's stages in run order: the names `--skip` accepts. */
+  private[graft] val Stages =
+    Seq("oracle", "qo_advisor", "random", "greedy", "limeqo", "limeqo_plus", "report")
+
   /** The flags of one grid, parsed eagerly: a bad number throws here, inside
     * [[Cli.orUsage]], and prints the usage instead of a stack trace. */
   private[graft] final class Options(val opts: Map[String, String]) {
+    // true or false in any case; anything else is a usage error, since a
+    // misread --resume deletes the grid's snapshots
+    private def bool(key: String) = opts.get(key).exists(v => v.toBooleanOption.getOrElse(
+      throw new IllegalArgumentException(s"--$key takes true or false, not $v")))
     val seeds = opts.getOrElse("seeds", "20").toInt
     val plusSeeds = opts.getOrElse("plus-seeds", "5").toInt
     val batch = opts.getOrElse("batch", "8").toInt
@@ -82,18 +90,21 @@ object ExperimentRunner {
       .split(",").toSeq.map(_.trim.toDouble)
     // JOB notebook defaults; the ceb/dsb/stack notebooks use
     // --hours true --checkpoint-band 0.99,1.01 with hour checkpoints
-    val hours = opts.get("hours").contains("true")
+    val hours = bool("hours")
     private val band = opts.getOrElse("checkpoint-band", "0.6,1.4").split(",").map(_.trim.toDouble)
     require(band.length == 2, s"--checkpoint-band takes lo,hi, not ${band.mkString(",")}")
     val bandLo = band(0)
     val bandHi = band(1)
     val skip = opts.get("skip").map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
+    private val unknownStages = skip.filterNot(Stages.contains)
+    require(unknownStages.isEmpty, s"--skip: unknown stage ${unknownStages.mkString(",")} " +
+      s"(stages: ${Stages.mkString(",")})")
     // --resume true: every strategy run persists a RunSnapshot per round
     // next to its trace; a rerun skips runs whose snapshot is marked done
     // and continues unfinished ones from their last persisted RoundState
     // (bit-identical to an uninterrupted run — ResumeSpec). Without the
     // flag, stale snapshots are deleted so a rerun starts fresh.
-    val resume = opts.get("resume").contains("true")
+    val resume = bool("resume")
   }
 
   def main(args: Array[String]): Unit = {

@@ -1389,8 +1389,7 @@ object DedupOps {
     * as q84/q92: ~10× less hash work and no hex-string round-trip, same
     * expected chunk length and the same re-synchronization property, but
     * a different hash family — so it is spec-gated (lossless partition,
-    * re-sync, determinism) rather than oracle-gated, and it is the
-    * kernel the streaming chunk index/probe twins run. */
+    * re-sync, determinism) rather than oracle-gated. */
   def cdcChunksFast(docs: DataFrame, modulus: Int = 16): DataFrame = {
     val l = split(trim(col("text")), "\\s+")
     val chunks = flatten(transform(array(l), lv => {

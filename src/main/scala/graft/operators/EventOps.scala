@@ -10,8 +10,7 @@ import graft.Tables._
   * join, JSON property extraction, range join, and skew-salted aggregation.
   *
   * These are the batch shapes of the operators a clickstream/training-data
-  * pipeline runs continuously; the same expressions run under Structured
-  * Streaming (see [[graft.streaming.EventStreams]]).
+  * pipeline runs continuously.
   *
   * Scale notes per operator in the Scaladoc. Shared determinism policy:
   * timestamps compared at microsecond precision (both engines truncate the
@@ -32,7 +31,7 @@ object EventOps {
     * Shape: one window over (user, ts) — a single shuffle on the user key,
     * then narrow. At 100 TB user_id is high-cardinality so the window
     * parallelizes; there is no global sort. The streaming equivalent is
-    * `session_window(ts, gap)` / `flatMapGroupsWithState` (EventStreams).
+    * `session_window(ts, gap)` / `flatMapGroupsWithState`.
     */
   def sessionize(events: DataFrame, gapSeconds: Long): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -450,7 +449,7 @@ object EventOps {
     * Spark's `window()` generator (each event lands in exactly 2
     * overlapping windows). This is THE streaming-native primitive: the
     * identical expression runs under Structured Streaming with a
-    * watermark (EventStreams.windowedCounts is the tumbling form). Plan:
+    * watermark. Plan:
     * one Generate (2 rows/event) then a partial-agg-friendly groupBy on
     * (window, type) — the exchange carries ≤ |windows|×|types| rows per
     * task, constant in corpus size. */

@@ -107,9 +107,8 @@ object MixtureOps {
     * whose keys are uniform by construction (md5), so no shard skew at any
     * scale. The audit agg itself is 16 rows out of a map-side partial agg.
     */
-  /** Deterministic shard id of a doc_id — shared by the q86 batch audit
-    * and the streaming router ([[graft.streaming.CorpusStreams.shardRouter]]),
-    * so ingest-time routing and batch rebuilds always agree. */
+  /** Deterministic shard id of a doc_id — a pure function of the key, so
+    * ingest-time routing and batch rebuilds always agree. */
   val shardCol: org.apache.spark.sql.Column = expr(
     "instr('0123456789abcdef', substring(md5(cast(doc_id as string)), 1, 1)) - 1")
     .cast("int")

@@ -7,10 +7,9 @@ import org.apache.spark.sql.functions._
 /** Versioned AT-REST storage for the learned curation models (round-13
   * verdict task 6). The NB quality classifier (q108), the DSIR importance
   * model (q109) and the Kneser-Ney bigram LM (q142/q147) were each
-  * retrained inside every query that used them; the streaming admission
-  * twins already consume a broadcast model — this store gives batch
-  * scoring, streaming admission and repeated audits ONE trained artifact
-  * to share, with an explicit refresh trigger instead of silent retrains.
+  * retrained inside every query that used them — this store gives batch
+  * scoring and repeated audits ONE trained artifact to share, with an
+  * explicit refresh trigger instead of silent retrains.
   *
   * Layout (the frozen-quantizer pattern from [[EmbeddingMaintenance]]):
   *  - `<root>/v=<N>/` — the model table itself as parquet (NB: (token,
@@ -147,10 +146,9 @@ object ModelStore {
   def dsirLogWeightsAtRest(docs: DataFrame, root: String): DataFrame =
     QualityModels.dsirLogWeights(docs, load(docs.sparkSession, root)._1)
 
-  /** The DSIR model as the broadcastable map the STREAMING admission
-    * twin ([[graft.streaming.CorpusStreams.dsirAdmission]]) consumes —
-    * loaded from the store, so a restarted ingest job recovers the exact
-    * model its checkpointed predecessor admitted under (≤ 4096 rows by
+  /** The DSIR model as a broadcastable bucket → log-ratio map, loaded
+    * from the store, so a restarted ingest job recovers the exact model
+    * its checkpointed predecessor admitted under (≤ 4096 rows by
     * construction). */
   def dsirModelMapAtRest(spark: SparkSession, root: String): Map[Long, Double] =
     load(spark, root)._1.collect()

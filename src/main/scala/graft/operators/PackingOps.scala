@@ -24,8 +24,8 @@ object PackingOps {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Tokens per packed sequence — shared by q76, the composed pipeline
-    * (q82), and the streaming packer, so they can't silently drift apart. */
+  /** Tokens per packed sequence — shared by q76 and the composed pipeline
+    * (q82), so they can't silently drift apart. */
   private[graft] val SeqBudget = 256
   private def budget = SeqBudget
   private val chunkW = 64  // sliding-window chunk size (q77)
@@ -38,9 +38,9 @@ object PackingOps {
     * deterministic order (doc_id) and cut into fixed 256-token sequences;
     * a doc's bin is where its first token lands.
     */
-  /** The packing stage proper, shared by q76, q82, and the streaming
-    * packer's parity spec: input must carry (doc_id, source, tok) with
-    * non-negative doc_id; output is the per-(source, bin) summary.
+  /** The packing stage proper, shared by q76 and q82: input must carry
+    * (doc_id, source, tok) with non-negative doc_id; output is the
+    * per-(source, bin) summary.
     *
     * Scale shape — a TWO-LEVEL prefix sum, so no source ever funnels
     * through one task (a naive `PARTITION BY source` running sum is a

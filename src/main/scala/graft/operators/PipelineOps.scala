@@ -234,8 +234,8 @@ object PipelineOps {
   val q56Funnel: Q = (s, d) => funnelStages(events(s, d))
 
   /** The q56 funnel over ANY events frame (user_id, event_type, ts) — split
-    * out so the streaming parity specs can certify the same code path on
-    * synthetic frames, independent of the driver testdata's encoding. */
+    * out so specs can certify the same code path on synthetic frames,
+    * independent of the driver testdata's encoding. */
   def funnelStages(ev: DataFrame): DataFrame = {
     val e = ev.select(col("user_id"), col("event_type"),
       unix_micros(col("ts")).as("us"))

@@ -225,9 +225,9 @@ object QualityModels {
     * at-rest rule ([[dsirLogWeights]]: unseen buckets contribute zero)
     * and the audit reports per source the mean log-weight under each,
     * the mean absolute shift, and the decision a deployment gates on —
-    * how many STREAMING ADMISSION verdicts flip. The admission rule is
-    * exactly [[graft.streaming.CorpusStreams.dsirAdmission]] at logZ = 0:
-    * admit iff u < min(1, exp(lw)) with the content-addressed uniform
+    * how many ADMISSION verdicts flip. The admission rule is DSIR
+    * importance admission at logZ = 0: admit iff u < min(1, exp(lw))
+    * with the content-addressed uniform
     * u = dsirUniform(doc_id) — u is IDENTICAL under both models, so a
     * flip happens precisely when the retrain moves lw across the
     * document's own admission threshold.
@@ -546,12 +546,10 @@ object QualityModels {
   /** Per-document importance log-weights under a trained model:
     * (doc_id, source, log_weight). Exact-DECIMAL accumulation of the
     * 6dp-rounded per-occurrence llr terms, so the value is independent of
-    * aggregation order — the streaming admission path reproduces it
-    * bit-for-bit from the same model. Features in buckets the model never
-    * saw contribute ZERO (left join + coalesce, not an inner join): a
+    * aggregation order. Features in buckets the model never saw
+    * contribute ZERO (left join + coalesce, not an inner join): a
     * document scored under an OLDER model than its own corpus — the
-    * ingest/backfill case — must still be a candidate, with the same
-    * weight the streaming fold assigns it. */
+    * ingest/backfill case — must still be a candidate. */
   def dsirLogWeights(docs: DataFrame, model: DataFrame): DataFrame =
     dsirLogWeightsFromCounts(dsirFeatureCounts(docs), model)
 

@@ -760,9 +760,9 @@ object SimilarityOps {
     * Scale shape: the panel broadcasts (eval suites are thousands of
     * items, not millions), the corpus pays ONE linear codegen'd pass of
     * |corpus|×|panel| cosines with a map-side max — the same serving
-    * bound as q115. When the panel outgrows broadcast, the IVF form is
-    * [[graft.streaming.CorpusStreams.semanticProbeAgainstIndex]] with
-    * corpus and panel swapped — cell-bounded, already spec'd. */
+    * bound as q115. When the panel outgrows broadcast, the IVF form is a
+    * probe of the panel's cell index with corpus and panel swapped —
+    * cell-bounded. */
   val q119SemanticDecontam: Q = (s, d) => {
     val tau = 0.8
     val emb = embeddings(s, d)

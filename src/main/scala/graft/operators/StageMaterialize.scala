@@ -78,8 +78,9 @@ object StageMaterialize {
     * measured barrier-bound sites. Values are identical either way
     * (lazy/materialized equality is the StageMaterializeSpec contract). */
   def whenLarge(df: DataFrame, name: String): DataFrame = {
-    val gate = BigInt(df.sparkSession.conf
-      .getOption("spark.graft.stage.gateBytes").map(_.toLong)
+    val key = "spark.graft.stage.gateBytes"
+    val gate = BigInt(df.sparkSession.conf.getOption(key).map(v => v.toLongOption.getOrElse(
+        throw new IllegalArgumentException(s"$key must be a whole number of bytes, not '$v'")))
       .getOrElse(256L * 1024 * 1024))
     val leafBytes = df.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum

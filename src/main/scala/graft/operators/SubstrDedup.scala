@@ -207,9 +207,7 @@ object SubstrDedup {
     * array; O(tokens + starts), no explode, no scan-order dependence.
     * slice(_, _, 0) is the empty array, so zero-width head gaps need no
     * guard; the tail/between widths are IF-guarded because a negative
-    * slice length is an error. Shared by the batch transform above and
-    * the streaming ingest form
-    * ([[graft.streaming.CorpusStreams.substrRemovalAtIngest]]). */
+    * slice length is an error. */
   private[graft] def keptTokensExpr(k: Int): org.apache.spark.sql.Column = expr(
     s"""flatten(concat(
        |  array(slice(l, 1, element_at(starts, 1) - 1)),

@@ -66,6 +66,34 @@ class CliSpec extends AnyFunSuite with SharedSpark {
     intercept[IllegalArgumentException](new ExperimentRunner.Options(Map("checkpoint-band" -> "0.6")))
   }
 
+  test("ExperimentRunner's --resume and --hours take true or false in any case") {
+    def opts(kv: (String, String)*) = new ExperimentRunner.Options(kv.toMap)
+    assert(opts("resume" -> "True", "hours" -> "TRUE").resume)
+    assert(opts("resume" -> "true", "hours" -> "True").hours)
+    assert(!opts("resume" -> "false").resume && !opts("hours" -> "FALSE").hours)
+    assert(!opts().resume && !opts().hours)
+    // read as false, "yes" would delete an interrupted grid's snapshots
+    Seq("yes", "1", "", "t").foreach { v =>
+      val e = intercept[IllegalArgumentException](opts("resume" -> v))
+      assert(e.getMessage.contains("--resume"), e.getMessage)
+      intercept[IllegalArgumentException](opts("hours" -> v))
+    }
+  }
+
+  test("ExperimentRunner rejects an unknown --skip stage and names it") {
+    val e = intercept[IllegalArgumentException](
+      new ExperimentRunner.Options(Map("skip" -> "oracle,randon")))
+    assert(e.getMessage.contains("unknown stage randon "), e.getMessage)
+    val all = ExperimentRunner.Stages.mkString(",")
+    assert(new ExperimentRunner.Options(Map("skip" -> all)).skip == ExperimentRunner.Stages.toSet)
+    // the stage lists ExperimentRunnerSpec passes
+    Seq("oracle,qo_advisor,random,greedy,limeqo,report", "random,greedy,limeqo_plus,report",
+        "oracle,qo_advisor,random,greedy,limeqo_plus,report",
+        "qo_advisor,random,greedy,limeqo,limeqo_plus,report").foreach { v =>
+      assert(new ExperimentRunner.Options(Map("skip" -> v)).skip == v.split(",").toSet)
+    }
+  }
+
   private val known = Set("q01_a", "q02_b", "q03_c")
 
   test("queries falls back to the default without a list") {

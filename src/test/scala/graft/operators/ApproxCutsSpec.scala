@@ -24,7 +24,7 @@ class ApproxCutsSpec extends AnyFunSuite with SharedSpark {
 
   private lazy val dir: String = {
     val d = Files.createTempDirectory("graft-approx-cuts").toString
-    graft.tools.Soak.genDocuments(spark, 8000)
+    graft.SkewedData.genDocuments(spark, 8000)
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
     d
   }

@@ -54,15 +54,4 @@ class BucketingSpec extends AnyFunSuite with SharedSpark {
     assert(pruned.count() == expected)
   }
 
-  test("salted join equals the plain join") {
-    val l = graft.Tables.orders(spark, sf)
-    val r = graft.Tables.customer(spark, sf)
-      .select("c_custkey", "c_mktsegment")
-    val salted = SkewJoin.saltedJoin(l, r,
-        l("o_custkey") === r("c_custkey"), l("o_orderkey"), nSalts = 8)
-      .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
-    val plain = l.join(r, l("o_custkey") === r("c_custkey"))
-      .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
-    assert(salted.exceptAll(plain).count() == 0 && plain.exceptAll(salted).count() == 0)
-  }
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
@@ -133,46 +132,4 @@ class ModelStoreSpec extends AnyFunSuite with SharedSpark {
     assert(out.map(_.toString).sorted.sameElements(again.map(_.toString).sorted))
   }
 
-  test("streaming DSIR admission recovers the stored model across a checkpointed restart") {
-    val sp = spark
-    implicit val sq = sp.sqlContext
-    val root = tmp("stream")
-    ModelStore.trainDsirPersistent(docs, root)
-    val rows = docs.select("doc_id", "source", "text").collect()
-      .map(r => graft.streaming.SourcedDoc(r.getLong(0), r.getString(1), r.getString(2)))
-    val ckpt = Files.createTempDirectory("graft-mstore-ckpt").toString
-    val sink = Files.createTempDirectory("graft-mstore-sink").toString
-    def start(stream: MemoryStream[graft.streaming.SourcedDoc]) = {
-      // the model is loaded FROM THE STORE at (re)start — no driver
-      // memory survives the restart, only the at-rest artifact
-      val model = ModelStore.dsirModelMapAtRest(sp, root)
-      graft.streaming.CorpusStreams.dsirAdmission(stream.toDF(), model, logZ = 2.0)
-        .writeStream.format("parquet").option("path", sink)
-        .option("checkpointLocation", ckpt).outputMode("append").start()
-    }
-    val s1 = MemoryStream[graft.streaming.SourcedDoc]
-    val q1 = start(s1)
-    s1.addData(rows.take(rows.length / 2).toIndexedSeq: _*)
-    q1.processAllAvailable()
-    q1.stop()
-    // restart: a NEW query over the same source + checkpoint, with the
-    // model loaded AGAIN from the store (no driver state carried over)
-    s1.addData(rows.drop(rows.length / 2).toIndexedSeq: _*)
-    val q2 = start(s1)
-    q2.processAllAvailable()
-    q2.stop()
-    val streamed = sp.read.parquet(sink)
-      .select("doc_id", "log_weight", "admitted").collect()
-      .map(r => r.getLong(0) -> (r.getDouble(1), r.getBoolean(2))).toMap
-    // every doc arrived exactly once (dedup across the restart is the
-    // checkpoint's job) with the BATCH-path weight under the same model
-    val batch = QualityModels.dsirLogWeights(docs,
-        ModelStore.load(sp, root)._1).collect()
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(streamed.size == batch.size,
-      s"expected ${batch.size} unique docs after restart, got ${streamed.size}")
-    batch.foreach { case (id, lw) =>
-      assert(streamed(id)._1 == lw, s"doc $id: stream ${streamed(id)._1} != batch $lw")
-    }
-  }
 }

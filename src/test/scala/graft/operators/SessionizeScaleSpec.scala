@@ -65,7 +65,7 @@ class SessionizeScaleSpec extends AnyFunSuite with SharedSpark {
 
   test("hot-user skew corpus: parity at several bucket widths") {
     // the soak shape in miniature: user 0 holds ~half of 20k events
-    val ev = graft.tools.Soak.genEvents(spark, 20000L)
+    val ev = graft.SkewedData.genEvents(spark, 20000L)
     assertParity(ev, 1800L, 3600L)
     assertParity(ev, 1800L, 86400L)
     // degenerate bucket = 1s (every event its own bucket) still agrees
@@ -80,7 +80,7 @@ class SessionizeScaleSpec extends AnyFunSuite with SharedSpark {
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
     // and on the hot-user skew shape, where bucket boundaries cut paths
     val dir = java.nio.file.Files.createTempDirectory("graft-paths").toString
-    graft.tools.Soak.genEvents(spark, 20000L)
+    graft.SkewedData.genEvents(spark, 20000L)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val c = EventOps.q73EventPaths(spark, dir)
     val e = EventOps.q89EventPathsScaled(spark, dir)
@@ -113,7 +113,7 @@ class SessionizeScaleSpec extends AnyFunSuite with SharedSpark {
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
     // hot-user skew shape: purchases sparse, carries cross many buckets
     val dir = java.nio.file.Files.createTempDirectory("graft-asof").toString
-    graft.tools.Soak.genEvents(spark, 20000L)
+    graft.SkewedData.genEvents(spark, 20000L)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val c = EventOps.q35AsofJoin(spark, dir)
     val e = EventOps.q91AsofScaled(spark, dir)

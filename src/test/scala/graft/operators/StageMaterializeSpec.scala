@@ -53,4 +53,15 @@ class StageMaterializeSpec extends AnyFunSuite with SharedSpark {
       assert(mat.collect().toSet == stage.collect().toSet)
     } finally spark.conf.unset("spark.graft.stage.gateBytes")
   }
+
+  test("whenLarge rejects a malformed gate with the key and the value") {
+    val stage = graft.Tables.documents(spark, "/root/testdata/sf0.001").select("doc_id")
+    spark.conf.set("spark.graft.stage.gateBytes", "256MB")
+    try {
+      val e = intercept[IllegalArgumentException](StageMaterialize.whenLarge(stage, "gate_test"))
+      assert(!e.isInstanceOf[NumberFormatException], e)
+      assert(e.getMessage.contains("spark.graft.stage.gateBytes") && e.getMessage.contains("256MB"),
+        e.getMessage)
+    } finally spark.conf.unset("spark.graft.stage.gateBytes")
+  }
 }
