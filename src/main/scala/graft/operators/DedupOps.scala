@@ -77,30 +77,59 @@ object DedupOps {
     docShinglesOf(docs, withSource).select(keep :+ explode(col("shs")).as("sh"): _*)
   }
 
-  /** Per-block / per-bucket candidate cap (q25/q27): within a block, each
-    * doc pairs only with the next `DefaultCandidateCap` docs in doc_id
-    * order. Far above the largest block the gate corpora produce (max 6 at
-    * sf0.1, measured) so capped output equals uncapped there, and the
-    * DuckDB oracles express the SAME ROW_NUMBER window — parity holds at
-    * any scale, including corpora with over-full blocks. An adversarial
-    * corpus of N near-identical docs generates O(N·cap) candidates instead
-    * of O(N²), and the pair CHAIN inside an over-full block keeps its
-    * connected component intact, so q42's clustering still groups the
-    * whole block (DedupCapSpec). */
+  /** Per-block / per-bucket candidate cap (q25/q27/q32): within a block,
+    * each doc pairs only with the next `DefaultCandidateCap` docs in doc_id
+    * order ([[windowCandidates]]). Far above the largest block the gate
+    * corpora produce (max 6 at sf0.1, measured) so capped output equals
+    * uncapped there, and the DuckDB oracles express the SAME ROW_NUMBER
+    * window — parity holds at any scale, including corpora with over-full
+    * blocks. */
   val DefaultCandidateCap = 32
 
-  /** Upper bound on any candidate cap: the window-based pair generators
-    * expand `cap` lead() expressions, so the cap is a STRUCTURAL constant
-    * sizing the plan, not a data-sized tunable — a huge value would build
-    * a huge expression tree on the driver. 1024 is far above any real
-    * blocking config (and above every block the gate corpora produce, so
-    * specs can use it as the "effectively uncapped" comparator). */
+  /** Upper bound on any candidate cap. The cap bounds the candidates per
+    * row and the window frame every row buffers, so it stays a small
+    * blocking constant, not a data-sized tunable. 1024 is far above any
+    * real blocking config (and above every block the gate corpora
+    * produce, so specs can use it as the "effectively uncapped"
+    * comparator). */
   val MaxCandidateCap = 1024
 
   private[operators] def requireCap(cap: Int): Unit =
     require(cap >= 1 && cap <= MaxCandidateCap,
-      s"candidate cap $cap out of range [1, $MaxCandidateCap]: the cap sizes " +
-        "the plan's lead() expansion and must stay a small structural constant")
+      s"candidate cap $cap out of range [1, $MaxCandidateCap]: the cap bounds " +
+        "each row's candidate frame and must stay a small blocking constant")
+
+  /** The capped candidate window, the one pair generator of the blocked
+    * dedup kernels ([[windowPairCounts]]: q25, q133, q134, q135;
+    * [[bandedPairs]]: q27, q84, q42, q92, q138; and
+    * [[SimilarityOps.embeddingNearDupPairs]]: q32). Within each `keys`
+    * block, ordered by `id`, every row pairs with the next ≤ `cap` rows:
+    * one (`a`, `b`) row per (its id, a following id).
+    *
+    * Blocks at or under the cap are EXACT: every in-block pair appears
+    * once. An over-full block of N rows (stopword-like shingles, N
+    * near-identical docs) degrades to a bounded chain of O(N·cap) pairs
+    * instead of O(N²). The chain keeps the block one connected component
+    * for clustering (q42), but its DIAMETER grows to ~N/cap, so size
+    * [[connectedComponents]]'s maxIter accordingly (DedupCapSpec). The
+    * DuckDB oracles express the same window as a ROW_NUMBER rank join,
+    * so parity is scale-independent.
+    *
+    * Candidates come FROM THE WINDOW ITSELF, not from a capped self-join.
+    * The r7 soak showed why: a rank-filtered self-join still materializes
+    * every same-key row pair before the rank predicate prunes it, and that
+    * join output dominated the query (29 s → 84 s for 100k → 200k docs on
+    * the spam shard, against 10 s → 7 s for this shape; identical output,
+    * measured row for row). Here it is one exchange + sort on `keys` and
+    * one `collect_list` over a `rowsBetween(1, cap)` frame: O(rows·cap)
+    * work and output, and a plan whose size does not follow the cap. */
+  private[operators] def windowCandidates(rows: DataFrame, keys: Seq[String], id: String,
+                                          cap: Int, a: String, b: String): DataFrame = {
+    requireCap(cap)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(id).rowsBetween(1, cap)
+    rows.select(col(id).as(a), collect_list(col(id)).over(w).as(b))
+      .withColumn(b, explode(col(b)))
+  }
 
   /** DuckDB equivalent of shingleExpr as a CTE over `documents`:
     * (doc_id, sh) — one row per shingle. DuckDB lists are 1-based. */
@@ -142,32 +171,15 @@ object DedupOps {
     * 20× candidate reduction here; at 100 TB the block key becomes the
     * shuffle partition key, and blocks are independently parallel).
     */
-  /** Reusable Jaccard-pair kernel over any (doc_id, source, text) frame.
-    * `blockCap`: per-(source, shingle) candidate window — each shingle
-    * occurrence pairs with at most `blockCap` following docs (doc_id
-    * order). Blocks at-or-under the cap are EXACT (every pair survives
-    * with its full intersection count); over-full blocks — stopword-like
-    * shingles on an adversarial corpus — degrade gracefully to a bounded
-    * candidate chain instead of re-quadratizing the join. The DuckDB
-    * oracle mirrors the window (a ROW_NUMBER rank join, the declarative
-    * form of the same contract), so parity is scale-independent.
-    *
-    * Candidates come FROM THE WINDOW ITSELF — each row pairs with its
-    * next ≤cap block neighbors via a lead() array — not from a capped
-    * self-join. The r7 soak showed why: a rank-filtered self-join still
-    * materializes every same-key row pair into joined rows before the
-    * rank predicate prunes them, and the join output feeding the pair
-    * aggregation dominated the query (29 s → 84 s for 100k → 200k docs
-    * on the spam shard, against 10 s → 7 s for this shape — identical
-    * output, measured row-for-row). O(B·cap) by construction, one
-    * exchange + sort on the block key, no join machinery. */
   /** The shared window-pair kernel over ANY (doc_id, source, sh) key
-    * frame: per-(source, sh) lead() window → (doc_a, doc_b, n_common)
-    * intersection counts, plus the per-doc key-set sizes — the inputs
-    * every set-overlap measure (Jaccard, containment, winnowed match)
+    * frame: per-(source, sh) candidate window ([[windowCandidates]], with
+    * `blockCap` as its cap) → (doc_a, doc_b, n_common) intersection
+    * counts, plus the per-doc key-set sizes — the inputs every
+    * set-overlap measure (Jaccard, containment, winnowed match)
     * normalizes from. */
   private def windowPairCounts(sh0: DataFrame,
                                blockCap: Int): (DataFrame, DataFrame) = {
+    // checked here too: the whenLarge checkpoint below may run a job
     requireCap(blockCap)
     // the key frame feeds both the size aggregate and the pair window —
     // materialize once so the shingle/tokenize explode upstream runs one
@@ -176,13 +188,8 @@ object DedupOps {
     // q133 0.87, q25/q135 flat-negative) — lazy below the gate,
     // checkpointed at corpus scale where the shingle explode dominates
     val sh = StageMaterialize.whenLarge(sh0, "window_pair_keys")
-    val w = Window.partitionBy("source", "sh").orderBy("doc_id")
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val pairs = sh
-      .withColumn("nbrs", array((1 to blockCap).map(j =>
-        lead(col("doc_id"), j).over(w)): _*))
-      .select(col("doc_id").as("doc_a"), explode(col("nbrs")).as("doc_b"))
-      .filter(col("doc_b").isNotNull)
+    val pairs = windowCandidates(sh, Seq("source", "sh"), "doc_id", blockCap, "doc_a", "doc_b")
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_common"))
     (pairs, sizes)
@@ -197,6 +204,8 @@ object DedupOps {
       .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
       .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
 
+  /** Reusable Jaccard-pair kernel over any (doc_id, source, text) frame;
+    * `blockCap` is the per-(source, shingle) [[windowCandidates]] cap. */
   def jaccardPairs(docs: DataFrame, minJaccard: Double,
                    blockCap: Int = DefaultCandidateCap): DataFrame = {
     val (pairs, sizes) = blockedPairCounts(docs, blockCap)
@@ -435,34 +444,18 @@ object DedupOps {
     * near-identical docs) is the thing to watch at 100 TB — AQE skew-join
     * handles moderate cases; degenerate ones get a bucket-size cap upstream.
     */
-  /** Reusable LSH candidate kernel over any (doc_id, text) frame.
-    * `bucketCap`: per-(band, band_key) candidate window, same contract as
-    * [[jaccardPairs]]'s blockCap — exact for buckets at-or-under the cap,
-    * bounded chain for degenerate buckets (N near-identical docs), which
-    * preserves the bucket's connected component for clustering (q42).
-    * Trade-off: the chain raises the component's DIAMETER, so downstream
-    * label propagation needs ~N/cap rounds on a degenerate bucket — size
-    * [[connectedComponents]]'s maxIter accordingly (DedupCapSpec). */
   /** The capped band-bucket candidate pass shared by the md5 (oracle) and
     * fast (production) LSH variants: input is (doc_id, band, band_key)
-    * rows. JOIN-FREE — each row pairs with its next ≤cap bucket
-    * neighbors via a lead() array over the bucket window, the same shape
-    * (and for the same soak-measured reason) as [[jaccardPairs]]: one
-    * exchange + sort on (band, band_key), O(bucket·cap) work and output,
-    * no self-join to materialize pruned row pairs. The signature
-    * pipeline below the window runs exactly once per band row. */
-  private def bandedPairs(bands0: DataFrame, bucketCap: Int): DataFrame = {
-    requireCap(bucketCap)
-    val w = Window.partitionBy("band", "band_key").orderBy("doc_id")
-    bands0
-      .withColumn("nbrs", array((1 to bucketCap).map(j =>
-        lead(col("doc_id"), j).over(w)): _*))
-      .select(col("doc_id").as("doc_a"), explode(col("nbrs")).as("doc_b"))
-      .filter(col("doc_b").isNotNull)
+    * rows, and `bucketCap` is the per-(band, band_key)
+    * [[windowCandidates]] cap. The signature pipeline below the window
+    * runs exactly once per band row. */
+  private def bandedPairs(bands0: DataFrame, bucketCap: Int): DataFrame =
+    windowCandidates(bands0, Seq("band", "band_key"), "doc_id", bucketCap, "doc_a", "doc_b")
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_shared_bands"))
-  }
 
+  /** Reusable LSH candidate kernel over any (doc_id, text) frame;
+    * `bucketCap` is the per-(band, band_key) [[windowCandidates]] cap. */
   def lshCandidatePairs(docs: DataFrame,
                         bucketCap: Int = DefaultCandidateCap): DataFrame =
     bandedPairs(

@@ -51,17 +51,34 @@ private[graft] object MaintenanceIO {
     * normal path every fork has been joined before close() and this is a
     * no-op; on the abort path in-flight bodies are interrupted and the
     * scope blocks until they exit, swallowing their secondary failures
-    * (the serial chain's own exception is the one that propagates). */
-  final class Overlap(threads: Int) extends AutoCloseable {
+    * (the serial chain's own exception is the one that propagates).
+    *
+    * Interrupting a fork's thread does not stop a Spark job it already
+    * launched, so with a `spark` session the forks run under one job
+    * group ([[jobGroup]], `interruptOnCancel`). When a fork is still in
+    * flight, `close()` cancels that group and returns only once the status
+    * tracker shows none of its jobs running. */
+  final class Overlap(threads: Int, spark: Option[SparkSession] = None) extends AutoCloseable {
     private val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    private val sc = spark.map(_.sparkContext)
+    private val forks = scala.collection.mutable.ArrayBuffer.empty[java.util.concurrent.Future[_]]
+    val jobGroup = s"graft-overlap-${java.util.UUID.randomUUID()}"
     final class Forked[A](f: java.util.concurrent.Future[A]) {
       def join(): A = try f.get() catch {
         case e: java.util.concurrent.ExecutionException => throw e.getCause
       }
     }
-    def fork[A](body: => A): Forked[A] =
-      new Forked(pool.submit(() => body))
+    def fork[A](body: => A): Forked[A] = {
+      val f = pool.submit(() => {
+        sc.foreach(_.setJobGroup(jobGroup, "maintenance fork", interruptOnCancel = true))
+        try body finally sc.foreach(_.clearJobGroup())
+      })
+      forks += f
+      new Forked(f)
+    }
     def close(): Unit = {
+      val inFlight = sc.filter(_ => forks.exists(!_.isDone))
+      inFlight.foreach(_.cancelJobGroup(jobGroup))
       pool.shutdownNow()
       try {
         // generous bound: an interrupted Spark action unwinds in well
@@ -69,6 +86,16 @@ private[graft] object MaintenanceIO {
         if (!pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES))
           System.err.println("[maintenance] Overlap.close: forked task did not " +
             "terminate within 10 minutes after cancellation")
+        // a fork may have launched a job between the cancel and its
+        // interrupt; no fork runs now, so cancel once more and wait
+        // (bounded) until the status tracker shows the group idle
+        inFlight.foreach { c =>
+          c.cancelJobGroup(jobGroup)
+          val st = c.statusTracker
+          val deadline = System.nanoTime() + 60000000000L
+          while (st.getJobIdsForGroup(jobGroup).exists(st.getActiveJobIds.contains) &&
+                 System.nanoTime() < deadline) Thread.sleep(10)
+        }
       } catch {
         case _: InterruptedException => Thread.currentThread().interrupt()
       }

@@ -135,8 +135,7 @@ object ModelStore {
     * .nbDocScores]] path uses a plain join for the same reason; forcing a
     * broadcast would OOM on a production vocabulary instead of degrading
     * to a shuffle join. AQE picks broadcast on its own when the stored
-    * table is actually small. ([[dsirModelMapAtRest]] MAY collect/
-    * broadcast — its table is ≤ 4096 rows by construction.) */
+    * table is actually small. */
   def nbScoresAtRest(docs: DataFrame, root: String): DataFrame =
     QualityModels.nbScoresWithModel(docs, load(docs.sparkSession, root)._1)
 
@@ -145,14 +144,6 @@ object ModelStore {
 
   def dsirLogWeightsAtRest(docs: DataFrame, root: String): DataFrame =
     QualityModels.dsirLogWeights(docs, load(docs.sparkSession, root)._1)
-
-  /** The DSIR model as a broadcastable bucket → log-ratio map, loaded
-    * from the store, so a restarted ingest job recovers the exact model
-    * its checkpointed predecessor admitted under (≤ 4096 rows by
-    * construction). */
-  def dsirModelMapAtRest(spark: SparkSession, root: String): Map[Long, Double] =
-    load(spark, root)._1.collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
   def trainKnPersistent(docs: DataFrame, root: String): Long =
     save(CorpusOps.knModel(docs), root, "kn", corpusStats(docs))

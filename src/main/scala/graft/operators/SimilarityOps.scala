@@ -250,13 +250,10 @@ object SimilarityOps {
     * the rescoring join. A 6-bit band has only 64 keys, so bucket size
     * grows LINEARLY with the corpus and an uncapped in-bucket self-join
     * re-quadratizes (measured: 75 s → 249 s for a 2× corpus in the soak).
-    * The per-(band, key) cap below — each vector pairs with at most
-    * [[DedupOps.DefaultCandidateCap]] following vectors in vec_id order,
-    * same contract as [[DedupOps.jaccardPairs]] — bounds candidates at
-    * O(N·bands·cap) while keeping buckets at-or-under the cap EXACT; the
-    * oracle mirrors the window, so parity is scale-independent, and a
-    * capped bucket still links transitively (the chain preserves its
-    * connected component for downstream clustering).
+    * The per-(band, key) candidate window below
+    * ([[DedupOps.windowCandidates]], cap [[DedupOps.DefaultCandidateCap]]
+    * in vec_id order) bounds candidates at O(N·bands·cap) while keeping
+    * buckets at or under the cap exact.
     * Recall is the banded-LSH tradeoff — for true near-dups (sim ≥ 0.95)
     * two 6-bit bands catch ~78 %; more bands raise recall linearly in
     * cost. The exact threshold is oracle-mirrored.
@@ -264,26 +261,15 @@ object SimilarityOps {
   /** Reusable near-dup kernel over any (vec_id, embedding) frame — the
     * banded sign-LSH candidate pass plus exact rescoring described on
     * [[q32EmbeddingNearDup]]. `bucketCap`: per-(band, key) candidate
-    * window, same contract as [[DedupOps.jaccardPairs]]'s blockCap. */
+    * window ([[DedupOps.windowCandidates]]); the sign-LSH signature
+    * pipeline below it runs once. */
   def embeddingNearDupPairs(emb: DataFrame, minSim: Double,
                             bucketCap: Int = DedupOps.DefaultCandidateCap): DataFrame = {
-    DedupOps.requireCap(bucketCap)
-    // candidates come from the bucket window itself (lead() array — each
-    // vector pairs with its next ≤cap bucket neighbors), not from a
-    // rank-capped self-join: the join shape materializes every same-key
-    // row pair before the rank predicate prunes it, which the r7 soak
-    // measured as the dominant cost of the pair family (see
-    // [[DedupOps.jaccardPairs]]). One exchange + sort on (band, key),
-    // O(bucket·cap) work, the sign-LSH signature pipeline runs once.
-    val w = Window.partitionBy("band", "key").orderBy("vec_id")
-    val cand = emb.withColumn("bucket", bucketExpr(12))
+    val bands = emb.withColumn("bucket", bucketExpr(12))
       .select(col("vec_id"),
         posexplode(array((0 until 2).map(b =>
           shiftright(col("bucket"), b * 6).bitwiseAND(lit(63L))): _*)).as(Seq("band", "key")))
-      .withColumn("nbrs", array((1 to bucketCap).map(j =>
-        lead(col("vec_id"), j).over(w)): _*))
-      .select(col("vec_id").as("vec_a"), explode(col("nbrs")).as("vec_b"))
-      .filter(col("vec_b").isNotNull)
+    val cand = DedupOps.windowCandidates(bands, Seq("band", "key"), "vec_id", bucketCap, "vec_a", "vec_b")
       .distinct()
     // rescore with the native fused cosine (deterministic sequential
     // accumulation — see q33) instead of a per-element decimal join: the
