@@ -103,8 +103,8 @@ object DedupOps {
     * dedup kernels ([[windowPairCounts]]: q25, q133, q134, q135;
     * [[bandedPairs]]: q27, q84, q42, q92, q138; and
     * [[SimilarityOps.embeddingNearDupPairs]]: q32). Within each `keys`
-    * block, ordered by `id`, every row pairs with the next ≤ `cap` rows:
-    * one (`a`, `b`) row per (its id, a following id).
+    * block, ordered by `id`, each row yields (`a`, `b`) = (its id, id of
+    * one of the next ≤ `cap` rows).
     *
     * Blocks at or under the cap are EXACT: every in-block pair appears
     * once. An over-full block of N rows (stopword-like shingles, N
@@ -120,9 +120,8 @@ object DedupOps {
     * every same-key row pair before the rank predicate prunes it, and that
     * join output dominated the query (29 s → 84 s for 100k → 200k docs on
     * the spam shard, against 10 s → 7 s for this shape; identical output,
-    * measured row for row). Here it is one exchange + sort on `keys` and
-    * one `collect_list` over a `rowsBetween(1, cap)` frame: O(rows·cap)
-    * work and output, and a plan whose size does not follow the cap. */
+    * measured row for row). Here it is one exchange + sort on `keys` and a
+    * `rowsBetween(1, cap)` `collect_list`: O(rows·cap) work and output. */
   private[operators] def windowCandidates(rows: DataFrame, keys: Seq[String], id: String,
                                           cap: Int, a: String, b: String): DataFrame = {
     requireCap(cap)

@@ -69,7 +69,7 @@ object EmbeddingMaintenance {
     // the kept-cell collect and the rewrite both read the checkpointed
     // survivors — overlap them (guide §2.6); the emptied-directory sweep
     // below needs both done
-    val ov = new MaintenanceIO.Overlap(1, Some(spark))
+    val ov = new MaintenanceIO.Overlap(1)
     val keptCells = try {
       val fKept = ov.fork(remaining.select("cell").distinct()
         .collect().map(_.getInt(0)).toSet)
@@ -124,7 +124,7 @@ object EmbeddingMaintenance {
     val next = materialized(
       kept.unionByName(incoming.select(kept.columns.map(col): _*)))
     // kept-cell collect ∥ rewrite — both read the checkpointed frame
-    val ov = new MaintenanceIO.Overlap(1, Some(spark))
+    val ov = new MaintenanceIO.Overlap(1)
     val keptCells = try {
       val fKept = ov.fork(next.select("cell").distinct()
         .collect().map(_.getInt(0)).toSet)

@@ -340,7 +340,7 @@ object GraphMaintenance {
     // need not wait for the candidate join + rank window, the build's
     // dominant job. Fork them first so they fill the cluster while the
     // rank materializes; the edge/redge writes join everything at the end.
-    val ov = new MaintenanceIO.Overlap(4, Some(spark))
+    val ov = new MaintenanceIO.Overlap(4)
     try {
       val fRanked = ov.fork(materialized(
         rankTopK(candidates(probeSide, index), k)))
@@ -597,7 +597,7 @@ object GraphMaintenance {
     // redges/ + the post-upsert layout). Each fork's inputs are
     // checkpointed and its reads are disjoint from every concurrent
     // write; joins happen where a result is first consumed.
-    val ov = new MaintenanceIO.Overlap(4, Some(spark))
+    val ov = new MaintenanceIO.Overlap(4)
     try {
       val fArr = ov.fork {
         val a = prof("arr-materialize")(materialized(
@@ -920,7 +920,7 @@ object GraphMaintenance {
       .toDF("vec_id", "cell")
     val victimCells = victimRows.map(_.getInt(1)).distinct.toSeq
 
-    val ov = new MaintenanceIO.Overlap(2, Some(spark))
+    val ov = new MaintenanceIO.Overlap(2)
     try {
       // holders of an edge to a victim: redges/ pruned to the victims'
       // cells (over-approximate — see upsertGraph), surviving ids only.
@@ -994,7 +994,7 @@ object GraphMaintenance {
     // directory) read and write disjoint subdirectories — overlap them
     // (guide §2.6); each chain materializes its own input first, so the
     // overwrites never race their reads
-    val ov = new MaintenanceIO.Overlap(3, Some(spark))
+    val ov = new MaintenanceIO.Overlap(3)
     try {
       val fEdges = ov.fork {
         val resolved = materialized(

@@ -53,16 +53,17 @@ private[graft] object MaintenanceIO {
     * scope blocks until they exit, swallowing their secondary failures
     * (the serial chain's own exception is the one that propagates).
     *
-    * Interrupting a fork's thread does not stop a Spark job it already
-    * launched, so with a `spark` session the forks run under one job
-    * group ([[jobGroup]], `interruptOnCancel`). When a fork is still in
-    * flight, `close()` cancels that group and returns only once the status
-    * tracker shows none of its jobs running. */
-  final class Overlap(threads: Int, spark: Option[SparkSession] = None) extends AutoCloseable {
+    * A Spark job outlives its fork's interrupt, so forks tag their jobs
+    * ([[jobTag]], `interruptOnCancel`) and keep the job group they inherit,
+    * which an outer `cancelJobGroup` (the steering watchdog's) still
+    * reaches; `close()` cancels the tag and waits until the status tracker
+    * shows none of its jobs running. */
+  final class Overlap(threads: Int) extends AutoCloseable {
     private val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    private val sc = spark.map(_.sparkContext)
     private val forks = scala.collection.mutable.ArrayBuffer.empty[java.util.concurrent.Future[_]]
-    val jobGroup = s"graft-overlap-${java.util.UUID.randomUUID()}"
+    val jobTag = s"graft-overlap-${java.util.UUID.randomUUID()}"
+    private def activeContext =
+      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).map(_.sparkContext)
     final class Forked[A](f: java.util.concurrent.Future[A]) {
       def join(): A = try f.get() catch {
         case e: java.util.concurrent.ExecutionException => throw e.getCause
@@ -70,15 +71,16 @@ private[graft] object MaintenanceIO {
     }
     def fork[A](body: => A): Forked[A] = {
       val f = pool.submit(() => {
-        sc.foreach(_.setJobGroup(jobGroup, "maintenance fork", interruptOnCancel = true))
-        try body finally sc.foreach(_.clearJobGroup())
+        val sc = activeContext
+        sc.foreach { c => c.addJobTag(jobTag); c.setInterruptOnCancel(true) }
+        try body finally sc.foreach(_.removeJobTag(jobTag))
       })
       forks += f
       new Forked(f)
     }
     def close(): Unit = {
-      val inFlight = sc.filter(_ => forks.exists(!_.isDone))
-      inFlight.foreach(_.cancelJobGroup(jobGroup))
+      val inFlight = activeContext.filter(_ => forks.exists(!_.isDone))
+      inFlight.foreach(_.cancelJobsWithTag(jobTag))
       pool.shutdownNow()
       try {
         // generous bound: an interrupted Spark action unwinds in well
@@ -86,15 +88,16 @@ private[graft] object MaintenanceIO {
         if (!pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES))
           System.err.println("[maintenance] Overlap.close: forked task did not " +
             "terminate within 10 minutes after cancellation")
-        // a fork may have launched a job between the cancel and its
-        // interrupt; no fork runs now, so cancel once more and wait
-        // (bounded) until the status tracker shows the group idle
+        // a fork may have launched a job after the first cancel; none runs
+        // now, so cancel again and wait (bounded) until the tag is idle
         inFlight.foreach { c =>
-          c.cancelJobGroup(jobGroup)
+          c.cancelJobsWithTag(jobTag)
           val st = c.statusTracker
+          def active = st.getJobIdsForTag(jobTag).filter(st.getActiveJobIds.contains)
           val deadline = System.nanoTime() + 60000000000L
-          while (st.getJobIdsForGroup(jobGroup).exists(st.getActiveJobIds.contains) &&
-                 System.nanoTime() < deadline) Thread.sleep(10)
+          while (active.nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+          if (active.nonEmpty) System.err.println("[maintenance] Overlap.close: " +
+            s"jobs ${active.mkString(", ")} still active 60 s after cancellation")
         }
       } catch {
         case _: InterruptedException => Thread.currentThread().interrupt()
