@@ -338,15 +338,6 @@ object CorpusOps {
   }
   val q142KnPerplexity: Q = (s, d) => knBigramScores(documents(s, d))
 
-  /** The KN model ALONE: the bigram TYPE table (w1, w2, c_bg) — the one
-    * statistic every other q142 table derives from (context totals and
-    * fan-outs are one aggregation over types, continuation counts
-    * another, the type count a broadcast row), so it IS the persistable
-    * model ([[ModelStore]]): vocabulary²-bounded, rebuild-free to
-    * score under. */
-  def knModel(docs: DataFrame): DataFrame =
-    knModelFromBigrams(knBigrams(docs))
-
   /** (doc_id, w1, w2) bigram-occurrence rows — the tokenize/explode
     * subtree every KN table derives from, factored out so multi-model
     * consumers (q153 trains and scores TWO models) explode the corpus
@@ -360,27 +351,25 @@ object CorpusOps {
         .as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
 
-  /** [[knModel]] from a precomputed bigram-occurrence table — identical
-    * values, the rows just arrive pre-exploded. */
+  /** The KN model ALONE, from a precomputed [[knBigrams]] table: the
+    * bigram TYPE table (w1, w2, c_bg) — the one statistic every other
+    * q142 table derives from (context totals and fan-outs are one
+    * aggregation over types, continuation counts another, the type count
+    * a broadcast row), so it is the whole model, vocabulary²-bounded. */
   def knModelFromBigrams(bg: DataFrame): DataFrame =
     bg.groupBy("w1", "w2").agg(count(lit(1)).as("c_bg"))
 
-  /** [[knBigramScores]] under an EXTERNALLY trained type table — the
-    * at-rest scoring path. Scoring a LATER corpus under a frozen model,
-    * three regimes fall out of KN naturally: a seen bigram scores as in
-    * training; an unseen bigram over seen words takes the pure backoff
-    * mass (the max(c−D, 0) clamp binds — exactly KN's unseen-pair
-    * probability); a bigram whose context or continuation the model
-    * never saw has no distribution to score under and is EXCLUDED, with
-    * the per-doc count reported so the consumer sees its OOV exposure.
-    * On the model's own training corpus every join hits and the clamp
-    * never binds — bit-identical to [[knBigramScores]]
-    * (ModelStoreSpec). */
-  def knScoresWithModel(docs: DataFrame, model: DataFrame): DataFrame =
-    knScoresFromBigrams(knBigrams(docs), model).orderBy("doc_id")
-
-  /** [[knScoresWithModel]] from a precomputed bigram-occurrence table
-    * (unordered — per-doc rows only). Identical values. */
+  /** [[knBigramScores]] under a SEPARATELY trained type table, from a
+    * precomputed [[knBigrams]] table (unordered — per-doc rows only).
+    * Scoring a corpus under a frozen model, three regimes fall out of KN
+    * naturally: a seen bigram scores as in training; an unseen bigram
+    * over seen words takes the pure backoff mass (the max(c−D, 0) clamp
+    * binds — exactly KN's unseen-pair probability); a bigram whose
+    * context or continuation the model never saw has no distribution to
+    * score under and is EXCLUDED, with the per-doc count reported so the
+    * consumer sees its OOV exposure. On the model's own training corpus
+    * every join hits and the clamp never binds — bit-identical to
+    * [[knBigramScores]] (CorpusOpsSpec). */
   def knScoresFromBigrams(bg0: DataFrame, model: DataFrame): DataFrame = {
     val cbg = model.select(col("w1"), col("w2"), col("c_bg"))
     val cw = cbg.groupBy("w1").agg(sum(col("c_bg")).as("c_w1"),
@@ -540,11 +529,11 @@ object CorpusOps {
       |FROM terms GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   /** q153: Kneser-Ney score-drift audit — the q151/q152 shape applied to
-    * the third stored model ([[ModelStore]] "kn"). The same content-
+    * the third curation model. The same content-
     * addressed half (md5₃₂("m:"+doc_id) % 2 — the family's shared frozen
     * split) trains the v1 bigram type table; v2 is the full retrain;
-    * every document scores under both via the at-rest rule
-    * ([[knScoresWithModel]]: unseen pairs take the backoff mass, bigrams
+    * every document scores under both via [[knScoresFromBigrams]]
+    * (unseen pairs take the backoff mass, bigrams
     * whose context or continuation v1 never saw are EXCLUDED — a doc with
     * nothing scorable reports a NULL mean and is counted as unscored).
     * The decision diagnostic is the q110 one: per-source TERCILE MOVES —

@@ -1376,32 +1376,6 @@ object DedupOps {
         col("c.clen").as("chunk_len"))
   }
 
-  /** Production CDC chunking — [[cdcChunks]] with xxhash64 in place of
-    * both md5s (boundary rule AND chunk key), the same md5→xxhash64 swap
-    * as q84/q92: ~10× less hash work and no hex-string round-trip, same
-    * expected chunk length and the same re-synchronization property, but
-    * a different hash family — so it is spec-gated (lossless partition,
-    * re-sync, determinism) rather than oracle-gated. */
-  def cdcChunksFast(docs: DataFrame, modulus: Int = 16): DataFrame = {
-    val l = split(trim(col("text")), "\\s+")
-    val chunks = flatten(transform(array(l), lv => {
-      val bidx = filter(sequence(lit(1), size(lv)), i =>
-        pmod(xxhash64(element_at(lv, i)), lit(modulus.toLong)) === 0)
-      flatten(transform(array(bidx), bv => {
-        val sts = concat(array(lit(1)), transform(bv, x => x + 1))
-        val ens = concat(bv, array(size(lv)))
-        filter(zip_with(sts, ens, (st, en) =>
-          when(st <= en, struct(
-            xxhash64(concat_ws(" ", slice(lv, st, en - st + 1))).as("h"),
-            (en - st + 1).as("clen")))),
-          c => c.isNotNull)
-      }))
-    }))
-    docs.select(col("doc_id"), explode(chunks).as("c"))
-      .select(col("doc_id"), col("c.h").as("chunk_hash"),
-        col("c.clen").as("chunk_len"))
-  }
-
   val q137CdcChunks: Q = (s, d) =>
     cdcChunks(documents(s, d))
       .groupBy("chunk_hash", "chunk_len")

@@ -5,15 +5,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Embedding-index lifecycle maintenance over the IVF cell-partitioned
-  * at-rest layout ([[SimilarityOps.writeIvfPartitioned]]'s directory
-  * structure) — the vector-side twin of [[CorpusMaintenance]], keeping a
-  * deployed ANN index correct between pipeline runs: vector erasure
-  * (takedowns propagate to derived indexes, not just the corpus),
-  * re-embedding upserts (a model refresh or doc edit changes the
-  * vector), and small-file compaction.
+  * at-rest layout (one directory per coarse cell, [[writeCellLayout]]),
+  * keeping a deployed ANN index correct between pipeline runs: vector
+  * erasure (takedowns propagate to derived indexes, not just the corpus)
+  * and re-embedding upserts (a model refresh or doc edit changes the
+  * vector). [[GraphMaintenance]]'s folds drive both.
   *
-  * The structural difference from the doc shards: a CELL IS NOT A PURE
-  * FUNCTION OF THE ID — it depends on the embedding and the frozen
+  * Unlike a hash-routed shard, a CELL IS NOT A PURE FUNCTION OF THE ID — it depends on the embedding and the frozen
   * centroid table. Two consequences, both handled here:
   *  - deletes must LOOK UP the victims' cells in the stored layout (a
   *    column-pruned scan of vec_id + the cell partition column — no
@@ -25,9 +23,8 @@ import org.apache.spark.sql.functions._
   *    centroids — centroids are never retrained here, exactly as a
   *    serving index holds its quantizer fixed between rebuilds).
   *
-  * Everything else inherits the [[CorpusMaintenance]] contract: dynamic
-  * partition overwrite rewrites ONLY affected cell directories, emptied
-  * directories are reclaimed at the filesystem level (dynamic overwrite
+  * Dynamic partition overwrite rewrites ONLY affected cell directories,
+  * emptied directories are reclaimed at the filesystem level (dynamic overwrite
   * cannot express an empty partition — stale files would resurrect
   * deleted vectors), and untouched cells stay bit-identical at the
   * file-listing level (spec-pinned).
@@ -91,12 +88,14 @@ object EmbeddingMaintenance {
     * frozen `cents`), so a vector that moves cells is erased from its
     * old directory and written to its new one in the same dynamic
     * overwrite. `changed` must carry (vec_id, embedding, …) — the corpus
-    * schema minus the cell column; a caller that already computed the
-    * assignment under the SAME frozen `cents` may pass it as a `cell`
-    * column and the O(nList·dim) argmin per row is skipped (round-16
-    * ADVICE: the graph fold's checkpointed arrival frame carries it, and
-    * the unconditional withColumn silently re-evaluated it). */
-  def upsertVecs(spark: SparkSession, path: String,
+    * schema minus the cell column. A `cell` column, when present, is
+    * TRUSTED as the assignment under these same frozen `cents` and the
+    * O(nList·dim) argmin per row is skipped; only a caller that computed
+    * it under `cents` may pass one. The one such caller is the graph
+    * fold ([[GraphMaintenance.upsertGraph]]), whose checkpointed arrival
+    * frame carries the cell from `cellExpr` under the sidecar's
+    * centroids — hence package-private. */
+  private[operators] def upsertVecs(spark: SparkSession, path: String,
                  cents: Array[Array[Float]], changed: DataFrame,
                  knownOldCells: Option[Seq[Int]] = None,
                  knownIdCells: Option[Seq[(Long, Int)]] = None): Unit = {
@@ -141,19 +140,6 @@ object EmbeddingMaintenance {
     }
   }
 
-  /** Compact the named cells (or all) to one file each — rows unchanged,
-    * file layout shrunk. Run in cell batches at real scale. */
-  def compactCells(spark: SparkSession, path: String,
-                   cells: Seq[Int] = Seq.empty): Unit = {
-    val corpus = spark.read.parquet(path)
-    val target = materialized(
-      if (cells.isEmpty) corpus else corpus.filter(col("cell").isInCollection(cells)))
-    withDynamicOverwrite(spark) {
-      target.repartition(col("cell"))
-        .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(path)
-    }
-  }
-
   /** Health summary of a cell layout under its frozen centroids — the
     * numbers the O(N·|cell|) probe-cost contract rests on:
     * `meanCell`/`maxCell` (a probe reads nProbe CELLS, so its cost is the
@@ -163,17 +149,14 @@ object EmbeddingMaintenance {
     * frozen quantizer no longer describes the data, so the true
     * neighbors of a query leak into unprobed cells and recall decays).
     * One column-pruned scan + one tiny agg; the per-vector distance pass
-    * broadcasts the centroid table like every other cell computation. */
+    * broadcasts the centroid table like every other cell computation.
+    * Stored as the quantizer sidecar's training-time baseline. */
   final case class IvfStats(n: Long, nonEmptyCells: Int,
                             meanCell: Double, maxCell: Long, meanSqErr: Double)
 
-  def layoutStats(spark: SparkSession, path: String,
-                  cents: Array[Array[Float]]): IvfStats =
-    statsOf(spark.read.parquet(path), cents)
-
-  /** [[layoutStats]] over an in-memory (vec_id, embedding, cell) frame —
-    * identical values; lets a builder that already holds the assigned
-    * frame skip the just-written layout's re-read. */
+  /** [[IvfStats]] of an in-memory (vec_id, embedding, cell) frame — the
+    * assigned frame a builder already holds, so the just-written layout
+    * is never re-read. */
   def statsOf(corpus: DataFrame, cents: Array[Array[Float]]): IvfStats = {
     val spark = corpus.sparkSession
     val bc = spark.sparkContext.broadcast(cents)
@@ -196,139 +179,14 @@ object EmbeddingMaintenance {
       meanSqErr = if (n == 0) 0.0 else sizes.map(_.getDouble(2)).sum / n)
   }
 
-  /** Drift verdict against the training-time snapshot (capture it with
-    * [[layoutStats]] right after [[writeCellLayout]]): the layout has
-    * drifted when sustained churn has EITHER
-    *  - concentrated mass (max/mean cell skew grew past `skewFactor` ×
-    *    the baseline skew — upserts land where the data moved, not where
-    *    the frozen centroids are), or
-    *  - degraded the quantizer fit (mean squared error per vector grew
-    *    past `errFactor` × baseline), or
-    *  - outgrown the cell-size target the nList was sized for
-    *    (mean cell > `cellFactor` × baseline — the adaptiveNList contract
-    *    inverted: N grew, nList didn't).
-    * Returns the triggered reasons (empty = healthy). Pure arithmetic on
-    * two 5-number summaries — run it per maintenance batch. */
-  def driftReasons(baseline: IvfStats, current: IvfStats,
-                   skewFactor: Double = 2.0, errFactor: Double = 1.5,
-                   cellFactor: Double = 2.0): Seq[String] = {
-    def skew(s: IvfStats) = if (s.meanCell == 0) 1.0 else s.maxCell / s.meanCell
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (skew(current) > skewFactor * math.max(1.0, skew(baseline)))
-      out += f"cell skew ${skew(current)}%.2f vs baseline ${skew(baseline)}%.2f"
-    if (baseline.meanSqErr > 0 && current.meanSqErr > errFactor * baseline.meanSqErr)
-      out += f"quantization error ${current.meanSqErr}%.4f vs baseline ${baseline.meanSqErr}%.4f"
-    if (baseline.meanCell > 0 && current.meanCell > cellFactor * baseline.meanCell)
-      out += f"mean cell ${current.meanCell}%.1f vs baseline ${baseline.meanCell}%.1f"
-    out.toSeq
-  }
-
-  /** Recall audit over the at-rest layout — the question q126 asks,
-    * asked of a LIVE index: for a content-addressed panel of stored
-    * vectors, what fraction of each query's exact cosine top-k does the
-    * nProbe multi-probe search return? [[driftReasons]] watches the
-    * quantizer's FIT (skew/error/cell growth — proxies); this watches
-    * the metric a deployment actually pages on. The two can disagree:
-    * a modest tight cluster arriving BETWEEN two frozen centroids moves
-    * none of the fit proxies past their factors (its mass is small, it
-    * splits evenly across the boundary cells), yet its members' true
-    * neighbors now straddle cells the probe never visits together —
-    * recall degrades silently. SelfHealingIngestSpec plants exactly
-    * that arrival and pins that the recall trigger catches it.
-    *
-    * Scale shape: the panel is `panelN` rows collected by the engine's
-    * content-addressed ordering (xxhash64 of vec_id — stable under
-    * reruns and corpus growth, never a sample of the driver's choosing);
-    * the exact leg is ONE broadcast-panel linear cosine pass; the IVF
-    * leg probes nProbe stored cell directories per panel query (the
-    * layout already carries the cell column — partition pruning does
-    * the reading). O(panelN · N) total, independent of audit cadence. */
-  def recallAudit(spark: SparkSession, path: String,
-                  cents: Array[Array[Float]],
-                  k: Int = 5, nProbe: Int = 1, panelN: Int = 16): Double = {
-    import org.apache.spark.sql.expressions.Window
-    val layout = spark.read.parquet(path).select("vec_id", "embedding", "cell")
-    val queryVecs = layout.select(col("vec_id"), col("embedding"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(panelN)
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-    if (queryVecs.size < 2) return 1.0
-    import spark.implicits._
-    val panel = broadcast(queryVecs.toDF("query_id", "qv"))
-    def topK(cand: DataFrame): DataFrame = {
-      val w = Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))
-      cand.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-        .select(col("query_id"), col("vec_id").as("target_id"))
-    }
-    val exact = topK(layout.join(panel, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(graft.functions.CosineSimilarity(col("qv"), col("embedding")), 6).as("sim")))
-    val probed = broadcast(
-      ProductQuantization.probeCells(queryVecs, cents, nProbe).toDF("query_id", "cell")
-        .join(panel, Seq("query_id")))
-    val ivf = topK(layout.join(probed, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(graft.functions.CosineSimilarity(col("qv"), col("embedding")), 6).as("sim")))
-    // ONE pass computes both counts: exact left-joined to IVF membership
-    // gives n_exact (all rows) and hits (matched rows) in one aggregate —
-    // the two-aggregate form consumed `exact` twice, re-running the full
-    // linear cosine pass over the layout per reference
-    val per = exact
-      .join(ivf.withColumn("hit", lit(1L)), Seq("query_id", "target_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("hits"))
-      .select((col("hits") / col("n_exact")).as("recall"))
-      .agg(avg("recall")).first()
-    if (per.isNullAt(0)) 1.0 else per.getDouble(0)
-  }
-
-  /** Retrain the coarse quantizer from the CURRENT stored vectors and
-    * rewrite the whole layout under the fresh centroids — the rebuild a
-    * deployment schedules when [[driftReasons]] fires. nList is re-sized
-    * by the adaptiveNList contract so post-churn corpus growth gets more
-    * cells, restoring |cell| ≈ targetCell and with it the O(N·|cell|)
-    * probe cost. A full rewrite (not dynamic overwrite): after retraining
-    * EVERY vector may change cells, so there is nothing surgical to
-    * preserve — run it at the cadence of a compaction, not per batch.
-    * Returns the new centroids; value-parity with the old layout is
-    * pinned by EmbeddingMaintenanceSpec (exhaustive-probe ivfTopKAtRest
-    * equal before/after — centroids change WHERE vectors sit, never which
-    * vectors exist).
-    *
-    * Durability: the rebuilt layout is written to a sibling temp path and
-    * swapped in with two renames — the source files stay untouched (and
-    * readable as task inputs) for the whole write, so an executor loss or
-    * OOM mid-rebuild leaves the original index intact instead of
-    * destroying it (the earlier localCheckpoint + same-path overwrite
-    * truncated lineage, making the executor-resident blocks the ONLY copy
-    * mid-rewrite). The rename window is the same maintenance-window
-    * contract a compaction already has; a crash between the two renames
-    * leaves `<path>__old` to restore by hand. */
-  def recluster(spark: SparkSession, path: String,
-                targetCell: Int = 500, sampleN: Int = 2048): Array[Array[Float]] = {
-    val current = spark.read.parquet(path).drop("cell")
-    val nList = ProductQuantization.adaptiveNList(current, targetCell)
-    val cents = ProductQuantization.trainCoarse(current, nList, sampleN)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(path)
-    val tmp = new Path(path + "__rebuild")
-    val old = new Path(path + "__old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    writeCellLayout(current, cents, tmp.toString) // reads `path`, writes tmp
-    require(fs.rename(live, old), s"swap failed: could not move $live aside")
-    require(fs.rename(tmp, live), s"swap failed: could not promote $tmp")
-    fs.delete(old, true)
-    cents
-  }
-
   /** Quantizer sidecar: the frozen centroids + training-time baseline,
     * persisted NEXT TO the layout (`<path>.quantizer.json`, atomic
     * write-then-rename through the layout's own filesystem). This makes
     * the quantizer part of the index's durable state instead of driver
-    * memory — a restarted ingest job (or any other maintainer) recovers
-    * the exact centroids the at-rest cells were assigned under, which is
-    * what lets the streaming self-healing cycle survive checkpointed
-    * restarts. Floats round-trip exactly through toString/toFloat. */
+    * memory — any later maintainer (the graph folds of
+    * [[GraphMaintenance]]) recovers the exact centroids the at-rest cells
+    * were assigned under. Floats round-trip exactly through
+    * toString/toFloat. */
   private def sidecar(path: String) = new Path(path + ".quantizer.json")
 
   def saveQuantizer(spark: SparkSession, path: String,
@@ -370,9 +228,8 @@ object EmbeddingMaintenance {
   }
 
   /** [[writeCellLayout]] plus the quantizer sidecar — the entry point for
-    * a layout that will be maintained by [[maintainPersistent]] (the
-    * streaming ingest path, or any maintainer without driver-held
-    * state). */
+    * a layout that [[GraphMaintenance]] maintains without driver-held
+    * state. */
   def writeCellLayoutPersistent(emb: DataFrame, cents: Array[Array[Float]],
                                 path: String): Unit = {
     // assign cells once: the write and the baseline stats both consume
@@ -388,64 +245,5 @@ object EmbeddingMaintenance {
       () => withCell.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(path),
       () => stats = statsOf(withCell, cents)))
     saveQuantizer(emb.sparkSession, path, cents, stats)
-  }
-
-  /** One SIDECAR-BACKED self-healing cycle — [[maintain]] with the
-    * quantizer state loaded from (and persisted to) the layout itself
-    * instead of threaded through the caller: upsert under the stored
-    * frozen centroids, then (when `audit` — callers run it at a cadence,
-    * the audit is one column-pruned scan) check drift and recluster +
-    * refresh the sidecar when it fires. Returns the drift reasons that
-    * fired (empty = no rebuild), for observability and specs. Replaying
-    * the same batch is idempotent (same ids, same vectors, same cells),
-    * so foreachBatch's at-least-once delivery is safe. */
-  def maintainPersistent(spark: SparkSession, path: String, changed: DataFrame,
-                         audit: Boolean, targetCell: Int = 500,
-                         recallFloor: Double = 0.0, recallK: Int = 5,
-                         recallNProbe: Int = 1, recallPanelN: Int = 16): Seq[String] = {
-    val (cents, baseline) = loadQuantizer(spark, path).getOrElse(sys.error(
-      s"no quantizer sidecar at $path — create the layout with writeCellLayoutPersistent"))
-    upsertVecs(spark, path, cents, changed)
-    if (!audit) Seq.empty
-    else {
-      // recall trigger (round-12 verdict task 3): the drift proxies can
-      // stay silent while recall degrades — audit the metric itself when
-      // the caller set a floor. Recall is checked even when drift already
-      // fired only in the sense that drift firing short-circuits it (one
-      // rebuild either way).
-      var reasons = driftReasons(baseline, layoutStats(spark, path, cents))
-      if (reasons.isEmpty && recallFloor > 0.0) {
-        val r = recallAudit(spark, path, cents, recallK, recallNProbe, recallPanelN)
-        if (r < recallFloor)
-          reasons = Seq(f"recall@$recallK%d $r%.4f below floor $recallFloor%.4f at nProbe=$recallNProbe%d")
-      }
-      if (reasons.nonEmpty) {
-        val fresh = recluster(spark, path, targetCell)
-        saveQuantizer(spark, path, fresh, layoutStats(spark, path, fresh))
-      }
-      reasons
-    }
-  }
-
-  /** One self-healing maintenance cycle — the loop a deployment runs per
-    * change batch: apply the upserts under the frozen quantizer, audit
-    * drift against the training-time baseline, and when the audit fires,
-    * [[recluster]] and refresh the baseline. Returns the (possibly new)
-    * centroids and baseline — callers thread them into the next cycle.
-    * The recluster re-sizes nList by the adaptiveNList contract, so a
-    * corpus that grew through churn gets proportionally more cells.
-    * EmbeddingMaintenanceSpec pins both branches (healthy batch keeps the
-    * quantizer untouched; off-manifold churn triggers a rebuild whose
-    * fresh baseline audits healthy). */
-  def maintain(spark: SparkSession, path: String,
-               cents: Array[Array[Float]], baseline: IvfStats,
-               changed: DataFrame,
-               targetCell: Int = 500): (Array[Array[Float]], IvfStats) = {
-    upsertVecs(spark, path, cents, changed)
-    val current = layoutStats(spark, path, cents)
-    if (driftReasons(baseline, current).nonEmpty) {
-      val fresh = recluster(spark, path, targetCell)
-      (fresh, layoutStats(spark, path, fresh))
-    } else (cents, baseline)
   }
 }

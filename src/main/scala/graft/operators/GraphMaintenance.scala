@@ -50,14 +50,10 @@ import org.apache.spark.sql.functions._
   *    build/compaction time (≈4k rows per bucket, capped), so lookup
   *    bytes are ∝ min(batch, dirBuckets) · bucketBytes ≈ batch-
   *    proportional at any corpus size;
-  *  - `<graphPath>.graph.json` — (k, nProbe, gen, dirBuckets, lastBatch)
-  *    sidecar. The CENTROIDS deliberately live in ONE place — the
-  *    embedding layout's own quantizer sidecar ([[EmbeddingMaintenance]])
-  *    — so the graph and the index it derives from cannot drift apart.
-  *    `lastBatch` is the newest streaming batchId folded in: the
-  *    replay-idempotence cursor for [[graft.streaming.CorpusStreams
-  *    .selfHealingGraphSink]] (foreachBatch is at-least-once; a replayed
-  *    batchId is skipped instead of double-appended).
+  *  - `<graphPath>.graph.json` — (k, nProbe, gen, dirBuckets) sidecar.
+  *    The CENTROIDS deliberately live in ONE place — the embedding
+  *    layout's own quantizer sidecar ([[EmbeddingMaintenance]]) — so the
+  *    graph and the index it derives from cannot drift apart.
   *
   * WHY merge-on-read (the round-14 lesson, measured): the first cut
   * rewrote affected `src_cell` partitions per batch, and a soak showed a
@@ -73,8 +69,7 @@ import org.apache.spark.sql.functions._
   * top-k(A ∪ B) = top-k(top-k(A) ∪ B): the stored full list plus its
   * challengers re-ranked IS the full rebuild, bit for bit (spec-pinned).
   * [[compactGraph]] folds the log back to one generation at maintenance
-  * cadence — manually, or automatically when [[compactReasons]] fires
-  * inside [[maintainGraphPersistent]].
+  * cadence.
   *
   * Torn writes and replays: appends are not transactional, so a crash
   * between the edge append and the sidecar bump, followed by a retry,
@@ -103,10 +98,9 @@ object GraphMaintenance {
   private def sidecar(graphPath: String) = new Path(graphPath + ".graph.json")
 
   /** Sidecar state: the graph's frozen shape (k, nProbe), the newest
-    * edge-log generation, the membership directory's frozen bucket count,
-    * and the newest folded streaming batchId (−1 = none). */
-  final case class GraphMeta(k: Int, nProbe: Int, gen: Long,
-                             dirBuckets: Int, lastBatch: Long)
+    * edge-log generation and the membership directory's frozen bucket
+    * count. */
+  final case class GraphMeta(k: Int, nProbe: Int, gen: Long, dirBuckets: Int)
 
   /** ≈4k directory rows per bucket: small enough that a batch lookup
     * reads ~batch·rowBytes·4k/bucket ≈ batch-proportional bytes, large
@@ -124,7 +118,7 @@ object GraphMaintenance {
     val out = fs.create(tmp, true)
     try out.write(
       (s"""{"k":${meta.k},"nProbe":${meta.nProbe},"gen":${meta.gen},""" +
-        s""""dirBuckets":${meta.dirBuckets},"lastBatch":${meta.lastBatch}}""")
+        s""""dirBuckets":${meta.dirBuckets}}""")
         .getBytes("UTF-8"))
     finally out.close()
     fs.delete(sidecar(graphPath), false)
@@ -146,16 +140,15 @@ object GraphMaintenance {
       case JLong(l) => l
       case other => sys.error(s"bad number in graph sidecar: $other")
     }
-    // Forward-compat for sidecars written before the directory layout /
-    // streaming cursor existed (round-15 ADVICE): a missing lastBatch is
-    // "no batch folded" (−1), and a missing dirBuckets is the −1 SENTINEL —
-    // loading must succeed so writeKnnGraph can migrate the graph in place
-    // (it reads the old sidecar only to preserve the cursor), while the
-    // incremental paths, which need the dir/ layout the old format
-    // predates, fail with an explicit rebuild message (see requireDir).
+    // Forward-compat for sidecars written before the directory layout
+    // existed (round-15 ADVICE): a missing dirBuckets is the −1 SENTINEL —
+    // loading must succeed, while the incremental paths, which need the
+    // dir/ layout the old format predates, fail with an explicit rebuild
+    // message (see requireDir); writeKnnGraph is the migration. Keys this
+    // reader does not know are ignored: a sidecar that still carries the
+    // retired streaming cursor (`lastBatch`) loads as any other.
     GraphMeta(long(m("k")).toInt, long(m("nProbe")).toInt, long(m("gen")),
-      m.get("dirBuckets").map(long(_).toInt).getOrElse(-1),
-      m.get("lastBatch").map(long).getOrElse(-1L))
+      m.get("dirBuckets").map(long(_).toInt).getOrElse(-1))
   }
 
   /** Incremental maintenance needs the membership directory; a
@@ -300,19 +293,12 @@ object GraphMaintenance {
   /** Build (or fully rebuild) the at-rest graph from the at-rest
     * embedding layout: generation-0 edges, the reverse-probe index, the
     * reverse-edge index, the membership directory, and the sidecar
-    * (dirBuckets re-adapted to the current corpus; a pre-existing
-    * sidecar's lastBatch cursor survives the rebuild — a checkpointed
-    * stream must not re-fold batches the rebuild already absorbed).
-    * Bit-identical to [[KnnGraph.knnEdgesWithCents]] under the layout's
-    * frozen centroids (spec-pinned). */
+    * (dirBuckets re-adapted to the current corpus). Bit-identical to
+    * [[KnnGraph.knnEdgesWithCents]] under the layout's frozen centroids
+    * (spec-pinned). */
   def writeKnnGraph(spark: SparkSession, embPath: String, graphPath: String,
                     k: Int, nProbe: Int): Unit = {
     val cents = centroidsOf(spark, embPath)
-    val lastBatch = {
-      val fs = sidecar(graphPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(sidecar(graphPath))) loadGraphMeta(spark, graphPath).lastBatch
-      else -1L
-    }
     // ONE probe-ranking pass over the corpus: the edge build's probe side
     // AND the reverse-probe layout both need probeExpr(embedding) — an
     // O(N·nList·dim) argmin scan that used to run twice (plus a third
@@ -362,7 +348,7 @@ object GraphMaintenance {
         () => writeRedges(ranked, graphPath, gen = 0L, append = false)))
       fProbes.join(); fDir.join()
       saveGraphMeta(spark, graphPath,
-        GraphMeta(k, nProbe, gen = 0L, buckets, lastBatch))
+        GraphMeta(k, nProbe, gen = 0L, buckets))
     } finally ov.close()
   }
 
@@ -485,9 +471,7 @@ object GraphMaintenance {
     * (new files only); re-embeds take the index's surgical rewrite for
     * exactly their rows (upsertVecs's internal id collect is bounded by
     * the re-embed count, not the batch). The incremental fold's index
-    * step; [[upsertGraphAuto]]'s rebuild regime deliberately bypasses it
-    * for a wholesale layout rewrite (a spread batch touches nearly every
-    * cell, where per-cell surgery loses to one partitioned overwrite). */
+    * step. */
   private def foldIndexSide(spark: SparkSession, embPath: String,
                             cents: Array[Array[Float]], arr: DataFrame,
                             present: DataFrame, reOldCells: Seq[Int],
@@ -529,16 +513,11 @@ object GraphMaintenance {
     * batch). Partition-PRUNING literals (cell lists) still ride the
     * driver — those are bounded by nList, not the corpus.
     *
-    * `batchId ≥ 0` arms replay idempotence: a batch at or below the
-    * sidecar's `lastBatch` cursor returns false untouched (the streaming
-    * sink's at-least-once delivery), a folded one advances the cursor in
-    * the same sidecar write that bumps the generation. Returns true iff
-    * the batch was folded. */
+    * Returns true iff the batch was folded (false for an empty batch). */
   def upsertGraph(spark: SparkSession, embPath: String, graphPath: String,
-                  changed: DataFrame, batchId: Long = -1L): Boolean = {
+                  changed: DataFrame): Boolean = {
     val meta = loadGraphMeta(spark, graphPath)
     requireDir(meta, graphPath)
-    if (batchId >= 0 && batchId <= meta.lastBatch) return false
     val changedM = prof("batch-materialize")(materialized(changed))
     // ONE collect of the batch ids serves the emptiness check, the
     // new-vs-re-embed count AND the dir/ pruning-bucket list (computed
@@ -561,28 +540,14 @@ object GraphMaintenance {
     val present = presentRows.map(r => (r.getLong(0), r.getInt(1))).toSeq
       .toDF("vec_id", "cell")
     val reOldCells = presentRows.map(_.getInt(1)).distinct.toSeq
-    upsertGraphResolved(spark, embPath, graphPath, changedM, batchIds, batchId,
-      meta, cents, present, presentRows.map(_.getLong(0)).toSet, reOldCells)
-  }
-
-  /** [[upsertGraph]]'s fold body, after the sidecar/cursor/present
-    * precomputation — shared with [[upsertGraphAuto]] so the regime
-    * chooser's membership lookup is never repeated. */
-  private def upsertGraphResolved(spark: SparkSession, embPath: String,
-                                  graphPath: String, changedM: DataFrame,
-                                  batchIds: Array[Long], batchId: Long,
-                                  meta: GraphMeta,
-                                  cents: Array[Array[Float]],
-                                  present: DataFrame, presentIds: Set[Long],
-                                  reOldCells: Seq[Int]): Boolean = {
+    val presentIds = presentRows.map(_.getLong(0)).toSet
     val thisGen = meta.gen + 1
     val nRe = presentIds.size.toLong
-    // the batch ids as a LOCAL relation (callers collected them for the
-    // bucket pruning): the rev-source and repair anti-joins against them
-    // now plan as broadcast joins — the checkpointed frame carried no
-    // usable size estimate, so the same joins fell back to sort-merge
-    // and paid an exchange of both sides
-    import spark.implicits._
+    // the batch ids as a LOCAL relation (collected above for the bucket
+    // pruning): the rev-source and repair anti-joins against them now
+    // plan as broadcast joins — the checkpointed frame carried no usable
+    // size estimate, so the same joins fell back to sort-merge and paid
+    // an exchange of both sides
     val ids = batchIds.toSeq.toDF("vec_id")
     val probeUdf = ProductQuantization.probeExpr(spark, cents, meta.nProbe)
     val cellUdf = ProductQuantization.cellExpr(spark, cents)
@@ -632,7 +597,7 @@ object GraphMaintenance {
       }.toSeq
 
       foldIndexSide(spark, embPath, cents, arr, present, reOldCells, reIdCells,
-        nRe, batchIds.length.toLong)
+        nRe, nChanged)
       val layout = spark.read.parquet(embPath).select("vec_id", "embedding", "cell")
 
       // probe index delta: arrivals append their live rows; re-embeds
@@ -800,99 +765,9 @@ object GraphMaintenance {
           arr.select(col("vec_id"), col("cell"), lit(true).as("alive")),
           graphPath, thisGen, meta.dirBuckets, append = true))))
 
-      saveGraphMeta(spark, graphPath, meta.copy(gen = thisGen,
-        lastBatch = math.max(meta.lastBatch, batchId)))
+      saveGraphMeta(spark, graphPath, meta.copy(gen = thisGen))
       true
     } finally ov.close()
-  }
-
-  /** [[upsertGraph]] behind a COST-BASED REGIME CHOOSER (round-15
-    * verdict task 1). The incremental fold's cost is dominated by its
-    * RE-EMBED footprint: every re-embedded cell directory takes the
-    * index's surgical rewrite, its redges/ partitions are read for
-    * repair discovery, and the discovered holders are re-probed — so a
-    * re-embed batch SPREAD across most cells approaches full-rebuild
-    * work by construction while paying the log's append overheads on
-    * top (measured: a spread 1000-vec re-embed batch at 100k vectors
-    * costs 51 s incremental vs 45 s rebuild — SOAK.md round 15). Pure
-    * arrivals never trip the chooser: inserts are append-only on every
-    * layout and stay batch-proportional at ANY spread (same soak).
-    *
-    * The signal is |re-embedded ids' old cells| / nList, read from the
-    * membership lookup the fold needs anyway (bucket-pruned dir/ read —
-    * batch-proportional, zero extra I/O). Below `rebuildCellFrac` the
-    * batch folds incrementally (bit-parity specs unchanged — the same
-    * [[upsertGraphResolved]] body); at or above it the EMBEDDING layout
-    * is rewritten wholesale with the batch merged in (per-cell surgery
-    * loses to one partitioned overwrite once most cells are touched)
-    * and the graph layouts are rebuilt under the unchanged quantizer —
-    * the same route [[maintainGraphPersistent]]'s drift trigger already
-    * takes, minus the recluster. The streaming replay cursor survives
-    * either way
-    * (writeKnnGraph preserves it; the rebuild then advances it exactly
-    * as the fold would).
-    *
-    * Returns (folded?, regime): regime is "incremental", or
-    * "rebuild: …" with the fired cell fraction, or the skip reason. */
-  def upsertGraphAuto(spark: SparkSession, embPath: String, graphPath: String,
-                      changed: DataFrame, batchId: Long = -1L,
-                      rebuildCellFrac: Double = 0.8): (Boolean, String) = {
-    val meta = loadGraphMeta(spark, graphPath)
-    requireDir(meta, graphPath)
-    if (batchId >= 0 && batchId <= meta.lastBatch)
-      return (false, "replayed batch skipped")
-    val changedM = prof("batch-materialize")(materialized(changed))
-    // same fused precomputation as [[upsertGraph]]: one batch-id collect,
-    // driver-side pruning buckets, single-job membership lookup
-    val batchIds = prof("batch-ids")(
-      changedM.select("vec_id").collect().map(_.getLong(0)))
-    val nChanged = batchIds.length.toLong
-    if (nChanged == 0) return (false, "empty batch")
-    val cents = centroidsOf(spark, embPath)
-    val bks = batchIds.map(dirBucketLocal(_, meta.dirBuckets)).distinct.toSeq
-    val presentRows = prof("present-lookup")(
-      dirLookup(spark, graphPath, changedM.select("vec_id"), meta.dirBuckets,
-        Some(bks)).collect())
-    import spark.implicits._
-    val present = presentRows.map(r => (r.getLong(0), r.getInt(1))).toSeq
-      .toDF("vec_id", "cell")
-    val reOldCells = presentRows.map(_.getInt(1)).distinct.toSeq
-    val frac = reOldCells.size.toDouble / cents.length
-    if (frac < rebuildCellFrac) {
-      val folded = upsertGraphResolved(spark, embPath, graphPath, changedM,
-        batchIds, batchId, meta, cents, present,
-        presentRows.map(_.getLong(0)).toSet, reOldCells)
-      (folded, "incremental")
-    } else {
-      // wholesale index rewrite, not the surgical upsert: a spread
-      // re-embed batch makes upsertVecs rewrite nearly every cell
-      // directory one cell at a time (measured 13.8 s of the 59 s
-      // surgical-then-rebuild route at 100k) — the rebuild regime
-      // instead merges the batch over the materialized old layout and
-      // rewrites once through the build path, then re-derives the graph
-      val cellUdf = ProductQuantization.cellExpr(spark, cents)
-      val merged = materialized(
-        spark.read.parquet(embPath).drop("cell")
-          .join(changedM.select("vec_id"), Seq("vec_id"), "left_anti")
-          .unionByName(changedM, allowMissingColumns = true)
-          .withColumn("cell", cellUdf(col("embedding"))))
-      // one file per cell (the writeEdges discipline): an N-task write
-      // across nList partition values would scatter tasks × cells files
-      // and every later read — the rebuild's own scan first — pays the
-      // listing debt
-      prof("regime-layout-rewrite")(
-        merged.repartition(col("cell"))
-          .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(embPath))
-      prof("regime-rebuild")(
-        writeKnnGraph(spark, embPath, graphPath, meta.k, meta.nProbe))
-      if (batchId >= 0) {
-        val m2 = loadGraphMeta(spark, graphPath)
-        saveGraphMeta(spark, graphPath,
-          m2.copy(lastBatch = math.max(m2.lastBatch, batchId)))
-      }
-      (true, f"rebuild: re-embeds touch ${reOldCells.size}%d/${cents.length}%d " +
-        f"cells (>= ${rebuildCellFrac * 100}%.0f%% of nList)")
-    }
   }
 
   /** Remove vectors from BOTH layouts: edge + probe + dir tombstones for
@@ -1028,99 +903,5 @@ object GraphMaintenance {
       saveGraphMeta(spark, graphPath,
         meta.copy(gen = 0L, dirBuckets = buckets))
     } finally ov.close()
-  }
-
-  /** Should the edge log be compacted? Two triggers, both readable
-    * without resolving the graph (the [[ModelStore.refreshReasons]]
-    * pattern):
-    *  - generation depth: the sidecar's `gen` IS the number of deltas
-    *    since the last compaction (compaction resets it to 0) — zero
-    *    I/O;
-    *  - delta mass: challenger/tombstone/superseded rows as a fraction
-    *    of the gen-0 base, from ONE two-column scan of the edge log
-    *    (only taken once gen > 0, so a freshly built graph answers for
-    *    free).
-    * Returns the fired reasons (empty = log healthy). */
-  def compactReasons(spark: SparkSession, graphPath: String,
-                     maxDeltaGens: Int = 8,
-                     maxDeltaFrac: Double = 0.5): Seq[String] = {
-    val meta = loadGraphMeta(spark, graphPath)
-    if (meta.gen <= 0) return Seq.empty
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (meta.gen >= maxDeltaGens)
-      out += s"edge log holds ${meta.gen} delta generations (max $maxDeltaGens)"
-    if (out.isEmpty) {
-      val counts = spark.read.parquet(edgesPath(graphPath))
-        .groupBy((col("gen") === 0L).as("base")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-      val base = counts.getOrElse(true, 0L)
-      val delta = counts.getOrElse(false, 0L)
-      if (delta > maxDeltaFrac * math.max(1L, base))
-        out += f"delta rows $delta%d exceed ${maxDeltaFrac * 100}%.0f%% of base $base%d"
-    }
-    out.toSeq
-  }
-
-  /** One sidecar-backed self-healing cycle over BOTH artifacts — the
-    * graph twin of [[EmbeddingMaintenance.maintainPersistent]]: fold the
-    * batch in append-only, then (at the caller's audit cadence) check
-    * the index's drift/recall triggers. When one fires the quantizer is
-    * retrained — which moves cell boundaries, so the graph's candidate
-    * discipline changes wholesale and the edge list is REBUILT under the
-    * fresh centroids. Otherwise the edge-LOG health is checked
-    * ([[compactReasons]]) and a bloated log is compacted in place —
-    * the automatic trigger a long-running deployment needs instead of a
-    * manual [[compactGraph]] cadence. Returns the trigger reasons
-    * (empty = incremental only; compaction reasons are prefixed
-    * "compact: ").
-    *
-    * `batchId` threads the streaming replay cursor through to
-    * [[upsertGraph]]; an already-folded batch short-circuits the whole
-    * cycle (audits included — the original fold already ran them).
-    *
-    * The fold itself goes through [[upsertGraphAuto]]: a re-embed batch
-    * whose old cells cover ≥ `rebuildCellFrac` of nList takes the
-    * rebuild regime instead of the incremental fold (reported as a
-    * "regime rebuild: …" reason). */
-  def maintainGraphPersistent(spark: SparkSession, embPath: String,
-                              graphPath: String, changed: DataFrame,
-                              audit: Boolean, targetCell: Int = 500,
-                              recallFloor: Double = 0.0, recallK: Int = 5,
-                              recallNProbe: Int = 1,
-                              recallPanelN: Int = 16,
-                              compactMaxGens: Int = 8,
-                              compactMaxFrac: Double = 0.5,
-                              batchId: Long = -1L,
-                              rebuildCellFrac: Double = 0.8): Seq[String] = {
-    val (folded, regime) = upsertGraphAuto(spark, embPath, graphPath, changed,
-      batchId, rebuildCellFrac)
-    val regimeReasons =
-      if (folded && regime.startsWith("rebuild")) Seq("regime " + regime)
-      else Seq.empty
-    if (!folded || !audit) regimeReasons
-    else {
-      val (cents, baseline) = EmbeddingMaintenance.loadQuantizer(spark, embPath)
-        .getOrElse(sys.error(s"no quantizer sidecar at $embPath"))
-      var reasons = EmbeddingMaintenance.driftReasons(baseline,
-        EmbeddingMaintenance.layoutStats(spark, embPath, cents))
-      if (reasons.isEmpty && recallFloor > 0.0) {
-        val r = EmbeddingMaintenance.recallAudit(spark, embPath, cents,
-          recallK, recallNProbe, recallPanelN)
-        if (r < recallFloor)
-          reasons = Seq(f"recall@$recallK%d $r%.4f below floor $recallFloor%.4f at nProbe=$recallNProbe%d")
-      }
-      if (reasons.nonEmpty) {
-        val fresh = EmbeddingMaintenance.recluster(spark, embPath, targetCell)
-        EmbeddingMaintenance.saveQuantizer(spark, embPath, fresh,
-          EmbeddingMaintenance.layoutStats(spark, embPath, fresh))
-        val meta = loadGraphMeta(spark, graphPath)
-        writeKnnGraph(spark, embPath, graphPath, meta.k, meta.nProbe)
-        regimeReasons ++ reasons
-      } else {
-        val cr = compactReasons(spark, graphPath, compactMaxGens, compactMaxFrac)
-        if (cr.nonEmpty) compactGraph(spark, embPath, graphPath)
-        regimeReasons ++ cr.map("compact: " + _)
-      }
-    }
   }
 }

@@ -8,7 +8,7 @@ import graft.Tables._
 /** Full-corpus kNN graph: every vector's top-k nearest neighbors by
   * cosine — the workhorse behind kNN-graph clustering, graph label
   * propagation, SemDeDup-style curation, and NN-descent seeding. The
-  * existing ANN surface (q29/q30/q33, q81/q83, `ivfTopK`) answers a
+  * existing ANN surface (q29/q30/q33, q81/q83) answers a
   * bounded QUERY PANEL (collected to the driver); here the query set IS
   * the corpus, so nothing may collect and the probe lists must be
   * computed row-wise.
@@ -68,44 +68,6 @@ object KnnGraph {
     // two dim-sized float arrays per row through the window exchange
     // multiplies the shuffle by ~30× (soaked: 100k vecs, 200M candidates
     // — the 3-column form shuffles ~5 GB, the with-vectors form ~150 GB)
-    val cand = probes.join(index, Seq("cell"))
-      .filter(col("src_id") =!= col("vec_id"))
-      .select(col("src_id"), col("vec_id"),
-        round(graft.functions.CosineSimilarity(col("src_emb"), col("embedding")), 6)
-          .as("sim"))
-    val w = Window.partitionBy("src_id").orderBy(desc("sim"), col("vec_id"))
-    cand.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("src_id"), col("vec_id").as("nbr_id"), col("sim"), col("rk"))
-  }
-
-  /** [[knnEdgesWithCents]] under the round-13b HIERARCHICAL coarse
-    * quantizer — the production path once adaptive nList passes ~10³
-    * cells, where the flat per-vector centroid scan (O(N·nList) for both
-    * the index assignment and the probe ranking, i.e. O(N²/targetCell)
-    * under the adaptive contract) becomes the graph build's dominant
-    * cost. Both sides of the cell join run
-    * [[ProductQuantization.probeExprHier]]: supers are scanned first and
-    * only the nSuperProbe nearest supers' member cells are ranked —
-    * O(N·(nSuper + nList·nSuperProbe/nSuper)) with the same
-    * (distance, id) tie rule, so at nSuperProbe = nSuper the edge list
-    * is BIT-IDENTICAL to [[knnEdgesWithCents]] (spec-pinned here, on top
-    * of HierarchicalIvfSpec's expression-level pin). The candidate join
-    * and top-k window are unchanged — the hierarchy only prices the
-    * quantizer. */
-  def knnEdgesHier(emb: DataFrame, cents: Array[Array[Float]],
-                   k: Int, nProbe: Int, nSuper: Int,
-                   nSuperProbe: Int): DataFrame = {
-    val spark = emb.sparkSession
-    val (sup, c2s) = ProductQuantization.trainSuper(cents, nSuper)
-    val assign1 = ProductQuantization.probeExprHier(spark, cents, sup, c2s,
-      1, nSuperProbe)
-    val probeH = ProductQuantization.probeExprHier(spark, cents, sup, c2s,
-      nProbe, nSuperProbe)
-    val index = emb.select(col("vec_id"), col("embedding"),
-      element_at(assign1(col("embedding")), 1).as("cell"))
-    val probes = emb.select(col("vec_id").as("src_id"),
-      col("embedding").as("src_emb"),
-      explode(probeH(col("embedding"))).as("cell"))
     val cand = probes.join(index, Seq("cell"))
       .filter(col("src_id") =!= col("vec_id"))
       .select(col("src_id"), col("vec_id"),
@@ -226,81 +188,6 @@ object KnnGraph {
       .select(col("src_id"), col("nbr_id"), col("sim"), col("rk"))
   }
 
-  /** Production graph build with the descent option (round-12 verdict
-    * task 5): the base IVF multi-probe graph, optionally refined by
-    * `descentRounds` NN-descent rounds instead of buying recall with
-    * more probes. The trade, measured by KnnGraphSpec at the production
-    * |cell| = 500 shape:
-    *  - COST (universal): one extra probe rescores |cell| · N
-    *    candidates; a descent round costs ≤ (2k′)² · N, independent of
-    *    |cell| — measured ~13× cheaper per round at |cell| = 500 (~5× for
-    *    the seed round), and recall-per-rescored-candidate comes out
-    *    ~10× higher than extra probes even from a rich nProbe=4 base;
-    *  - RECALL (data-dependent): on real embedding manifolds a seeded
-    *    round from a starved base dominates probe-DOUBLING outright
-    *    (spec'd on sf0.001; the q125 gate); on adversarial isotropic
-    *    overlapping Gaussians — weak neighbor-of-neighbor transitivity —
-    *    each round lifts only a little and extra probes own the recall
-    *    ceiling. Choose descent when the rescore budget binds or the
-    *    corpus is manifold-shaped (real embeddings are); choose probes
-    *    to push the last points of recall on cell-aligned data.
-    * `descentRounds = 0` is exactly [[knnEdgesWithCents]]. */
-  def knnEdgesRefined(emb: DataFrame, cents: Array[Array[Float]],
-                      k: Int, nProbe: Int,
-                      descentRounds: Int, randomBuckets: Int = 2): DataFrame = {
-    val base = knnEdgesWithCents(emb, cents, k, nProbe)
-    if (descentRounds <= 0) base
-    else nnDescent(emb, base, k, descentRounds, randomBuckets)
-  }
-
-  /** Candidate-set size of the IVF probe join at this configuration —
-    * the rescore count an extra probe buys, for pricing probes against
-    * descent rounds (the [[knnEdgesRefined]] trade). Same join as
-    * [[knnEdgesWithCents]] with the scoring projected away. */
-  def probeCandidateCount(emb: DataFrame, cents: Array[Array[Float]],
-                          nProbe: Int): Long = {
-    val spark = emb.sparkSession
-    val index = emb.select(col("vec_id"),
-      ProductQuantization.cellExpr(spark, cents)(col("embedding")).as("cell"))
-    val probes = emb.select(col("vec_id").as("src_id"),
-      explode(ProductQuantization.probeExpr(spark, cents, nProbe)(col("embedding")))
-        .as("cell"))
-    probes.join(index, Seq("cell")).filter(col("src_id") =!= col("vec_id")).count()
-  }
-
-  /** Candidate-set size of ONE NN-descent round over `edges` (seed
-    * intra-bucket pairs ∪ the 2-hop expansion, distinct) — the other side
-    * of the probes-vs-descent price. Mirrors [[nnDescent]]'s candidate
-    * construction exactly, without the rescoring. */
-  def descentCandidateCount(emb: DataFrame, edges: DataFrame,
-                            randomBuckets: Int = 2,
-                            seedKey: (Column, Column) => Column =
-                              (v, j) => xxhash64(v, j)): Long = {
-    var cur = edges.select(col("src_id"), col("nbr_id"))
-    var seedCount = 0L
-    if (randomBuckets > 0) {
-      val nBuckets = math.max(1L, emb.count() / 4L)
-      val member = emb.select(col("vec_id"),
-          explode(sequence(lit(0), lit(randomBuckets - 1))).as("j"))
-        .select(col("vec_id"), col("j"),
-          pmod(seedKey(col("vec_id"), col("j")), lit(nBuckets)).as("bkt"))
-      val seed = member.as("a")
-        .join(member.as("b"), col("a.j") === col("b.j") &&
-          col("a.bkt") === col("b.bkt") && col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("src_id"), col("b.vec_id").as("nbr_id"))
-        .distinct()
-      seedCount = seed.count()
-      cur = cur.union(seed)
-    }
-    val und = cur.union(cur.select(col("nbr_id").as("src_id"),
-      col("src_id").as("nbr_id")))
-    seedCount + und.as("a")
-      .join(und.as("b"), col("a.nbr_id") === col("b.src_id"))
-      .select(col("a.src_id").as("src_id"), col("b.nbr_id").as("cand_id"))
-      .filter(col("src_id") =!= col("cand_id"))
-      .distinct().count()
-  }
-
   /** Content-addressed seed-bucket key in the engine's established
     * md5₃₂ uniform construction (q106/q107/q50): the first 8 hex chars
     * of md5("vec_id:j") as a non-negative long. Engine-portable — DuckDB
@@ -340,23 +227,16 @@ object KnnGraph {
     * (≤ k·N rows) filtered by similarity — never a pair enumeration.
     * Labels are the component's minimum vec_id (deterministic). */
   def semanticClusters(emb: DataFrame, k: Int, nList: Int, nProbe: Int,
-                       tau: Double, descentRounds: Int = 0,
-                       randomBuckets: Int = 2): DataFrame =
+                       tau: Double): DataFrame =
     semanticClustersWithCents(emb,
-      ProductQuantization.trainCoarse(emb, nList), k, nProbe, tau,
-      descentRounds, randomBuckets)
+      ProductQuantization.trainCoarse(emb, nList), k, nProbe, tau)
 
   /** [[semanticClusters]] under externally supplied centroids (see
-    * [[knnEdgesWithCents]]). `descentRounds > 0` builds the underlying
-    * graph through [[knnEdgesRefined]] — the cheap-recall option for
-    * cluster edges that straddle cell boundaries (defaults keep the gate
-    * form byte-identical). */
+    * [[knnEdgesWithCents]]). */
   def semanticClustersWithCents(emb: DataFrame, cents: Array[Array[Float]],
-                                k: Int, nProbe: Int, tau: Double,
-                                descentRounds: Int = 0,
-                                randomBuckets: Int = 2): DataFrame =
+                                k: Int, nProbe: Int, tau: Double): DataFrame =
     GraphMaintenance.clustersFromEdges(emb.select(col("vec_id")),
-      knnEdgesRefined(emb, cents, k, nProbe, descentRounds, randomBuckets), tau)
+      knnEdgesWithCents(emb, cents, k, nProbe), tau)
 
   /** q105: per-vector semantic-cluster assignment over the embeddings
     * table, ordered for the gate. nProbe defaults lower than q103's:
@@ -549,8 +429,7 @@ object KnnGraph {
     // the edge list (usually a full kNN build) is referenced once per
     // direction of the undirected list, and the undirected list once per
     // propagation round — materialize both so the graph build runs ONCE
-    // instead of 2·iters times (Spark shares no subtrees; the
-    // labelPropagateConverged production loop already does this)
+    // instead of 2·iters times (Spark shares no subtrees)
     val fwd = StageMaterialize(
       edges.select(col("src_id"), col("nbr_id"), col("sim")), "label_prop_edges")
     val und = StageMaterialize(fwd
@@ -734,54 +613,6 @@ object KnnGraph {
       s"pageRankConverged: residual still above $tol after $maxIters " +
         "iterations — raise maxIters or loosen tol")
     scores
-  }
-
-  /** [[labelPropagate]] run TO A TOLERANCE (seeds stay clamped every
-    * round — Zhu–Ghahramani's harmonic solution is the fixpoint of
-    * exactly this clamped iteration). Same loop discipline as
-    * [[pageRankConverged]]: localCheckpoint per round, loud
-    * non-convergence, plain-double numerics verified against a
-    * driver-side fixpoint in the spec. */
-  def labelPropagateConverged(ids: DataFrame, edges: DataFrame,
-                              isSeed: Column => Column, isPos: Column => Column,
-                              tol: Double = 1e-8, maxIters: Int = 50): DataFrame = {
-    val fwd = edges.select(col("src_id"), col("nbr_id"), col("sim"))
-    val und = fwd
-      .union(fwd.select(col("nbr_id").as("src_id"),
-        col("src_id").as("nbr_id"), col("sim")))
-      .groupBy("src_id", "nbr_id").agg(max("sim").as("w"))
-      .localCheckpoint(true)
-    val base = ids.select(col("vec_id"), isSeed(col("vec_id")).as("labeled"),
-        when(isSeed(col("vec_id")) && isPos(col("label")), 1.0)
-          .otherwise(0.0).as("seed"))
-      .localCheckpoint(true)
-    var scores = base.withColumn("score", col("seed")).localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val contrib = und
-        .join(scores.select(col("vec_id").as("nbr_id"), col("score")), Seq("nbr_id"))
-        .groupBy("src_id")
-        .agg(sum(col("w") * col("score")).as("num"), sum(col("w")).as("den"))
-      val next = base
-        .join(contrib.withColumnRenamed("src_id", "vec_id"), Seq("vec_id"), "left_outer")
-        .select(col("vec_id"), col("labeled"), col("seed"),
-          when(col("labeled"), col("seed"))
-            .otherwise(coalesce(col("num") / col("den"), lit(0.0)))
-            .as("score"))
-        .localCheckpoint(true)
-      val delta = next.select(col("vec_id"), col("score"))
-        .join(scores.select(col("vec_id"), col("score").as("old")), Seq("vec_id"))
-        .agg(max(abs(col("score") - col("old")))).head().getDouble(0)
-      scores = next
-      converged = delta <= tol
-      iter += 1
-    }
-    require(converged,
-      s"labelPropagateConverged: residual still above $tol after $maxIters " +
-        "iterations — raise maxIters or loosen tol")
-    scores.select(col("vec_id"), col("labeled"), col("score"),
-      (col("score") >= 0.5).as("predicted_pos"))
   }
 
   /** q130: PageRank gate — two damped iterations over the q105-config
@@ -1130,8 +961,7 @@ object KnnGraph {
     * tells a deployment WHICH cells have collapsed (mean_sil → 0: the
     * cell boundary cuts a natural cluster, so same-cluster neighbors
     * leak into the runner-up cell and single-probe recall dies there) —
-    * the diagnostic behind q126's recall audit and the maintenance
-    * recluster trigger.
+    * the diagnostic behind q126's recall audit.
     *
     * Shape: one broadcast-centroid UDF pass (struct of nearest-2 in a
     * single scan, [[ProductQuantization.nearest2Expr]]) + a cell-keyed

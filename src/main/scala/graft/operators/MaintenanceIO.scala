@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared plumbing for the partition-surgical maintenance operators
-  * ([[CorpusMaintenance]] over the doc shards, [[EmbeddingMaintenance]]
-  * over the IVF cells). */
+  * ([[EmbeddingMaintenance]] over the IVF cells, [[GraphMaintenance]] over
+  * the at-rest kNN graph). */
 private[graft] object MaintenanceIO {
 
   /** Spark refuses to overwrite a path its own input plan still reads
@@ -19,20 +19,22 @@ private[graft] object MaintenanceIO {
     * application; sequential actions leave the cluster idle in each
     * job's commit/tail phase). Callers must pass tasks whose inputs are
     * already materialized (checkpointed) and whose outputs are disjoint
-    * paths — every use here writes the edge/redge/probe/dir layouts of
-    * one fold, which satisfy both. Failures propagate (the first thrown
-    * exception aborts the fold exactly as the sequential form did). */
-  def inParallel(tasks: Seq[() => Unit]): Unit =
-    if (tasks.size <= 1) tasks.foreach(_())
-    else {
-      import scala.concurrent.{Await, Future, ExecutionContext}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(
-        Future.sequence(tasks.map(t => Future(t()))), Duration.Inf)
-      finally pool.shutdown()
-    }
+    * paths — every use here writes the layouts of one build or fold,
+    * which satisfy both.
+    *
+    * Every task is forked on one [[Overlap]] and every fork is joined
+    * before the scope closes, so a failure is rethrown only once its
+    * siblings have finished: a caller that catches it and retries never
+    * races a write that is still running. The first failure in task
+    * order propagates; a sibling's later failure is dropped with it. */
+  def inParallel(tasks: Seq[() => Unit]): Unit = {
+    val ov = new Overlap(tasks.size)
+    val failures = try {
+      val forks = tasks.map(t => ov.fork(t()))
+      forks.flatMap(f => try { f.join(); None } catch { case e: Throwable => Some(e) })
+    } finally ov.close()
+    failures.headOption.foreach(e => throw e)
+  }
 
   /** A fork/join scope for overlapping INDEPENDENT Spark actions inside
     * one maintenance fold (the same guide-§2.6 overlap as [[inParallel]],

@@ -167,22 +167,6 @@ object MixtureOps {
       .select(col("doc_id"), col("s").as(out))
   }
 
-  /** Per-row rendezvous shard as a pure Column expression — the
-    * streaming-safe form of [[rendezvousShard]] (no window, so it runs
-    * on an unbounded stream and in any narrow projection): argmax over
-    * shards of the per-(id, shard) hash via an array-native struct max,
-    * whose field-order comparison (h first, then s) reproduces the
-    * window form's (h DESC, s DESC) pick exactly. Takes the id as a
-    * Column (like [[rendezvousShard]]'s `out` parameterization) instead
-    * of binding a hard-coded name from whatever frame it lands on —
-    * applied after a join, a captured `doc_id` string could silently
-    * resolve against the wrong side (round-13 ADVICE). */
-  def rendezvousCol(id: org.apache.spark.sql.Column,
-                    nShards: Int): org.apache.spark.sql.Column =
-    array_max(transform(sequence(lit(0), lit(nShards - 1)),
-      s => struct(md5(concat(id.cast("string"), lit("#"),
-        s.cast("string"))).as("h"), s.as("s")))).getField("s")
-
   val q148ReshardAudit: Q = (s, d) => {
     val docs = documents(s, d).select(col("doc_id"))
     val h32 = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)

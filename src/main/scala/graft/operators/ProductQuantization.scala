@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   *    m-byte codes that a real deployment would persist next to the ids.
   *  - [[searchTopK]]: exhaustive ADC over the codes (the FAISS IndexPQ
   *    shape) + exact float rescore of the top `refine`×k survivors from
-  *    the original vectors. Compose with [[SimilarityOps.ivfTopK]]'s cell
-  *    assignment to prune the scan (IVF-PQ) when even the code scan is too
-  *    much.
+  *    the original vectors. [[ivfPqTopK]] composes it with the coarse
+  *    cell assignment to prune the scan (IVF-PQ) when even the code scan
+  *    is too much.
   *
   * Everything is seed-deterministic (content-addressed sampling, farthest-
   * point init, fixed iteration count) so results are reproducible across
@@ -195,159 +195,15 @@ object ProductQuantization {
   /** The IVF sizing contract, made executable: nList grows with the
     * corpus so |cell| ≈ targetCell stays FIXED as data scales — the
     * property every O(N·|cell|) claim in the cell-bounded family
-    * (q102/q103/q105, ivfTopK) rests on. A fixed nList at 100× the data
+    * (q102/q103/q105, q126) rests on. A fixed nList at 100× the data
     * makes those self-joins quadratic again (the round-9 soak measured
     * exactly that before this existed: 100k vectors at nList=16 is
     * 6 250-vector cells). Deterministic: a pure function of the corpus
     * count, clamped to [minList, 4096]. */
-  /** Two-level coarse quantizer — the documented "100 TB answer" to the
-    * flat scan's O(nList) per-vector cost (q102/q140 scale caveats): at
-    * adaptive nList ∝ N the flat assignment is O(N²/targetCell), i.e.
-    * quadratic with a small constant. Clustering the nList CELL CENTROIDS
-    * into nSuper super-cells (driver-side Lloyd over ≤4096 tiny points —
-    * deterministic: spread seeds, ties to the lower id, empty supers keep
-    * their previous centroid) lets assignment/probing scan nSuper
-    * super-centroids plus only the MEMBER cells of the nearest
-    * nSuperProbe supers: O(nSuper + nList·nSuperProbe/nSuper) per vector,
-    * minimized at nSuper ≈ √nList — the standard IVF-tree/IMI shape.
-    *
-    * Returns (superCents, cellToSuper). Exactness contract (spec'd):
-    * with nSuperProbe = nSuper the hierarchical probe reduces BIT-FOR-BIT
-    * to the flat [[probeExpr]]/[[cellExpr]] — same sqdist arithmetic,
-    * same (distance, id) tie rule — so the hierarchy is a pure candidate
-    * pruning, never a different answer at full fan-out. */
-  def trainSuper(cents: Array[Array[Float]], nSuper: Int,
-                 iters: Int = 5): (Array[Array[Float]], Array[Int]) = {
-    require(nSuper >= 1 && nSuper <= cents.length,
-      s"nSuper must be in [1, nList]: $nSuper vs ${cents.length}")
-    val nList = cents.length
-    val dim = cents(0).length
-    // deterministic spread seeds over the cell-id order
-    var sup = Array.tabulate(nSuper)(j => cents(((j.toLong * nList) / nSuper).toInt).clone())
-    var assign = new Array[Int](nList)
-    var it = 0
-    while (it < iters) {
-      var c = 0
-      while (c < nList) {
-        var best = 0; var bestD = Double.MaxValue
-        var jj = 0
-        while (jj < nSuper) {
-          val d = sqdist(cents(c), 0, sup(jj))
-          if (d < bestD) { bestD = d; best = jj } // strict < → lower id on tie
-          jj += 1
-        }
-        assign(c) = best
-        c += 1
-      }
-      val next = Array.fill(nSuper)(new Array[Double](dim))
-      val cnt = new Array[Int](nSuper)
-      c = 0
-      while (c < nList) {
-        val a = assign(c); cnt(a) += 1
-        var k = 0
-        while (k < dim) { next(a)(k) += cents(c)(k); k += 1 }
-        c += 1
-      }
-      sup = Array.tabulate(nSuper) { j =>
-        if (cnt(j) == 0) sup(j) // empty super keeps its centroid
-        else Array.tabulate(dim)(k => (next(j)(k) / cnt(j)).toFloat)
-      }
-      it += 1
-    }
-    // final assignment under the final centroids
-    var c = 0
-    while (c < nList) {
-      var best = 0; var bestD = Double.MaxValue
-      var jj = 0
-      while (jj < nSuper) {
-        val d = sqdist(cents(c), 0, sup(jj))
-        if (d < bestD) { bestD = d; best = jj }
-        jj += 1
-      }
-      assign(c) = best
-      c += 1
-    }
-    (sup, assign)
-  }
-
-  /** Hierarchical nProbe nearest cells: scan the nSuper super-centroids,
-    * keep the nSuperProbe nearest (ties to the lower super id), then rank
-    * ONLY their member cells by the same (sqdist, cell id) rule as
-    * [[probeExpr]]. At nSuperProbe = nSuper this IS [[probeExpr]]
-    * (spec-pinned bit equality); below it, a pure candidate pruning. */
-  /** Primitive top-k selection by (distance, id): insertion into two
-    * parallel arrays — zero boxing, zero tuple/sort allocations. The
-    * probe UDFs run once per corpus row, so allocation discipline here
-    * IS the speedup (the first cut used sortBy-on-tuples and LOST to the
-    * flat tight-loop scan despite doing 4× less arithmetic). */
-  private def selectTopK(dists: Array[Double], ids: Array[Int], n: Int,
-                         k: Int): Array[Int] = {
-    val kk = math.min(k, n)
-    val sd = Array.fill(kk)(Double.MaxValue)
-    val si = Array.fill(kk)(Int.MaxValue)
-    var j = 0
-    while (j < n) {
-      val d = dists(j); val id = ids(j)
-      if (d < sd(kk - 1) || (d == sd(kk - 1) && id < si(kk - 1))) {
-        var p = kk - 1
-        while (p > 0 && (d < sd(p - 1) || (d == sd(p - 1) && id < si(p - 1)))) {
-          sd(p) = sd(p - 1); si(p) = si(p - 1); p -= 1
-        }
-        sd(p) = d; si(p) = id
-      }
-      j += 1
-    }
-    java.util.Arrays.copyOf(si, kk)
-  }
-
-  def probeExprHier(spark: org.apache.spark.sql.SparkSession,
-                    cents: Array[Array[Float]],
-                    superCents: Array[Array[Float]], cellToSuper: Array[Int],
-                    nProbe: Int, nSuperProbe: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val bcC = spark.sparkContext.broadcast(cents)
-    val bcS = spark.sparkContext.broadcast(superCents)
-    // members grouped once: super id -> ascending cell ids (preserves the
-    // flat tie rule inside the pruned candidate set)
-    val membersArr: Array[Array[Int]] = {
-      val m = Array.fill(superCents.length)(List.empty[Int])
-      var c = cellToSuper.length - 1
-      while (c >= 0) { m(cellToSuper(c)) ::= c; c -= 1 } // prepend keeps asc
-      m.map(_.toArray)
-    }
-    val bcM = spark.sparkContext.broadcast(membersArr)
-    udf { (v: Seq[Float]) =>
-      val arr = v.toArray
-      val sup = bcS.value
-      val nS = sup.length
-      val sd = new Array[Double](nS); val sids = new Array[Int](nS)
-      var j = 0
-      while (j < nS) { sd(j) = sqdist(arr, 0, sup(j)); sids(j) = j; j += 1 }
-      val probed = selectTopK(sd, sids, nS, nSuperProbe)
-      val members = bcM.value
-      var nCand = 0
-      var p = 0
-      while (p < probed.length) { nCand += members(probed(p)).length; p += 1 }
-      val cd = new Array[Double](nCand); val cids = new Array[Int](nCand)
-      val cs = bcC.value
-      var w = 0
-      p = 0
-      while (p < probed.length) {
-        val ms = members(probed(p))
-        var q = 0
-        while (q < ms.length) {
-          cd(w) = sqdist(arr, 0, cs(ms(q))); cids(w) = ms(q); w += 1; q += 1
-        }
-        p += 1
-      }
-      selectTopK(cd, cids, nCand, nProbe)
-    }
-  }
-
   def adaptiveNList(emb: DataFrame, targetCell: Int = 500,
                     minList: Int = 16): Int =
     math.min(4096,
       math.max(minList, math.ceil(emb.count().toDouble / targetCell).toInt))
-
 
   /** Assign every vector to its nearest coarse centroid — one narrow
     * compiled pass with the broadcast centroid table (nList × dim floats,
@@ -489,9 +345,9 @@ object ProductQuantization {
     * by_residual=false): one codebook serves every cell, so cell count and
     * codebook train independently — at the cost of some per-cell
     * resolution. Cell assignment comes from the engine's OWN deterministic
-    * coarse quantizer ([[trainCoarse]] + [[assignCells]] — same recipe as
-    * [[SimilarityOps.ivfTopK]]); the candidate scan is cell-partition-
-    * pruned by the broadcast (query, cell) probe list, then ADC + exact
+    * coarse quantizer ([[trainCoarse]] + [[assignCells]]); the candidate
+    * scan is cell-partition-pruned by the broadcast (query, cell) probe
+    * list, then ADC + exact
     * rescore as in [[searchTopK]].
     *
     * A query may return FEWER than k rows when its nProbe probed cells
@@ -581,38 +437,6 @@ object ProductQuantization {
       .select(col("query_id"), col("vec_id").as("target_id"),
         round(col("d2"), 6).as("d2"), col("rk"))
       .orderBy("query_id", "rk")
-  }
-
-  /** Persist a codebook as one JSON document — the deployment artifact: a
-    * codebook is trained once (on the bounded sample) and then shipped to
-    * every encode/search job over the corpus's lifetime; re-training would
-    * silently invalidate every stored code. Plain doubles in JSON
-    * round-trip float-exactly (shortest-repr parse). */
-  def saveCodebook(book: PQCodebook, path: java.nio.file.Path): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("m", book.m); root.put("k", book.k); root.put("subDim", book.subDim)
-    val cents = root.putArray("centroids")
-    book.centroids.foreach { sub =>
-      val sa = cents.addArray()
-      sub.foreach { c => val ca = sa.addArray(); c.foreach(v => ca.add(v.toDouble)) }
-    }
-    Option(path.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.writeString(path, mapper.writeValueAsString(root))
-  }
-
-  /** Load a codebook saved by [[saveCodebook]]. */
-  def loadCodebook(path: java.nio.file.Path): PQCodebook = {
-    import scala.jdk.CollectionConverters._
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(java.nio.file.Files.readString(path))
-    val cents = root.path("centroids").elements().asScala.map { sub =>
-      sub.elements().asScala.map { c =>
-        c.elements().asScala.map(_.asDouble().toFloat).toArray
-      }.toArray
-    }.toArray
-    PQCodebook(root.path("m").asInt(), root.path("k").asInt(),
-      root.path("subDim").asInt(), cents)
   }
 
   /** Deterministic GRID codebook — the PQ twin of

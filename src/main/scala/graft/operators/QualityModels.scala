@@ -105,17 +105,9 @@ object QualityModels {
         round(col("raw").cast(DoubleType) / col("n_d"), 6).as("score"))
   }
 
-  /** The trained NB model ALONE: (token, llr) — [[nbDocScores]]'s llr
-    * chain factored out so the model can be persisted at rest
-    * ([[ModelStore]]) and scored against later corpora / streams without
-    * retraining. Values are identical to the inline chain (same
-    * aggregations, same 6dp rounding). */
-  def nbModel(docs: DataFrame): DataFrame =
-    nbModelFromCounts(nbTokenCounts(docs))
-
   /** (doc_id, source, token, c_dw) per-document token counts — the
-    * tokenize/explode/count subtree both NB training and at-rest scoring
-    * consume, factored so multi-model audits (q151 trains and scores TWO
+    * tokenize/explode/count subtree both NB training and scoring under a
+    * separately trained model consume, factored so multi-model audits (q151 trains and scores TWO
     * models) compute it ONCE (materialize with [[StageMaterialize]]). */
   def nbTokenCounts(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("source"),
@@ -123,8 +115,10 @@ object QualityModels {
       .groupBy("doc_id", "source", "token")
       .agg(count(lit(1)).as("c_dw"))
 
-  /** [[nbModel]] from a precomputed [[nbTokenCounts]] table — identical
-    * values, the counts just arrive pre-grouped. */
+  /** The trained NB model ALONE, (token, llr), from a precomputed
+    * [[nbTokenCounts]] table — [[nbDocScores]]'s llr chain (same
+    * aggregations, same 6dp rounding), factored out so one model can score
+    * another corpus (q151's frozen v1). */
   def nbModelFromCounts(cdw: DataFrame): DataFrame = {
     val isT = col("source").isin(ReferenceSources: _*)
     // consumed twice below (totals row + llr projection) — materialize so
@@ -144,17 +138,12 @@ object QualityModels {
         6).as("llr"))
   }
 
-  /** Per-document NB scores under an EXTERNALLY trained model — the
-    * at-rest scoring path. Tokens the model never saw contribute ZERO
-    * (left join + coalesce — the [[dsirLogWeights]] rule: a document
-    * scored under an older model must still be a candidate); on the
-    * model's own training corpus every token hits, so the scores are
-    * bit-identical to [[nbDocScores]] (ModelStoreSpec pins it). */
-  def nbScoresWithModel(docs: DataFrame, model: DataFrame): DataFrame =
-    nbScoresFromCounts(nbTokenCounts(docs), model)
-
-  /** [[nbScoresWithModel]] from a precomputed [[nbTokenCounts]] table —
-    * identical values. */
+  /** Per-document NB scores under a SEPARATELY trained model. Tokens the
+    * model never saw contribute ZERO (left join + coalesce — the
+    * [[dsirLogWeightsFromCounts]] rule: a document scored under an older
+    * model must still be a candidate); on the model's own training corpus
+    * every token hits, so the scores are bit-identical to [[nbDocScores]]
+    * (QualityModelsSpec pins it). */
   def nbScoresFromCounts(cdw: DataFrame, model: DataFrame): DataFrame =
     cdw
       .join(model, Seq("token"), "left")
@@ -166,12 +155,11 @@ object QualityModels {
         round(col("raw").cast(DoubleType) / col("n_d"), 6).as("score"))
 
   /** q151: model score-drift audit — the SCORE-level refresh diagnostic
-    * for the at-rest curation models ([[ModelStore]]'s refreshReasons
-    * triggers on corpus COUNTS; this measures what a retrain would
-    * actually do to the decisions). A content-addressed half of the
+    * for the curation models: it measures what a retrain would actually
+    * do to the decisions. A content-addressed half of the
     * corpus (md5₃₂("m:"+doc_id) % 2 — the q40 split idiom) plays the
     * frozen v1 training set; v2 is the full-corpus retrain; every
-    * document is scored under BOTH models via the at-rest scoring rule
+    * document is scored under BOTH models via [[nbScoresFromCounts]]
     * (left join, unseen tokens contribute zero) and the audit reports
     * per source the mean score under each, the mean absolute shift, and
     * — the number a deployment actually gates on — how many keep
@@ -181,8 +169,8 @@ object QualityModels {
     *
     * Shape: two vocab-sized model aggregations over the same token
     * counts (computed once), one scoring join per model, a |sources|-row
-    * aggregate. Numerics: scores are the 6dp at-rest rule on both
-    * engines; shifts are differences of identical doubles re-rounded at
+    * aggregate. Numerics: scores are the 6dp [[nbScoresFromCounts]] rule
+    * on both engines; shifts are differences of identical doubles re-rounded at
     * 6dp; means via DECIMAL(38,6) sums — hash-exact. Soaked 100k→400k
     * docs at 1.89×/1.61× per doubling (SOAK.md round 15) — sub-linear
     * past the point the corpus vocabulary saturates the model table. */
@@ -218,11 +206,11 @@ object QualityModels {
   }
 
   /** q152: DSIR score-drift audit — q151's shape applied to the second
-    * stored model ([[ModelStore]] "dsir"). The same content-addressed
+    * curation model. The same content-addressed
     * half (md5₃₂("m:"+doc_id) % 2, so the frozen halves ALIGN across the
     * model family's audits) plays the frozen v1 training set; v2 is the
     * full-corpus retrain; every document is scored under both via the
-    * at-rest rule ([[dsirLogWeights]]: unseen buckets contribute zero)
+    * [[dsirLogWeightsFromCounts]] rule (unseen buckets contribute zero)
     * and the audit reports per source the mean log-weight under each,
     * the mean absolute shift, and the decision a deployment gates on —
     * how many ADMISSION verdicts flip. The admission rule is DSIR
@@ -432,8 +420,8 @@ object QualityModels {
        |  FROM cdw JOIN llr USING (token) GROUP BY 1, 2)""".stripMargin
 
   /** DuckDB CTE chain ending in `lw(doc_id, source, log_weight)` — the
-    * oracle twin of [[dsirModel]]+[[dsirLogWeights]] trained and applied
-    * on `docsCte(doc_id, source, text)`. Shared by q109 and q118. */
+    * oracle twin of [[dsirModelFromCounts]] + [[dsirLogWeightsFromCounts]]
+    * trained and applied on `docsCte(doc_id, source, text)`. Shared by q109 and q118. */
   def dsirLwCte(docsCte: String): String =
     s"""ds_l AS (SELECT doc_id, source,
        |           string_split_regex(TRIM(text), '\\s+') AS l
@@ -520,13 +508,8 @@ object QualityModels {
     dsirFeatures(docs).groupBy("doc_id", "source", "b")
       .agg(count(lit(1)).as("c"))
 
-  /** The trained DSIR model: (b, llr) over the occupied buckets —
-    * ≤ [[DsirBuckets]] rows, broadcastable/collectable by construction. */
-  def dsirModel(docs: DataFrame): DataFrame =
-    dsirModelFromCounts(dsirFeatureCounts(docs))
-
-  /** [[dsirModel]] from a precomputed [[dsirFeatureCounts]] table.
-    * Identical values: the per-bucket sums just arrive pre-grouped. */
+  /** The DSIR importance model, (b, llr), from a precomputed
+    * [[dsirFeatureCounts]] table. */
   def dsirModelFromCounts(fc: DataFrame): DataFrame = {
     val isT = col("source").isin(ReferenceSources: _*)
     // consumed twice below (the totals row and the llr projection) —
@@ -543,18 +526,9 @@ object QualityModels {
         6).as("llr"))
   }
 
-  /** Per-document importance log-weights under a trained model:
-    * (doc_id, source, log_weight). Exact-DECIMAL accumulation of the
-    * 6dp-rounded per-occurrence llr terms, so the value is independent of
-    * aggregation order. Features in buckets the model never saw
-    * contribute ZERO (left join + coalesce, not an inner join): a
-    * document scored under an OLDER model than its own corpus — the
-    * ingest/backfill case — must still be a candidate. */
-  def dsirLogWeights(docs: DataFrame, model: DataFrame): DataFrame =
-    dsirLogWeightsFromCounts(dsirFeatureCounts(docs), model)
-
-  /** [[dsirLogWeights]] from a precomputed [[dsirFeatureCounts]] table.
-    * c · llr in DECIMAL(38,6) is exact (llr is already 6dp-rounded), so
+  /** Per-document DSIR log-weights under `model`, from a precomputed
+    * [[dsirFeatureCounts]] table; buckets the model never saw contribute
+    * zero. c · llr in DECIMAL(38,6) is exact (llr is already 6dp-rounded), so
     * the sum is bit-identical to adding the per-occurrence term c times. */
   def dsirLogWeightsFromCounts(fc: DataFrame, model: DataFrame): DataFrame =
     fc.join(broadcast(model), Seq("b"), "left")

@@ -9,10 +9,10 @@ import graft.Tables._
 /** Approximate-nearest-neighbor operators over the `embeddings` table
   * (`embedding: array<float>`, 64-dim).
   *
-  * Two implementations of cosine top-k:
-  *  - [[cosineTopK]]: array-native — `zip_with` dot product inside codegen,
-  *    no explode. This is the bench/production path: queries broadcast, one
-  *    narrow pass over targets, per-partition top-k via window.
+  * Three implementations of cosine top-k:
+  *  - [[q33AnnNative]]: the production path — queries broadcast, one
+  *    narrow pass of the native codegen'd cosine over targets, top-k via
+  *    window.
   *  - [[q29BruteForceTopK]]: the oracle-checkable variant — element rows +
   *    exact DECIMAL dot products so Spark and DuckDB sum identically.
   *  - [[q30IvfTopK]]: the scale path — coarse quantization by sign-bit LSH
@@ -24,28 +24,6 @@ import graft.Tables._
 object SimilarityOps {
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** Array-native cosine similarity between two float-array columns. */
-  def cosine(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
-    val na = sqrt(aggregate(a, lit(0.0d), (acc, v) => acc + v * v))
-    val nb = sqrt(aggregate(b, lit(0.0d), (acc, v) => acc + v * v))
-    dot / (na * nb)
-  }
-
-  /** Production brute-force top-k: broadcast the (small) query set, score
-    * all targets in one codegen'd pass (the native [[graft.functions.CosineSimilarity]]
-    * expression — fused dot+norms, whole-stage codegen), window top-k per
-    * query. */
-  def cosineTopK(queries: DataFrame, targets: DataFrame, k: Int): DataFrame = {
-    val q = broadcast(queries.select(col("vec_id").as("query_id"), col("embedding").as("qv")))
-    val t = targets.select(col("vec_id").as("target_id"), col("embedding").as("tv"))
-    val scored = q.join(t, col("query_id") =!= col("target_id"))
-      .withColumn("sim", graft.functions.CosineSimilarity(col("qv"), col("tv")))
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), col("target_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select("query_id", "target_id", "sim", "rk")
-  }
 
   /** q33: the production ANN path as a checked query — native codegen'd
     * cosine (no decimal detour: the fused loop is strictly sequential, so
@@ -329,65 +307,6 @@ object SimilarityOps {
       |WHERE sim >= 0.45
       |ORDER BY vec_a, vec_b""".stripMargin
 
-  /** IVF (inverted-file) ANN with a k-means coarse quantizer — the
-    * real-index counterpart of the hash-bucket q30: vectors are assigned to
-    * their nearest of `nList` learned centroids; a query probes only its
-    * `nProbe` nearest cells and rescans those exactly.
-    *
-    * Not a gate query: k-means centroids aren't SQL-portable, so
-    * correctness is a recall bound against the exact top-k (IvfRecallSpec).
-    * Scale shape: train on a content-addressed sample
-    * ([[ProductQuantization.trainCoarse]] — the engine's own deterministic
-    * sampled-Lloyd's, no Spark-ML/Kryo surface), broadcast the centroid
-    * table (nList × dim, tiny), assignment is one narrow pass
-    * ([[ProductQuantization.assignCells]]), and at rest the corpus is
-    * partitioned/bucketed BY CELL so a probe touches nProbe/nList of the
-    * data.
-    */
-  def ivfTopK(emb: DataFrame, queryIds: Seq[Long], k: Int,
-              nList: Int, nProbe: Int): DataFrame =
-    ivfTopKFiltered(emb, queryIds, k, nList, nProbe, lit(true))
-
-  /** The IVF AT-REST layout: corpus written partitioned BY COARSE CELL —
-    * the directory structure that turns [[ivfTopK]]'s "probe touches
-    * nProbe/nList of the data" from a filter into a SCAN property
-    * (partition pruning never opens non-probed cells' files). This is the
-    * deployment form of every IVF claim in this file; the bench-path
-    * [[ivfTopK]] computes cells inline because the gate tables aren't
-    * ours to rewrite. */
-  def writeIvfPartitioned(emb: DataFrame, cents: Array[Array[Float]],
-                          path: String): Unit =
-    emb.withColumn("cell",
-        ProductQuantization.cellExpr(emb.sparkSession, cents)(col("embedding")))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-
-  /** Probe a [[writeIvfPartitioned]] layout: only the queries' nProbe
-    * nearest cells' DIRECTORIES are read (IvfRecallSpec pins the
-    * PartitionFilters on the scan), then exact cosine + window top-k as
-    * [[ivfTopK]]. Queries arrive as vectors (the production shape — a
-    * query is not usually a corpus row), probe list and query panel both
-    * broadcast. */
-  def ivfTopKAtRest(spark: SparkSession, path: String,
-                    cents: Array[Array[Float]],
-                    queryVecs: Seq[(Long, Array[Float])],
-                    k: Int, nProbe: Int): DataFrame = {
-    import spark.implicits._
-    val probes = ProductQuantization.probeCells(queryVecs, cents, nProbe)
-    val cells = probes.map(_._2).distinct
-    val cand = spark.read.parquet(path)
-      .filter(col("cell").isInCollection(cells))
-    val probeDF = broadcast(probes.toDF("query_id", "cell"))
-    val q = broadcast(queryVecs.toDF("query_id", "qv"))
-    val scored = cand.join(probeDF, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(q, Seq("query_id"))
-      .withColumn("sim", round(graft.functions.CosineSimilarity(col("qv"), col("embedding")), 6))
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id").as("target_id"), col("sim"), col("rk"))
-      .orderBy("query_id", "rk")
-  }
-
   /** q61: embedding outlier score — L2 distance from each vector to its
     * label's centroid (the quality-filtering signal: far-from-centroid
     * vectors are mislabeled or junk).
@@ -511,9 +430,7 @@ object SimilarityOps {
     * RAG retrieval scoped to a tenant/language/split. The exact form is
     * q33's native-cosine pass with the predicate folded into the join
     * condition, so Catalyst applies it BEFORE scoring (a candidate that
-    * fails the filter costs a comparison, never a cosine); the
-    * approximate form is [[ivfTopKFiltered]], which pushes the same
-    * predicate below the probe join onto the scan. */
+    * fails the filter costs a comparison, never a cosine). */
   val q114FilteredAnn: Q = (s, d) => {
     val emb = embeddings(s, d)
     val q = broadcast(emb.filter(col("vec_id") < 5)
@@ -547,82 +464,6 @@ object SimilarityOps {
       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, target_id) AS rk
       |  FROM scored) WHERE rk <= 5
       |ORDER BY query_id, rk""".stripMargin
-
-  /** [[ivfTopK]] with a metadata predicate pushed BELOW the probe join:
-    * candidates are filtered at the cell scan, so at rest (the
-    * [[writeIvfPartitioned]] layout) the predicate rides the parquet
-    * reader alongside the cell pruning — filtered search reads only
-    * probed cells AND only matching row groups. With `pred = lit(true)`
-    * this IS [[ivfTopK]]. Recall caveat (the known filtered-ANN trade,
-    * same as FAISS/Milvus): probing is geometry-only, so a highly
-    * selective predicate can empty the probed cells; raise nProbe with
-    * predicate selectivity (spec'd exact at exhaustive probes). */
-  def ivfTopKFiltered(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                      nList: Int, nProbe: Int,
-                      pred: Column): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val cents = ProductQuantization.trainCoarse(emb, nList)
-    val assigned = emb.filter(pred).select(col("vec_id"), col("embedding"),
-      ProductQuantization.cellExpr(spark, cents)(col("embedding")).as("cell"))
-    val queryVecs = emb.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-    val probeDF = broadcast(
-      ProductQuantization.probeCells(queryVecs, cents, nProbe)
-        .toDF("query_id", "cell"))
-    val q = broadcast(emb.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv")))
-    val cand = assigned.join(probeDF, "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(q, Seq("query_id"))
-      .withColumn("sim",
-        round(graft.functions.CosineSimilarity(col("qv"), col("embedding")), 6))
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))
-    cand.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id").as("target_id"), col("sim"),
-        col("rk"))
-      .orderBy("query_id", "rk")
-  }
-
-  /** Fraction of corpus rows satisfying `pred` — one narrow aggregate
-    * (a boolean average; nulls count as non-matching, mirroring the
-    * filter they'd fail). This is the cheap estimator
-    * [[ivfTopKFilteredAdaptive]] widens its probe count by; a 100 TB
-    * deployment substitutes cached column statistics or a sketch for
-    * the scan, the widening rule is the same. */
-  def predicateSelectivity(emb: DataFrame, pred: Column): Double = {
-    val r = emb.agg(avg(when(pred, 1.0).otherwise(0.0))).first()
-    if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-  }
-
-  /** The probe count that restores an UNFILTERED search's expected
-    * candidate mass under a predicate of the given selectivity: a probed
-    * cell surfaces ≈ |cell| · selectivity matching candidates, so seeing
-    * the baseline's nProbe · |cell| candidates takes ≈ nProbe/selectivity
-    * cells — clamped to nList (exhaustive), the correct degenerate answer
-    * for very selective predicates (at that point filtered search IS a
-    * scan of the survivors, and exhaustive probing loses nothing because
-    * the predicate already pruned the read). The FAISS/Milvus guidance
-    * ("raise nprobe for filtered queries"), made automatic. */
-  def adaptiveProbeWidth(nProbe: Int, nList: Int, selectivity: Double): Int =
-    if (selectivity <= 0.0) nList
-    else math.max(nProbe, math.min(nList.toLong,
-      math.ceil(nProbe / selectivity).toLong).toInt)
-
-  /** [[ivfTopKFiltered]] with the probe count widened automatically by
-    * measured predicate selectivity (round-12 verdict task 4): the manual
-    * form documents the recall caveat — a selective predicate empties the
-    * probed cells — and leaves nProbe to the caller; this form pays one
-    * cheap selectivity estimate and widens nProbe/selectivity-fold, so a
-    * ~1 %-selective predicate probes (effectively) exhaustively and holds
-    * recall without hand-tuning, while an unselective one keeps the cheap
-    * narrow probe. SimilaritySpec pins both ends. */
-  def ivfTopKFilteredAdaptive(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                              nList: Int, nProbe: Int,
-                              pred: Column): DataFrame =
-    ivfTopKFiltered(emb, queryIds, k, nList,
-      adaptiveProbeWidth(nProbe, nList, predicateSelectivity(emb, pred)), pred)
 
   /** q115: late-interaction (ColBERT-style MaxSim) retrieval — documents
     * are MULTI-vector (here: consecutive vec_ids grouped 8 per document),

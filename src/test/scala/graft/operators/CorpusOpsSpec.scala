@@ -5,10 +5,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
 
-/** Specs for the round-4 corpus-statistics surface (q62–q66). Value-level
-  * parity is the driver's DuckDB gate; these verify the semantics against
-  * independent formulations (brute-force pair scan for the banded q64,
-  * window top-k for the LATERAL q65) plus the structural invariants.
+/** Specs for the round-4 corpus-statistics surface (q62–q66), plus the
+  * Kneser-Ney scoring rule q153 runs under a separately trained model.
+  * Value-level parity is the driver's DuckDB gate; these verify the
+  * semantics against independent formulations (brute-force pair scan for
+  * the banded q64, window top-k for the LATERAL q65, the inline q142
+  * scorer for the KN rule) plus the structural invariants.
   */
 class CorpusOpsSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
@@ -168,5 +170,39 @@ class CorpusOpsSpec extends AnyFunSuite with SharedSpark {
     // deterministic re-run
     val again = EventOps.q66DecayEngagement(spark, sf)
     assert(df.exceptAll(again).count() == 0)
+  }
+
+  test("KN: knScoresFromBigrams under the corpus's own model == knBigramScores; zero OOV") {
+    // q153's scoring rule on the model's own training corpus: every join
+    // hits and the backoff clamp never binds, so it is the inline q142
+    val docs = graft.Tables.documents(spark, sf)
+    val bg = CorpusOps.knBigrams(docs)
+    val viaModel = CorpusOps.knScoresFromBigrams(bg, CorpusOps.knModelFromBigrams(bg))
+    assert(viaModel.filter(col("n_oov") > 0).count() == 0,
+      "training corpus scored under its own model must have no OOV bigrams")
+    val a = viaModel.select("doc_id", "n_bigrams", "kn_logprob", "ppl").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
+    val i = CorpusOps.knBigramScores(docs)
+      .select("doc_id", "n_bigrams", "kn_logprob", "ppl").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
+    assert(a == i)
+  }
+
+  test("KN under an OLDER model: unseen pairs take the backoff mass, unseen words count as OOV") {
+    val sp = spark
+    import sp.implicits._
+    val trainDocs = Seq((1L, "the cat sat on the mat"), (2L, "the dog sat"))
+      .toDF("doc_id", "text")
+    val model = CorpusOps.knModelFromBigrams(CorpusOps.knBigrams(trainDocs))
+    // "dog mat": both words known, pair unseen -> pure backoff, finite logp;
+    // "zebra" never seen -> its bigrams are OOV-excluded but REPORTED
+    val later = Seq((10L, "the dog mat"), (11L, "zebra zebra zebra"))
+      .toDF("doc_id", "text")
+    val scored = CorpusOps.knScoresFromBigrams(CorpusOps.knBigrams(later), model)
+      .collect().map(r => r.getLong(0) -> r).toMap
+    assert(scored(10L).getLong(1) == 2 && scored(10L).getLong(2) == 0)
+    assert(!scored(10L).isNullAt(3), "backoff-scored doc must have a finite logprob")
+    assert(scored(11L).getLong(1) == 0 && scored(11L).getLong(2) == 2,
+      "fully-unseen doc must report its bigrams as OOV")
   }
 }

@@ -88,95 +88,10 @@ class EmbeddingMaintenanceSpec extends AnyFunSuite with SharedSpark {
     assert(stored.sameElements(blobVec(b2, 0.5f)))
   }
 
-  test("upsert of a brand-new id inserts; compactCells preserves content at one file per cell") {
+  test("upsert of a brand-new id inserts it") {
     val (path, cents) = fresh("ins")
     val novel = Seq((99L, blobVec(b1, 0.33f), 0)).toDF("vec_id", "embedding", "label")
     EmbeddingMaintenance.upsertVecs(spark, path, cents, novel)
     assert(ids(path).contains(99L))
-    val contentBefore = spark.read.parquet(path)
-      .select("vec_id", "cell").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    EmbeddingMaintenance.compactCells(spark, path)
-    val contentAfter = spark.read.parquet(path)
-      .select("vec_id", "cell").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(contentAfter == contentBefore)
-    listing(path).foreach { case (dir, files) =>
-      assert(files.size == 1, s"$dir not compacted to one file")
-    }
-  }
-
-  // --- drift detection + recluster (round-10 verdict task 3) ---
-
-  private val b3 = Array(0f, 10f, 0f, 10f) // a region the frozen quantizer never saw
-
-  test("drift audit: healthy layout reports no reasons; skewed churn fires; recluster restores") {
-    val (path, cents) = fresh("drift")
-    val baseline = EmbeddingMaintenance.layoutStats(spark, path, cents)
-    assert(EmbeddingMaintenance.driftReasons(baseline, baseline).isEmpty,
-      "an unchurned layout must audit healthy")
-
-    // sustained churn: 24 upserts into a region the frozen centroids never
-    // saw — they all quantize into ONE existing cell (nearest frozen
-    // centroid), so that cell balloons while the other stays put
-    val churn = (100L to 123L).map(i => (i, blobVec(b3, 0.01f * i), 2))
-      .toDF("vec_id", "embedding", "label")
-    EmbeddingMaintenance.upsertVecs(spark, path, cents, churn)
-    val after = EmbeddingMaintenance.layoutStats(spark, path, cents)
-    val reasons = EmbeddingMaintenance.driftReasons(baseline, after)
-    assert(reasons.nonEmpty, s"churned layout must audit drifted (stats: $after)")
-    assert(after.meanSqErr > 10 * baseline.meanSqErr,
-      "off-manifold churn must blow up the quantization error")
-
-    // recluster: fresh centroids from the current vectors, adaptive nList
-    val fresh2 = EmbeddingMaintenance.recluster(spark, path, targetCell = 6)
-    val restored = EmbeddingMaintenance.layoutStats(spark, path, fresh2)
-    assert(restored.n == after.n, "recluster must not change membership")
-    assert(restored.meanSqErr < after.meanSqErr / 10,
-      s"recluster must restore quantizer fit (${after.meanSqErr} -> ${restored.meanSqErr})")
-    assert(restored.maxCell < after.maxCell,
-      "recluster must break up the ballooned cell")
-  }
-
-  test("maintain: healthy batch keeps the quantizer; off-manifold churn triggers a rebuild") {
-    val (path, cents0) = fresh("maint")
-    val base0 = EmbeddingMaintenance.layoutStats(spark, path, cents0)
-
-    // an on-manifold batch: more vectors near the existing blobs, with
-    // the SAME jitter envelope as the original corpus (0.01–0.06) so the
-    // quantization-error audit sees the distribution it was trained on
-    val tame = (300L to 305L).map(i => (i, blobVec(b1, 0.01f * (i - 299)), 0))
-      .toDF("vec_id", "embedding", "label")
-    val (cents1, base1) =
-      EmbeddingMaintenance.maintain(spark, path, cents0, base0, tame, targetCell = 6)
-    assert(cents1 eq cents0, "healthy batch must not retrain the quantizer")
-    assert(base1 eq base0, "healthy batch must keep the baseline")
-
-    // sustained off-manifold churn: drift fires, the cycle rebuilds
-    val churn = (400L to 423L).map(i => (i, blobVec(b3, 0.01f * i), 2))
-      .toDF("vec_id", "embedding", "label")
-    val (cents2, base2) =
-      EmbeddingMaintenance.maintain(spark, path, cents1, base1, churn, targetCell = 6)
-    assert(!(cents2 eq cents1), "churn batch must trigger a recluster")
-    assert(EmbeddingMaintenance.driftReasons(base2,
-      EmbeddingMaintenance.layoutStats(spark, path, cents2)).isEmpty,
-      "the refreshed baseline must audit healthy against the rebuilt layout")
-    assert(EmbeddingMaintenance.layoutStats(spark, path, cents2).n == base2.n)
-  }
-
-  test("recluster parity: exhaustive-probe ivfTopKAtRest identical before and after") {
-    val (path, cents) = fresh("repar")
-    val churn = (200L to 217L).map(i => (i, blobVec(b3, 0.02f * i), 2))
-      .toDF("vec_id", "embedding", "label")
-    EmbeddingMaintenance.upsertVecs(spark, path, cents, churn)
-
-    val queries = Seq(1L -> blobVec(b1, 0.05f), 2L -> blobVec(b3, 0.03f))
-    def exhaustive(cs: Array[Array[Float]]) =
-      SimilarityOps.ivfTopKAtRest(spark, path, cs, queries, k = 5, nProbe = cs.length)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
-
-    val before = exhaustive(cents)
-    val fresh2 = EmbeddingMaintenance.recluster(spark, path, targetCell = 6)
-    val afterR = exhaustive(fresh2)
-    assert(afterR == before,
-      "recluster changed retrieval results at exhaustive probe — it must only move vectors between cells")
   }
 }

@@ -4,9 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
 
-/** Filtered vector search (q114 + ivfTopKFiltered): predicate semantics,
-  * exhaustive-probe exactness, and the scan-level filter pushdown that
-  * makes the filter free at rest.
+/** Filtered vector search (q114): predicate semantics, bounded k and
+  * determinism.
   */
 class FilteredAnnSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
@@ -31,98 +30,5 @@ class FilteredAnnSpec extends AnyFunSuite with SharedSpark {
     }
     val again = SimilarityOps.q114FilteredAnn(spark, sf)
     assert(df.exceptAll(again).count() == 0 && again.exceptAll(df).count() == 0)
-  }
-
-  test("ivfTopKFiltered at exhaustive probes equals the filtered brute force") {
-    val emb = graft.Tables.embeddings(spark, sf)
-    val qids = Seq(0L, 1L, 2L)
-    val pred = col("label") === 2
-    val nList = 8
-    val ivf = SimilarityOps
-      .ivfTopKFiltered(emb, qids, k = 5, nList = nList, nProbe = nList, pred)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    // brute force under the same predicate (query side unfiltered, as in the op)
-    val q = broadcast(emb.filter(col("vec_id").isInCollection(qids))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv")))
-    val t = emb.filter(pred)
-      .select(col("vec_id").as("target_id"), col("embedding").as("tv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("sim"), col("target_id"))
-    val bf = q.join(t, col("query_id") =!= col("target_id"))
-      .withColumn("sim",
-        round(graft.functions.CosineSimilarity(col("qv"), col("tv")), 6))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select(col("query_id"), col("target_id"), col("sim"), col("rk"))
-      .orderBy("query_id", "rk")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    assert(ivf.toSeq == bf.toSeq,
-      "exhaustive probing must make the filtered IVF exact")
-  }
-
-  test("ivfTopKFiltered pushes the predicate to the parquet scan") {
-    val emb = graft.Tables.embeddings(spark, sf)
-    val plan = SimilarityOps
-      .ivfTopKFiltered(emb, Seq(0L), k = 3, nList = 8, nProbe = 2,
-        col("label") === 1)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("EqualTo(label,1)"),
-      s"label predicate must reach the scan:\n${plan.take(2000)}")
-  }
-
-  test("adaptive probe width: the widening rule and its edge cases") {
-    import SimilarityOps.adaptiveProbeWidth
-    // unselective predicate keeps the caller's narrow probe
-    assert(adaptiveProbeWidth(nProbe = 2, nList = 8, selectivity = 1.0) == 2)
-    // 50% selectivity doubles it
-    assert(adaptiveProbeWidth(nProbe = 2, nList = 8, selectivity = 0.5) == 4)
-    // very selective predicates clamp to exhaustive — never past nList
-    assert(adaptiveProbeWidth(nProbe = 2, nList = 8, selectivity = 0.01) == 8)
-    assert(adaptiveProbeWidth(nProbe = 4, nList = 1024, selectivity = 1e-9) == 1024)
-    // empty predicate (nothing matches): exhaustive is the safe degenerate
-    assert(adaptiveProbeWidth(nProbe = 2, nList = 8, selectivity = 0.0) == 8)
-    // widening rounds up (ceil) and never narrows below the caller's nProbe
-    assert(adaptiveProbeWidth(nProbe = 6, nList = 8, selectivity = 0.9) == 7)
-    assert(adaptiveProbeWidth(nProbe = 6, nList = 8, selectivity = 1.0) == 6)
-  }
-
-  test("adaptive filtered ANN: a ~1%-selective predicate holds exhaustive recall without hand-tuning") {
-    val emb = graft.Tables.embeddings(spark, sf)
-    val qids = Seq(0L, 1L, 2L)
-    val nList = 8
-    // ~1% of vec_ids — exactly the predicate class the manual form's
-    // recall caveat documents (probed cells emptied by the filter)
-    val rare = col("vec_id") % 100 === 7
-    val sel = SimilarityOps.predicateSelectivity(emb, rare)
-    assert(sel > 0.0 && sel < 0.05, f"predicate not rare enough: $sel%.4f")
-    // without adaptation, nProbe=1 visibly under-recalls on this corpus
-    // (not asserted as an exact value — it's the motivating contrast)
-    val fixed = SimilarityOps
-      .ivfTopKFiltered(emb, qids, k = 5, nList = nList, nProbe = 1, rare)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the adaptive form widens 1/sel-fold, clamping to exhaustive here,
-    // so it must EQUAL the exhaustive-probe (exact) filtered search
-    val adaptive = SimilarityOps
-      .ivfTopKFilteredAdaptive(emb, qids, k = 5, nList = nList, nProbe = 1, rare)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    val exact = SimilarityOps
-      .ivfTopKFiltered(emb, qids, k = 5, nList = nList, nProbe = nList, rare)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    assert(adaptive.toSeq == exact.toSeq,
-      "a ~1%-selective predicate must drive the probe width to exhaustive recall")
-    info(s"fixed nProbe=1 returned ${fixed.size} hits; adaptive matched exhaustive (${exact.length})")
-    // mid-selectivity stays SUB-exhaustive: the estimator only pays for
-    // the recall the predicate actually endangers
-    val half = col("label") < 5
-    val selHalf = SimilarityOps.predicateSelectivity(emb, half)
-    val width = SimilarityOps.adaptiveProbeWidth(2, nList, selHalf)
-    assert(width < nList, s"a ${selHalf} selectivity must not force exhaustive probing (got $width)")
-  }
-
-  test("ivfTopK is the pred=true special case (delegation is lossless)") {
-    val emb = graft.Tables.embeddings(spark, sf)
-    val a = SimilarityOps.ivfTopK(emb, Seq(0L, 1L), k = 4, nList = 8, nProbe = 3)
-    val b = SimilarityOps.ivfTopKFiltered(emb, Seq(0L, 1L), k = 4, nList = 8,
-      nProbe = 3, lit(true))
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
   }
 }

@@ -17,7 +17,7 @@ import scala.jdk.CollectionConverters._
   *  - the graph family (PageRank, clusters) consumes the stored edges
   *    unchanged;
   *  - maintenance rewrites only affected partitions (file-listing
-  *    identity on untouched cells, the [[CorpusMaintenance]] contract).
+  *    identity on untouched cells).
   */
 class GraphMaintenanceSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
@@ -43,7 +43,7 @@ class GraphMaintenanceSpec extends AnyFunSuite with SharedSpark {
     val graphPath = root + "/graph"
     EmbeddingMaintenance.writeCellLayout(corpus, cents, embPath)
     EmbeddingMaintenance.saveQuantizer(spark, embPath, cents,
-      EmbeddingMaintenance.layoutStats(spark, embPath, cents))
+      EmbeddingMaintenance.statsOf(spark.read.parquet(embPath), cents))
     GraphMaintenance.writeKnnGraph(spark, embPath, graphPath, K, NPROBE)
     (embPath, graphPath)
   }
@@ -143,7 +143,7 @@ class GraphMaintenanceSpec extends AnyFunSuite with SharedSpark {
     val graphPath = root + "/graph"
     EmbeddingMaintenance.writeCellLayout(corpus, cents, embPath)
     EmbeddingMaintenance.saveQuantizer(spark, embPath, cents,
-      EmbeddingMaintenance.layoutStats(spark, embPath, cents))
+      EmbeddingMaintenance.statsOf(spark.read.parquet(embPath), cents))
     GraphMaintenance.writeKnnGraph(spark, embPath, graphPath, k = 3, nProbe = 1)
     val blob1Cell = spark.read.parquet(embPath)
       .filter(col("vec_id") === 1L).select("cell").head().getInt(0)
@@ -162,70 +162,17 @@ class GraphMaintenanceSpec extends AnyFunSuite with SharedSpark {
     val refRoot = tmp("untouched-ref")
     EmbeddingMaintenance.writeCellLayout(after, cents2, refRoot + "/index")
     EmbeddingMaintenance.saveQuantizer(spark, refRoot + "/index", cents2,
-      EmbeddingMaintenance.layoutStats(spark, refRoot + "/index", cents2))
+      EmbeddingMaintenance.statsOf(spark.read.parquet(refRoot + "/index"), cents2))
     GraphMaintenance.writeKnnGraph(spark, refRoot + "/index",
       refRoot + "/graph", k = 3, nProbe = 1)
     assert(edgeSet(GraphMaintenance.edgesAtRest(spark, graphPath)) ==
       edgeSet(GraphMaintenance.edgesAtRest(spark, refRoot + "/graph")))
   }
 
-  test("regime chooser: spread re-embeds rebuild, localized fold incrementally — both bit-equal the rebuild") {
-    val cents = SemanticDedup.refinedCentroids(emb, 16)
-    // SPREAD: every 5th id re-embedded with its negated vector — old
-    // cells cover essentially all of nList, so the chooser must take
-    // the rebuild regime (SOAK.md round 15: spread re-embeds approach
-    // rebuild work by construction)
-    val isRe = conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10)
-      .cast("long") % 5 === 0
-    val reSpread = emb.filter(isRe).select(col("vec_id"),
-      transform(col("embedding"), x => -x).as("embedding"), col("label"))
-    val (embPath1, graphPath1) = buildAll(emb, cents, tmp("regime-spread"))
-    val (folded1, regime1) =
-      GraphMaintenance.upsertGraphAuto(spark, embPath1, graphPath1, reSpread,
-        batchId = 3L)
-    assert(folded1 && regime1.startsWith("rebuild"), regime1)
-    // the replay cursor advanced through the rebuild route too
-    assert(GraphMaintenance.loadGraphMeta(spark, graphPath1).lastBatch == 3L)
-    assert(GraphMaintenance.upsertGraphAuto(spark, embPath1, graphPath1,
-      reSpread, batchId = 3L) == (false, "replayed batch skipped"))
-    val final1 = emb.filter(!isRe).unionByName(reSpread)
-    val (_, refGraph1) = buildAll(final1, cents, tmp("regime-spread-ref"))
-    assert(edgeSet(GraphMaintenance.edgesAtRest(spark, graphPath1)) ==
-      edgeSet(GraphMaintenance.edgesAtRest(spark, refGraph1)))
-
-    // LOCALIZED: one cell's residents slightly perturbed — old cells are
-    // a single cell, the chooser stays incremental
-    val (embPath2, graphPath2) = buildAll(emb, cents, tmp("regime-local"))
-    val c0 = spark.read.parquet(embPath2).groupBy("cell").count()
-      .orderBy(desc("count"), col("cell")).head().getInt(0)
-    // pinned eagerly: the fold rewrites the very layout files this reads
-    val localIds = spark.read.parquet(embPath2)
-      .filter(col("cell") === c0).select("vec_id").localCheckpoint(true)
-    val reLocal = emb.join(localIds, Seq("vec_id"), "left_semi")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x * lit(1.01f)).as("embedding"),
-        col("label"))
-    assert(reLocal.count() > 0)
-    val (folded2, regime2) =
-      GraphMaintenance.upsertGraphAuto(spark, embPath2, graphPath2, reLocal)
-    assert(folded2 && regime2 == "incremental", regime2)
-    val final2 = emb.join(localIds, Seq("vec_id"), "left_anti").unionByName(reLocal)
-    val (_, refGraph2) = buildAll(final2, cents, tmp("regime-local-ref"))
-    assert(edgeSet(GraphMaintenance.edgesAtRest(spark, graphPath2)) ==
-      edgeSet(GraphMaintenance.edgesAtRest(spark, refGraph2)))
-
-    // the self-healing wrapper reports the fired regime as a reason
-    val (embPath3, graphPath3) = buildAll(emb, cents, tmp("regime-wrap"))
-    val reasons = GraphMaintenance.maintainGraphPersistent(
-      spark, embPath3, graphPath3, reSpread, audit = false)
-    assert(reasons.exists(_.startsWith("regime rebuild:")), reasons.toString)
-  }
-
   test("pre-directory sidecar: load defaults, writeKnnGraph migrates in place, incremental demands rebuild") {
     // round-15 ADVICE: a sidecar written before the dir/ layout existed
-    // has no dirBuckets/lastBatch keys; loading it must not throw a bare
-    // NoSuchElementException — writeKnnGraph reads it to preserve the
-    // cursor, so the rebuild IS the migration path and must succeed
+    // has no dirBuckets key; loading it must not throw a bare
+    // NoSuchElementException, and the rebuild IS the migration path
     val cents = SemanticDedup.refinedCentroids(emb, 16)
     val (embPath, graphPath) = buildAll(emb, cents, tmp("oldmeta"))
     Files.writeString(Paths.get(graphPath + ".graph.json"),
@@ -235,7 +182,7 @@ class GraphMaintenanceSpec extends AnyFunSuite with SharedSpark {
     val p = Paths.get(graphPath + ".graph.json")
     Files.deleteIfExists(p.getParent.resolve("." + p.getFileName + ".crc"))
     val meta = GraphMaintenance.loadGraphMeta(spark, graphPath)
-    assert(meta.k == K && meta.lastBatch == -1L && meta.dirBuckets == -1)
+    assert(meta.k == K && meta.dirBuckets == -1)
     // incremental maintenance needs dir/: explicit message, not a crash
     val arrivals = emb.select((col("vec_id") + 1000000L).as("vec_id"),
       col("embedding"), col("label")).limit(3)
@@ -246,8 +193,34 @@ class GraphMaintenanceSpec extends AnyFunSuite with SharedSpark {
     // the migration: a rebuild over the old sidecar writes the new format
     GraphMaintenance.writeKnnGraph(spark, embPath, graphPath, K, NPROBE)
     val m2 = GraphMaintenance.loadGraphMeta(spark, graphPath)
-    assert(m2.dirBuckets > 0 && m2.lastBatch == -1L)
+    assert(m2.dirBuckets > 0)
     assert(GraphMaintenance.upsertGraph(spark, embPath, graphPath, arrivals))
+  }
+
+  test("a sidecar that still carries lastBatch loads, and a fold over it equals the rebuild") {
+    // sidecars written while the graph kept a streaming replay cursor
+    // hold a "lastBatch" key (this is that writer's exact byte layout);
+    // the field is gone, so such a graph must load as any other and keep
+    // folding, and the fold must still equal the full rebuild
+    val isArrival = conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10)
+      .cast("long") % 10 === 0
+    val base = emb.filter(!isArrival)
+    val arrivals = emb.filter(isArrival)
+    val cents = SemanticDedup.refinedCentroids(base, 16)
+    val (embPath, graphPath) = buildAll(base, cents, tmp("cursor"))
+    val built = GraphMaintenance.loadGraphMeta(spark, graphPath)
+    val p = Paths.get(graphPath + ".graph.json")
+    Files.writeString(p,
+      s"""{"k":${built.k},"nProbe":${built.nProbe},"gen":${built.gen},""" +
+        s""""dirBuckets":${built.dirBuckets},"lastBatch":7}""")
+    Files.deleteIfExists(p.getParent.resolve("." + p.getFileName + ".crc"))
+    assert(GraphMaintenance.loadGraphMeta(spark, graphPath) == built)
+    assert(GraphMaintenance.upsertGraph(spark, embPath, graphPath, arrivals))
+    assert(GraphMaintenance.loadGraphMeta(spark, graphPath) == built.copy(gen = built.gen + 1))
+    assert(!Files.readString(p).contains("lastBatch"))
+    val (_, refGraph) = buildAll(emb, cents, tmp("cursor-ref"))
+    assert(edgeSet(GraphMaintenance.edgesAtRest(spark, graphPath)) ==
+      edgeSet(GraphMaintenance.edgesAtRest(spark, refGraph)))
   }
 
   test("compaction folds the log without changing the resolved graph") {
@@ -289,7 +262,7 @@ class GraphMaintenanceSpec extends AnyFunSuite with SharedSpark {
     val graphPath = root + "/graph"
     EmbeddingMaintenance.writeCellLayout(corpus, cents, embPath)
     EmbeddingMaintenance.saveQuantizer(spark, embPath, cents,
-      EmbeddingMaintenance.layoutStats(spark, embPath, cents))
+      EmbeddingMaintenance.statsOf(spark.read.parquet(embPath), cents))
     GraphMaintenance.writeKnnGraph(spark, embPath, graphPath, k = 3, nProbe = 1)
     // re-embed id 1 into blob2's (empty) cell: fresh list has ZERO rows
     val re = Seq((1L, vec(b2, 0.02f), 0)).toDF("vec_id", "embedding", "label")
@@ -305,7 +278,7 @@ class GraphMaintenanceSpec extends AnyFunSuite with SharedSpark {
     val refRoot = tmp("revive-ref")
     EmbeddingMaintenance.writeCellLayout(after, cents, refRoot + "/index")
     EmbeddingMaintenance.saveQuantizer(spark, refRoot + "/index", cents,
-      EmbeddingMaintenance.layoutStats(spark, refRoot + "/index", cents))
+      EmbeddingMaintenance.statsOf(spark.read.parquet(refRoot + "/index"), cents))
     GraphMaintenance.writeKnnGraph(spark, refRoot + "/index",
       refRoot + "/graph", k = 3, nProbe = 1)
     assert(edgeSet(GraphMaintenance.edgesAtRest(spark, graphPath)) ==
@@ -335,99 +308,6 @@ class GraphMaintenanceSpec extends AnyFunSuite with SharedSpark {
     // and compaction folds the duplicates away without changing the view
     GraphMaintenance.compactGraph(spark, embPath, graphPath)
     assert(edgeSet(GraphMaintenance.edgesAtRest(spark, graphPath)) == before)
-  }
-
-  test("batchId cursor: an already-folded streaming batch is skipped, not double-appended") {
-    val isArrival = conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10)
-      .cast("long") % 10 === 0
-    val base = emb.filter(!isArrival)
-    val arrivals = emb.filter(isArrival)
-    val cents = SemanticDedup.refinedCentroids(base, 16)
-    val (embPath, graphPath) = buildAll(base, cents, tmp("batchid"))
-    assert(GraphMaintenance.upsertGraph(spark, embPath, graphPath, arrivals,
-      batchId = 0L))
-    val gen = GraphMaintenance.loadGraphMeta(spark, graphPath).gen
-    val before = edgeSet(GraphMaintenance.edgesAtRest(spark, graphPath))
-    // foreachBatch replays batch 0: must be a no-op (no gen bump, no rows)
-    assert(!GraphMaintenance.upsertGraph(spark, embPath, graphPath, arrivals,
-      batchId = 0L))
-    val meta = GraphMaintenance.loadGraphMeta(spark, graphPath)
-    assert(meta.gen == gen && meta.lastBatch == 0L)
-    assert(edgeSet(GraphMaintenance.edgesAtRest(spark, graphPath)) == before)
-    // the next batch folds normally and advances the cursor
-    assert(GraphMaintenance.upsertGraph(spark, embPath, graphPath,
-      arrivals.limit(1).withColumn("vec_id", col("vec_id") + 1000000L),
-      batchId = 1L))
-    assert(GraphMaintenance.loadGraphMeta(spark, graphPath).lastBatch == 1L)
-  }
-
-  test("auto-compaction: compactReasons quiet on a fresh graph, fires on a deep log, view unchanged") {
-    val cents = SemanticDedup.refinedCentroids(emb, 16)
-    val withheld = conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10)
-      .cast("long") % 5 === 0
-    val base = emb.filter(!withheld)
-    val (embPath, graphPath) = buildAll(base, cents, tmp("autocompact"))
-    assert(GraphMaintenance.compactReasons(spark, graphPath).isEmpty,
-      "a freshly built graph must not ask for compaction")
-    // three 1/15th batches under maxDeltaGens=3: the third fires the
-    // generation-depth trigger inside maintainGraphPersistent
-    val arr = emb.filter(withheld)
-      .withColumn("slot", pmod(col("vec_id"), lit(3)).cast("int"))
-    val r1 = GraphMaintenance.maintainGraphPersistent(spark, embPath, graphPath,
-      arr.filter(col("slot") === 0).drop("slot"), audit = true,
-      compactMaxGens = 3)
-    assert(r1.isEmpty, s"log depth 1 must stay quiet, got $r1")
-    GraphMaintenance.maintainGraphPersistent(spark, embPath, graphPath,
-      arr.filter(col("slot") === 1).drop("slot"), audit = false,
-      compactMaxGens = 3)
-    val r3 = GraphMaintenance.maintainGraphPersistent(spark, embPath, graphPath,
-      arr.filter(col("slot") === 2).drop("slot"), audit = true,
-      compactMaxGens = 3)
-    assert(r3.exists(_.startsWith("compact:")),
-      s"generation depth 3 must fire the compaction trigger, got $r3")
-    val meta = GraphMaintenance.loadGraphMeta(spark, graphPath)
-    assert(meta.gen == 0L, "compaction must reset the log to one generation")
-    // the compacted view equals the full rebuild of the grown corpus
-    val after = spark.read.parquet(embPath).select("vec_id", "embedding", "label")
-    val (_, refGraph) = buildAll(after, cents, tmp("autocompact-ref"))
-    assert(edgeSet(GraphMaintenance.edgesAtRest(spark, graphPath)) ==
-      edgeSet(GraphMaintenance.edgesAtRest(spark, refGraph)))
-  }
-
-  test("self-healing cycle: off-manifold churn rebuilds the graph under fresh centroids") {
-    def vec(base: Array[Float], j: Float) =
-      base.zipWithIndex.map { case (v, i) => v + (if (i == 1) j else 0f) }
-    val b1 = Array(10f, 0f, 0f, 0f)
-    val b2 = Array(0f, 0f, 10f, 0f)
-    val corpus = ((1L to 8L).map(i => (i, vec(b1, 0.01f * i), 0)) ++
-      (11L to 18L).map(i => (i, vec(b2, 0.01f * i), 1)))
-      .toDF("vec_id", "embedding", "label")
-    val cents = ProductQuantization.trainCoarse(corpus, nList = 2)
-    val root = tmp("heal")
-    val embPath = root + "/index"
-    val graphPath = root + "/graph"
-    EmbeddingMaintenance.writeCellLayout(corpus, cents, embPath)
-    EmbeddingMaintenance.saveQuantizer(spark, embPath, cents,
-      EmbeddingMaintenance.layoutStats(spark, embPath, cents))
-    GraphMaintenance.writeKnnGraph(spark, embPath, graphPath, k = 3, nProbe = 1)
-    // a healthy batch maintains incrementally, no trigger: the arrival
-    // lands at blob1's mean jitter, so the fit proxies barely move
-    val quiet = Seq((21L, vec(b1, 0.05f), 0)).toDF("vec_id", "embedding", "label")
-    assert(GraphMaintenance.maintainGraphPersistent(
-      spark, embPath, graphPath, quiet, audit = true).isEmpty)
-    // a third blob arrives in force: drift fires, quantizer retrains,
-    // the graph is rebuilt under the FRESH sidecar centroids
-    val b3 = Array(0f, 10f, 0f, 10f)
-    val churn = (31L to 62L).map(i => (i, vec(b3, 0.02f * i), 2))
-      .toDF("vec_id", "embedding", "label")
-    val reasons = GraphMaintenance.maintainGraphPersistent(
-      spark, embPath, graphPath, churn, audit = true)
-    assert(reasons.nonEmpty, "off-manifold churn must trigger the audit")
-    val freshCents = EmbeddingMaintenance.loadQuantizer(spark, embPath).get._1
-    val nowCorpus = spark.read.parquet(embPath).select("vec_id", "embedding", "label")
-    assert(edgeSet(GraphMaintenance.edgesAtRest(spark, graphPath)) ==
-      edgeSet(KnnGraph.knnEdgesWithCents(
-        nowCorpus.select("vec_id", "embedding"), freshCents, 3, 1)))
   }
 
   test("dirBucketLocal matches the Column-expression dirBucket for every id") {

@@ -123,102 +123,6 @@ class KnnGraphSpec extends AnyFunSuite with SharedSpark {
       }
   }
 
-  test("production trade: descent vs extra probes at |cell|=500, both sides measured") {
-    // round-12 verdict task 5, pinned as the trade actually is at
-    // production cell size (|cell| = adaptiveNList's 500 target):
-    //  (a) COST STRUCTURE is universal: a descent round's candidate set
-    //      is ≈ (2k′)²·N, independent of |cell|, while an extra probe
-    //      rescores |cell|·N — at |cell|=500 a measured descent round
-    //      must cost under HALF a measured extra probe (it comes out
-    //      ~13× cheaper after the seed round);
-    //  (b) from a RICH base (nProbe=4), extra probes own the recall
-    //      ceiling, but descent's recall-per-rescored-candidate is
-    //      measured HIGHER — under a rescore budget, descent is the
-    //      better spend;
-    //  (c) recall DOMINANCE from a starved base is data-dependent: real
-    //      embedding manifolds give it to descent (the "nn-descent"
-    //      test above pins rRefined ≥ r(2-probe) on sf0.001), while
-    //      this corpus — deliberately adversarial overlapping isotropic
-    //      Gaussians, where neighbor-of-neighbor transitivity is weak —
-    //      only yields a small per-round lift, asserted as such.
-    // Both sides are measured, neither is assumed.
-    // Corpus: overlapping wide clusters (radius ≈ separation), so
-    // cosine neighborhoods straddle cells and probing buys recall
-    // gradually — the regime the trade exists in at all.
-    val sp = spark
-    import sp.implicits._
-    val rnd = new scala.util.Random(1234)
-    val dim = 16; val nClusters = 100; val perCluster = 80
-    val centers = Array.fill(nClusters, dim)(rnd.nextGaussian().toFloat * 2f)
-    val data = for {
-      c <- 0 until nClusters; i <- 0 until perCluster
-    } yield ((c * perCluster + i).toLong,
-      centers(c).map(v => v + rnd.nextGaussian().toFloat * 2.2f))
-    val emb = data.toDF("vec_id", "embedding").cache()
-    emb.count()
-    val byId = data.toMap
-    val ids = data.map(_._1)
-    val exactG: Map[Long, Seq[Long]] = ids.map { id =>
-      val v = byId(id)
-      id -> ids.filter(_ != id)
-        .map(o => (o, BigDecimal(cos(v, byId(o)))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
-        .sortBy { case (oid, s) => (-s, oid) }.take(k).map(_._1)
-    }.toMap
-    def recallOf(rows: Array[org.apache.spark.sql.Row]): Double = {
-      val got = rows.map(r => (r.getLong(0), r.getLong(1)))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      ids.map(id => exactG(id).count(got.getOrElse(id, Set.empty).contains).toDouble / k)
-        .sum / ids.size
-    }
-    val nList = 16
-    val cents = ProductQuantization.trainCoarse(emb, nList)
-
-    // ---- (a) cost structure: a descent round ≪ an extra probe here
-    val base1 = KnnGraph.knnEdgesWithCents(emb, cents, k, nProbe = 1)
-    val r1 = recallOf(base1.collect())
-    val r1d = recallOf(KnnGraph.knnEdgesRefined(emb, cents, k, nProbe = 1,
-      descentRounds = 1, randomBuckets = 1).collect())
-    val pc1 = KnnGraph.probeCandidateCount(emb, cents, nProbe = 1)
-    val pc2 = KnnGraph.probeCandidateCount(emb, cents, nProbe = 2)
-    val dc1 = KnnGraph.descentCandidateCount(emb, base1, randomBuckets = 1)
-    info(f"starved: recall nProbe=1 $r1%.3f -> +descent $r1d%.3f; " +
-      f"descent round $dc1%d rescores vs extra probe ${pc2 - pc1}%d")
-    assert(r1d > r1, "even on the adversarial corpus a round must lift recall")
-    assert(dc1 < (pc2 - pc1) / 2,
-      s"a descent round must cost under half an extra probe at |cell|=500: $dc1 vs ${pc2 - pc1}")
-
-    // ---- (b) rich base: descent wins recall-per-rescore, probes the ceiling
-    val base4 = KnnGraph.knnEdgesWithCents(emb, cents, k, nProbe = 4)
-    val r4 = recallOf(base4.collect())
-    val r8 = recallOf(KnnGraph.knnEdgesWithCents(emb, cents, k, nProbe = 8).collect())
-    val r4d = recallOf(KnnGraph.knnEdgesRefined(emb, cents, k, nProbe = 4,
-      descentRounds = 1, randomBuckets = 1).collect())
-    val pc4 = KnnGraph.probeCandidateCount(emb, cents, nProbe = 4)
-    val pc8 = KnnGraph.probeCandidateCount(emb, cents, nProbe = 8)
-    val dc4 = KnnGraph.descentCandidateCount(emb, base4, randomBuckets = 1)
-    val descentEff = (r4d - r4) / dc4
-    val probeEff = (r8 - r4) / (pc8 - pc4)
-    info(f"rich: recall nProbe=4 $r4%.3f -> +descent $r4d%.3f vs nProbe=8 $r8%.3f; " +
-      f"descent $dc4%d rescores, +4 probes ${pc8 - pc4}%d; " +
-      f"recall-per-1k-rescores ${descentEff * 1000}%.6f vs ${probeEff * 1000}%.6f")
-    assert(r4d > r4, "the descent round must lift the rich base")
-    assert(descentEff > probeEff,
-      f"descent must buy recall cheaper per rescored candidate: $descentEff%.3g vs $probeEff%.3g")
-
-    // ---- the wired clustering option: descentRounds=0 is byte-identical
-    // to the historical path; descentRounds=1 stays a valid assignment
-    val c0 = KnnGraph.semanticClustersWithCents(emb, cents, k, nProbe = 4, tau = 0.8)
-    val c0b = KnnGraph.semanticClustersWithCents(emb, cents, k, nProbe = 4, tau = 0.8,
-      descentRounds = 0)
-    assert(c0.exceptAll(c0b).count() == 0 && c0b.exceptAll(c0).count() == 0)
-    val c1 = KnnGraph.semanticClustersWithCents(emb, cents, k, nProbe = 4, tau = 0.8,
-      descentRounds = 1, randomBuckets = 1).collect()
-    assert(c1.map(_.getLong(0)).toSet == ids.toSet,
-      "descent-built clustering must still assign every vector")
-    emb.unpersist()
-  }
-
   test("q125 gate form: refinement dominance over its base graph, well-formed, deterministic") {
     // the md5-seeded gate form (the DuckDB oracle's twin). Dominance:
     // descent's candidate set is a superset of the base edges, so for

@@ -76,23 +76,6 @@ class ProductQuantizationSpec extends AnyFunSuite with SharedSpark {
       s"quantization error ${row.getDouble(0)} not < half energy ${row.getDouble(1)}")
   }
 
-  test("codebook save/load round-trips bit-exactly and encodes identically") {
-    val book = ProductQuantization.train(emb, m = 16, k = 16)
-    val p = java.nio.file.Files.createTempFile("pq-book", ".json")
-    ProductQuantization.saveCodebook(book, p)
-    val loaded = ProductQuantization.loadCodebook(p)
-    assert(loaded.m == book.m && loaded.k == book.k && loaded.subDim == book.subDim)
-    for (s <- 0 until book.m; c <- 0 until book.k)
-      assert(loaded.centroids(s)(c).sameElements(book.centroids(s)(c)))
-    // codes from the reloaded book are identical — stored codes stay valid
-    val a = ProductQuantization.encode(emb, book).collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    val b = ProductQuantization.encode(emb, loaded).collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    assert(a == b)
-    java.nio.file.Files.delete(p)
-  }
-
   test("ivfPqTopK: cell pruning still finds most true neighbors") {
     val qids = emb.select(col("vec_id"))
       .withColumn("h", md5(col("vec_id").cast("string")))

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
 
 /** Structural invariants for the learned-selection family (q108 NB quality
-  * classifier, q109 DSIR importance resampling) on sf0.001; value-level
-  * parity is the driver's DuckDB gate.
+  * classifier, q109 DSIR importance resampling, q151 model drift) on
+  * sf0.001; value-level parity is the driver's DuckDB gate.
   */
 class QualityModelsSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
@@ -140,5 +140,34 @@ class QualityModelsSpec extends AnyFunSuite with SharedSpark {
       "bucket-model join must broadcast (model is O(buckets), not O(vocab))")
     assert(plan.contains("TakeOrderedAndProject"),
       "top-k selection must be TakeOrderedAndProject, not Sort+Limit")
+  }
+
+  test("NB: nbScoresFromCounts under the corpus's own model == nbDocScores, bit-for-bit") {
+    // q151's scoring rule (a separately trained model, unseen tokens
+    // contribute zero) must reduce to the inline q108 chain on the
+    // model's own training corpus, where every token hits
+    val docs = graft.Tables.documents(spark, sf)
+    val cdw = QualityModels.nbTokenCounts(docs)
+    val viaModel = QualityModels.nbScoresFromCounts(cdw, QualityModels.nbModelFromCounts(cdw))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
+    val inline = QualityModels.nbDocScores(docs).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
+    assert(viaModel == inline)
+    assert(viaModel.nonEmpty)
+  }
+
+  test("q151 model-drift audit: doc accounting, triangle bound, determinism") {
+    val docs = graft.Tables.documents(spark, sf)
+    val out = QualityModels.queries("q151_model_drift")(spark, sf).collect()
+    assert(out.map(_.getLong(1)).sum == docs.count(),
+      "every document must be scored under both models exactly once")
+    out.foreach { r =>
+      val (v1, v2, shift) = (r.getDouble(2), r.getDouble(3), r.getDouble(4))
+      assert(shift + 1e-9 >= math.abs(v1 - v2),
+        s"mean |shift| must dominate |mean shift| (${r.getString(0)})")
+      assert(r.getLong(5) >= 0 && r.getLong(5) <= r.getLong(1))
+    }
+    val again = QualityModels.queries("q151_model_drift")(spark, sf).collect()
+    assert(out.map(_.toString).sorted.sameElements(again.map(_.toString).sorted))
   }
 }

@@ -119,27 +119,6 @@ class Round13bOpsSpec extends AnyFunSuite with SharedSpark {
     assert(lens == 100L, s"chunk lengths must sum to the token count, got $lens")
   }
 
-  test("CDC production kernel: lossless partition, re-sync, determinism") {
-    val sp = spark
-    import sp.implicits._
-    val body = (1 to 120).map(i => s"p${i * 29 % 89}q$i").mkString(" ")
-    val docs = Seq((1L, "web", body), (2L, "web", s"HEAD $body"))
-      .toDF("doc_id", "source", "text")
-    val ch = DedupOps.cdcChunksFast(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    // lossless: chunk lengths sum to the token count per doc
-    val sums = ch.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
-    assert(sums == Map(1L -> 120, 2L -> 121), sums.toString)
-    // re-sync: the shifted copy shares all but its head chunk
-    val h1 = ch.filter(_._1 == 1L).map(_._2).toSet
-    val h2 = ch.filter(_._1 == 2L).map(_._2).toSet
-    assert((h1 & h2).size >= h1.size - 1, s"${(h1 & h2).size} of ${h1.size}")
-    // deterministic
-    val again = DedupOps.cdcChunksFast(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    assert(ch.sortBy(x => (x._1, x._2)).toSeq == again.sortBy(x => (x._1, x._2)).toSeq)
-  }
-
   // ---------------------------------------------------------------- q138
 
   test("q138: a planted typo pair is LSH-proposed and edit-scored correctly") {

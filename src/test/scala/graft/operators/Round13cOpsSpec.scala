@@ -234,34 +234,6 @@ class Round13cOpsSpec extends AnyFunSuite with SharedSpark {
     assert(joined.filter { case (_, a, b) => a == b }.forall(_._2 < 16))
   }
 
-  test("rendezvous column equals the window form; resize is minimal") {
-    val sp = spark
-    import sp.implicits._
-    val ids = (1L to 200L)
-    // expression form == batch window form on the same ids
-    val viaCol = ids.toDF("doc_id")
-      .withColumn("s", MixtureOps.rendezvousCol(col("doc_id"), 16))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val viaWindow = MixtureOps.rendezvousShard(ids.toDF("doc_id"), 16, "s")
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(viaCol == viaWindow, "per-row argmax must equal the window pick")
-    // resize 16 -> 20 re-routes only to NEW shards (HRW monotonicity)
-    val via20 = ids.toDF("doc_id")
-      .withColumn("s", MixtureOps.rendezvousCol(col("doc_id"), 20))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val moved = ids.filter(i => viaCol(i) != via20(i))
-    assert(moved.nonEmpty && moved.forall(i => via20(i) >= 16))
-  }
-
-  test("knnEdgesHier at full super fan-out equals the flat graph bit-for-bit") {
-    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val cents = ProductQuantization.trainCoarse(emb, 16)
-    val flat = KnnGraph.knnEdgesWithCents(emb, cents, 5, 2)
-    val hier = KnnGraph.knnEdgesHier(emb, cents, 5, 2, nSuper = 4, nSuperProbe = 4)
-    assert(flat.exceptAll(hier).isEmpty && hier.exceptAll(flat).isEmpty,
-      "full fan-out must reduce hier to pure pruning of nothing")
-  }
-
   // ---------------------------------------------------------------- q146
 
   test("q146: cluster-granular split is leakage-free; doc-keyed split leaks") {

@@ -3,7 +3,7 @@
 
 Usage: python3 tools/slow_cases.py [N] [REPORT_DIR]
 (defaults: 10, target/test-reports). One line per case: seconds, suite,
-case. A report whose suite has no class in src/test/scala is flagged
+case; then the number of cases and their summed time. A report whose suite has no class in src/test/scala is flagged
 STALE: it comes from an older tree, so its times are not this tree's.
 """
 import glob
@@ -32,3 +32,4 @@ for path in sorted(glob.glob(os.path.join(reports, "TEST-*.xml"))):
 
 for secs, suite, case in sorted(cases, reverse=True)[:n]:
     print("%9.3f  %s  %s" % (secs, suite, case))
+print("total: %d cases, %.1f s" % (len(cases), sum(c[0] for c in cases)))
