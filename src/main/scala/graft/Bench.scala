@@ -350,8 +350,8 @@ object Bench {
   private def graphMain(spark: SparkSession, sfDir: String): Unit = {
     import graft.operators._
     import org.apache.spark.sql.functions.col
-    val emb = graft.Tables.embeddings(spark, sfDir)
-      .select("vec_id", "embedding", "label").localCheckpoint(true)
+    val emb = StageMaterialize(graft.Tables.embeddings(spark, sfDir)
+      .select("vec_id", "embedding", "label"))
     val k = 5
     val nProbe = 2
     val nl = ProductQuantization.adaptiveNList(emb)

@@ -19,8 +19,8 @@ import graft.Tables._
   *     map-side) plus a driver argmax of the TOP ROW only (orderBy.limit(1)
   *     = TakeOrderedAndProject, no global sort, O(1) driver state).
   *  3. The winning merge is applied distributed (one narrow map over the
-  *     word table). Rounds are `localCheckpoint`ed to truncate the growing
-  *     iterative lineage — same discipline as connected components.
+  *     word table). Rounds go through [[StageMaterialize]] to truncate the
+  *     growing iterative lineage — same discipline as connected components.
   *
   * Determinism: argmax tie-break is (count desc, left asc, right asc);
   * greedy left-to-right application within a word (overlapping runs like
@@ -81,13 +81,12 @@ object BpeVocab {
     val spark = docs.sparkSession
     val nPar = spark.sparkContext.defaultParallelism
     // corpus → word-frequency table: the ONLY corpus-scale stage.
-    // localCheckpoint so the type-count probe and the merge loop don't
+    // materialized so the type-count probe and the merge loop don't
     // re-run the corpus scan.
-    val wordFreq = docs
+    val wordFreq = StageMaterialize(docs
       .select(explode(TextOps.tokens(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
-      .repartition(nPar)
-      .localCheckpoint()
+      .repartition(nPar))
     if (wordFreq.count() <= localTypeCap) {
       val collected = wordFreq.collect()
         .map(r => (r.getString(0).split(""), r.getLong(1)))
@@ -122,7 +121,7 @@ object BpeVocab {
           words = words.select(mergeUdf(col("syms")).as("syms"), col("freq"))
           // truncate the iterative lineage every few rounds (every round
           // would double the job count; a 4-deep UDF chain is cheap)
-          if (rank % 4 == 0) words = words.localCheckpoint()
+          if (rank % 4 == 0) words = StageMaterialize(words)
           rank += 1
         case _ => done = true
       }

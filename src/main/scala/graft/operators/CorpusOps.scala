@@ -101,12 +101,12 @@ object CorpusOps {
     // AND the scoring join — materialize each once (the q147/q110
     // discipline; Spark shares no subtrees)
     val l = StageMaterialize(documents(s, d)
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("l")), "q63_tokens")
+      .select(col("doc_id"), TextOps.tokens(col("text")).as("l")))
     val bg = StageMaterialize(l.filter(size(col("l")) >= 2)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(0, size(l) - 2), i -> struct(l[i] AS w1, l[i + 1] AS w2))"))
         .as("b"))
-      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2")), "q63_bg")
+      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2")))
     val cbg = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c_bg"))
     val cw = bg.groupBy("w1").agg(count(lit(1)).as("c_w1"))
     val v = l.select(explode(col("l")).as("token"))
@@ -315,9 +315,9 @@ object CorpusOps {
       .select(col("doc_id"), explode(expr(
         "transform(sequence(0, size(l) - 2), i -> struct(l[i] AS w1, l[i + 1] AS w2))"))
         .as("b"))
-      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2")), "q142_bg")
+      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2")))
     val cbg = StageMaterialize(
-      bg.groupBy("w1", "w2").agg(count(lit(1)).as("c_bg")), "q142_cbg")
+      bg.groupBy("w1", "w2").agg(count(lit(1)).as("c_bg")))
     val cw = cbg.groupBy("w1").agg(sum(col("c_bg")).as("c_w1"),
       count(lit(1)).as("n1p_fw"))
     val bw = cbg.groupBy("w2").agg(count(lit(1)).as("n1p_bw"))
@@ -432,9 +432,9 @@ object CorpusOps {
         "transform(sequence(0, size(l) - 2), i -> struct(l[i] AS w1, l[i + 1] AS w2))"))
         .as("b"))
       .select(col("doc_id"), col("source"),
-        col("b.w1").as("w1"), col("b.w2").as("w2")), "q147_bg")
+        col("b.w1").as("w1"), col("b.w2").as("w2")))
     val cbg = StageMaterialize(
-      bg.groupBy("w1", "w2").agg(count(lit(1)).as("c_bg")), "q147_cbg")
+      bg.groupBy("w1", "w2").agg(count(lit(1)).as("c_bg")))
     val cw = cbg.groupBy("w1").agg(sum(col("c_bg")).as("c_w1"),
       count(lit(1)).as("n1p_fw"))
     val bw = cbg.groupBy("w2").agg(count(lit(1)).as("n1p_bw"))
@@ -450,7 +450,7 @@ object CorpusOps {
         .groupBy("source")
         .agg(countDistinct(col("doc_id")).as("n_docs"),
           count(lit(1)).as("n_bigrams"),
-          sum(col("logp").cast(DecimalType(38, 6))).as("sum_lp")), "q147_per_source")
+          sum(col("logp").cast(DecimalType(38, 6))).as("sum_lp")))
     val tot = perSource.agg(
       sum(col("sum_lp")).as("tot_lp"), sum(col("n_bigrams")).as("tot_n"))
     val meanS = round(col("sum_lp").cast(DoubleType) / col("n_bigrams"), 6)
@@ -562,21 +562,21 @@ object CorpusOps {
     // tokenize/explode subtree runs four times — sharing it measured
     // 13.4 → 11.4 s at 100k docs (the subtree is corpus-proportional,
     // so the saving grows with the corpus; at sf0.1 it's noise)
-    val bg = StageMaterialize(knBigrams(docs), "q153_bg")
+    val bg = StageMaterialize(knBigrams(docs))
     // each model TABLE is consumed four times inside knScoresFromBigrams
     // (the type lookup plus the cw/bw/t statistic tables all derive from
     // it) — materialize both so each vocabulary²-bounded aggregation over
     // the bigram pool runs once per model, not four times; `joined` feeds
     // both the drift leg and the unscored-count leg, so it materializes
     // too (the scoring joins are the query's dominant shuffles)
-    val v1 = StageMaterialize(knModelFromBigrams(bg.filter(isTrain)), "q153_v1")
-    val v2 = StageMaterialize(knModelFromBigrams(bg), "q153_v2")
+    val v1 = StageMaterialize(knModelFromBigrams(bg.filter(isTrain)))
+    val v2 = StageMaterialize(knModelFromBigrams(bg))
     val s1 = knScoresFromBigrams(bg, v1)
       .select(col("doc_id"), col("kn_logprob").as("lp1"))
     val s2 = knScoresFromBigrams(bg, v2)
       .select(col("doc_id"), col("kn_logprob").as("lp2"))
     val joined = StageMaterialize(docs.select("doc_id", "source")
-      .join(s1, Seq("doc_id")).join(s2, Seq("doc_id")), "q153_joined")
+      .join(s1, Seq("doc_id")).join(s2, Seq("doc_id")))
     val scored = joined.filter(col("lp1").isNotNull)
     val cuts = scored.groupBy("source").agg(
       MixtureOps.pcut(exactCuts)(col("lp1"), 1.0 / 3).as("lo1"),

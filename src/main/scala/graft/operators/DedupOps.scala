@@ -186,7 +186,7 @@ object DedupOps {
     // the barrier measured slower than the second pass (round-16 driver:
     // q133 0.87, q25/q135 flat-negative) — lazy below the gate,
     // checkpointed at corpus scale where the shingle explode dominates
-    val sh = StageMaterialize.whenLarge(sh0, "window_pair_keys")
+    val sh = StageMaterialize.whenLarge(sh0)
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val pairs = windowCandidates(sh, Seq("source", "sh"), "doc_id", blockCap, "doc_a", "doc_b")
       .groupBy("doc_a", "doc_b")
@@ -534,7 +534,7 @@ object DedupOps {
     // both sides of the pair join read the signature table — materialize
     // so the 16-seed MinHash pass over the shingles runs once, not twice
     val sig = StageMaterialize(
-      minhashSignatures(docs, nSeeds, useFastKernel = false), "q135_sig")
+      minhashSignatures(docs, nSeeds, useFastKernel = false))
     val a = sig.select(col("doc_id").as("doc_a"), col("seed"),
       col("minhash").as("mh_a"))
     val b = sig.select(col("doc_id").as("doc_b"), col("seed"),
@@ -749,9 +749,9 @@ object DedupOps {
     * a parity spec pins local == distributed).
     *
     * Scale notes (distributed path): each round is two shuffles (edge
-    * join + min agg, then the compression self-join). Rounds are eagerly
-    * `localCheckpoint`ed to truncate the growing plan lineage (the classic
-    * iterative-algorithm pattern, same as GraphX's strategy).
+    * join + min agg, then the compression self-join). Every round goes
+    * through [[StageMaterialize]] to truncate the growing plan lineage (the
+    * classic iterative-algorithm pattern, same as GraphX's strategy).
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame, maxIter: Int = 20,
                           localEdgeCap: Long = DefaultLocalEdgeCap): DataFrame = {
@@ -776,15 +776,12 @@ object DedupOps {
     val edges = rawEdges
       .union(rawEdges.select(col("b").as("a"), col("a").as("b")))
       .cache()
-    // localCheckpoint (eager), not cache: each round's plan builds on the
-    // previous round's, so without lineage TRUNCATION the logical plan
-    // doubles every iteration — a 30-iteration run OOMs the driver just
-    // stringifying it. Checkpointing materializes the round and restarts
-    // the plan from the stored blocks (the standard iterative-algorithm
-    // pattern; old round RDDs are released by the ContextCleaner).
-    var labels = edges.select(col("a").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("component"))
-      .localCheckpoint(true)
+    // a barrier, not cache: each round's plan builds on the previous
+    // round's, so without lineage TRUNCATION the logical plan doubles every
+    // iteration — a 30-iteration run OOMs the driver just stringifying it
+    // (old round RDDs are released by the ContextCleaner)
+    var labels = StageMaterialize(edges.select(col("a").as("doc_id")).distinct()
+      .select(col("doc_id"), col("doc_id").as("component")))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -803,14 +800,13 @@ object DedupOps {
       // materialized BEFORE the self-join — joining the raw lineage
       // against itself would re-execute the union+min aggregate once per
       // side (ReuseExchange dedups the shuffle, not the agg above it).
-      val next = (if (iter < 2) propagated
+      val next = StageMaterialize(if (iter < 2) propagated
         else {
-          val p = propagated.localCheckpoint(true)
+          val p = StageMaterialize(propagated)
           p.join(p.select(col("doc_id").as("component"), col("component").as("_root")),
               Seq("component"), "left_outer")
             .select(col("doc_id"), coalesce(col("_root"), col("component")).as("component"))
         })
-        .localCheckpoint(true)
       // converged ⇔ no label decreased this round
       val changed = next.join(labels.withColumnRenamed("component", "old"), "doc_id")
         .filter(col("component") < col("old")).limit(1).count()
@@ -1224,12 +1220,10 @@ object DedupOps {
     // bench shingles feed the count, the Bloom build AND the exact-verify
     // broadcast; the candidates feed the hit count AND the size column —
     // materialize each once (Spark shares no subtrees, so every reference
-    // re-ran the shingle pass; at 100 TB this is the
-    // write-the-intermediate-pool pattern via spark.graft.stage.dir)
-    val withShs = StageMaterialize(docShinglesOf(docs, withSource = false),
-      "q127_shingles")
+    // re-ran the shingle pass)
+    val withShs = StageMaterialize(docShinglesOf(docs, withSource = false))
     val benchSh = StageMaterialize(withShs.filter(isBench(col("doc_id")))
-      .select(explode(col("shs")).as("sh")).distinct(), "q127_bench_sh")
+      .select(explode(col("shs")).as("sh")).distinct())
     val train = withShs.filter(!isBench(col("doc_id")))
 
     val bloom = benchSh.stat.bloomFilter("sh",
@@ -1237,8 +1231,7 @@ object DedupOps {
     val bc = s.sparkContext.broadcast(bloom)
     val mightHit = udf { shs: Seq[String] =>
       shs.exists(sh => bc.value.mightContainString(sh)) }
-    val cands = StageMaterialize(train.filter(mightHit(col("shs"))),
-      "q127_cands")
+    val cands = StageMaterialize(train.filter(mightHit(col("shs"))))
 
     val hits = cands.select(col("doc_id"), explode(col("shs")).as("sh"))
       .join(broadcast(benchSh), Seq("sh"))
@@ -1277,7 +1270,7 @@ object DedupOps {
     // self-joined below — materialize so the shingle explode + distinct
     // runs one pass, not two
     val srcSh = StageMaterialize(shinglesOf(documents(s, d), withSource = true)
-      .select("source", "sh").distinct(), "q59_src_sh")
+      .select("source", "sh").distinct())
     srcSh.as("a").join(srcSh.as("b"),
         col("a.sh") === col("b.sh") && col("a.source") < col("b.source"))
       .groupBy(col("a.source").as("source_a"), col("b.source").as("source_b"))

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   */
 object EmbeddingMaintenance {
 
-  import MaintenanceIO.{materialized, withDynamicOverwrite}
+  import MaintenanceIO.withDynamicOverwrite
 
   /** Write (or fully rebuild) the index layout: one directory per coarse
     * cell under the given frozen centroids. */
@@ -60,7 +60,7 @@ object EmbeddingMaintenance {
     if (ids.isEmpty) return
     val affected = knownCells.getOrElse(cellsOf(spark, path, ids))
     if (affected.isEmpty) return
-    val remaining = materialized(spark.read.parquet(path)
+    val remaining = StageMaterialize(spark.read.parquet(path)
       .filter(col("cell").isInCollection(affected))
       .filter(!col("vec_id").isInCollection(ids)))
     // the kept-cell collect and the rewrite both read the checkpointed
@@ -120,7 +120,7 @@ object EmbeddingMaintenance {
     val kept = corpus
       .filter(col("cell").isInCollection(affected))
       .filter(!col("vec_id").isInCollection(changedIds))
-    val next = materialized(
+    val next = StageMaterialize(
       kept.unionByName(incoming.select(kept.columns.map(col): _*)))
     // kept-cell collect ∥ rewrite — both read the checkpointed frame
     val ov = new MaintenanceIO.Overlap(1)
@@ -140,72 +140,29 @@ object EmbeddingMaintenance {
     }
   }
 
-  /** Health summary of a cell layout under its frozen centroids — the
-    * numbers the O(N·|cell|) probe-cost contract rests on:
-    * `meanCell`/`maxCell` (a probe reads nProbe CELLS, so its cost is the
-    * probed cells' sizes — skew degrades it toward a linear scan even
-    * when the mean stays flat) and `meanSqErr` (mean squared distance of
-    * each vector to its assigned centroid — rising error means the
-    * frozen quantizer no longer describes the data, so the true
-    * neighbors of a query leak into unprobed cells and recall decays).
-    * One column-pruned scan + one tiny agg; the per-vector distance pass
-    * broadcasts the centroid table like every other cell computation.
-    * Stored as the quantizer sidecar's training-time baseline. */
-  final case class IvfStats(n: Long, nonEmptyCells: Int,
-                            meanCell: Double, maxCell: Long, meanSqErr: Double)
-
-  /** [[IvfStats]] of an in-memory (vec_id, embedding, cell) frame — the
-    * assigned frame a builder already holds, so the just-written layout
-    * is never re-read. */
-  def statsOf(corpus: DataFrame, cents: Array[Array[Float]]): IvfStats = {
-    val spark = corpus.sparkSession
-    val bc = spark.sparkContext.broadcast(cents)
-    val sqErr = udf { (v: Seq[Float], cell: Int) =>
-      val c = bc.value(cell)
-      var s = 0.0
-      var i = 0
-      while (i < c.length) { val d = v(i) - c(i); s += d * d; i += 1 }
-      s
-    }
-    val sizes = corpus.groupBy("cell").agg(
-      count(lit(1)).as("n"),
-      sum(sqErr(col("embedding"), col("cell"))).as("err")).collect()
-    val n = sizes.map(_.getLong(1)).sum
-    IvfStats(
-      n = n,
-      nonEmptyCells = sizes.length,
-      meanCell = if (sizes.isEmpty) 0.0 else n.toDouble / sizes.length,
-      maxCell = if (sizes.isEmpty) 0L else sizes.map(_.getLong(1)).max,
-      meanSqErr = if (n == 0) 0.0 else sizes.map(_.getDouble(2)).sum / n)
-  }
-
-  /** Quantizer sidecar: the frozen centroids + training-time baseline,
-    * persisted NEXT TO the layout (`<path>.quantizer.json`, atomic
-    * write-then-rename through the layout's own filesystem). This makes
-    * the quantizer part of the index's durable state instead of driver
-    * memory — any later maintainer (the graph folds of
-    * [[GraphMaintenance]]) recovers the exact centroids the at-rest cells
-    * were assigned under. Floats round-trip exactly through
-    * toString/toFloat. */
+  /** Quantizer sidecar: the frozen centroids, persisted NEXT TO the
+    * layout (`<path>.quantizer.json`, atomic write-then-rename through the
+    * layout's own filesystem). This makes the quantizer part of the
+    * index's durable state instead of driver memory — any later
+    * maintainer (the graph folds of [[GraphMaintenance]]) recovers the
+    * exact centroids the at-rest cells were assigned under. Floats
+    * round-trip exactly through toString/toFloat. */
   private def sidecar(path: String) = new Path(path + ".quantizer.json")
 
   def saveQuantizer(spark: SparkSession, path: String,
-                    cents: Array[Array[Float]], baseline: IvfStats): Unit = {
-    val sb = new StringBuilder
-    sb ++= "{\"cents\":["
-    sb ++= cents.map(_.mkString("[", ",", "]")).mkString(",")
-    sb ++= s"""],"baseline":{"n":${baseline.n},"nonEmptyCells":${baseline.nonEmptyCells},"""
-    sb ++= s""""meanCell":${baseline.meanCell},"maxCell":${baseline.maxCell},"""
-    sb ++= s""""meanSqErr":${baseline.meanSqErr}}}"""
+                    cents: Array[Array[Float]]): Unit = {
+    val json = cents.map(_.mkString("[", ",", "]")).mkString("{\"cents\":[", ",", "]}")
     val fs = sidecar(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(path + ".quantizer.json.tmp")
     val out = fs.create(tmp, true)
-    try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
+    try out.write(json.getBytes("UTF-8")) finally out.close()
     fs.delete(sidecar(path), false)
     require(fs.rename(tmp, sidecar(path)), s"could not promote quantizer sidecar for $path")
   }
 
-  def loadQuantizer(spark: SparkSession, path: String): Option[(Array[Array[Float]], IvfStats)] = {
+  /** The centroids [[saveQuantizer]] stored; an older sidecar's
+    * `baseline` key is ignored. */
+  def loadQuantizer(spark: SparkSession, path: String): Option[Array[Array[Float]]] = {
     val fs = sidecar(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(sidecar(path))) return None
     val in = fs.open(sidecar(path))
@@ -220,11 +177,8 @@ object EmbeddingMaintenance {
       case JDecimal(x) => x.toDouble
       case other => sys.error(s"bad number in quantizer sidecar: $other")
     }
-    val cents = m("cents").asInstanceOf[JArray].arr.map(row =>
-      row.asInstanceOf[JArray].arr.map(x => num(x).toFloat).toArray).toArray
-    val b = m("baseline").asInstanceOf[JObject].obj.toMap
-    Some((cents, IvfStats(num(b("n")).toLong, num(b("nonEmptyCells")).toInt,
-      num(b("meanCell")), num(b("maxCell")).toLong, num(b("meanSqErr")))))
+    Some(m("cents").asInstanceOf[JArray].arr.map(row =>
+      row.asInstanceOf[JArray].arr.map(x => num(x).toFloat).toArray).toArray)
   }
 
   /** [[writeCellLayout]] plus the quantizer sidecar — the entry point for
@@ -232,18 +186,10 @@ object EmbeddingMaintenance {
     * state. */
   def writeCellLayoutPersistent(emb: DataFrame, cents: Array[Array[Float]],
                                 path: String): Unit = {
-    // assign cells once: the write and the baseline stats both consume
-    // the assigned frame (stats used to re-read the just-written layout
-    // and re-decode every embedding — one extra corpus pass per build)
-    val withCell = MaintenanceIO.materialized(emb.withColumn("cell",
+    val withCell = StageMaterialize(emb.withColumn("cell",
       ProductQuantization.cellExpr(emb.sparkSession, cents)(col("embedding"))))
-    // the layout write and the baseline-stats aggregate are independent
-    // jobs over the checkpointed frame — overlap them (guide §2.6); the
-    // sidecar still lands only after both complete
-    var stats: IvfStats = null
-    MaintenanceIO.inParallel(Seq(
-      () => withCell.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(path),
-      () => stats = statsOf(withCell, cents)))
-    saveQuantizer(emb.sparkSession, path, cents, stats)
+    withCell.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(path)
+    // the sidecar lands only after the layout write completes
+    saveQuantizer(emb.sparkSession, path, cents)
   }
 }

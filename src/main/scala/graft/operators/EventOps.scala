@@ -287,8 +287,7 @@ object EventOps {
     // (round-16 driver: q91 0.80) — lazy below the gate, checkpointed at
     // event-log scale where three scans of the log dominate
     val u = StageMaterialize.whenLarge(
-      purchases.union(clicks).withColumn("b", expr(s"us div ${bucketUs}L")),
-      "q91_union")
+      purchases.union(clicks).withColumn("b", expr(s"us div ${bucketUs}L")))
     val wb = Window.partitionBy("user_id", "b")
       .orderBy(col("us"), col("tag"), col("click_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

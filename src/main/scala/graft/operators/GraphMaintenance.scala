@@ -89,7 +89,6 @@ import org.apache.spark.sql.functions._
   */
 object GraphMaintenance {
 
-  import MaintenanceIO.materialized
 
   private def edgesPath(graphPath: String) = graphPath + "/edges"
   private def probesPath(graphPath: String) = graphPath + "/probes"
@@ -173,7 +172,7 @@ object GraphMaintenance {
   private def centroidsOf(spark: SparkSession, embPath: String): Array[Array[Float]] =
     EmbeddingMaintenance.loadQuantizer(spark, embPath).getOrElse(sys.error(
       s"no quantizer sidecar at $embPath — create the index with " +
-        "writeCellLayoutPersistent"))._1
+        "writeCellLayoutPersistent"))
 
   /** The exact [[KnnGraph.knnEdgesWithCents]] top-k discipline
     * ((sim DESC, nbr_id) row_number ≤ k) over any candidate set carrying
@@ -307,7 +306,7 @@ object GraphMaintenance {
     // (same expression, same rows — the build stays bit-identical to
     // knnEdgesWithCents, spec-pinned).
     val probeUdf = ProductQuantization.probeExpr(spark, cents, nProbe)
-    val probed = materialized(
+    val probed = StageMaterialize(
       spark.read.parquet(embPath).select(col("vec_id"), col("embedding"),
         col("cell"), probeUdf(col("embedding")).as("probes")))
     val index = probed.select(col("cell"), col("vec_id"), col("embedding"))
@@ -328,7 +327,7 @@ object GraphMaintenance {
     // rank materializes; the edge/redge writes join everything at the end.
     val ov = new MaintenanceIO.Overlap(4)
     try {
-      val fRanked = ov.fork(materialized(
+      val fRanked = ov.fork(StageMaterialize(
         rankTopK(candidates(probeSide, index), k)))
       val buckets = adaptiveDirBuckets(probed.count())
       val fProbes = ov.fork(
@@ -507,18 +506,20 @@ object GraphMaintenance {
     *    re-probed and appended as fresh full lists.
     *
     * Every membership decision is a bucket-pruned `dir/` read or a
-    * broadcast join against the batch — no corpus-partitioned scan and
-    * no driver-resident id list (round-14 verdict: the old path
-    * collected the batch ids and scanned the embedding layout per
-    * batch). Partition-PRUNING literals (cell lists) still ride the
-    * driver — those are bounded by nList, not the corpus.
+    * broadcast join against the batch — no corpus-partitioned scan.
+    * The fold does collect to the driver, bounded by the BATCH, not the
+    * corpus: the batch's ids (`batchIds`), its rows already in `dir/`
+    * (id, cell), and each arrival's (id, cell, probes). So the caller
+    * must keep a batch small enough to hold on the driver; nothing here
+    * caps it. Partition-PRUNING literals (cell lists) ride the driver
+    * too — those are bounded by nList.
     *
     * Returns true iff the batch was folded (false for an empty batch). */
   def upsertGraph(spark: SparkSession, embPath: String, graphPath: String,
                   changed: DataFrame): Boolean = {
     val meta = loadGraphMeta(spark, graphPath)
     requireDir(meta, graphPath)
-    val changedM = prof("batch-materialize")(materialized(changed))
+    val changedM = prof("batch-materialize")(StageMaterialize(changed))
     // ONE collect of the batch ids serves the emptiness check, the
     // new-vs-re-embed count AND the dir/ pruning-bucket list (computed
     // driver-side) — these were three jobs (count, bucket scan, lookup
@@ -565,7 +566,7 @@ object GraphMaintenance {
     val ov = new MaintenanceIO.Overlap(4)
     try {
       val fArr = ov.fork {
-        val a = prof("arr-materialize")(materialized(
+        val a = prof("arr-materialize")(StageMaterialize(
           changedM
             .withColumn("cell", cellUdf(col("embedding")))
             .withColumn("probes", probeUdf(col("embedding")))))
@@ -580,7 +581,7 @@ object GraphMaintenance {
       // become in-place probe tombstones, with no probes/ scan. Serial:
       // must finish before foldIndexSide rewrites those cells.
       val oldProbeRows = if (nRe == 0) None else Some(prof("old-probe-lookup")(
-        materialized {
+        StageMaterialize {
           spark.read.parquet(embPath).select("vec_id", "embedding", "cell")
             .filter(col("cell").isInCollection(reOldCells))
             .join(present.select("vec_id"), Seq("vec_id"), "left_semi")
@@ -603,7 +604,7 @@ object GraphMaintenance {
       // probe index delta: arrivals append their live rows; re-embeds
       // tombstone their old probe rows in place — checkpointed inputs
       // only, so it overlaps the whole edge-delta computation below
-      val fProbeDelta = ov.fork(prof("probe-delta-compute")(materialized {
+      val fProbeDelta = ov.fork(prof("probe-delta-compute")(StageMaterialize {
         val probeNew = arr.select(col("vec_id"), col("cell").as("own_cell"),
           lit(true).as("alive"), explode(col("probes")).as("cell"))
         Seq(Some(probeNew), oldProbeRows).flatten.reduce(_ unionByName _)
@@ -617,7 +618,7 @@ object GraphMaintenance {
       // be recomputed lazily inside the edge-delta job); the own-cell
       // collect is nList-bounded.
       val fRev = ov.fork(prof("rev-sources") {
-        val revM = materialized(liveProbes(spark, graphPath, arrCells)
+        val revM = StageMaterialize(liveProbes(spark, graphPath, arrCells)
           .join(ids, Seq("vec_id"), "left_anti"))
         (revM,
           revM.select("own_cell").distinct().collect().map(_.getInt(0)).toSeq)
@@ -746,7 +747,7 @@ object GraphMaintenance {
       // 50 k — file creation, then listing on every later read)
       val allEdges = Seq(Some(arrEdges), Some(challengersClean),
         Some(repairedEdges), edgeTombs).flatten.reduce(_ unionByName _)
-      val allEdgesM = prof("edge-delta-compute")(materialized(allEdges))
+      val allEdgesM = prof("edge-delta-compute")(StageMaterialize(allEdges))
       val probeDeltaM = fProbeDelta.join()
 
       // the four layout appends are independent (materialized inputs,
@@ -801,7 +802,7 @@ object GraphMaintenance {
       // cells (over-approximate — see upsertGraph), surviving ids only.
       // Reads only redges/ — disjoint from the probe-tombstone read AND
       // the index delete, so it overlaps both (guide §2.6).
-      val fReverseIds = ov.fork(materialized(
+      val fReverseIds = ov.fork(StageMaterialize(
         spark.read.parquet(redgesPath(graphPath))
           .filter(col("nbr_cell").isInCollection(victimCells))
           .join(victims.select(col("vec_id").as("nbr_id")), Seq("nbr_id"), "left_semi")
@@ -811,7 +812,7 @@ object GraphMaintenance {
       // victims' probe rows from the PRE-delete layout (probe tombstones)
       // — must complete before deleteVecs rewrites the victim cells
       val probeUdf = ProductQuantization.probeExpr(spark, cents, meta.nProbe)
-      val probeTombs = prof("probe-tombs")(materialized(
+      val probeTombs = prof("probe-tombs")(StageMaterialize(
         spark.read.parquet(embPath).select("vec_id", "embedding", "cell")
           .filter(col("cell").isInCollection(victimCells))
           .join(victims.select("vec_id"), Seq("vec_id"), "left_semi")
@@ -839,7 +840,7 @@ object GraphMaintenance {
         col("cell").as("src_cell"), lit(0L).as("nbr_id"),
         lit(-1).as("nbr_cell"), lit(0.0).as("sim"), lit(-1).as("rk"))
       val allM = prof("delete-edge-compute")(
-        materialized(repairedEdges.unionByName(edgeTombs)))
+        StageMaterialize(repairedEdges.unionByName(edgeTombs)))
       // independent appends over materialized inputs — overlap (guide §2.6)
       prof("delete-writes")(MaintenanceIO.inParallel(Seq(
         () => writeEdges(allM.repartition(col("src_cell")), graphPath, thisGen,
@@ -872,7 +873,7 @@ object GraphMaintenance {
     val ov = new MaintenanceIO.Overlap(3)
     try {
       val fEdges = ov.fork {
-        val resolved = materialized(
+        val resolved = StageMaterialize(
           resolveFull(spark.read.parquet(edgesPath(graphPath)), meta.k))
         MaintenanceIO.inParallel(Seq(
           () => writeEdges(resolved.repartition(col("src_cell")), graphPath,
@@ -881,7 +882,7 @@ object GraphMaintenance {
       }
       val fProbes = ov.fork {
         val w = Window.partitionBy("vec_id", "cell")
-        val probes = materialized(spark.read.parquet(probesPath(graphPath))
+        val probes = StageMaterialize(spark.read.parquet(probesPath(graphPath))
           .withColumn("mg", max("gen").over(w)).filter(col("gen") === col("mg"))
           .filter(col("alive"))
           .select(col("vec_id"), col("own_cell"), lit(true).as("alive"),
@@ -892,7 +893,7 @@ object GraphMaintenance {
           .parquet(probesPath(graphPath))
       }
       val wd = Window.partitionBy("vec_id")
-      val dirNow = materialized(spark.read.parquet(dirPath(graphPath))
+      val dirNow = StageMaterialize(spark.read.parquet(dirPath(graphPath))
         .withColumn("mg", max("gen").over(wd)).filter(col("gen") === col("mg"))
         .filter(col("alive"))
         .select(col("vec_id"), col("cell"), lit(true).as("alive"))

@@ -148,7 +148,7 @@ object HybridRetrieval {
     // and avgdl are bit-identical to the size(tokens) form.
     val tf = StageMaterialize(docs
       .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
-      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")), "bm25_tf")
+      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")))
     val dl = docs.select(col("doc_id"))
       .join(tf.groupBy("doc_id").agg(sum(col("tf")).as("tdl")), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("tdl"), lit(0L)).as("dl"))

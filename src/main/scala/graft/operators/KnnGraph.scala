@@ -152,8 +152,7 @@ object KnnGraph {
       val member = StageMaterialize(emb.select(col("vec_id"),
           explode(sequence(lit(0), lit(randomBuckets - 1))).as("j"))
         .select(col("vec_id"), col("j"),
-          pmod(seedKey(col("vec_id"), col("j")), lit(nBuckets)).as("bkt")),
-        "nn_descent_member")
+          pmod(seedKey(col("vec_id"), col("j")), lit(nBuckets)).as("bkt")))
       val seed = member.as("a")
         .join(member.as("b"), col("a.j") === col("b.j") &&
           col("a.bkt") === col("b.bkt") && col("a.vec_id") =!= col("b.vec_id"))
@@ -169,7 +168,7 @@ object KnnGraph {
       // at sf0.1: the q125 plan held 64 parquet scans of the same table).
       // Materialize the ≤kN-row edge state once per round — the
       // pageRankConverged loop discipline applied here; values unchanged.
-      val curM = StageMaterialize(cur, "nn_descent_cur")
+      val curM = StageMaterialize(cur)
       val und = curM.select(col("src_id"), col("nbr_id"))
         .union(curM.select(col("nbr_id").as("src_id"), col("src_id").as("nbr_id")))
       val cand = und.as("a")
@@ -431,15 +430,15 @@ object KnnGraph {
     // propagation round — materialize both so the graph build runs ONCE
     // instead of 2·iters times (Spark shares no subtrees)
     val fwd = StageMaterialize(
-      edges.select(col("src_id"), col("nbr_id"), col("sim")), "label_prop_edges")
+      edges.select(col("src_id"), col("nbr_id"), col("sim")))
     val und = StageMaterialize(fwd
       .union(fwd.select(col("nbr_id").as("src_id"),
         col("src_id").as("nbr_id"), col("sim")))
-      .groupBy("src_id", "nbr_id").agg(max("sim").as("w")), "label_prop_und")
+      .groupBy("src_id", "nbr_id").agg(max("sim").as("w")))
     val base = StageMaterialize(
       emb.select(col("vec_id"), isSeed(col("vec_id")).as("labeled"),
         when(isSeed(col("vec_id")) && isPos(col("label")), 1.0)
-          .otherwise(0.0).as("seed")), "label_prop_base")
+          .otherwise(0.0).as("seed")))
     var scores = base.withColumn("score", col("seed"))
     for (_ <- 1 to iters) {
       val contrib = und
@@ -532,16 +531,16 @@ object KnnGraph {
     // iteration — unmaterialized, each reference re-runs the whole build
     // (Spark shares no subtrees). Values unchanged.
     val fwd = StageMaterialize(
-      edges.select(col("src_id"), col("nbr_id"), col("sim")), "pagerank_edges")
+      edges.select(col("src_id"), col("nbr_id"), col("sim")))
     val und = StageMaterialize(fwd
       .union(fwd.select(col("nbr_id").as("src_id"),
         col("src_id").as("nbr_id"), col("sim")))
-      .groupBy("src_id", "nbr_id").agg(max("sim").as("w")), "pagerank_und")
+      .groupBy("src_id", "nbr_id").agg(max("sim").as("w")))
     val strength = und.groupBy("src_id")
       .agg(sum(col("w").cast(DecimalType(18, 6))).cast(DoubleType).as("s"))
     val share = StageMaterialize(und.join(strength, Seq("src_id"))
       .select(col("src_id"), col("nbr_id"),
-        round(col("w") / col("s"), 6).as("share")), "pagerank_share")
+        round(col("w") / col("s"), 6).as("share")))
     val n = emb.count()
     val teleport = (1.0 - damping) / n
     var scores = emb.select(col("vec_id"),
@@ -568,7 +567,7 @@ object KnnGraph {
     * (silent non-convergence would ship half-mixed centrality scores —
     * the [[DedupOps.connectedComponents]] rule). Per-iteration shape is
     * identical (one join + one groupBy on vec_id over the share table);
-    * every round is eagerly localCheckpoint'ed so the loop's plan
+    * every round goes through [[StageMaterialize]] so the loop's plan
     * lineage stays constant instead of doubling per iteration (the q42
     * discipline). Numerics stay plain doubles inside the loop — per-round
     * 6dp rounding would floor the residual at the rounding step and lie
@@ -583,13 +582,11 @@ object KnnGraph {
         col("src_id").as("nbr_id"), col("sim")))
       .groupBy("src_id", "nbr_id").agg(max("sim").as("w"))
     val strength = und.groupBy("src_id").agg(sum(col("w")).as("s"))
-    val share = und.join(strength, Seq("src_id"))
-      .select(col("src_id"), col("nbr_id"), (col("w") / col("s")).as("share"))
-      .localCheckpoint(true)
+    val share = StageMaterialize(und.join(strength, Seq("src_id"))
+      .select(col("src_id"), col("nbr_id"), (col("w") / col("s")).as("share")))
     val n = ids.count()
     val teleport = (1.0 - damping) / n
-    var scores = ids.select(col("vec_id"), (lit(1.0) / n).as("score"))
-      .localCheckpoint(true)
+    var scores = StageMaterialize(ids.select(col("vec_id"), (lit(1.0) / n).as("score")))
     var iter = 0
     var converged = false
     while (!converged && iter < maxIters) {
@@ -597,12 +594,11 @@ object KnnGraph {
         .join(scores.select(col("vec_id").as("src_id"), col("score")), Seq("src_id"))
         .groupBy(col("nbr_id").as("vec_id"))
         .agg(sum(col("share") * col("score")).as("inflow"))
-      val next = ids.select(col("vec_id"))
+      val next = StageMaterialize(ids.select(col("vec_id"))
         .join(contrib, Seq("vec_id"), "left_outer")
         .select(col("vec_id"),
           (lit(teleport) + lit(damping) * coalesce(col("inflow"), lit(0.0)))
-            .as("score"))
-        .localCheckpoint(true)
+            .as("score")))
       val delta = next.join(scores.withColumnRenamed("score", "old"), Seq("vec_id"))
         .agg(max(abs(col("score") - col("old")))).head().getDouble(0)
       scores = next
@@ -804,7 +800,7 @@ object KnnGraph {
     // all three folds, the delete-id collect) — materialize once so every
     // pass reads the checkpointed frame instead of re-reading parquet
     val emb = StageMaterialize(
-      embeddings(s, d).select("vec_id", "embedding", "label"), "q155_emb")
+      embeddings(s, d).select("vec_id", "embedding", "label"))
     val nl = if (nList > 0) nList else ProductQuantization.adaptiveNList(emb)
     val cents = SemanticDedup.refinedCentroids(emb, nl)
     def h(c: Column): Column =
@@ -868,16 +864,16 @@ object KnnGraph {
     // checkpointed scores keep it flat; values unchanged (every term is
     // 6dp-rounded DECIMAL arithmetic).
     val fwd = StageMaterialize(
-      edges.select(col("src_id"), col("nbr_id"), col("sim")), "q150_edges")
+      edges.select(col("src_id"), col("nbr_id"), col("sim")))
     val und = StageMaterialize(fwd
       .union(fwd.select(col("nbr_id").as("src_id"),
         col("src_id").as("nbr_id"), col("sim")))
-      .groupBy("src_id", "nbr_id").agg(max("sim").as("w")), "q150_und")
+      .groupBy("src_id", "nbr_id").agg(max("sim").as("w")))
     val strength = und.groupBy("src_id")
       .agg(sum(col("w").cast(DecimalType(18, 6))).cast(DoubleType).as("s"))
     val share = StageMaterialize(und.join(strength, Seq("src_id"))
       .select(col("src_id"), col("nbr_id"),
-        round(col("w") / col("s"), 6).as("share")), "q150_share")
+        round(col("w") / col("s"), 6).as("share")))
     val n = emb.count()
     val teleport = (1.0 - damping) / n
     var scores = emb.select(col("vec_id"), round(lit(1.0) / n, 6).as("score"))
@@ -892,7 +888,7 @@ object KnnGraph {
         .join(contrib, Seq("vec_id"), "left_outer")
         .select(col("vec_id"),
           round(lit(teleport) + lit(damping) * coalesce(col("inflow"), lit(0.0)), 6)
-            .as("score")), "q150_scores")
+            .as("score")))
       val row = next.withColumnRenamed("score", "new")
         .join(scores.withColumnRenamed("score", "old"), Seq("vec_id"))
         .select(round(abs(col("new") - col("old")), 6).as("delta"))
@@ -1055,8 +1051,7 @@ object KnnGraph {
     // three references below (the knn arm of the union, and both sides of
     // the mutual self-join) — materialize so a full kNN build passed in
     // by the gate runs once, not three times (Spark shares no subtrees)
-    val edges = StageMaterialize(edgesIn.select("src_id", "nbr_id"),
-      "mutual_edges")
+    val edges = StageMaterialize(edgesIn.select("src_id", "nbr_id"))
     val tagged = edges.withColumn("edge_set", lit("knn"))
       .unionAll(mutualEdges(edges).withColumn("edge_set", lit("mutual")))
     val lab = emb.select(col("vec_id"), col("label"))

@@ -1,18 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Shared plumbing for the partition-surgical maintenance operators
   * ([[EmbeddingMaintenance]] over the IVF cells, [[GraphMaintenance]] over
   * the at-rest kNN graph). */
 private[graft] object MaintenanceIO {
-
-  /** Spark refuses to overwrite a path its own input plan still reads
-    * (rightly — a mid-write failure would destroy the input). The rewrite
-    * set is the affected partitions only, so materializing it first
-    * (eager localCheckpoint: lineage truncated to stored blocks) both
-    * satisfies the check and bounds the exposure window to a pure write. */
-  def materialized(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** Run independent write jobs CONCURRENTLY (the guide-§2.6 overlap:
     * Spark's scheduler happily runs several jobs at once inside one

@@ -736,8 +736,7 @@ object MultimodalOps {
     val sigs = StageMaterialize(documents(s, d)
       .repartition(nPar, col("doc_id"))
       .select(col("doc_id"), bmU(split(trim(col("text")), "\\s+")).as("payload"))
-      .select(col("doc_id"), aU(col("payload")).as("ahash"), dU(col("payload")).as("dhash")),
-      "q123_sigs")
+      .select(col("doc_id"), aU(col("payload")).as("ahash"), dU(col("payload")).as("dhash")))
     def profile(c: String, kind: String) =
       DedupOps.hammingProfile(
         sigs.groupBy(col(c).as("simhash")).agg(count(lit(1)).as("n")), nPar,

@@ -470,13 +470,9 @@ object ProductQuantization {
       val dim = emb.select(size(col("embedding"))).head().getInt(0)
       val book = gridCodebook(m = 16, k = 16, subDim = dim / 16)
       val out = searchTopK(emb, encode(emb, book), book, qids, k = 5)
-      // materialize (eagerly) before releasing the parent cache.
-      // localCheckpoint, NOT cache(): the CacheManager dedups cached
-      // frames by PLAN, so a cached result returned to the bench would
-      // re-serve this pass's rows to every later measured pass — the
-      // checkpoint is keyed to this Dataset instance and dies with it,
-      // so each bench pass honestly recomputes (round-16 verdict task 8)
-      val pinned = out.localCheckpoint(true)
+      // materialize before releasing the parent cache (a barrier, not a
+      // cache(): see StageMaterialize on plan-keyed caches and the bench)
+      val pinned = StageMaterialize(out)
       emb.unpersist()
       pinned
     }
@@ -497,9 +493,8 @@ object ProductQuantization {
       val nl = adaptiveNList(emb)
       val out = ivfPqTopK(emb, book, qids, k = 5,
         coarse = Some(SemanticDedup.refinedCentroids(emb, nl)))
-      // same discipline as q81: eager materialization without a
-      // plan-keyed cache entry that would survive into later bench passes
-      val pinned = out.localCheckpoint(true)
+      // same discipline as q81
+      val pinned = StageMaterialize(out)
       emb.unpersist()
       pinned
     }

@@ -84,10 +84,10 @@ object QualityModels {
     // sf0.1 (round-16 driver: q108 0.86) — lazy below the gate,
     // checkpointed at corpus scale where the tokenize pass dominates
     val cdw = StageMaterialize.whenLarge(tok.groupBy("doc_id", "source", "token")
-      .agg(count(lit(1)).as("c_dw")), "nb_cdw")
+      .agg(count(lit(1)).as("c_dw")))
     val cw = StageMaterialize.whenLarge(cdw.groupBy("token").agg(
       sum(when(isT, col("c_dw")).otherwise(lit(0L))).as("c_t"),
-      sum(when(isT, lit(0L)).otherwise(col("c_dw"))).as("c_r")), "nb_cw")
+      sum(when(isT, lit(0L)).otherwise(col("c_dw"))).as("c_r")))
     val tot = cw.agg(
       sum(col("c_t")).as("n_t"), sum(col("c_r")).as("n_r"),
       count(lit(1)).as("v"))
@@ -127,7 +127,7 @@ object QualityModels {
     // q151 0.86)
     val cw = StageMaterialize.whenLarge(cdw.groupBy("token").agg(
       sum(when(isT, col("c_dw")).otherwise(lit(0L))).as("c_t"),
-      sum(when(isT, lit(0L)).otherwise(col("c_dw"))).as("c_r")), "nb_model_cw")
+      sum(when(isT, lit(0L)).otherwise(col("c_dw"))).as("c_r")))
     val tot = cw.agg(
       sum(col("c_t")).as("n_t"), sum(col("c_r")).as("n_r"),
       count(lit(1)).as("v"))
@@ -183,7 +183,7 @@ object QualityModels {
     // (the q118/q152/q153 stage-sharing rule). Scale-gated: at sf0.1 the
     // barrier chain measured slower than re-tokenizing (round-16 driver:
     // q151 0.86) — lazy below the gate, checkpointed at corpus scale
-    val cdw = StageMaterialize.whenLarge(nbTokenCounts(docs), "q151_cdw")
+    val cdw = StageMaterialize.whenLarge(nbTokenCounts(docs))
     val v1 = nbModelFromCounts(cdw.filter(isTrain))
     val v2 = nbModelFromCounts(cdw)
     val s1 = nbScoresFromCounts(cdw, v1)
@@ -236,7 +236,7 @@ object QualityModels {
     // arms put lazy at 3.38/3.59 s vs materialized 2.66/3.03 s at sf0.1 —
     // the hashed-bigram feature pass is CPU-bound and consumed 4×, so the
     // recompute dwarfs the barrier even at small inputs)
-    val fc = StageMaterialize(dsirFeatureCounts(docs), "q152_fc")
+    val fc = StageMaterialize(dsirFeatureCounts(docs))
     val v1 = dsirModelFromCounts(fc.filter(isTrain))
     val v2 = dsirModelFromCounts(fc)
     def admit(lw: org.apache.spark.sql.Column) =
@@ -516,7 +516,7 @@ object QualityModels {
     // materialize so the bucket aggregation over fc runs once
     val cb = StageMaterialize(fc.groupBy("b").agg(
       sum(when(isT, col("c")).otherwise(lit(0L))).as("c_t"),
-      sum(col("c")).as("c_all")), "dsir_cb")
+      sum(col("c")).as("c_all")))
     val tot = cb.agg(sum(col("c_t")).as("n_t"), sum(col("c_all")).as("n_all"))
     cb.crossJoin(broadcast(tot)).select(col("b"),
       round(
@@ -550,7 +550,7 @@ object QualityModels {
     // model training and scoring both consume the feature-count table —
     // materialize it once (the q118 discipline) instead of re-running the
     // tokenize/bigram/md5 subtree per consumer
-    val fc = StageMaterialize(dsirFeatureCounts(docs), "q109_fc")
+    val fc = StageMaterialize(dsirFeatureCounts(docs))
     val lw = dsirLogWeightsFromCounts(fc, dsirModelFromCounts(fc))
     lw.withColumn("gumbel", round(-log(-log(dsirUniform(col("doc_id")))), 6))
       .withColumn("sel_key", round(col("log_weight") + col("gumbel"), 6))
@@ -597,14 +597,13 @@ object QualityModels {
     // bucket join — materialize each once (the q118/q147 discipline;
     // Spark shares no subtrees)
     val l = StageMaterialize(documents(s, d)
-      .select(col("doc_id"), col("source"), TextOps.tokens(col("text")).as("l")),
-      "q110_tokens")
+      .select(col("doc_id"), col("source"), TextOps.tokens(col("text")).as("l")))
     val bg = StageMaterialize(l.filter(size(col("l")) >= 2)
       .select(col("doc_id"), col("source"), explode(expr(
         "transform(sequence(0, size(l) - 2), i -> struct(l[i] AS w1, l[i + 1] AS w2))"))
         .as("b"))
       .select(col("doc_id"), col("source"),
-        col("b.w1").as("w1"), col("b.w2").as("w2")), "q110_bg")
+        col("b.w1").as("w1"), col("b.w2").as("w2")))
     val cbg = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c_bg"))
     val cw = bg.groupBy("w1").agg(count(lit(1)).as("c_w1"))
     val v = l.select(explode(col("l")).as("token"))
@@ -616,7 +615,7 @@ object QualityModels {
           .as("logp"))
       .groupBy("doc_id", "source")
       .agg(round(sum(col("logp").cast(DecimalType(38, 6))).cast(DoubleType) /
-        count(lit(1)), 6).as("lp")), "q110_lp")
+        count(lit(1)), 6).as("lp")))
     val cuts = lp.groupBy("source").agg(
       MixtureOps.pcut(exactCuts)(col("lp"), 1.0 / 3).as("lo_cut"),
       MixtureOps.pcut(exactCuts)(col("lp"), 2.0 / 3).as("hi_cut"))
@@ -697,30 +696,20 @@ object QualityModels {
     * (`kept`, `nbKept`) are deliberately NOT checkpointed: their
     * recompute is a parquet re-scan plus a broadcast join against
     * already-materialized id sets, cheaper at every scale than
-    * serializing the corpus text twice. This is the
-    * write-the-intermediate-pool pattern a 100 TB curation run uses
-    * anyway; localCheckpoint is its single-action twin and — unlike
-    * persist(), which the CacheManager dedups by plan across invocations
-    * — cannot leak a warm cache into a later bench pass. Values are
-    * unchanged (the gate hash stays exact); PlanShapeSpec pins that the
-    * final plan reads materialized stage scans, not the tokenization
-    * tree.
-    *
-    * Fault tolerance: materialization goes through [[StageMaterialize]] —
-    * by default `localCheckpoint` (fast; blocks die with their executor,
-    * fine on local[32]), or, with `spark.graft.stage.dir` set, a
-    * parquet write-and-reread of each stage (the cluster-safe 100 TB
-    * form: a lost executor re-reads from storage instead of failing the
-    * job). StageMaterializeSpec pins the two modes value-identical.
+    * serializing the corpus text twice. The stages go through
+    * [[StageMaterialize]], whose doc gives the barrier's cost and why it
+    * is not a cache. Values are unchanged (the gate hash stays exact);
+    * PlanShapeSpec pins that the final plan reads materialized stage
+    * scans, not the tokenization tree.
     */
   val q118CurationPipeline: Q = (s, d) => {
     val docs = documents(s, d)
-    val ruled = StageMaterialize(TextOps.funnelRuled(docs), "q118_ruled")
+    val ruled = StageMaterialize(TextOps.funnelRuled(docs))
     val kept = docs.join(
       ruled.filter(col("rule") === "kept").select("doc_id"), "doc_id")
-    val nb = StageMaterialize(nbDocScores(kept), "q118_nb")
+    val nb = StageMaterialize(nbDocScores(kept))
     val nbKept = kept.join(nb.filter(col("score") > 0).select("doc_id"), "doc_id")
-    val fc = StageMaterialize(dsirFeatureCounts(nbKept), "q118_fc")
+    val fc = StageMaterialize(dsirFeatureCounts(nbKept))
     // lw is NOT checkpointed: both its consumers (median probe, admission
     // filter) recompute it from the materialized fc in the same job — a
     // broadcast join plus a narrow agg, cheaper than another serialized

@@ -81,10 +81,9 @@ object SimilarityOps {
     // corpus scale where the N·dim explode dominates
     val elems = StageMaterialize.whenLarge(
       emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .withColumn("x", col("x").cast(DoubleType)), "q29_elems")
+        .withColumn("x", col("x").cast(DoubleType)))
     val norms = StageMaterialize.whenLarge(elems.groupBy("vec_id")
-      .agg(sum((col("x") * col("x")).cast(DecimalType(38, 12))).cast(DoubleType).as("nrm")),
-      "q29_norms")
+      .agg(sum((col("x") * col("x")).cast(DecimalType(38, 12))).cast(DoubleType).as("nrm")))
     val qe = elems.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("pos"), col("x").as("qx"))
     val dots = qe.join(elems.select(col("vec_id").as("target_id"), col("pos"), col("x").as("tx")), Seq("pos"))

@@ -89,7 +89,7 @@ object SubstrDedup {
     // q98 0.79, q122 0.91) — lazy below the gate, checkpointed at corpus
     // scale where the gram explode dominates
     val perGramDoc = StageMaterialize.whenLarge(g.groupBy("gram", "doc_id", "source")
-      .agg(count(lit(1)).as("n_pos")), "substr_per_gram_doc")
+      .agg(count(lit(1)).as("n_pos")))
     // Cross-doc duplicated grams only: input already collapsed to one row
     // per (gram, doc), so count(*) IS the distinct-doc count and the
     // partial aggregate bounds any reducer at ≤ #mappers rows per gram.

@@ -94,4 +94,22 @@ class EmbeddingMaintenanceSpec extends AnyFunSuite with SharedSpark {
     EmbeddingMaintenance.upsertVecs(spark, path, cents, novel)
     assert(ids(path).contains(99L))
   }
+
+  test("the quantizer sidecar round-trips the centroids; an older sidecar's baseline is ignored") {
+    val path = Files.createTempDirectory("graft-emaint-sidecar").toString + "/index"
+    val cents = ProductQuantization.trainCoarse(corpusDF, nList = 2)
+    EmbeddingMaintenance.writeCellLayoutPersistent(corpusDF, cents, path)
+    val sidecar = Paths.get(path + ".quantizer.json")
+    assert(!new String(Files.readAllBytes(sidecar), "UTF-8").contains("baseline"))
+    val loaded = EmbeddingMaintenance.loadQuantizer(spark, path).get
+    assert(loaded.map(_.toSeq).toSeq == cents.map(_.toSeq).toSeq)
+    // the bytes an older writer left: the same centroids plus its stats
+    // (the local filesystem would reject the rewrite against its old .crc)
+    Files.delete(sidecar.resolveSibling(s".${sidecar.getFileName}.crc"))
+    Files.write(sidecar, (cents.map(_.mkString("[", ",", "]")).mkString("{\"cents\":[", ",", "]") +
+      ""","baseline":{"n":12,"nonEmptyCells":2,"meanCell":6.0,"maxCell":6,"meanSqErr":0.5}}""")
+      .getBytes("UTF-8"))
+    assert(EmbeddingMaintenance.loadQuantizer(spark, path).get.map(_.toSeq).toSeq ==
+      cents.map(_.toSeq).toSeq)
+  }
 }

@@ -42,8 +42,7 @@ class GraphMaintenanceSpec extends AnyFunSuite with SharedSpark {
     val embPath = root + "/index"
     val graphPath = root + "/graph"
     EmbeddingMaintenance.writeCellLayout(corpus, cents, embPath)
-    EmbeddingMaintenance.saveQuantizer(spark, embPath, cents,
-      EmbeddingMaintenance.statsOf(spark.read.parquet(embPath), cents))
+    EmbeddingMaintenance.saveQuantizer(spark, embPath, cents)
     GraphMaintenance.writeKnnGraph(spark, embPath, graphPath, K, NPROBE)
     (embPath, graphPath)
   }
@@ -142,8 +141,7 @@ class GraphMaintenanceSpec extends AnyFunSuite with SharedSpark {
     val embPath = root + "/index"
     val graphPath = root + "/graph"
     EmbeddingMaintenance.writeCellLayout(corpus, cents, embPath)
-    EmbeddingMaintenance.saveQuantizer(spark, embPath, cents,
-      EmbeddingMaintenance.statsOf(spark.read.parquet(embPath), cents))
+    EmbeddingMaintenance.saveQuantizer(spark, embPath, cents)
     GraphMaintenance.writeKnnGraph(spark, embPath, graphPath, k = 3, nProbe = 1)
     val blob1Cell = spark.read.parquet(embPath)
       .filter(col("vec_id") === 1L).select("cell").head().getInt(0)
@@ -161,8 +159,7 @@ class GraphMaintenanceSpec extends AnyFunSuite with SharedSpark {
     val cents2 = cents // frozen
     val refRoot = tmp("untouched-ref")
     EmbeddingMaintenance.writeCellLayout(after, cents2, refRoot + "/index")
-    EmbeddingMaintenance.saveQuantizer(spark, refRoot + "/index", cents2,
-      EmbeddingMaintenance.statsOf(spark.read.parquet(refRoot + "/index"), cents2))
+    EmbeddingMaintenance.saveQuantizer(spark, refRoot + "/index", cents2)
     GraphMaintenance.writeKnnGraph(spark, refRoot + "/index",
       refRoot + "/graph", k = 3, nProbe = 1)
     assert(edgeSet(GraphMaintenance.edgesAtRest(spark, graphPath)) ==
@@ -261,8 +258,7 @@ class GraphMaintenanceSpec extends AnyFunSuite with SharedSpark {
     val embPath = root + "/index"
     val graphPath = root + "/graph"
     EmbeddingMaintenance.writeCellLayout(corpus, cents, embPath)
-    EmbeddingMaintenance.saveQuantizer(spark, embPath, cents,
-      EmbeddingMaintenance.statsOf(spark.read.parquet(embPath), cents))
+    EmbeddingMaintenance.saveQuantizer(spark, embPath, cents)
     GraphMaintenance.writeKnnGraph(spark, embPath, graphPath, k = 3, nProbe = 1)
     // re-embed id 1 into blob2's (empty) cell: fresh list has ZERO rows
     val re = Seq((1L, vec(b2, 0.02f), 0)).toDF("vec_id", "embedding", "label")
@@ -277,8 +273,7 @@ class GraphMaintenanceSpec extends AnyFunSuite with SharedSpark {
     val after = spark.read.parquet(embPath).select("vec_id", "embedding", "label")
     val refRoot = tmp("revive-ref")
     EmbeddingMaintenance.writeCellLayout(after, cents, refRoot + "/index")
-    EmbeddingMaintenance.saveQuantizer(spark, refRoot + "/index", cents,
-      EmbeddingMaintenance.statsOf(spark.read.parquet(refRoot + "/index"), cents))
+    EmbeddingMaintenance.saveQuantizer(spark, refRoot + "/index", cents)
     GraphMaintenance.writeKnnGraph(spark, refRoot + "/index",
       refRoot + "/graph", k = 3, nProbe = 1)
     assert(edgeSet(GraphMaintenance.edgesAtRest(spark, graphPath)) ==
