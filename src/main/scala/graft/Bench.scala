@@ -1,7 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.catalyst.{Steered, SteeringLoop}
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
@@ -12,9 +14,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    collapse the plan to a row count (parquet count pushdown) and skip
   *    the projections entirely — noop forces every column to materialize.
   *  - one warmup pass first (JVM/codegen/broadcast warm), then the
-  *    measured pass; reported numbers are steady-state.
+  *    measured passes ([[passes]]); reported numbers are steady-state.
   */
 object Bench {
+  /** Measured passes: 5 in the default mode (the stall-wave note in [[main]]), 3 in the others. */
+  private val DefaultReps = 5
+  private val Reps = 3
+  /** [[guard]]'s margins: a proposal is adopted below 0.85 × default, a
+    * stored hint kept below 0.95 × default (a hysteresis band, not churn). */
+  private[graft] val AdoptMargin = 0.85
+  private[graft] val KeepMargin = 0.95
+
   /** JSON-bound number formatting MUST be locale-independent: `f"$v%.2f"`
     * uses the default locale, and a comma-decimal locale would emit
     * `1,42` and corrupt the machine-parsed line. */
@@ -22,91 +32,33 @@ object Bench {
     String.format(java.util.Locale.ROOT, "%." + dp + "f", Double.box(v))
 
   /** Run `df` into the `noop` sink (see the measurement notes above). */
-  private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+  private[graft] def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
-  /** The queries the steered bench explores by default. Round 13 started
-    * with 45 relational/events/text queries; round 15 extends coverage to
-    * the graph/dedup/similarity/learned families — the shuffle-heavy
-    * shapes where tools/ConfigProbe measured 20–50 % wins for the
-    * shuffle_hash/partition-tier dimensions — per the round-14 verdict
-    * (≥80 done-bar). [[Cli.queries]] overrides. */
-  private val steeredDefault: Seq[String] = Seq(
-    // relational / events / text scoring (the round-13 set)
-    "q01_pricing_summary", "q02_top_revenue", "q03_broadcast_join",
-    "q04_semi_join", "q05_anti_join", "q06_row_min_sum", "q07_min_observed",
-    "q08_distinct_sum", "q09_percentiles", "q10_count_distinct",
-    "q11_argmin", "q12_cumsum", "q13_group_stats", "q14_group_median",
-    "q15_window_rank", "q16_scalar_funcs", "q17_set_ops", "q18_interpolate",
-    "q25_ngram_jaccard", "q29_ann_bruteforce", "q34_sessionize",
-    "q35_asof_join", "q36_json_props", "q37_range_join", "q38_salted_agg",
-    "q44_rollup", "q45_pivot", "q46_cube", "q47_clean_corpus",
-    "q48_window_suite", "q53_full_outer", "q54_exists_subquery",
-    "q55_array_funcs", "q56_funnel", "q59_source_overlap",
-    "q62_tfidf_topterms", "q63_bigram_lm", "q65_lateral_topk",
-    "q66_decay_engagement", "q68_regional_revenue", "q71_sliding_windows",
-    "q72_ordered_set_aggs", "q73_event_paths", "q74_cohort_retention",
-    "q75_promo_revenue",
-    // dedup family (gram-keyed self-joins, shuffle-dominated)
-    "q24_dedup_exact", "q26_minhash_signatures", "q27_lsh_pairs",
-    "q28_simhash", "q42_dedup_clusters", "q49_decontaminate",
-    "q60_chunk_dedup", "q64_hamming_profile", "q95_dedup_against_index",
-    "q98_substr_spans", "q122_substr_removal", "q127_bloom_decontam",
-    "q133_containment", "q134_winnowing", "q137_cdc_chunks",
-    // similarity / graph family (cell joins, top-k windows, components)
-    "q30_ann_lsh_bucketed", "q32_embedding_neardup", "q33_ann_native",
-    "q61_embedding_outliers", "q70_dim_stats", "q81_pq_ann",
-    "q83_ivfpq_ann", "q102_semantic_dedup", "q103_knn_graph",
-    "q105_semantic_clusters", "q107_diversity_sample", "q114_filtered_ann",
-    "q115_maxsim", "q117_hybrid_rrf", "q119_semantic_decontam",
-    "q126_ivf_recall_audit", "q129_label_prop", "q130_pagerank",
-    "q132_ndcg_audit", "q136_bm25", "q139_jl_audit", "q140_silhouette",
-    "q144_mutual_knn",
-    // text / learned-selection / mixture (vocab-keyed aggs + scoring joins)
-    "q20_token_stats", "q21_quality_score", "q22_lang_id",
-    "q23_fingerprint", "q39_vocab_topk", "q51_repetition",
-    "q52_token_histogram", "q80_char_diversity", "q100_repetition",
-    "q101_source_divergence", "q104_zipf_slope", "q108_nb_quality",
-    "q109_dsir_resample", "q110_ccnet_buckets", "q128_heavy_hitters",
-    "q131_unigram_logprob", "q142_kn_perplexity", "q143_countmin_audit",
-    "q147_domain_reweight", "q151_model_drift", "q152_dsir_drift",
-    "q153_kn_drift", "q156_effective_tokens",
-    // packing / layout / events-at-scale
-    "q76_seq_packing", "q77_chunk_windows", "q85_temperature_mix",
-    "q86_shard_assign", "q90_winsorize", "q106_priority_sample",
-    "q141_packing_efficiency", "q145_zorder_layout", "q148_reshard_audit",
-    "q154_unimax_budget",
-    "q19_event_windows", "q88_sessionize_scaled", "q89_event_paths_scaled",
-    "q91_asof_scaled",
-    // round-16 (verdict task 4): the remaining families — multimodal
-    // headers, samplers, composed pipelines, calibration audits — so the
-    // steered artifact covers the whole SparkEntry surface. The one
-    // deliberate exclusion is q155_atrest_resolve: it builds its graph
-    // artifact in a fresh temp dir per invocation, so its plan
-    // fingerprint is unstable by construction (the relation PATH changes,
-    // which literal-nulling cannot unify) and a learned hint could never
-    // match a later execution.
-    "q31_multimodal_decode", "q40_hash_split", "q41_approx_stats",
-    "q43_frame_sample", "q50_stratified_sample", "q57_redact",
-    "q58_source_quota", "q67_bpe_merges", "q69_token_budget",
-    "q78_embed_quantize", "q79_lang_drift", "q82_e2e_pipeline",
-    "q84_lsh_fast", "q87_ngram_novelty", "q92_dedup_clusters_fast",
-    "q93_image_meta", "q94_audio_meta", "q96_video_meta",
-    "q97_crossmodal_purity", "q99_bpe_encode", "q111_fertility",
-    "q112_filter_funnel", "q113_snapshot_diff", "q116_truncation_audit",
-    "q118_curation_pipeline", "q120_export_order", "q121_split_leakage",
-    "q123_perceptual_neardup", "q124_semdedup_xcell", "q125_nn_descent",
-    "q135_sketch_calibration", "q138_edit_verify", "q146_cluster_split",
-    "q149_graph_arrival_diff", "q150_pagerank_residual")
+  private def outDir(env: String, default: String): Path = Paths.get(sys.env.getOrElse(env, default))
 
-  /** The steered modes' queries ([[Cli.queries]] over [[steeredDefault]])
-    * as session functions, each run once into the noop sink so the JVM and
-    * codegen are warm before anything is measured. */
-  private def steeredQueries(spark: SparkSession,
-                             sfDir: String): Seq[(String, SparkSession => DataFrame)] = {
-    val qs = Cli.queries(steeredDefault).map(n =>
+  /** The arm that runs a query under the session default. */
+  private def plain(spark: SparkSession): (String, (SparkSession => DataFrame) => Unit) =
+    "default" -> (fn => noop(fn(spark)))
+
+  /** The queries the steered modes explore by default: all of SparkEntry
+    * but q155_atrest_resolve. It builds its graph artifact in a fresh temp
+    * dir per invocation, so its plan fingerprint is unstable by
+    * construction (the relation PATH changes, which literal-nulling cannot
+    * unify) and a learned hint could never match a later execution.
+    * [[Cli.queries]] overrides. */
+  private def steeredDefault: Seq[String] =
+    SparkEntry.queries.keys.toSeq.sorted.filterNot(_ == "q155_atrest_resolve")
+
+  /** A mode's queries ([[Cli.queries]] over `default`) as session
+    * functions, each run once into the noop sink so the JVM and codegen
+    * are warm before anything is measured, and the run's `failed` map. */
+  private[graft] def warmQueries(spark: SparkSession, sfDir: String, default: Seq[String])
+      : (Seq[(String, SparkSession => DataFrame)], mutable.Map[String, String]) = {
+    val failed = mutable.LinkedHashMap.empty[String, String]
+    val qs = Cli.queries(default).map(n =>
       n -> ((sp: SparkSession) => SparkEntry.queries(n)(sp, sfDir)))
-    qs.foreach { case (_, fn) => try noop(fn(spark)) catch { case _: Throwable => () } }
-    qs
+    passes(qs, Seq(plain(spark)), 1, failed)
+    (qs, failed)
   }
 
   /** `graft.Bench --steered` (round-13 verdict task 4): realize the
@@ -120,134 +72,93 @@ object Bench {
     * learned hints, steered-vs-default totals) land in
     * `experiment/steering/`. */
   private def steeredMain(spark: SparkSession, sfDir: String): Unit = {
-    import graft.catalyst.{Steered, SteeringLoop}
-    val qs = steeredQueries(spark, sfDir)
+    val (qs, failed) = warmQueries(spark, sfDir, steeredDefault)
     val names = qs.map(_._1)
     require(names.size >= 32, s"steered bench wants ≥32 queries, got ${names.size}")
     val configs = SteeringLoop.crossed(SteeringLoop.defaultConfigs,
       SteeringLoop.partitionTiers(8))
-    val batch = sys.env.getOrElse("SPARK_GRAFT_STEER_BATCH", "32").toInt
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_STEER_ROUNDS", "10").toInt
-    val res = SteeringLoop.steer(spark, qs, configs,
-      batch = batch, rounds = rounds, learn = false)
-    // TWO-STAGE ADOPTION. Stage 1 (propose): the loop's best observed
-    // config per query with a ≥10 % margin over the observed default.
+    val res = SteeringLoop.steer(spark, qs, configs, batch = 32, rounds = 10, learn = false)
+    // TWO-STAGE ADOPTION. Stage 1 (propose): the loop's best completed
+    // config per query (its recommendation) with a ≥10 % margin over the
+    // observed default.
     // Selection on noisy minima is BIASED — the min over several sampled
     // cells beats the query's single default observation almost surely
     // (measured: without the second stage, all 45 queries "cleared" the
     // margin and the banked steered arm came out SLOWER) — so stage 2
-    // (validate) re-measures each proposed pair back-to-back on FRESH
-    // data, independent of the sample that selected it, and only
-    // survivors are learned. Real wins (the 20-50 % p8/shuffle_hash
-    // margins tools/ConfigProbe measures on the shuffle-heavy queries)
-    // pass both stages; noise picks fail the independent re-measure.
-    val obsMin = res.observations.groupBy(o => (o.query, o.config))
-      .view.mapValues(_.map(_.seconds).min).toMap
-    val proposals = names.indices.flatMap { qi =>
-      obsMin.get((qi, 0)).flatMap { d =>
-        val cands = configs.indices.drop(1)
-          .flatMap(ci => obsMin.get((qi, ci)).map(ci -> _))
-        cands.sortBy(_._2).headOption.collect {
-          case (bc, bt) if bt < 0.9 * d => (qi, bc)
-        }
-      }
-    }
-    // validation is min-of-2 per arm, alternated, at a WIDER 15 % margin:
-    // this host's sub-second queries carry ±10 % stall noise, and a
-    // single-sample 10 % bar still let ~noise-level proposals through
-    // (banked: half regressed). Only margins that survive two independent
-    // alternations at 15 % are worth pinning to a plan — which is also
-    // the honest deployment rule: a learned hint must beat the default by
-    // more than the environment's own variance to be worth shipping.
-    val adopted = scala.collection.mutable.Map.empty[String, String]
-    proposals.foreach { case (qi, ci) =>
-      val d = Seq(SteeringLoop.measure(spark, qs(qi)._2, configs.head),
-        SteeringLoop.measure(spark, qs(qi)._2, configs.head)).min
-      val t = Seq(SteeringLoop.measure(spark, qs(qi)._2, configs(ci)),
-        SteeringLoop.measure(spark, qs(qi)._2, configs(ci))).min
-      if (t < 0.85 * d) {
-        Steered.learn(qs(qi)._2(spark), configs(ci).strategy, configs(ci).confs)
-        adopted(names(qi)) = configs(ci).name
-      }
-    }
-    val outDir = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_STEER_OUT", "experiment/steering"))
-    java.nio.file.Files.createDirectories(outDir)
+    // (validate) re-measures each proposed pair on FRESH data,
+    // independent of the sample that selected it, and only survivors are
+    // learned. Real wins (the 20-50 % p8/shuffle_hash margins
+    // tools/ConfigProbe measures on the shuffle-heavy queries) pass both
+    // stages; noise picks fail the independent re-measure.
+    // Validation is [[guard]] at a WIDER 15 % margin: this host's
+    // sub-second queries carry ±10 % stall noise, and a single-sample
+    // 10 % bar still let ~noise-level proposals through (banked: half
+    // regressed). Only margins that survive two independent alternations
+    // at 15 % are worth pinning to a plan — which is also the honest
+    // deployment rule: a learned hint must beat the default by more than
+    // the environment's own variance to be worth shipping.
+    val validated = res.recommendations.filter(r => r.configName != configs.head.name &&
+      r.observedSeconds < 0.9 * r.defaultSeconds).flatMap { r =>
+      val cfg = configs.find(_.name == r.configName).get
+      guard(r.queryName, AdoptMargin, failed) {
+        val df = SparkEntry.queries(r.queryName)(spark, sfDir)
+        Steered.learn(df, cfg.strategy, cfg.confs)
+        df
+      }.map(v => r.queryName -> (cfg.name, v))
+    }.toMap
+    val adopted = validated.collect { case (n, (c, (_, _, true))) => n -> c }
+    val out = outDir("SPARK_GRAFT_STEER_OUT", "experiment/steering")
+    Files.createDirectories(out)
     SteeringLoop.saveTrace(res, names, configs.map(_.name),
-      outDir.resolve("bench_steer_trace.json"))
-    Steered.save(outDir.resolve("bench_learned_hints.json"))
+      out.resolve("bench_steer_trace.json"))
+    Steered.save(out.resolve("bench_learned_hints.json"))
     // versioned decision table (round-14 verdict task 7): a deployment
     // pins `hints/v=N.json` while the next steering run publishes v=N+1
-    val hintsVersion = Steered.saveVersioned(outDir.resolve("hints"))
-    // bank it: alternate whole default/steered passes, min per query
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val (defaultT, steeredT) = bankArms(spark, qs, adopted.contains, reps)
-    // totals compare apples-to-apples: a query that failed every pass of
-    // EITHER arm is excluded from BOTH totals (round-15 ADVICE: per-arm
-    // drops let a steered-only failure silently flatter the steered
-    // total); its -1 still lands in the per-query artifact, and the
-    // excluded count is reported alongside the totals
-    val comparable = names.indices.filter(i => defaultT(i) >= 0 && steeredT(i) >= 0)
-    val nExcluded = names.size - comparable.size
-    val dTotal = comparable.map(defaultT).sum
-    val sTotal = comparable.map(steeredT).sum
-    val recs = adopted.toMap
-    val sb = new StringBuilder
-    sb.append("{\n  \"sf\": \"").append(sfDir).append("\",\n")
-    sb.append(s"""  "reps": $reps, "configs": ${configs.size}, "hints_version": $hintsVersion, "excluded": $nExcluded,\n""")
-    sb.append(s"""  "default_total": ${fmt(dTotal, 3)},\n""")
-    sb.append(s"""  "steered_total": ${fmt(sTotal, 3)},\n""")
-    sb.append(s"""  "exploration_seconds": ${fmt(res.totalExplorationSeconds, 3)},\n""")
-    sb.append("  \"queries\": {\n")
-    sb.append(names.indices.map { i =>
-      s"""    "${names(i)}": {"default": ${fmt(defaultT(i), 3)}, """ +
-        s""""steered": ${fmt(steeredT(i), 3)}, "config": "${recs.getOrElse(names(i), "default")}"}"""
-    }.mkString(",\n"))
-    sb.append("\n  }\n}\n")
-    java.nio.file.Files.writeString(outDir.resolve("steered_bench.json"), sb.toString)
+    val hintsVersion = Steered.saveVersioned(out.resolve("hints"))
+    val (dTotal, sTotal, nExcluded) = bankHints(spark, qs, adopted.contains, failed,
+      out.resolve("steered_bench.json"), "sf" -> sfDir, "configs" -> configs.size,
+      "hints_version" -> hintsVersion, "exploration_seconds" -> res.totalExplorationSeconds) { n =>
+      // a proposed query also records its validation arms and verdict
+      ("config" -> adopted.getOrElse(n, "default")) +: validated.get(n).toSeq.map { case (c, (d, t, k)) =>
+        "proposal" -> Obj("config" -> c, "default" -> d, "hinted" -> t, "kept" -> k) }
+    }
     spark.stop()
     println(s"""{"metric":"steered_total","value":${fmt(sTotal, 2)},""" +
       s""""default_total":${fmt(dTotal, 2)},"unit":"sec","n":${names.size},""" +
       s""""excluded":$nExcluded,"sf":"$sfDir"}""")
   }
 
-  /** Alternate whole default/steered passes and take per-query minima.
-    * Queries in `hinted` run genuinely different plans per arm and keep
-    * separate minima; for every OTHER query both arms execute the
-    * IDENTICAL plan, so the samples are POOLED into one min used on both
-    * sides — more samples of the same plan under the bench's min-of-k
-    * estimator, never a cross-plan comparison. Without pooling, per-arm
-    * minima of identical plans differed by up to ±0.8 s of pure window
-    * noise at sf0.1 and SUMMED into a phantom steering regression larger
-    * than the real adopted deltas (round-16 measurement). A query that
-    * fails every pass of an arm records −1.0 (totals handle exclusion). */
-  private def bankArms(spark: SparkSession,
-                       qs: Seq[(String, SparkSession => DataFrame)],
-                       hinted: String => Boolean,
-                       reps: Int): (IndexedSeq[Double], IndexedSeq[Double]) = {
-    import graft.catalyst.Steered
-    def once(fn: SparkSession => DataFrame, steered: Boolean): Double = {
-      val t0 = System.nanoTime()
-      try {
-        val df = fn(spark)
-        if (steered) Steered.run(df)(noop) else noop(df)
-      } catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
-    val passes = (1 to reps).flatMap(_ => Seq(
-      qs.map { case (_, fn) => once(fn, steered = false) },
-      qs.map { case (_, fn) => once(fn, steered = true) }))
-    def armMin(i: Int, offset: Int): Double =
-      passes.zipWithIndex.collect { case (p, pi) if pi % 2 == offset => p(i) }
-        .filter(_ >= 0).minOption.getOrElse(-1.0)
-    val pairs = qs.indices.map { i =>
-      if (hinted(qs(i)._1)) (armMin(i, 0), armMin(i, 1))
-      else {
-        val pooled = passes.map(_(i)).filter(_ >= 0).minOption.getOrElse(-1.0)
-        (pooled, pooled)
-      }
-    }
-    (pairs.map(_._1), pairs.map(_._2))
+  /** Bank a hint set: alternate whole default/steered [[passes]] and take
+    * per-query minima. Queries in `hinted` run genuinely different plans
+    * per arm and keep separate minima; for every OTHER query both arms
+    * execute the IDENTICAL plan, so the samples are POOLED into one min
+    * used on both sides — more samples of the same plan under the bench's
+    * min-of-k estimator, never a cross-plan comparison. Without pooling,
+    * per-arm minima of identical plans differed by up to ±0.8 s of pure
+    * window noise at sf0.1 and SUMMED into a phantom steering regression
+    * larger than the real adopted deltas (round-16 measurement).
+    * Writes `path`: `head`, the reps and the [[comparableTotals]], then
+    * per query both arms plus `extra(query)`. Returns those totals. */
+  private def bankHints(spark: SparkSession, qs: Seq[(String, SparkSession => DataFrame)],
+                        hinted: String => Boolean, failed: mutable.Map[String, String],
+                        path: Path, head: (String, Any)*)
+                       (extra: String => Seq[(String, Any)]): (Double, Double, Int) = {
+    val Seq(d, s) = passes(qs, Seq(plain(spark),
+      "steered" -> ((fn: SparkSession => DataFrame) => Steered.run(fn(spark))(noop))),
+      Reps, failed, pooled = n => !hinted(n))
+    val totals @ (dTotal, sTotal, nExcluded) = comparableTotals(d, s)
+    writeArtifact(path, head ++ Seq("reps" -> Reps, "excluded" -> nExcluded,
+      "default_total" -> dTotal, "steered_total" -> sTotal), "queries", qs.indices.map(i =>
+      qs(i)._1 -> Obj(Seq("default" -> d(i), "steered" -> s(i)) ++ extra(qs(i)._1): _*)), failed)
+    totals
+  }
+
+  /** Load the latest hints version under `out/hints`; returns its size
+    * and its number. */
+  private def loadLatestHints(out: Path): (Int, Long) = {
+    val loaded = Steered.loadLatestVersion(out.resolve("hints"))
+    require(loaded > 0, s"no stored hints under ${out.resolve("hints")} — run --steered first")
+    (loaded, Steered.latestVersion(out.resolve("hints")).getOrElse(0L))
   }
 
   /** `graft.Bench --steered --bank` : re-bank the LATEST stored hints
@@ -256,40 +167,19 @@ object Bench {
     * to refresh the banked artifact after a hints change. Writes
     * experiment/steering/banked_bench.json. */
   private def bankMain(spark: SparkSession, sfDir: String): Unit = {
-    import graft.catalyst.Steered
-    val outDir = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_STEER_OUT", "experiment/steering"))
-    val loaded = Steered.loadLatestVersion(outDir.resolve("hints"))
-    require(loaded > 0, s"no stored hints under ${outDir.resolve("hints")} — " +
-      "run --steered first")
-    val version = Steered.latestVersion(outDir.resolve("hints")).getOrElse(0L)
-    val qs = steeredQueries(spark, sfDir)
-    val names = qs.map(_._1)
+    val out = outDir("SPARK_GRAFT_STEER_OUT", "experiment/steering")
+    val (_, version) = loadLatestHints(out)
+    val (qs, failed) = warmQueries(spark, sfDir, steeredDefault)
     val hintedSet = qs.flatMap { case (n, fn) =>
       try if (Steered.hintFor(fn(spark)).isDefined) Some(n) else None
-      catch { case _: Throwable => None }
+      catch { case e: Throwable => recordFailure(n, e, failed); None }
     }.toSet
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val (defaultT, steeredT) = bankArms(spark, qs, hintedSet, reps)
-    val comparable = names.indices.filter(i => defaultT(i) >= 0 && steeredT(i) >= 0)
-    val nExcluded = names.size - comparable.size
-    val dTotal = comparable.map(defaultT).sum
-    val sTotal = comparable.map(steeredT).sum
-    val sb = new StringBuilder
-    sb.append("{\n  \"sf\": \"").append(sfDir).append("\",\n")
-    sb.append(s"""  "reps": $reps, "hints_version": $version, "hinted": ${hintedSet.size}, "excluded": $nExcluded,\n""")
-    sb.append(s"""  "default_total": ${fmt(dTotal, 3)},\n""")
-    sb.append(s"""  "steered_total": ${fmt(sTotal, 3)},\n""")
-    sb.append("  \"queries\": {\n")
-    sb.append(names.indices.map { i =>
-      s"""    "${names(i)}": {"default": ${fmt(defaultT(i), 3)}, """ +
-        s""""steered": ${fmt(steeredT(i), 3)}, "hinted": ${hintedSet.contains(names(i))}}"""
-    }.mkString(",\n"))
-    sb.append("\n  }\n}\n")
-    java.nio.file.Files.writeString(outDir.resolve("banked_bench.json"), sb.toString)
+    val (dTotal, sTotal, _) = bankHints(spark, qs, hintedSet, failed,
+      out.resolve("banked_bench.json"), "sf" -> sfDir, "hints_version" -> version,
+      "hinted" -> hintedSet.size)(n => Seq("hinted" -> hintedSet.contains(n)))
     spark.stop()
     println(s"""{"metric":"banked_steered_total","value":${fmt(sTotal, 2)},""" +
-      s""""default_total":${fmt(dTotal, 2)},"unit":"sec","n":${names.size},""" +
+      s""""default_total":${fmt(dTotal, 2)},"unit":"sec","n":${qs.size},""" +
       s""""hinted":${hintedSet.size},"hints_version":$version,"sf":"$sfDir"}""")
   }
 
@@ -298,41 +188,53 @@ object Bench {
     * adoption; as data and code move they can silently regress — exactly
     * the failure mode the reference's offline loop exists to manage.
     * This arm loads the LATEST stored hints version, re-measures every
-    * hinted query default-vs-hinted min-of-2 alternated on the current
-    * window, DEMOTES hints that no longer beat the default by ≥5 %
-    * ([[graft.catalyst.Steered.revalidateOne]] — adoption demanded 15 %,
-    * so a 5 % keep-bar gives hysteresis instead of churn), and publishes
-    * the surviving registry as the next hints version. Artifact:
+    * hinted query through [[guard]] at the 5 % keep margin (adoption
+    * demanded 15 %, so the keep-bar gives hysteresis instead of churn),
+    * DEMOTES hints that no longer clear it, and publishes the surviving
+    * registry as the next hints version. Artifact:
     * experiment/steering/revalidate.json (kept/demoted counts + the
     * per-query numbers). */
   private def revalidateMain(spark: SparkSession, sfDir: String): Unit = {
-    import graft.catalyst.Steered
-    val outDir = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_STEER_OUT", "experiment/steering"))
-    val loaded = Steered.loadLatestVersion(outDir.resolve("hints"))
-    require(loaded > 0, s"no stored hints under ${outDir.resolve("hints")} — " +
-      "run --steered first")
-    val qs = steeredQueries(spark, sfDir)
+    val out = outDir("SPARK_GRAFT_STEER_OUT", "experiment/steering")
+    val (loaded, _) = loadLatestHints(out)
+    val (qs, failed) = warmQueries(spark, sfDir, steeredDefault)
     val results = qs.flatMap { case (name, fn) =>
-      try Steered.revalidateOne(fn(spark))(noop).map {
-        case (d, t, kept) => (name, d, t, kept)
-      } catch { case _: Throwable => None }
+      guard(name, KeepMargin, failed)(fn(spark)).map(name -> _)
     }
-    val kept = results.count(_._4)
+    val kept = results.count(_._2._3)
     val demoted = results.size - kept
-    val version = Steered.saveVersioned(outDir.resolve("hints"))
-    val sb = new StringBuilder
-    sb.append("{\n  \"sf\": \"").append(sfDir).append("\",\n")
-    sb.append(s"""  "hints_loaded": $loaded, "kept": $kept, "demoted": $demoted, "hints_version": $version,\n""")
-    sb.append("  \"queries\": {\n")
-    sb.append(results.map { case (name, d, t, k) =>
-      s"""    "$name": {"default": ${fmt(d, 3)}, "hinted": ${fmt(t, 3)}, "kept": $k}"""
-    }.mkString(",\n"))
-    sb.append("\n  }\n}\n")
-    java.nio.file.Files.writeString(outDir.resolve("revalidate.json"), sb.toString)
+    val version = Steered.saveVersioned(out.resolve("hints"))
+    writeArtifact(out.resolve("revalidate.json"), Seq(
+      "sf" -> sfDir, "hints_loaded" -> loaded, "kept" -> kept,
+      "demoted" -> demoted, "hints_version" -> version),
+      "queries", results.map { case (name, (d, t, k)) =>
+        name -> Obj("default" -> d, "hinted" -> t, "kept" -> k) },
+      failed)
     spark.stop()
     println(s"""{"metric":"revalidate_kept","value":$kept,"demoted":$demoted,""" +
       s""""hints_version":$version,"unit":"count","sf":"$sfDir"}""")
+  }
+
+  /** The adoption guard: the native plan stays unless the hinted plan
+    * measurably wins. [[Steered.revalidateOne]] re-measures the query
+    * `df` builds, min-of-2 per arm with the arms alternated, and keeps its
+    * stored hint only below `margin` × default ([[AdoptMargin]] for a
+    * proposal `df` has just learned, [[KeepMargin]] for a stored hint).
+    * Returns (default, hinted, kept), None for a query with no hint. A
+    * query that throws is logged and kept in `failed` like
+    * [[timeQuery]]'s, and loses its hint: it has not shown a win. */
+  private[graft] def guard(name: String, margin: Double, failed: mutable.Map[String, String],
+                           timer: (() => Unit) => Double = Steered.wallClockTimer)
+                          (df: => DataFrame): Option[(Double, Double, Boolean)] = {
+    var built: Option[DataFrame] = None
+    try {
+      built = Some(df)
+      Steered.revalidateOne(built.get, reps = 2, margin = margin, timer = timer)(noop)
+    } catch { case e: Throwable =>
+      recordFailure(name, e, failed)
+      built.foreach(Steered.unlearn)
+      None
+    }
   }
 
   /** `graft.Bench --graph` (round-14 verdict task 3): MEASURE the at-rest
@@ -356,16 +258,12 @@ object Bench {
     val nProbe = 2
     val nl = ProductQuantization.adaptiveNList(emb)
     val cents = SemanticDedup.refinedCentroids(emb, nl)
-    val root = java.nio.file.Files.createTempDirectory("graft-graph-bench")
+    val root = Files.createTempDirectory("graft-graph-bench")
     val embPath = s"$root/index"
     val graphPath = s"$root/graph"
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try body catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
+    val failed = mutable.LinkedHashMap.empty[String, String]
     // the one-time cost a deployment pays ONCE per graph lifetime
-    val buildSec = timed {
+    val buildSec = timeQuery("build", failed) {
       EmbeddingMaintenance.writeCellLayoutPersistent(emb, cents, embPath)
       GraphMaintenance.writeKnnGraph(spark, embPath, graphPath, k, nProbe)
     }
@@ -382,46 +280,22 @@ object Bench {
       "q150_pr_converged" -> (e =>
         KnnGraph.pageRankConverged(emb.select("vec_id"), e,
           tol = 1e-6, maxIters = 20)))
-    def runPass(edges: () => DataFrame): Seq[Double] =
-      consumers.map { case (_, fn) =>
-        timed(noop(fn(edges())))
-      }
+    val forms: Seq[(String, (DataFrame => DataFrame) => Unit)] = Seq(
+      "rebuild" -> (fn => noop(fn(KnnGraph.knnEdgesWithCents(emb, cents, k, nProbe)))),
+      "atrest" -> (fn => noop(fn(GraphMaintenance.edgesAtRest(spark, graphPath)))))
     // warm both forms once, then alternate whole passes, min per query
-    runPass(() => KnnGraph.knnEdgesWithCents(emb, cents, k, nProbe))
-    runPass(() => GraphMaintenance.edgesAtRest(spark, graphPath))
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val passes = (1 to reps).flatMap(_ => Seq(
-      runPass(() => KnnGraph.knnEdgesWithCents(emb, cents, k, nProbe)),
-      runPass(() => GraphMaintenance.edgesAtRest(spark, graphPath))))
-    def minArm(offset: Int): Seq[Double] = consumers.indices.map(i =>
-      passes.zipWithIndex.collect { case (p, pi) if pi % 2 == offset => p(i) }
-        .filter(_ >= 0).minOption.getOrElse(-1.0))
-    val rebuildT = minArm(0)
-    val atRestT = minArm(1)
-    // same apples-to-apples rule as the steered arm: a consumer that
-    // failed every pass of either form drops from BOTH totals
-    val comparable = consumers.indices.filter(i => rebuildT(i) >= 0 && atRestT(i) >= 0)
-    val nExcluded = consumers.size - comparable.size
-    val rTotal = comparable.map(rebuildT).sum
-    val aTotal = comparable.map(atRestT).sum
-    val outDir = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_GRAPH_OUT", "experiment/graph"))
-    java.nio.file.Files.createDirectories(outDir)
-    val sb = new StringBuilder
-    sb.append("{\n")
-    sb.append(s"""  "sf": "$sfDir", "reps": $reps, "k": $k, "nProbe": $nProbe, "nList": $nl, "excluded": $nExcluded,\n""")
-    sb.append(s"""  "n_vectors": ${emb.count()},\n""")
-    sb.append(s"""  "build_once_seconds": ${fmt(buildSec, 3)},\n""")
-    sb.append(s"""  "rebuild_total": ${fmt(rTotal, 3)},\n""")
-    sb.append(s"""  "atrest_total": ${fmt(aTotal, 3)},\n""")
-    sb.append("  \"consumers\": {\n")
-    sb.append(consumers.indices.map { i =>
-      s"""    "${consumers(i)._1}": {"rebuild": ${fmt(rebuildT(i), 3)}, "atrest": ${fmt(atRestT(i), 3)}}"""
-    }.mkString(",\n"))
-    sb.append("\n  }\n}\n")
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    java.nio.file.Files.writeString(
-      outDir.resolve(s"graph_bench_$sfName.json"), sb.toString)
+    passes(consumers, forms, 1, failed)
+    val Seq(rebuildT, atRestT) = passes(consumers, forms, Reps, failed)
+    val (rTotal, aTotal, nExcluded) = comparableTotals(rebuildT, atRestT)
+    val sfName = Paths.get(sfDir).getFileName.toString
+    writeArtifact(outDir("SPARK_GRAFT_GRAPH_OUT", "experiment/graph")
+      .resolve(s"graph_bench_$sfName.json"), Seq(
+      "sf" -> sfDir, "reps" -> Reps, "k" -> k, "nProbe" -> nProbe, "nList" -> nl,
+      "excluded" -> nExcluded, "n_vectors" -> emb.count(),
+      "build_once_seconds" -> buildSec, "rebuild_total" -> rTotal, "atrest_total" -> aTotal),
+      "consumers", consumers.indices.map(i =>
+        consumers(i)._1 -> Obj("rebuild" -> rebuildT(i), "atrest" -> atRestT(i))),
+      failed)
     spark.stop()
     println(s"""{"metric":"graph_atrest_total","value":${fmt(aTotal, 2)},""" +
       s""""rebuild_total":${fmt(rTotal, 2)},""" +
@@ -429,20 +303,84 @@ object Bench {
       s""""excluded":$nExcluded,"sf":"$sfDir"}""")
   }
 
-  /** Wall seconds of one run of query `name` into the noop sink, or -1.0
-    * when it throws; the failure is logged to stderr and kept in `failed`
-    * (name → last message) for the durable artifact. */
-  private[graft] def timeQuery(spark: SparkSession, name: String, fn: SparkSession => DataFrame,
-                               failed: mutable.Map[String, String]): Double = {
+  /** Wall seconds of one run of `body` (item `name`), or -1.0 when it
+    * throws; the failure is logged to stderr and kept in `failed` (name →
+    * last message) for the durable artifact. */
+  private[graft] def timeQuery(name: String, failed: mutable.Map[String, String])
+                              (body: => Unit): Double = {
     val t0 = System.nanoTime()
-    try noop(fn(spark))
-    catch { case e: Throwable =>
-      val msg = s"${e.getClass.getName}: ${e.getMessage}"
-      System.err.println(s"[bench] $name failed: $msg")
-      failed(name) = msg
-      return -1.0
-    }
+    try body catch { case e: Throwable => recordFailure(name, e, failed); return -1.0 }
     (System.nanoTime() - t0) / 1e9
+  }
+
+  private def recordFailure(name: String, e: Throwable, failed: mutable.Map[String, String]): Unit = {
+    val msg = s"${e.getClass.getName}: ${e.getMessage}"
+    System.err.println(s"[bench] $name failed: $msg")
+    failed(name) = msg
+  }
+
+  /** Whole measured passes over `arms` × `items`, ordered (rep, arm,
+    * item), so an item's runs are separated by a full pass of everything
+    * else (see the stall-wave note in [[main]]). Each run goes through
+    * [[timeQuery]]. Returns, per arm, each item's minimum over its
+    * successful runs, or -1.0 when none succeeded. An item that `pooled`
+    * accepts runs the identical plan on every arm (see [[bankHints]]): its
+    * minimum is taken over all arms' runs and reported on each. */
+  private[graft] def passes[A](items: Seq[(String, A)], arms: Seq[(String, A => Unit)], reps: Int,
+                              failed: mutable.Map[String, String],
+                              pooled: String => Boolean = _ => false): Seq[IndexedSeq[Double]] = {
+    val runs = for (_ <- 1 to reps; (_, arm) <- arms)
+      yield items.map { case (n, a) => timeQuery(n, failed)(arm(a)) }
+    arms.indices.map { ai =>
+      items.indices.map { i =>
+        val own = runs.indices.filter(_ % arms.size == ai).map(runs(_)(i))
+        val t = (if (pooled(items(i)._1)) runs.map(_(i)) else own)
+          .filter(_ >= 0).minOption.getOrElse(-1.0)
+        System.err.println(f"[bench] ${items(i)._1} ${arms(ai)._1}: $t%.2f s " +
+          s"(${own.map(x => f"$x%.2f").mkString("/")})")
+        t
+      }
+    }
+  }
+
+  /** Totals that compare apples-to-apples: an item that failed every run
+    * of EITHER arm is excluded from BOTH totals (round-15 ADVICE: per-arm
+    * drops let a steered-only failure silently flatter the steered
+    * total); its -1 still lands in the per-item artifact. Returns (a's
+    * total, b's total, the excluded count). */
+  private[graft] def comparableTotals(a: Seq[Double], b: Seq[Double]): (Double, Double, Int) = {
+    val ok = a.indices.filter(i => a(i) >= 0 && b(i) >= 0)
+    (ok.map(a).sum, ok.map(b).sum, a.size - ok.size)
+  }
+
+  /** One JSON object of an artifact: Doubles print with 3 decimals, Strings
+    * quoted, anything else (numbers, booleans, nested [[Obj]]s) as itself. */
+  private final case class Obj(fields: (String, Any)*) {
+    override def toString: String = fields.map { case (k, v) =>
+      s"${Verify.quote(k)}: ${json(v)}" }.mkString("{", ", ", "}")
+  }
+
+  private def json(v: Any): String = v match {
+    case d: Double => fmt(d, 3)
+    case s: String => Verify.quote(s)
+    case x => x.toString
+  }
+
+  /** Write a mode's artifact: the `head` keys, then `items` under
+    * `itemsKey`, then `failed` (every item that threw on some run, with
+    * its last message). One line per item keeps diffs reviewable. */
+  private def writeArtifact(path: Path, head: Seq[(String, Any)], itemsKey: String,
+                            items: Seq[(String, Any)],
+                            failed: collection.Map[String, String]): Unit = {
+    def lines(kv: Seq[(String, Any)], indent: String): Seq[String] =
+      kv.map { case (k, v) => s"$indent${Verify.quote(k)}: ${json(v)}" }
+    def block(key: String, kv: Seq[(String, Any)]): String =
+      if (kv.isEmpty) s"""  "$key": {}"""
+      else lines(kv, "    ").mkString(s"""  "$key": {\n""", ",\n", "\n  }")
+    Files.createDirectories(path.getParent)
+    Files.writeString(path, (lines(head, "  ") :+ block(itemsKey, items) :+
+      block("failed", failed.toSeq.map { case (k, m) => k -> m.take(500) }))
+      .mkString("{\n", ",\n", "\n}\n"))
   }
 
   def main(args: Array[String]): Unit = {
@@ -459,14 +397,9 @@ object Bench {
     if (args.contains("--steered")) { steeredMain(spark, sfDir); return }
     if (args.contains("--graph")) { graphMain(spark, sfDir); return }
 
-    val failed = mutable.LinkedHashMap.empty[String, String]
-    def runOnce(name: String): Double =
-      timeQuery(spark, name, SparkEntry.queries(name)(_, sfDir), failed)
-
-    // Cli.queries restricts the set (debug aid); SPARK_GRAFT_WARMUP=0
-    // skips the warmup pass
-    val names = Cli.queries(SparkEntry.queries.keys.toSeq.sorted)
-    if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") names.foreach(runOnce)
+    // Cli.queries restricts the set (debug aid)
+    val (qs, failed) = warmQueries(spark, sfDir, SparkEntry.queries.keys.toSeq.sorted)
+    val names = qs.map(_._1)
     // best of 5 measured passes: this host shows sporadic multi-second
     // whole-JVM stalls (futex storms, system-time waves) unrelated to the
     // query; min-of-k reports steady-state per standard bench practice.
@@ -482,15 +415,7 @@ object Bench {
     // purely from stall-wave exposure — at 5 separated passes the driver
     // number lands within the committed artifact's noise floor, so both
     // methodologies report the same engine.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
-    val passes = (1 to reps).map(_ => names.map(runOnce))
-    val results = names.zipWithIndex.map { case (n, i) =>
-      val ts = passes.map(_(i))
-      val ok = ts.filter(_ >= 0)
-      val t = if (ok.nonEmpty) ok.min else -1.0
-      System.err.println(f"[bench] $n: $t%.2f s (${ts.map(x => f"$x%.2f").mkString("/")})")
-      n -> t
-    }
+    val results = names.zip(passes(qs, Seq(plain(spark)), DefaultReps, failed).head)
 
     val total = results.map(_._2).filter(_ >= 0).sum
     // The driver keeps only the LAST 2000 chars of stdout; the full-name
@@ -524,40 +449,19 @@ object Bench {
     // committed bench/ file keeps 3 decimals regardless.
     val line = Seq(2, 1).map(shortLine).find(_.length <= 1900)
       .getOrElse(shortLine(0))
-    System.err.println("[bench] full-name map: " + results.map {
-      case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}"))
     // Durable copy of the FULL per-query map: the driver's BENCH_r*.json
     // keeps only the tail of stdout, which truncated q01–q29 out of the
     // round-8 artifact and cost round 7 a noise-vs-regression fight. The
     // committed file (overwritten per run, one pretty line per query for
     // reviewable diffs) makes every timing recoverable from the repo.
-    val benchDir = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench"))
-    try {
-      java.nio.file.Files.createDirectories(benchDir)
-      // A filtered debug run must not clobber the committed full-suite
-      // artifact with a 2-query map.
-      val suffix = if (names.size < SparkEntry.queries.size) "_partial" else ""
-      val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString + suffix
-      val pretty = new StringBuilder()
-      pretty.append("{\n  \"metric\": \"total\",\n")
-      pretty.append(s"""  "value": ${fmt(total, 3)},""" + "\n")
-      pretty.append("  \"unit\": \"sec\",\n")
-      pretty.append(s"""  "sf": "$sfDir",\n""")
-      pretty.append(s"""  "cpus": $cpus,\n""")
-      pretty.append("  \"queries\": {\n")
-      pretty.append(results.map { case (k, v) =>
-        s"""    "$k": ${fmt(v, 3)}"""
-      }.mkString(",\n"))
-      // every query that threw on some run, with its last message
-      pretty.append("\n  },\n  \"failed\": {")
-      pretty.append(failed.map { case (k, v) =>
-        s"""\n    ${Verify.quote(k)}: ${Verify.quote(v.take(500))}"""
-      }.mkString(","))
-      pretty.append(if (failed.isEmpty) "}\n}\n" else "\n  }\n}\n")
-      java.nio.file.Files.writeString(
-        benchDir.resolve(s"bench_$sfName.json"), pretty.toString)
-    } catch {
+    // A filtered debug run must not clobber the committed full-suite
+    // artifact with a 2-query map.
+    val suffix = if (names.size < SparkEntry.queries.size) "_partial" else ""
+    val sfName = Paths.get(sfDir).getFileName.toString + suffix
+    try writeArtifact(outDir("SPARK_GRAFT_BENCH_OUT", "bench").resolve(s"bench_$sfName.json"),
+      Seq("metric" -> "total", "value" -> total, "unit" -> "sec", "sf" -> sfDir, "cpus" -> cpus),
+      "queries", results, failed)
+    catch {
       case e: Throwable =>
         System.err.println(s"[bench] durable artifact write failed: $e")
     }

@@ -45,8 +45,6 @@ object Steered {
   def learn(df: DataFrame, strategy: String, confs: Map[String, String] = Map.empty): Unit =
     learned.put(fingerprint(df), LearnedHint(strategy, confs))
 
-  def strategyFor(df: DataFrame): Option[String] = learned.get(fingerprint(df)).map(_.strategy)
-
   def hintFor(df: DataFrame): Option[LearnedHint] = learned.get(fingerprint(df))
 
   /** Drop a template's learned hint (the demotion step of hint-staleness
@@ -84,7 +82,7 @@ object Steered {
       (d, t, keep)
     }
 
-  private def wallClockTimer(f: () => Unit): Double = {
+  private[graft] def wallClockTimer(f: () => Unit): Double = {
     val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
   }
 

@@ -186,9 +186,7 @@ object EmbeddingMaintenance {
     * state. */
   def writeCellLayoutPersistent(emb: DataFrame, cents: Array[Array[Float]],
                                 path: String): Unit = {
-    val withCell = StageMaterialize(emb.withColumn("cell",
-      ProductQuantization.cellExpr(emb.sparkSession, cents)(col("embedding"))))
-    withCell.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(path)
+    writeCellLayout(emb, cents, path)
     // the sidecar lands only after the layout write completes
     saveQuantizer(emb.sparkSession, path, cents)
   }

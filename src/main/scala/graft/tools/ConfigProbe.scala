@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Bench
 import graft.catalyst.SteeringLoop
 import graft.catalyst.SteeringLoop.SteeringConfig
 
@@ -13,39 +15,33 @@ import graft.catalyst.SteeringLoop.SteeringConfig
   *
   *   graft.tools.ConfigProbe [reps]
   *
-  * The queries are required, named through [[graft.Cli.queries]].
+  * The queries are required, named through [[graft.Cli.queries]]. A
+  * query that fails under every config prints its last failure.
   */
 object ConfigProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = args.headOption.map(_.toInt).getOrElse(3)
-    val names = graft.Cli.queries(Nil)
-    require(names.nonEmpty, "ConfigProbe needs the queries to probe (see graft.Cli.queries)")
     val spark = graft.Cli.session()
+    // warm under the session default; failures land in `failed`
+    val (qs, failed) = Bench.warmQueries(spark, sfDir, Nil)
+    require(qs.nonEmpty, "ConfigProbe needs the queries to probe (see graft.Cli.queries)")
     // the steered bench's space plus the AQE-off and bloom-filter cells
     val axes = (SteeringLoop.aqeAxis ++ SteeringLoop.scalePlumbingAxis).toMap
     val configs: Seq[SteeringConfig] =
       SteeringLoop.crossed(SteeringLoop.defaultConfigs, SteeringLoop.partitionTiers(8)) ++
         Seq("noaqe", "bloom").map(n => SteeringConfig(n, "", axes(n)))
-    // warm
-    names.foreach(n => try graft.SparkEntry.queries(n)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save() catch { case _: Throwable => () })
     // whole passes: (rep, config, query) so a stall wave can't blanket one cell
-    val acc = scala.collection.mutable.Map.empty[(String, String), Double]
-      .withDefaultValue(Double.MaxValue)
-    for (_ <- 1 to reps; cfg <- configs) {
-      names.foreach { n =>
-        val t = try SteeringLoop.measure(spark,
-          sp => graft.SparkEntry.queries(n)(sp, sfDir), cfg)
-        catch { case _: Throwable => Double.NaN }
-        if (!t.isNaN) acc((n, cfg.name)) = math.min(acc((n, cfg.name)), t)
-      }
-    }
+    val best = Bench.passes(qs, configs.map(c => c.name ->
+      ((fn: SparkSession => DataFrame) => { SteeringLoop.measure(spark, fn, c); () })), reps, failed)
     println(f"${"query"}%-24s ${"best_cfg"}%-16s ${"best"}%8s ${"default"}%8s  win%%")
-    names.foreach { n =>
-      val d = acc((n, "default"))
-      val (bc, bt) = configs.map(c => c.name -> acc((n, c.name))).minBy(_._2)
-      println(f"$n%-24s $bc%-16s $bt%8.3f $d%8.3f  ${100 * (d - bt) / d}%5.1f")
+    qs.map(_._1).zipWithIndex.foreach { case (n, i) =>
+      val d = best.head(i)
+      configs.indices.filter(best(_)(i) >= 0).minByOption(best(_)(i)).fold(
+        println(f"$n%-24s failed: ${failed.getOrElse(n, "")}")) { c =>
+        val win = if (d > 0) 100 * (d - best(c)(i)) / d else Double.NaN // NaN: default failed
+        println(f"$n%-24s ${configs(c).name}%-16s ${best(c)(i)}%8.3f $d%8.3f  $win%5.1f")
+      }
     }
     spark.stop()
   }

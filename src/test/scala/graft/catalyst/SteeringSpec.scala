@@ -275,9 +275,9 @@ class SteeringSpec extends AnyFunSuite with SharedSpark {
       val p = java.nio.file.Files.createTempFile("steered", ".json")
       Steered.save(p)
       Steered.clear()
-      assert(Steered.strategyFor(df).isEmpty)
+      assert(Steered.hintFor(df).isEmpty)
       assert(Steered.load(p) == 1)
-      assert(Steered.strategyFor(df).contains("shuffle_hash"))
+      assert(Steered.hintFor(df).map(_.strategy).contains("shuffle_hash"))
       java.nio.file.Files.delete(p)
     } finally Steered.clear()
   }

@@ -101,9 +101,10 @@ class DedupCapSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("default caps leave the gate corpus bit-identical to uncapped") {
-    // MaxCandidateCap is the "effectively uncapped" comparator: the
-    // window generators expand cap lead() expressions, so the cap is a
-    // bounded structural constant (requireCap) — and 1024 is far above
+    // MaxCandidateCap is the "effectively uncapped" comparator: the one
+    // candidate window collects up to cap following ids per row
+    // (collect_list over a rowsBetween(1, cap) frame), so the cap is a
+    // bounded blocking constant (requireCap) — and 1024 is far above
     // every block the gate corpora produce (max 6 at sf0.1, measured)
     val free = DedupOps.MaxCandidateCap
     val docs = graft.Tables.documents(spark, sf)

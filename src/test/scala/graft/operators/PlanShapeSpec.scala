@@ -326,9 +326,10 @@ class PlanShapeSpec extends AnyFunSuite with SharedSpark {
     // rank predicate prunes it, and that output feeding the pair
     // aggregation dominated the family (q25: 29 s -> 84 s per 2x corpus,
     // vs 10 s -> 7 s for the window shape). Candidates must come from
-    // the block window itself (lead() array + explode) — the ONLY joins
-    // allowed in the pair queries are the post-candidate lookups (q25's
-    // two size joins, q32's two rescore joins; q27 has none at all).
+    // the block window itself (one collect_list over a bounded frame,
+    // then explode) — the ONLY joins allowed in the pair queries are the
+    // post-candidate lookups (q25's two size joins, q32's two rescore
+    // joins; q27 has none at all).
     // count on the optimizer-final INITIAL plan: after execution AQE
     // wraps materialized stages as leaves, hiding their operators from
     // collect — and join EXISTENCE (unlike strategy) is settled before

@@ -33,5 +33,16 @@ if [[ "${1:-}" != "--fast" ]]; then
   echo "== 4/4 bench (sf0.1 at Bench's default dir, local[$CPUS], -Xmx$HEAP) =="
   SPARK_GRAFT_CPUS="$CPUS" \
     java $ADDOPENS -Dspark.ui.enabled=false -Xmx"$HEAP" -cp "$CP" graft.Bench 2>/dev/null | tail -1
+  # a query that threw on any run is named in the artifact's "failed" map;
+  # it drops out of the total, so the gate fails instead of staying green
+  SF_NAME="$(basename "${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}")${SPARK_GRAFT_QUERIES:+_partial}"
+  ART="${SPARK_GRAFT_BENCH_OUT:-bench}/bench_$SF_NAME.json"
+  python3 - "$ART" <<'PY'
+import json, sys
+failed = json.load(open(sys.argv[1])).get("failed", {})
+for name, msg in failed.items():
+    print(f"FAILED {name}: {msg}")
+sys.exit(1 if failed else 0)
+PY
 fi
 echo "== gate green =="
