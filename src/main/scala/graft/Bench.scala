@@ -100,11 +100,8 @@ object Bench {
     val validated = res.recommendations.filter(r => r.configName != configs.head.name &&
       r.observedSeconds < 0.9 * r.defaultSeconds).flatMap { r =>
       val cfg = configs.find(_.name == r.configName).get
-      guard(r.queryName, AdoptMargin, failed) {
-        val df = SparkEntry.queries(r.queryName)(spark, sfDir)
-        Steered.learn(df, cfg.strategy, cfg.confs)
-        df
-      }.map(v => r.queryName -> (cfg.name, v))
+      guard(r.queryName, AdoptMargin, failed, propose = Steered.learn(_, cfg.strategy, cfg.confs))(
+        () => SparkEntry.queries(r.queryName)(spark, sfDir)).map(v => r.queryName -> (cfg.name, v))
     }.toMap
     val adopted = validated.collect { case (n, (c, (_, _, true))) => n -> c }
     val out = outDir("SPARK_GRAFT_STEER_OUT", "experiment/steering")
@@ -199,7 +196,7 @@ object Bench {
     val (loaded, _) = loadLatestHints(out)
     val (qs, failed) = warmQueries(spark, sfDir, steeredDefault)
     val results = qs.flatMap { case (name, fn) =>
-      guard(name, KeepMargin, failed)(fn(spark)).map(name -> _)
+      guard(name, KeepMargin, failed)(() => fn(spark)).map(name -> _)
     }
     val kept = results.count(_._2._3)
     val demoted = results.size - kept
@@ -216,26 +213,27 @@ object Bench {
   }
 
   /** The adoption guard: the native plan stays unless the hinted plan
-    * measurably wins. [[Steered.revalidateOne]] re-measures the query
-    * `df` builds, min-of-2 per arm with the arms alternated, and keeps its
-    * stored hint only below `margin` × default ([[AdoptMargin]] for a
-    * proposal `df` has just learned, [[KeepMargin]] for a stored hint).
-    * Returns (default, hinted, kept), None for a query with no hint. A
-    * query that throws is logged and kept in `failed` like
-    * [[timeQuery]]'s, and loses its hint: it has not shown a win. */
+    * measurably wins. `propose` learns a proposal from the first frame
+    * `build` makes, once, before anything is timed. Then
+    * [[Steered.revalidateOne]] times build + run per arm, as [[bankHints]]
+    * does (`noop(build())` against `Steered.run(build())(noop)`), min-of-2
+    * per arm with the arms alternated, and keeps the query's hint only
+    * below `margin` × default ([[AdoptMargin]] for a proposal,
+    * [[KeepMargin]] for a stored hint). Returns (default, hinted, kept),
+    * None for a query with no hint. A query that throws is logged and
+    * kept in `failed` like [[timeQuery]]'s, and loses its hint: it has not
+    * shown a win. */
   private[graft] def guard(name: String, margin: Double, failed: mutable.Map[String, String],
-                           timer: (() => Unit) => Double = Steered.wallClockTimer)
-                          (df: => DataFrame): Option[(Double, Double, Boolean)] = {
-    var built: Option[DataFrame] = None
+                           timer: (() => Unit) => Double = Steered.wallClockTimer,
+                           propose: DataFrame => Unit = _ => ())
+                          (build: () => DataFrame): Option[(Double, Double, Boolean)] =
     try {
-      built = Some(df)
-      Steered.revalidateOne(built.get, reps = 2, margin = margin, timer = timer)(noop)
+      propose(build())
+      Steered.revalidateOne(build, reps = 2, margin = margin, timer = timer)(noop)
     } catch { case e: Throwable =>
       recordFailure(name, e, failed)
-      built.foreach(Steered.unlearn)
       None
     }
-  }
 
   /** `graft.Bench --graph` (round-14 verdict task 3): MEASURE the at-rest
     * graph's amortized win instead of only arguing it. The graph-family

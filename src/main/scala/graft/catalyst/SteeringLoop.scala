@@ -180,20 +180,34 @@ object SteeringLoop {
       * and [[graft.strategy.LimeQOStrategy]]: `als` completes the log1p of
       * the observed `values` (unobserved entries are ignored) with each
       * positive cutoff clamped in the same log1p space (0 = uncensored),
-      * and every cell comes back as predicted seconds. */
+      * and every cell comes back as predicted seconds. The three inputs are
+      * filled column-major in one pass and handed over as they are, and the
+      * result rows are written straight from the completion's data. */
     def complete(als: MatrixCompletion, values: Array[Array[Double]],
                  mask: Array[Array[Boolean]], cutoffs: Array[Array[Double]]): Array[Array[Double]] = {
       val nQ = values.length
       val nC = if (nQ == 0) 0 else values(0).length
-      val logM = DenseMatrix.tabulate(nQ, nC)((r, c) =>
-        if (mask(r)(c)) math.log1p(values(r)(c)) else 0.0)
-      val maskM = DenseMatrix.tabulate(nQ, nC)((r, c) => if (mask(r)(c)) 1.0 else 0.0)
-      val cutM = DenseMatrix.tabulate(nQ, nC)((r, c) =>
-        if (cutoffs(r)(c) > 0.0) math.log1p(cutoffs(r)(c)) else 0.0)
-      val completed = als.complete(logM, maskM, cutM)
-      val out = Array.ofDim[Double](nQ, nC)
-      for (r <- 0 until nQ; c <- 0 until nC) out(r)(c) = math.expm1(completed(r, c))
-      out
+      val logX, maskX, cutX = new Array[Double](nQ * nC)
+      var r = 0
+      while (r < nQ) {
+        var c = 0
+        while (c < nC) {
+          val q = c * nQ + r
+          if (mask(r)(c)) { logX(q) = math.log1p(values(r)(c)); maskX(q) = 1.0 }
+          val cut = cutoffs(r)(c)
+          if (cut > 0.0) cutX(q) = math.log1p(cut)
+          c += 1
+        }
+        r += 1
+      }
+      val completed = MatrixCompletion.columnMajor(als.complete(new DenseMatrix(nQ, nC, logX),
+        new DenseMatrix(nQ, nC, maskX), new DenseMatrix(nQ, nC, cutX)))
+      Array.tabulate(nQ) { r =>
+        val row = new Array[Double](nC)
+        var c = 0
+        while (c < nC) { row(c) = math.expm1(completed(c * nQ + r)); c += 1 }
+        row
+      }
     }
   }
 
@@ -224,10 +238,11 @@ object SteeringLoop {
       warmStart = warmStart)
 
   /** The loop body shared by every completion model ([[runCensored]]'s
-    * contract with the ALS factored out — selection, tolerances, the
-    * censoring ledger, and recommendations are IDENTICAL regardless of
-    * what predicts the unexplored cells). */
-  /** `topUpSeed`: when set, rounds whose model-driven picks leave batch
+    * contract with the ALS factored out): selection ([[select]]),
+    * tolerances, the censoring ledger and the recommendations are the same
+    * whatever predicts the unexplored cells.
+    *
+    * `topUpSeed`: when set, rounds whose model-driven picks leave batch
     * slots empty fill them with RANDOM unexplored cells (tolerance
     * α·minObserved) — the reference LimeQO+'s random top-up
     * (`limeqo_plus.py:127-148`), which keeps a fresh learned model from
@@ -296,44 +311,21 @@ object SteeringLoop {
       (0 until nQ).exists(r => (0 until nC).exists(c => !explored(r, c)))) {
       val predicted = model.predictedSeconds(values, mask, cutoffs)
 
-      val minObs = Array.tabulate(nQ)(r =>
-        (0 until nC).filter(mask(r)).map(values(r)).minOption.getOrElse(Double.PositiveInfinity))
-      // best unexplored prediction per query + improvement ratio; a cell
-      // predicted at-or-past its own tolerance is not worth the probe
-      val candidates = for {
-        r <- 0 until nQ
-        c <- 0 until nC if !explored(r, c)
-        // A degenerate completion (≤0 "seconds", possible while a row has
-        // a single observed cell and the rank-k factors haven't localized;
-        // NaN under a poisoned warm start) must not exclude the cell from
-        // exploration FOREVER — fall back to a neutral just-under-best
-        // prior: the cell ranks last (improvement ≈ 1%) but stays
-        // probeable, and its probe is still tolerance-bounded by α·minObs.
-        pred0 = predicted(r)(c)
-        pred = (if (pred0 > 0.0) pred0 else 0.99 * minObs(r))
-        if pred > 0.0 && !pred.isInfinity
-        // α=∞ means "never censor on the best-observed bound" — keep that
-        // term ∞ explicitly: α·minObs would be NaN when a 0-cost cell
-        // makes minObs 0 (0·∞), silently dropping the query's candidates
-        alphaTerm = if (alpha.isPosInfinity) Double.PositiveInfinity else alpha * minObs(r)
-        tol = math.min(alphaTerm, beta * pred) if pred < tol
-      } yield (r, c, (minObs(r) - pred) / pred, tol)
-      val picks = candidates.sortBy { case (r, c, imp, _) => (-imp, r, c) }.take(batch)
-
-      picks.foreach { case (r, c, _, tol) => probe(r, c, tol, round) }
+      val picks = select(values, mask, cutoffs, predicted, alpha, beta, batch)
+      var i = 0
+      while (i < picks.size) { probe(picks.row(i), picks.col(i), picks.tol(i), round); i += 1 }
 
       // LimeQO+ random top-up: fill the round's remaining batch slots with
       // random unexplored cells under the α·minObserved tolerance
       var topped = 0
       topUpRng.foreach { rng =>
-        var filled = picks.length
+        var filled = picks.size
         var attempts = 0
         while (filled < batch && attempts < 4 * nQ * nC) {
           val r = rng.nextInt(nQ)
           val c = rng.nextInt(nC)
           if (!explored(r, c)) {
-            val mo = (0 until nC).filter(mask(r)).map(values(r))
-              .minOption.getOrElse(Double.PositiveInfinity)
+            val mo = minObserved(values(r), mask(r))
             val tol = if (alpha.isPosInfinity) Double.PositiveInfinity else alpha * mo
             probe(r, c, tol, round)
             filled += 1
@@ -346,23 +338,110 @@ object SteeringLoop {
       // no eligible cell anywhere (every unexplored prediction collapsed
       // to ≤0 or past tolerance, and no top-up landed): further rounds
       // would refit the model without ever observing — stop
-      if (picks.isEmpty && topped == 0) round = rounds
+      if (picks.size == 0 && topped == 0) round = rounds
       round += 1
     }
 
-    val recs = (0 until nQ).flatMap { r =>
-      // recommend only when BOTH the default (column 0) and at least one
-      // config completed: without a completed default the improvement
-      // ratio is undefined (values(r)(0) would read as 0.0 — possible
-      // under a degenerate warm start whose column-0 entry is censored)
-      val observedCols = (0 until nC).filter(mask(r))
-      if (!mask(r)(0)) None
-      else observedCols.minByOption(c => (values(r)(c), c)).map { best =>
-        Recommendation(queryNames(r), configNames(best), values(r)(best), values(r)(0))
-      }
-    }
-    SteeringResult(obs.result(), recs.toVector)
+    SteeringResult(obs.result(), recommend(queryNames, configNames, values, mask))
   }
+
+  /** One round's picks, best first: `size` cells at (`row`, `col`), with
+    * their predicted improvement ratio `imp` and probe tolerance `tol`. */
+  private[catalyst] final class Picks(val size: Int, val row: Array[Int], val col: Array[Int],
+                                      val imp: Array[Double], val tol: Array[Double])
+
+  /** The round's selection. Every unexplored cell (neither observed nor
+    * censored) is a candidate at its predicted improvement ratio over the
+    * query's best observation (`limeqo.py:71`), unless its prediction is
+    * at or past its tolerance min(α·minObserved, β·predicted)
+    * (`limeqo.py:79-85`): such a probe is not worth running. The `batch`
+    * candidates with the largest ratio are picked, in one scan in (row,
+    * column) order that keeps them in primitive arrays: a later candidate
+    * displaces a kept one only on a strictly smaller
+    * `java.lang.Double.compare(-imp, ·)`, so ties stay in (row, column)
+    * order, as a stable sort on (-imp, row, column) would leave them. */
+  private[catalyst] def select(values: Array[Array[Double]], mask: Array[Array[Boolean]],
+                               cutoffs: Array[Array[Double]], predicted: Array[Array[Double]],
+                               alpha: Double, beta: Double, batch: Int): Picks = {
+    val nQ = values.length
+    val nC = if (nQ == 0) 0 else values(0).length
+    val cap = math.max(0, math.min(batch, nQ * nC))
+    val row, col = new Array[Int](cap)
+    val imp, tol = new Array[Double](cap)
+    var size = 0
+    var r = 0
+    while (cap > 0 && r < nQ) {
+      val minObs = minObserved(values(r), mask(r))
+      // α=∞ means "never censor on the best-observed bound" — keep that
+      // term ∞ explicitly: α·minObs would be NaN when a 0-cost cell
+      // makes minObs 0 (0·∞), silently dropping the query's candidates
+      val alphaTerm = if (alpha.isPosInfinity) Double.PositiveInfinity else alpha * minObs
+      var c = 0
+      while (c < nC) {
+        if (!mask(r)(c) && !(cutoffs(r)(c) > 0.0)) {
+          // A degenerate completion (≤0 "seconds", possible while a row has
+          // a single observed cell and the rank-k factors haven't localized;
+          // NaN under a poisoned warm start) must not exclude the cell from
+          // exploration FOREVER — fall back to a neutral just-under-best
+          // prior: the cell ranks last (improvement ≈ 1%) but stays
+          // probeable, and its probe is still tolerance-bounded by α·minObs.
+          val pred0 = predicted(r)(c)
+          val pred = if (pred0 > 0.0) pred0 else 0.99 * minObs
+          if (pred > 0.0 && !pred.isInfinity) {
+            val t = math.min(alphaTerm, beta * pred)
+            if (pred < t) {
+              val ratio = (minObs - pred) / pred
+              if (size < cap || java.lang.Double.compare(-ratio, -imp(size - 1)) < 0) {
+                if (size < cap) size += 1
+                var p = size - 1
+                while (p > 0 && java.lang.Double.compare(-ratio, -imp(p - 1)) < 0) {
+                  row(p) = row(p - 1); col(p) = col(p - 1)
+                  imp(p) = imp(p - 1); tol(p) = tol(p - 1)
+                  p -= 1
+                }
+                row(p) = r; col(p) = c; imp(p) = ratio; tol(p) = t
+              }
+            }
+          }
+        }
+        c += 1
+      }
+      r += 1
+    }
+    new Picks(size, row, col, imp, tol)
+  }
+
+  /** The observed column of a row with the smallest value under
+    * `java.lang.Double.compare`, the first such column on a tie; -1 when
+    * nothing in the row is observed. */
+  private def argMinObserved(values: Array[Double], mask: Array[Boolean]): Int = {
+    var best = -1
+    var c = 0
+    while (c < values.length) {
+      if (mask(c) && (best < 0 || java.lang.Double.compare(values(c), values(best)) < 0)) best = c
+      c += 1
+    }
+    best
+  }
+
+  /** A row's best observed value, ∞ when nothing in it is observed. */
+  private def minObserved(values: Array[Double], mask: Array[Boolean]): Double = {
+    val c = argMinObserved(values, mask)
+    if (c < 0) Double.PositiveInfinity else values(c)
+  }
+
+  /** Each query's best completed config (the first on a tie). A query is
+    * recommended only when BOTH its default (column 0) and at least one
+    * config completed: without a completed default the improvement ratio
+    * is undefined (values(r)(0) would read as 0.0 — possible under a
+    * degenerate warm start whose column-0 entry is censored). */
+  private[catalyst] def recommend(queryNames: Seq[String], configNames: Seq[String],
+                                  values: Array[Array[Double]],
+                                  mask: Array[Array[Boolean]]): Vector[Recommendation] =
+    queryNames.indices.collect { case r if mask(r)(0) =>
+      val best = argMinObserved(values(r), mask(r))
+      Recommendation(queryNames(r), configNames(best), values(r)(best), values(r)(0))
+    }.toVector
 
   /** Persist a steering run — the completed workload matrix (every
     * observation, censored or not) plus the recommendations — as one JSON

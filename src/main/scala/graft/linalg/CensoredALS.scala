@@ -23,6 +23,14 @@ trait MatrixCompletion {
                cutoffs: DenseMatrix[Double]): DenseMatrix[Double]
 }
 
+object MatrixCompletion {
+  /** A matrix's entries in column-major order: its own `data` when it is
+    * stored plainly column-major (no offset, no gap between columns, not
+    * transposed), a copy otherwise. The caller must not write the array. */
+  private[graft] def columnMajor(m: DenseMatrix[Double]): Array[Double] =
+    if (m.offset == 0 && m.majorStride == m.rows && !m.isTranspose) m.data else m.toArray
+}
+
 /** The driver-local censored-ALS kernel: fused, row-blocked, on all cores.
   *
   * Layout: A (n×r) and B (m×r) are flat row-major arrays, so every
@@ -79,9 +87,9 @@ final class CensoredALS(rank: Int, iters: Int, lambda: Double, seed: Long)
                    cutoffs: DenseMatrix[Double],
                    a0: DenseMatrix[Double], b0: DenseMatrix[Double]): DenseMatrix[Double] = {
     val n = x.rows; val m = x.cols; val r = rank
-    // column-major copies, as DenseMatrix stores them
-    val xc = x.toArray; val mc = mask.toArray
-    val cells = FixedCells(xc, mc, cutoffs.toArray, n, m)
+    // column-major, read in place (nothing here writes them)
+    val xc = MatrixCompletion.columnMajor(x); val mc = MatrixCompletion.columnMajor(mask)
+    val cells = FixedCells(xc, mc, MatrixCompletion.columnMajor(cutoffs), n, m)
     val a = rowMajor(a0)
     val b = rowMajor(b0)
 

@@ -2,6 +2,7 @@ package graft
 
 import java.io.{ByteArrayOutputStream, PrintStream}
 import scala.collection.mutable
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.catalyst.Steered
 
@@ -87,25 +88,52 @@ class BenchSpec extends AnyFunSuite with SharedSpark {
       var n = 0
       f => { f(); n += 1; if (n % 2 == 1) default else hinted }
     }
-    def propose(df: org.apache.spark.sql.DataFrame) = { Steered.learn(df, "default"); df }
+    val propose = (df: DataFrame) => Steered.learn(df, "default")
     val failed = mutable.LinkedHashMap.empty[String, String]
     Steered.clear()
     try {
       val win = spark.range(10).toDF("win")
       val noise = spark.range(10).toDF("noise")
-      val clears = Bench.guard("q00_win", Bench.AdoptMargin, failed, costs(1.0, 0.80))(propose(win))
+      val clears = Bench.guard("q00_win", Bench.AdoptMargin, failed, costs(1.0, 0.80), propose)(() => win)
       assert(clears.contains((1.0, 0.80, true)))
       assert(Steered.hintFor(win).isDefined)
       // 10 % would pass the keep margin, but not adoption's 15 %
-      val short = Bench.guard("q00_noise", Bench.AdoptMargin, failed, costs(1.0, 0.90))(propose(noise))
+      val short = Bench.guard("q00_noise", Bench.AdoptMargin, failed, costs(1.0, 0.90), propose)(() => noise)
       assert(short.contains((1.0, 0.90, false)))
       assert(Steered.hintFor(noise).isEmpty)
       // a proposal whose run throws is unlearned and its failure recorded
       val throws = spark.range(10).toDF("throws")
       val (broken, _) = capturingErr(Bench.guard("q00_throws", Bench.AdoptMargin, failed,
-        f => throw new IllegalStateException("arm"))(propose(throws)))
+        f => throw new IllegalStateException("arm"), propose)(() => throws))
       assert(broken.isEmpty && Steered.hintFor(throws).isEmpty)
       assert(failed.keySet == Set("q00_throws"))
+    } finally Steered.clear()
+  }
+  test("adoption guard: a build's cost is charged to both arms, as the bank charges it") {
+    // a virtual clock: each build advances it by 0.5, and the timer charges
+    // an arm the clock's advance plus its run cost (default 1.0, hinted
+    // 0.8), so a 20 % run-time win is diluted to 1.3 / 1.5 by the build
+    var clock = 0.0
+    var builds = 0
+    var calls = 0
+    val timer: (() => Unit) => Double = f => {
+      val t0 = clock
+      f()
+      calls += 1
+      clock - t0 + (if (calls % 2 == 1) 1.0 else 0.8)
+    }
+    val eager = spark.range(10).toDF("eager")
+    val build = () => { clock += 0.5; builds += 1; eager }
+    val failed = mutable.LinkedHashMap.empty[String, String]
+    Steered.clear()
+    try {
+      val v = Bench.guard("q00_eager", Bench.AdoptMargin, failed, timer,
+        Steered.learn(_, "default"))(build)
+      assert(v.contains((1.5, 0.5 + 0.8, false)))
+      assert(Steered.hintFor(eager).isEmpty)
+      // the proposal and the hint lookup build once each; every timed run builds its own
+      assert(builds == 2 + 2 * 2)
+      assert(failed.isEmpty)
     } finally Steered.clear()
   }
 }

@@ -43,4 +43,23 @@ class CensoredALSDeterminismSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(one, four))
     assert(java.util.Arrays.equals(one, run()))
   }
+
+  test("inputs stored as views complete bit-identically to plain column-major ones") {
+    // a transposed view, and a block of a larger matrix (offset and column
+    // gap), are copied out; plain inputs are read in place
+    def transposed(a: DenseMatrix[Double]) = a.t.copy.t
+    def block(a: DenseMatrix[Double]) = {
+      val big = DenseMatrix.zeros[Double](n + 3, m + 1)
+      big(1 to n, 1 to m) := a
+      big(1 to n, 1 to m)
+    }
+    val plain = run()
+    Seq(transposed _, block _).foreach { view =>
+      val (vx, vm, vc) = (view(x), view(mask), view(cut))
+      assert(vx.isTranspose || vx.offset != 0)
+      assert(java.util.Arrays.equals(
+        new CensoredALS(rank, 50, 0.2, 7).complete(vx, vm, vc).data, plain))
+    }
+  }
 }
+
