@@ -213,8 +213,8 @@ object Bench {
   }
 
   /** The adoption guard: the native plan stays unless the hinted plan
-    * measurably wins. `propose` learns a proposal from the first frame
-    * `build` makes, once, before anything is timed. Then
+    * measurably wins. One untimed build serves both `propose`, which
+    * learns a proposal from it, and the hint lookup. Then
     * [[Steered.revalidateOne]] times build + run per arm, as [[bankHints]]
     * does (`noop(build())` against `Steered.run(build())(noop)`), min-of-2
     * per arm with the arms alternated, and keeps the query's hint only
@@ -228,8 +228,9 @@ object Bench {
                            propose: DataFrame => Unit = _ => ())
                           (build: () => DataFrame): Option[(Double, Double, Boolean)] =
     try {
-      propose(build())
-      Steered.revalidateOne(build, reps = 2, margin = margin, timer = timer)(noop)
+      val df = build()
+      propose(df)
+      Steered.revalidateOne(df, build, reps = 2, margin = margin, timer = timer)(noop)
     } catch { case e: Throwable =>
       recordFailure(name, e, failed)
       None

@@ -64,19 +64,19 @@ object Steered {
     * and DEMOTED (unlearned) otherwise. Returns (defaultSec, hintedSec,
     * kept) — None when the query has no stored hint.
     *
-    * `build` makes the query's frame: one untimed build finds its hint,
-    * and each timed arm builds its own, `action(build())` against
-    * `run(build())(action)`, so a build that runs eager jobs is charged to
-    * both arms, as a bank of the same query charges it. An arm that throws
-    * demotes the hint (it has not shown a win) and the throw propagates.
+    * `df` is a frame the caller has already built; its hint is the one
+    * looked up and demoted. `build` makes the query's frame anew for each
+    * timed arm, `action(build())` against `run(build())(action)`, so a
+    * build that runs eager jobs is charged to both arms, as a bank of the
+    * same query charges it. An arm that throws demotes the hint (it has
+    * not shown a win) and the throw propagates.
     *
     * `timer` is the arm-cost seam: production uses wall-clock (the
     * default); specs inject deterministic per-arm costs so the
     * keep/demote margin is never a race against host stall waves. */
-  def revalidateOne(build: () => DataFrame, reps: Int = 2, margin: Double = 0.95,
-                    timer: (() => Unit) => Double = wallClockTimer)
-                   (action: DataFrame => Unit): Option[(Double, Double, Boolean)] = {
-    val df = build()
+  def revalidateOne(df: DataFrame, build: () => DataFrame, reps: Int = 2,
+                    margin: Double = 0.95, timer: (() => Unit) => Double = wallClockTimer)
+                   (action: DataFrame => Unit): Option[(Double, Double, Boolean)] =
     hintFor(df).map { _ =>
       def timed(f: => Unit): Double = timer(() => f)
       val pairs = try (1 to math.max(1, reps)).map { _ =>
@@ -88,7 +88,6 @@ object Steered {
       if (!keep) unlearn(df)
       (d, t, keep)
     }
-  }
 
   private[graft] def wallClockTimer(f: () => Unit): Double = {
     val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9

@@ -85,8 +85,9 @@ object SteeringLoop {
   /** Scale-plumbing axis — the third steering dimension, covering the
     * exact knobs a 100 TB deployment tunes per query:
     *
-    *  - `bloom`: runtime bloom-filter join pruning
-    *    ([[graft.operators.RuntimeFilters]] thresholds, local-triggerable)
+    *  - `bloom`: runtime bloom-filter join pruning, with Spark's
+    *    cluster-sized thresholds lowered so a local session triggers it
+    *    (RuntimeFiltersSpec pins the rewrite and its result equality)
     *    — pays a build-side filter aggregation to prune the probe side's
     *    shuffle BEFORE it happens. Wins exactly when the build side is
     *    selectively filtered and the probe side large; loses the build

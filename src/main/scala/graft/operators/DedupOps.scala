@@ -176,17 +176,13 @@ object DedupOps {
     * counts, plus the per-doc key-set sizes — the inputs every
     * set-overlap measure (Jaccard, containment, winnowed match)
     * normalizes from. */
-  private def windowPairCounts(sh0: DataFrame,
+  private def windowPairCounts(sh: DataFrame,
                                blockCap: Int): (DataFrame, DataFrame) = {
-    // checked here too: the whenLarge checkpoint below may run a job
-    requireCap(blockCap)
-    // the key frame feeds both the size aggregate and the pair window —
-    // materialize once so the shingle/tokenize explode upstream runs one
-    // pass, not two (Spark shares no subtrees). Scale-gated: at sf0.1
-    // the barrier measured slower than the second pass (round-16 driver:
-    // q133 0.87, q25/q135 flat-negative) — lazy below the gate,
-    // checkpointed at corpus scale where the shingle explode dominates
-    val sh = StageMaterialize.whenLarge(sh0)
+    // the key frame feeds both the size aggregate and the pair window and
+    // stays lazy, so the shingle/tokenize explode upstream runs twice
+    // (Spark shares no subtrees): at sf0.1 a barrier measured slower than
+    // the second pass (round-16 driver: q133 0.87, q25/q135
+    // flat-negative)
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val pairs = windowCandidates(sh, Seq("source", "sh"), "doc_id", blockCap, "doc_a", "doc_b")
       .groupBy("doc_a", "doc_b")
@@ -393,35 +389,21 @@ object DedupOps {
        |WHERE n_common >= 2
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  /** q26: MinHash signatures — 16 hash functions h_s(x) = md5(s || ':' || x),
-    * signature = min over the doc's distinct shingles, long format
-    * (doc_id, seed, minhash). One narrow pass: the signature is an array
-    * function of the per-doc shingle array (no seed crossJoin, no shuffle —
-    * the only exchange is the output sort). */
   /** MinHash signatures over any (doc_id, text) frame, long format
-    * (doc_id, seed, minhash). `useFastKernel = true` (the PRODUCTION
-    * default) runs [[HashKernels.minhashFast]] — one FNV-1a base hash per
-    * shingle + splitmix64-derived per-seed mixes, ~10× less hash work and
-    * a LongType signature; `false` runs the md5 family, which is what the
-    * DuckDB oracle can replay (q26). Same narrow plan either way: the
-    * signature is an array function of the per-doc shingle array — no
-    * seed crossJoin, no shuffle. The soak showed the md5 family is the
-    * single most expensive kernel in the corpus suite (224 s of a 419 s
-    * 100k-doc run), which is why production paths default to fast. */
-  def minhashSignatures(docs: DataFrame, nSeeds: Int = 16,
-                        useFastKernel: Boolean = true): DataFrame = {
-    if (useFastKernel)
-      docTokensOf(docs).select(col("doc_id"),
-        posexplode(graft.functions.MinHashTokensExpr(col("l"), nSeeds))
-          .as(Seq("seed", "minhash")))
-    else
-      docShinglesOf(docs, withSource = false)
-        .select(col("doc_id"),
-          posexplode(HashKernels.minhash(nSeeds)(col("shs"))).as(Seq("seed", "minhash")))
-  }
+    * (doc_id, seed, minhash): `nSeeds` hash functions
+    * h_s(x) = md5(s || ':' || x), the family the DuckDB oracle replays,
+    * and signature = min over the doc's distinct shingles. One narrow
+    * plan: the signature is an array function of the per-doc shingle
+    * array — no seed crossJoin, no shuffle. */
+  def minhashSignatures(docs: DataFrame, nSeeds: Int = 16): DataFrame =
+    docShinglesOf(docs, withSource = false)
+      .select(col("doc_id"),
+        posexplode(HashKernels.minhash(nSeeds)(col("shs"))).as(Seq("seed", "minhash")))
 
+  /** q26: 16-seed signatures of the documents table; the output sort is
+    * the only exchange. */
   val q26MinhashSignatures: Q = (s, d) =>
-    minhashSignatures(documents(s, d), useFastKernel = false)
+    minhashSignatures(documents(s, d))
       .orderBy("doc_id", "seed")
   val q26Sql: String =
     s"""WITH $duckShingles,
@@ -533,8 +515,7 @@ object DedupOps {
       .select(col("doc_a"), col("doc_b"), col("jaccard").as("exact_j"))
     // both sides of the pair join read the signature table — materialize
     // so the 16-seed MinHash pass over the shingles runs once, not twice
-    val sig = StageMaterialize(
-      minhashSignatures(docs, nSeeds, useFastKernel = false))
+    val sig = StageMaterialize(minhashSignatures(docs, nSeeds))
     val a = sig.select(col("doc_id").as("doc_a"), col("seed"),
       col("minhash").as("mh_a"))
     val b = sig.select(col("doc_id").as("doc_b"), col("seed"),

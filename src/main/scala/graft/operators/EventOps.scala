@@ -279,15 +279,12 @@ object EventOps {
       .select(col("user_id"), col("us"), lit(1).as("tag"),
         col("event_id").as("click_id"),
         lit(null).cast("long").as("purchase_id"), lit(null).cast("double").as("purchase_value"))
-    // materialized once: `u` feeds the local carry window, the per-bucket
-    // purchase summary AND the (user, bucket) universe — three references
-    // that each re-ran the events scan + purchase aggregation + union
-    // (plan-verified: 10 parquet scans before, 2 after). Scale-gated:
-    // the barrier measured slower than the triple scan at sf0.1
-    // (round-16 driver: q91 0.80) — lazy below the gate, checkpointed at
-    // event-log scale where three scans of the log dominate
-    val u = StageMaterialize.whenLarge(
-      purchases.union(clicks).withColumn("b", expr(s"us div ${bucketUs}L")))
+    // `u` feeds the local carry window, the per-bucket purchase summary
+    // AND the (user, bucket) universe, and stays lazy: each reference
+    // re-runs the events scan + purchase aggregation + union, and a
+    // barrier measured slower than that triple scan at sf0.1 (round-16
+    // driver: q91 0.80)
+    val u = purchases.union(clicks).withColumn("b", expr(s"us div ${bucketUs}L"))
     val wb = Window.partitionBy("user_id", "b")
       .orderBy(col("us"), col("tag"), col("click_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

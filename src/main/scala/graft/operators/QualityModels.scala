@@ -77,17 +77,15 @@ object QualityModels {
       .select(col("doc_id"), col("source"),
         explode(TextOps.tokens(col("text"))).as("token"))
     // cdw feeds the vocabulary aggregate AND the scoring join; cw feeds
-    // the totals row AND the llr projection — materialize each once so
-    // the tokenize/explode/count subtree runs a single pass (the
-    // q118/q151 stage-sharing rule; Spark shares no subtrees).
-    // Scale-gated: the barriers measured slower than the extra passes at
-    // sf0.1 (round-16 driver: q108 0.86) — lazy below the gate,
-    // checkpointed at corpus scale where the tokenize pass dominates
-    val cdw = StageMaterialize.whenLarge(tok.groupBy("doc_id", "source", "token")
-      .agg(count(lit(1)).as("c_dw")))
-    val cw = StageMaterialize.whenLarge(cdw.groupBy("token").agg(
+    // the totals row AND the llr projection. Both stay lazy, so the
+    // tokenize/explode/count subtree runs once per consumer (Spark shares
+    // no subtrees): barriers on the two measured slower than those extra
+    // passes at sf0.1 (round-16 driver: q108 0.86)
+    val cdw = tok.groupBy("doc_id", "source", "token")
+      .agg(count(lit(1)).as("c_dw"))
+    val cw = cdw.groupBy("token").agg(
       sum(when(isT, col("c_dw")).otherwise(lit(0L))).as("c_t"),
-      sum(when(isT, lit(0L)).otherwise(col("c_dw"))).as("c_r")))
+      sum(when(isT, lit(0L)).otherwise(col("c_dw"))).as("c_r"))
     val tot = cw.agg(
       sum(col("c_t")).as("n_t"), sum(col("c_r")).as("n_r"),
       count(lit(1)).as("v"))
@@ -107,8 +105,8 @@ object QualityModels {
 
   /** (doc_id, source, token, c_dw) per-document token counts — the
     * tokenize/explode/count subtree both NB training and scoring under a
-    * separately trained model consume, factored so multi-model audits (q151 trains and scores TWO
-    * models) compute it ONCE (materialize with [[StageMaterialize]]). */
+    * separately trained model consume, factored so multi-model audits
+    * (q151 trains and scores TWO models) share one definition of it. */
   def nbTokenCounts(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("source"),
         explode(TextOps.tokens(col("text"))).as("token"))
@@ -121,13 +119,12 @@ object QualityModels {
     * another corpus (q151's frozen v1). */
   def nbModelFromCounts(cdw: DataFrame): DataFrame = {
     val isT = col("source").isin(ReferenceSources: _*)
-    // consumed twice below (totals row + llr projection) — materialize so
-    // the vocabulary aggregation over the counts runs once (scale-gated:
-    // vocab-sized at sf0.1, where the barrier loses — round-16 driver
-    // q151 0.86)
-    val cw = StageMaterialize.whenLarge(cdw.groupBy("token").agg(
+    // consumed twice below (totals row + llr projection) and lazy: the
+    // vocabulary aggregation is vocab-sized at sf0.1, where a barrier
+    // measured slower than running it twice (round-16 driver: q151 0.86)
+    val cw = cdw.groupBy("token").agg(
       sum(when(isT, col("c_dw")).otherwise(lit(0L))).as("c_t"),
-      sum(when(isT, lit(0L)).otherwise(col("c_dw"))).as("c_r")))
+      sum(when(isT, lit(0L)).otherwise(col("c_dw"))).as("c_r"))
     val tot = cw.agg(
       sum(col("c_t")).as("n_t"), sum(col("c_r")).as("n_r"),
       count(lit(1)).as("v"))
@@ -179,11 +176,10 @@ object QualityModels {
     val isTrain = conv(substring(
       md5(concat(lit("m:"), col("doc_id").cast("string"))), 1, 8), 16, 10)
       .cast("long") % 2 === 0
-    // one tokenize/count pass feeds both trainings and both scorings
-    // (the q118/q152/q153 stage-sharing rule). Scale-gated: at sf0.1 the
-    // barrier chain measured slower than re-tokenizing (round-16 driver:
-    // q151 0.86) — lazy below the gate, checkpointed at corpus scale
-    val cdw = StageMaterialize.whenLarge(nbTokenCounts(docs))
+    // the token counts feed both trainings and both scorings and stay
+    // lazy: at sf0.1 a barrier chain measured slower than re-tokenizing
+    // per consumer (round-16 driver: q151 0.86)
+    val cdw = nbTokenCounts(docs)
     val v1 = nbModelFromCounts(cdw.filter(isTrain))
     val v2 = nbModelFromCounts(cdw)
     val s1 = nbScoresFromCounts(cdw, v1)
@@ -232,7 +228,7 @@ object QualityModels {
     val isTrain = conv(substring(
       md5(concat(lit("m:"), col("doc_id").cast("string"))), 1, 8), 16, 10)
       .cast("long") % 2 === 0
-    // deliberately NOT scale-gated (measured r17: alternated same-window
+    // a barrier even at sf0.1 (measured r17: alternated same-window
     // arms put lazy at 3.38/3.59 s vs materialized 2.66/3.03 s at sf0.1 —
     // the hashed-bigram feature pass is CPU-bound and consumed 4×, so the
     // recompute dwarfs the barrier even at small inputs)

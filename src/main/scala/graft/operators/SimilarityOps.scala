@@ -74,16 +74,14 @@ object SimilarityOps {
   val q29BruteForceTopK: Q = (s, d) => {
     val emb = embeddings(s, d)
     // elems feeds the norms aggregate, the query slice AND the dot join;
-    // norms feeds both sides of the rescore — materialize each once so
-    // the posexplode (N·dim rows) runs a single pass. Scale-gated: at
-    // sf0.1 the two barriers measured slower than the recompute they save
-    // (round-16 driver: q29 0.90) — lazy below the gate, checkpointed at
-    // corpus scale where the N·dim explode dominates
-    val elems = StageMaterialize.whenLarge(
-      emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .withColumn("x", col("x").cast(DoubleType)))
-    val norms = StageMaterialize.whenLarge(elems.groupBy("vec_id")
-      .agg(sum((col("x") * col("x")).cast(DecimalType(38, 12))).cast(DoubleType).as("nrm")))
+    // norms feeds both sides of the rescore. Both stay lazy, so the
+    // posexplode (N·dim rows) runs once per consumer: barriers on the two
+    // measured slower than that recompute at sf0.1 (round-16 driver: q29
+    // 0.90)
+    val elems = emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
+      .withColumn("x", col("x").cast(DoubleType))
+    val norms = elems.groupBy("vec_id")
+      .agg(sum((col("x") * col("x")).cast(DecimalType(38, 12))).cast(DoubleType).as("nrm"))
     val qe = elems.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("pos"), col("x").as("qx"))
     val dots = qe.join(elems.select(col("vec_id").as("target_id"), col("pos"), col("x").as("tx")), Seq("pos"))

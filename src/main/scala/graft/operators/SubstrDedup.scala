@@ -33,10 +33,7 @@ import graft.Tables._
   * property, so an N-doc template cluster costs O(N·positions), never
   * O(N²).
   *
-  * The gate path keys steps 2–4 on the gram STRING (DuckDB-replayable);
-  * production sets `hashedKeys=true` and shuffles 8-byte xxhash64 keys
-  * instead of ~80-byte strings — the same oracle-path/fast-path split as
-  * q26/q84 (md5 vs fused MinHash).
+  * Steps 2–4 key on the gram STRING, which DuckDB replays exactly.
   */
 object SubstrDedup {
 
@@ -61,15 +58,14 @@ object SubstrDedup {
   }
 
   /** One row per sliding K-gram position: (doc_id, source, gram). */
-  private def gramPositions(docs: DataFrame, k: Int, hashedKeys: Boolean): DataFrame = {
+  private def gramPositions(docs: DataFrame, k: Int): DataFrame = {
     require(k >= 2, s"span width $k too small: a 1-token 'span' is just q52's token histogram")
     val toks = tokenized(docs).filter(size(col("l")) >= k)
     // The token array is a materialized column (not inlined in the lambda)
     // for the same CSE reason as DedupOps.docShinglesOf.
     val gramsCol = expr(
       s"transform(sequence(1, size(l) - ${k - 1}), i -> concat_ws(' ', slice(l, i, $k)))")
-    val g = toks.select(col("doc_id"), col("source"), explode(gramsCol).as("gram"))
-    if (hashedKeys) g.withColumn("gram", xxhash64(col("gram"))) else g
+    toks.select(col("doc_id"), col("source"), explode(gramsCol).as("gram"))
   }
 
   /** Per-source span-coverage audit over any (doc_id, source, text) frame:
@@ -77,19 +73,16 @@ object SubstrDedup {
     * `n_docs` counts docs with ≥k tokens (shorter docs have no spans);
     * `dup_pos` counts gram positions whose gram appears in ≥2 distinct
     * docs. All-long output → hash-exact across engines. */
-  def substrSpanCoverage(docs: DataFrame, k: Int = DefaultSpanTokens,
-                         hashedKeys: Boolean = false): DataFrame = {
-    val g = gramPositions(docs, k, hashedKeys)
+  def substrSpanCoverage(docs: DataFrame, k: Int = DefaultSpanTokens): DataFrame = {
+    val g = gramPositions(docs, k)
     // One row per (gram, doc): shuffle keys include doc_id, so hot grams
     // distribute; n_pos preserves within-doc repetition for the coverage sum.
-    // Materialized once: it feeds both the cross-doc duplicate aggregate
-    // and the coverage join — unmaterialized, the gram explode + aggregate
-    // ran twice (Spark shares no subtrees). Scale-gated: the barrier
-    // measured slower than the double pass at sf0.1 (round-16 driver:
-    // q98 0.79, q122 0.91) — lazy below the gate, checkpointed at corpus
-    // scale where the gram explode dominates
-    val perGramDoc = StageMaterialize.whenLarge(g.groupBy("gram", "doc_id", "source")
-      .agg(count(lit(1)).as("n_pos")))
+    // It feeds both the cross-doc duplicate aggregate and the coverage
+    // join and stays lazy, so the gram explode + aggregate runs twice
+    // (Spark shares no subtrees): a barrier measured slower than the
+    // double pass at sf0.1 (round-16 driver: q98 0.79)
+    val perGramDoc = g.groupBy("gram", "doc_id", "source")
+      .agg(count(lit(1)).as("n_pos"))
     // Cross-doc duplicated grams only: input already collapsed to one row
     // per (gram, doc), so count(*) IS the distinct-doc count and the
     // partial aggregate bounds any reducer at ≤ #mappers rows per gram.
@@ -109,8 +102,7 @@ object SubstrDedup {
       .orderBy("source")
   }
 
-  /** q98: exact substring-span dedup audit on the documents table (gate
-    * path: gram-string keys, DuckDB-replayable). */
+  /** q98: exact substring-span dedup audit on the documents table. */
   val q98SubstrSpans: Q = (s, d) => substrSpanCoverage(documents(s, d))
 
   private val q98Sql: String = {
@@ -167,19 +159,16 @@ object SubstrDedup {
     *
     * Returns (doc_id, source, text_clean, n_tokens, n_kept). Conservation
     * (n_kept + removed = n_tokens) and idempotence on a non-pathological
-    * corpus are spec-pinned (SubstrRemovalSpec); `hashedKeys` swaps the
-    * ~80-byte gram strings for 8-byte xxhash64 keys in shuffles 2–3, the
-    * same oracle-path/production-path split as the audit. */
-  def removeDuplicateSpans(docs: DataFrame, k: Int = DefaultSpanTokens,
-                           hashedKeys: Boolean = false): DataFrame = {
+    * corpus are spec-pinned (SubstrRemovalSpec). Shuffles 2–3 key on the
+    * gram string, as the audit's do. */
+  def removeDuplicateSpans(docs: DataFrame, k: Int = DefaultSpanTokens): DataFrame = {
     require(k >= 2, s"span width $k too small")
     val toks = tokenized(docs)
     val gramsCol = expr(
       s"transform(sequence(1, size(l) - ${k - 1}), i -> concat_ws(' ', slice(l, i, $k)))")
     val g0 = toks.filter(size(col("l")) >= k)
       .select(col("doc_id"), posexplode(gramsCol).as(Seq("p0", "gram")))
-      .select(col("doc_id"), (col("p0") + 1).as("pos"),
-        if (hashedKeys) xxhash64(col("gram")).as("gram") else col("gram"))
+      .select(col("doc_id"), (col("p0") + 1).as("pos"), col("gram"))
     val canon = g0.groupBy("gram")
       .agg(count(lit(1)).as("cnt"),
            min(struct(col("doc_id"), col("pos"))).as("canon"))

@@ -800,15 +800,15 @@ class SteeringSpec extends AnyFunSuite with SharedSpark {
         df.write.format("noop").mode("overwrite").save()
       }
       val timer: (() => Unit) => Double = f => { f(); armCost.get }
-      val bad = Steered.revalidateOne(() => dfBad, timer = timer)(action).get
+      val bad = Steered.revalidateOne(dfBad, () => dfBad, timer = timer)(action).get
       assert(!bad._3, s"poisoned hint must fail the keep margin: $bad")
       assert(Steered.hintFor(dfBad).isEmpty, "demotion must unlearn the hint")
-      val good = Steered.revalidateOne(() => dfGood, timer = timer)(action).get
+      val good = Steered.revalidateOne(dfGood, () => dfGood, timer = timer)(action).get
       assert(good._3, s"winning hint must be kept: $good")
       assert(Steered.hintFor(dfGood).isDefined)
       // an unhinted template is not touched
-      assert(Steered.revalidateOne(
-        () => graft.Tables.region(spark, sf).select("r_name"), timer = timer)(action).isEmpty)
+      val unhinted = graft.Tables.region(spark, sf).select("r_name")
+      assert(Steered.revalidateOne(unhinted, () => unhinted, timer = timer)(action).isEmpty)
     } finally Steered.clear()
   }
 

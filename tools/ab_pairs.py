@@ -2,12 +2,14 @@
 """Alternated A/B pairs of perfbench runs: a parent checkout against a change.
 
     python3 tools/ab_pairs.py --parent DIR --change DIR --workload W --seeds 1-10
-                              [--seconds S] [--trace 0|1]
+                              [--seconds S] [--trace 0|1] [--queries Q1,Q2,...]
 
 For each seed, runs `python3 perfbench/run.py` once in each checkout (each
 checkout builds and runs its own sources), alternating which arm goes
 first: the parent on odd positions in the seed list, the change on even
 ones. --seconds defaults to the change's BENCHMARK.json `run_seconds`.
+--queries (pipeline-sf0.1 only) is passed through to perfbench/run.py,
+which picks those queries from its catalogue instead of its default set.
 
 Prints, per seed, every metric of both arms with the ratio change/parent,
 then per metric the median, q1 and q3 of each arm, the median ratio, the
@@ -44,10 +46,12 @@ def parse_seeds(text):
     return seeds
 
 
-def run_arm(checkout, workload, seed, seconds, trace):
+def run_arm(checkout, workload, seed, seconds, trace, queries):
     """One perfbench run; returns (result dict or None, error text)."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", str(trace)]
+    if queries:
+        cmd += ["--queries", queries]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
@@ -77,7 +81,10 @@ def main():
     ap.add_argument("--seeds", required=True, type=parse_seeds, help="e.g. 1-10 or 1,3,5")
     ap.add_argument("--seconds", type=float, help="run length (default: BENCHMARK.json run_seconds)")
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
+    ap.add_argument("--queries", help="pipeline-sf0.1 only: comma-separated catalogue queries")
     a = ap.parse_args()
+    if a.queries and a.workload != "pipeline-sf0.1":
+        sys.exit("ab_pairs: --queries applies to the pipeline-sf0.1 workload only")
     for d in (a.parent, a.change):
         if not os.path.isfile(os.path.join(d, "perfbench", "run.py")):
             sys.exit(f"ab_pairs: no perfbench/run.py under {d}")
@@ -92,7 +99,7 @@ def main():
     for i, seed in enumerate(a.seeds):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for arm in order:
-            res, err = run_arm(arms[arm], a.workload, seed, seconds, a.trace)
+            res, err = run_arm(arms[arm], a.workload, seed, seconds, a.trace, a.queries)
             if err:
                 errors.append(f"seed {seed} {arm}: {err}")
                 print(f"FAIL seed {seed} {arm}: {err}", file=sys.stderr)
@@ -102,7 +109,8 @@ def main():
 
     seeds = [s for s in a.seeds if s in results["parent"] and s in results["change"]]
     names = sorted({k for s in seeds for arm in results for k, v in results[arm][s].items() if v})
-    print(f"workload {a.workload}, {len(seeds)} pairs, {seconds:g} s runs, trace {a.trace}")
+    print(f"workload {a.workload}, {len(seeds)} pairs, {seconds:g} s runs, trace {a.trace}"
+          + (f", queries {a.queries}" if a.queries else ""))
     print("\nper pair (parent -> change, ratio change/parent)")
     for s in seeds:
         first = "parent" if a.seeds.index(s) % 2 == 0 else "change"
